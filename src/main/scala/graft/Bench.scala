@@ -186,6 +186,15 @@ object Bench {
     } else None
   }
 
+  /** `k=v` session-conf arguments (SPARK_GRAFT_CONF segments, PlanDump's
+    * trailing args) → pairs. Blank segments are skipped; a non-blank one
+    * without `=` or with an empty key fails loudly instead of being
+    * dropped — a typo'd knob must not run the default silently. */
+  private[graft] def confPairs(segments: Seq[String]): Seq[(String, String)] =
+    segments.map(_.trim).filter(_.nonEmpty).map { kv =>
+      require(kv.indexOf('=') > 0, s"malformed conf '$kv': expected key=value")
+      (kv.takeWhile(_ != '=').trim, kv.dropWhile(_ != '=').tail.trim) }
+
   /** Mid-pass contamination detector (r15 verdict task #1b): the settle
     * gate certifies a quiet START, but BENCH_r15's pass 3 was slammed
     * MID-FLIGHT (875 s wall vs 422/331 for its predecessors), drained
@@ -265,9 +274,7 @@ object Bench {
     // (spark.sql.join.preferSortMergeJoin). Default EMPTY — the session
     // is bit-identical to the r16 one unless the operator opts in.
     // Used for the r17 zstd-codec and preferSortMergeJoin A/Bs.
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
+    val extraConf = confPairs(sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";").toSeq)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -9,16 +9,22 @@ import org.apache.spark.sql.SparkSession
   * verify-only total sorts; "benchexec" additionally EXECUTES the query
   * through the noop sink first, so the printed plan is the FINAL
   * adaptive plan — ReusedExchange / AQEShuffleRead / runtime join
-  * rewrites visible — not the conservative initial one. Trailing k=v
-  * args become session confs — r17, for dumping the CLUSTER-SHAPED plan
-  * a fixture-scale session hides, e.g.
+  * rewrites visible — not the conservative initial one. Every trailing
+  * arg containing `=` is a session conf, in any position — for dumping
+  * the CLUSTER-SHAPED plan a fixture-scale session hides, e.g.
   * spark.sql.autoBroadcastJoinThreshold=-1
-  * spark.graft.eagerMaterialize=persist.)
+  * spark.graft.layoutRowsPerPartition=1000.)
   */
 object PlanDump {
+  /** Trailing args → (mode, confs): every arg containing `=` is a conf
+    * wherever it sits (parsed by [[Bench.confPairs]]); the first other
+    * arg is the mode. */
+  private[graft] def trailingArgs(args: Seq[String]): (Option[String], Seq[(String, String)]) =
+    args.partition(_.contains("=")) match { case (confs, modes) => (modes.headOption, Bench.confPairs(confs)) }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, names) = (args(0), args(1).split(",").toSeq)
-    val mode = args.lift(2)
+    val (mode, confs) = trailingArgs(args.toSeq.drop(2))
     val shapes = if (mode.exists(_.startsWith("bench"))) SparkEntry.benchShapes
                  else SparkEntry.queries
     val builder = SparkSession.builder()
@@ -26,8 +32,7 @@ object PlanDump {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    args.drop(3).filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v) }
+    confs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>

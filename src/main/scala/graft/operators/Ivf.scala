@@ -7,7 +7,6 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.Eager.EagerOps
 
 /** E-SIM, IVF variant (mandate: "an IVF or LSH-bucketed variant as the
   * scale path" — LSH lives in VectorOps; this is the inverted-file
@@ -144,12 +143,12 @@ object Ivf {
     * MLlib's fit makes; at 100 TB the quantizer trains on a sample and
     * assignment streams the corpus, exactly as here). */
   private[graft] def detCenters(spark: SparkSession, vectors: DataFrame): Seq[(Int, Array[Double])] = {
-    // eager: the normalized frame feeds every Lloyd iteration and the
-    // count — one materialization, not DetSteps+1 recomputes (and no
-    // lazy-persist fan-out for BroadcastRaceGuard to reject)
-    val emb = Pq.normalized(vectors).select(col("vec_id"), col("nemb").as("v"))
-      .eagerly
-    val n = emb.count()
+    // eager: the normalized frame feeds every Lloyd iteration, and its
+    // materialization job counts it — one materialization, not
+    // DetSteps+1 recomputes (and no lazy-persist fan-out for
+    // BroadcastRaceGuard to reject)
+    val (emb, n) = graft.plans.Eager.materialize(
+      Pq.normalized(vectors).select(col("vec_id"), col("nemb").as("v")))
     require(n >= K,
       s"IVF quantizer needs at least K=$K training vectors, got $n")
     detLloyd(spark, emb, K)

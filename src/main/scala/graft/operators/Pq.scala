@@ -116,9 +116,8 @@ object Pq {
     * centers\[m\]\[k\]\[subdim\]. */
   private[graft] def detSubCenters(spark: SparkSession,
                                    vectors: DataFrame): Array[Array[Array[Double]]] = {
-    import graft.plans.Eager.EagerOps
-    val emb = normalized(vectors).select(col("vec_id"), col("nemb")).eagerly
-    val n = emb.count()
+    val (emb, n) = graft.plans.Eager.materialize(
+      normalized(vectors).select(col("vec_id"), col("nemb")))
     require(n >= K,
       s"PQ codebooks need at least K=$K training vectors per subspace, got $n")
     (0 until M).map { m =>

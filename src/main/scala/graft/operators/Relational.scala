@@ -868,7 +868,7 @@ object Relational {
     // click side, the purchase side's pair join AND its unmatched
     // anti-join — three distinct builds in one action, and concurrent
     // stages over a lazy cache race to run the two-window prefix
-    // computation once each. localCheckpoint materializes it exactly
+    // computation once each. The Eager freeze materializes it exactly
     // once before the consumers plan; context cleaner reclaims blocks.
     val withWm = runningJoinWatermarkOn(ev, delaySec).eagerly
     val c = withWm.filter(col("event_type") === "click")
@@ -1662,7 +1662,7 @@ object Relational {
       // broadcast exchanges, and Spark submits broadcast jobs
       // concurrently; with a lazy persist they raced to materialize the
       // cache and the per-order collect_set aggregation ran up to four
-      // times. localCheckpoint materializes the order-grain frame once,
+      // times. The Eager freeze materializes the order-grain frame once,
       // before any consumer plans against it.
       .eagerly
     val nOrders = sets.select(count(lit(1)).as("n_orders"))
@@ -2322,7 +2322,7 @@ object Relational {
 
   def markovStationary(spark: SparkSession, dir: String): DataFrame = {
     val pairs = transitionPairs(spark, dir)
-      // localCheckpoint the |types|²-row transition counts: totals, the
+      // freeze the |types|²-row transition counts: totals, the
       // uniform seed, every iteration's π, and the final join all derive
       // from this frame, so without truncation the per-user lead window
       // (the only fact-sized work) re-runs ~7× across the chain. The

@@ -105,24 +105,21 @@ object Scale {
     * it; the library form is for build sides the author KNOWS are
     * selective (the reference's dim-table joins, SURVEY §2.2 P7). */
   def bloomSemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    // persisted: the filtered key set is scanned by the count, the bloom
-    // build, and the semi-join probe — three eager passes over orders
-    // without it (the contamination/testGrams lesson); the frame is
-    // selective-keys-sized by construction. The probe pass runs at the
-    // CALLER'S action time, so it cannot be unpersisted here —
-    // Bench/Verify's clearCache() between queries drops it (the testGrams
-    // lifecycle in Curation).
-    val hot = Tables.orders(spark, dir)
+    // frozen: the filtered key set is read by the bloom build and the
+    // semi-join probe — repeated passes over orders without it (the
+    // contamination/testGrams lesson); the frame is selective-keys-sized
+    // by construction. The probe pass runs at the CALLER'S action time,
+    // so it cannot be released here — the context cleaner frees it once
+    // the result frame is gone.
+    // Sized from the actual build-side count (the freeze job's own):
+    // fpp 1% keeps the sketch a few hundred KB per million keys. Zero
+    // hot keys: Spark's bloomFilter aggregate NPEs on an empty frame
+    // (null buffer) — and nothing can match anyway, so short-circuit the
+    // probe side instead of building a sketch of nothing (empty-input
+    // sweep)
+    val (hot, nHot) = graft.plans.Eager.materialize(Tables.orders(spark, dir)
       .filter(col("o_totalprice") > 300000.0)
-      .select("o_orderkey")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // sized from the actual build-side count: same driver pass that a
-    // broadcast build would do anyway; fpp 1% keeps the sketch a few
-    // hundred KB per million keys. Zero hot keys: Spark's bloomFilter
-    // aggregate NPEs on an empty frame (null buffer) — and nothing can
-    // match anyway, so short-circuit the probe side instead of building
-    // a sketch of nothing (empty-input sweep)
-    val nHot = hot.count()
+      .select("o_orderkey"))
     val base = Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_quantity", "l_returnflag")
     val pruned =

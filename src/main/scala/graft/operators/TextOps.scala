@@ -364,9 +364,11 @@ object TextOps {
     * difference between a posting-list join and |group|² pairs. The LSH
     * path below remains the probabilistic screening sibling. */
   def jaccardPairs(spark: SparkSession, dir: String): DataFrame = {
+    // n_tok: the row's distinct-token count, carried for the doc_id
+    // uniqueness check below
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"),
-        explode(array_distinct(split(col("text"), " "))).as("tok"))
+      .select(col("doc_id"), col("source"), array_distinct(split(col("text"), " ")).as("ts"))
+      .select(col("doc_id"), col("source"), size(col("ts")).as("n_tok"), explode(col("ts")).as("tok"))
     // rank: token -> global frequency order (ascending, ties by token), via
     // zipWithIndex — indices stay distributed (each partition offsets by
     // the preceding partitions' counts), unlike a row_number window whose
@@ -394,28 +396,34 @@ object TextOps {
     // the tok equi-join then shuffles both sides, which is the correct
     // postings-join shape there
     // grouped by doc_id ALONE (source is 1:1 with doc_id — one document
-    // row per id — so max() recovers it exactly): the frame's cached
+    // row per id — so max() recovers it exactly): the frozen frame's
     // partitioning is then hash(doc_id), which the single payload join
     // below reuses as-is instead of re-exchanging the bitmaps (r17).
+    // One row per doc_id is a PRECONDITION, enforced like the 2^31 rank
+    // bound: two rows sharing an id would be merged into one token set
+    // (wrong sizes, wrong pairs). Every row contributes n_tok ≥ 1 token
+    // rows (split never yields an empty array), so a group holds exactly
+    // one document iff its token-row count equals max(n_tok) — checked
+    // inside the aggregation the build runs anyway, no extra job.
     val docs = toks.join(broadcast(ranked), "tok")
       .groupBy("doc_id")
       .agg(max(col("source")).as("source"),
-        sort_array(collect_list(col("bit"))).as("bits"))
-      .select(col("doc_id"), col("source"), col("bits"),
+        sort_array(collect_list(col("bit"))).as("bits"),
+        (count(lit(1)) === max(col("n_tok"))).as("one_row"))
+      .select(col("doc_id"), when(col("one_row"), col("source")).otherwise(raise_error(concat(
+          lit("jaccardPairs requires unique doc_id; duplicate doc_id "), col("doc_id").cast("string"))))
+          .as("source"), col("bits"),
         graft.functions.Bitmap.bitmapFromBits(col("bits")).as("mm"),
         size(col("bits")).cast("long").as("sz"))
       // EAGER (r14 lazy-persist sweep): the candidate side and the
       // verify join plan distinct shuffle builds over this frame, and
       // concurrent stages over a lazy cache race to re-run the whole
-      // tokenize→rank→bitmap pipeline per build. localCheckpoint
-      // materializes it exactly once before the consumers plan. On
-      // cluster masters Eager.eager takes the persist+count branch,
-      // whose InMemoryRelation KEEPS this aggregate's hash(doc_id)
-      // output partitioning — so at scale the payload join's docs side
-      // reads its cache layout with no Exchange; locally the dim-sized
-      // frame broadcasts and the layout is moot (an explicit pinned
-      // persist was A/B'd r17: +0.2 s of pure pin cost at fixture
-      // scale, no plan difference — the broadcast wins either way).
+      // tokenize→rank→bitmap pipeline per build. The Eager freeze
+      // materializes it exactly once before the consumers plan, and its
+      // leaf KEEPS this aggregate's hash(doc_id) output partitioning —
+      // so at scale the payload join's docs side reads the frozen
+      // layout with no Exchange; locally the dim-sized frame
+      // broadcasts and the layout is moot.
       .eagerly
     // prefix length p = sz - ceil(0.9*sz) + 1, via ceil(9x/10) =
     // floor((9x+9)/10) — exact in doubles because 10k/10 divides without
@@ -542,7 +550,7 @@ object TextOps {
       // EAGER (r14 lazy-persist sweep): the self-join's two sides are
       // DISTINCT shuffle builds, and concurrent stages over a lazy cache
       // race to recompute the whole signature pipeline per side —
-      // localCheckpoint materializes it exactly once before either side
+      // the Eager freeze materializes it exactly once before either side
       // plans (same strategy a 100 TB run uses: checkpoint signatures
       // before the candidate join). Side benefit: when the caller passes
       // a PERSISTED code frame (containment/dedupCurve), this eager scan
@@ -578,17 +586,9 @@ object TextOps {
     *
     * Oracle: the same pair graph in DuckDB + WITH RECURSIVE reachability
     * (min reachable doc_id ≡ component min). */
-  def nearDupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashPairs(spark, dir).persist()
-    // eager (r14 lazy-persist sweep): CC's seeding action scans the pair
-    // frame twice (both union directions) — materialize the cache before
-    // any consumer so no two tasks/stages race to compute one partition
-    pairs.count()
-    val nodes = Tables.documents(spark, dir).select(col("doc_id"))
-    val out = connectedComponents(nodes, pairs).orderBy("doc_id")
-    pairs.unpersist()
-    out
-  }
+  def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
+    connectedComponents(Tables.documents(spark, dir).select(col("doc_id")),
+      minhashPairs(spark, dir)).orderBy("doc_id")
 
   /** q_dedup_admit: the batch-grain form of [[dedupIncrement]]'s
     * admission policy as a PURE, oracle-checkable query — every document
@@ -662,20 +662,19 @@ object TextOps {
     * [[compactDedupIndex]] is the maintenance verb — a per-bucket
     * exchange-free rewrite under the maintainAggState staged-swap
     * discipline. SINGLE-WRITER per indexPath, as before. The
-    * rejected-id set (batch-bounded) is eagerly localCheckpoint'ed
-    * BEFORE the fold — the returned frame must not lazily re-scan the
-    * table after the batch's own keys land in it. */
+    * rejected-id set (batch-bounded) is frozen (Eager) BEFORE the
+    * fold — the returned frame must not lazily re-scan the table after
+    * the batch's own keys land in it. */
   def dedupIncrement(spark: SparkSession, indexPath: String, docs: DataFrame): DataFrame = {
-    val keys = batchBandKeys(docs)
-      .persist() // three consumers below; unpersisted before return
-    // eager (r14 lazy-persist sweep): dedupRejected's single action plans
-    // three distinct builds over this frame (seen-probe, batchMin agg,
-    // the batchMin join's probe side) — materialize before they fan out
-    keys.count()
+    // frozen (r14 lazy-persist sweep): dedupRejected's single action
+    // plans three distinct builds over this frame (seen-probe, batchMin
+    // agg, the batchMin join's probe side) — materialize before they fan
+    // out; released before return
+    val keys = batchBandKeys(docs).eagerly
     val batchMin = batchMinOf(keys)
     val rejected = dedupRejected(spark, indexPath, keys, batchMin)
     dedupFold(spark, indexPath, batchMin)
-    keys.unpersist()
+    keys.release()
     docs.join(rejected, Seq("doc_id"), "left_anti")
   }
 
@@ -693,8 +692,8 @@ object TextOps {
 
   /** The admission decision of one batch against the CURRENT index:
     * doc_ids rejected because a band key is already in the index, or on
-    * a smaller-doc_id document of the same batch. Eager and
-    * lineage-truncated (localCheckpoint) so callers can fold the batch
+    * a smaller-doc_id document of the same batch. Frozen (Eager: the
+    * plan no longer reads the index) so callers can fold the batch
     * into the index and still evaluate the decision afterwards. */
   private[graft] def dedupRejected(spark: SparkSession, indexPath: String,
                                    keys: DataFrame, batchMin: DataFrame): DataFrame = {
@@ -1209,67 +1208,45 @@ object TextOps {
     * (doc_id, pr) at integer scale 1e12, unsorted. */
   private[graft] def pageRankOnGraph(nodes: DataFrame, pairs: DataFrame,
                                      iterations: Int = 5): DataFrame = {
-    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
+    // The pair list is frozen first: the edge list below reads it four
+    // times (two directions, each feeding the degree agg and the join),
+    // and its materialization job returns the row count that sizes the
+    // layout (ADVICE: a dense graph's edge list dwarfs its node list, so
+    // the width follows the EDGES, as in connectedComponentsWithRounds).
+    val (pairsF, nPairs) = graft.plans.Eager.materialize(pairs)
+    val edges = pairsF.select(col("d1").as("src"), col("d2").as("dst"))
+      .unionByName(pairsF.select(col("d2").as("src"), col("d1").as("dst")))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       .withColumnRenamed("src", "deg_src")
-    // Degree is loop-invariant: join it into the edge list ONCE, pin
-    // hash(src) partitioning, and eagerly checkpoint. Three effects at
-    // once: (1) the per-iteration deg join disappears (was 5 joins);
-    // (2) the checkpointed LogicalRDD keeps its outputPartitioning, so
-    // each iteration's src-keyed join reshuffles only the node-sized
-    // ranks frame, never the edge list; (3) the (large) MinHash
-    // signature subtree is cut out of the unrolled 5-iteration plan
-    // instead of appearing in it five times.
+    // Degree is loop-invariant: join it into the edge list ONCE, lay it
+    // out hash(src) and sorted within partitions, and freeze it. Three
+    // effects at once: (1) the per-iteration deg join disappears (was 5
+    // joins); (2) the frozen leaf reports that layout, so each
+    // iteration's src-keyed join reshuffles only the node-sized ranks
+    // frame, never the edge list, and needs no Sort on the edge side;
+    // (3) the (large) MinHash signature subtree is cut out of the
+    // unrolled 5-iteration plan instead of appearing in it five times.
     //
-    // r16 (guide §2.4): the partition COUNT is pinned explicitly —
-    // `repartition(col("src"))` leaves the count to AQE, which coalesces
-    // the checkpointed frame to fewer partitions than the join requires,
-    // so EnsureRequirements re-exchanged (and re-sorted) the EDGE side
-    // in EVERY iteration — the exact re-shuffle this checkpoint exists
-    // to remove (plans/r16/q_pagerank_before.txt: 5× Exchange+Sort over
-    // the ExistingRDD). The count is DERIVED from the graph size
-    // (Eager.layoutPartitions — guide §2's scale-adaptive partitioning:
-    // a constant session-width pin made the fixture-scale loop run 5
-    // rounds of 32-task joins AQE used to collapse); the in-partition
-    // sort makes the frozen layout satisfy the SortMergeJoin
-    // requirement outright, so per-iteration work on the edge side
-    // drops to zero at ANY scale.
-    val n = nodes.count() // dim-sized scalar (same license as the CC fixpoint)
-    // width derived from the node count for BOTH pinned frames (near-dup
-    // graphs are sparse — the LSH pair edge list is O(nodes); counting
-    // the edge list exactly would cost an extra materialization pass,
-    // and the cap at the session shuffle width bounds the error)
-    val nP = graft.plans.Eager.layoutPartitions(nodes.sparkSession, 2L * n)
-    // r17 size threshold (r16 verdict task #5): when the whole graph
-    // fits ONE derived partition, the layout pin's repartition + sort +
-    // persist + count is pure overhead — every consumer collapses to a
-    // single partition anyway, so there is no per-iteration exchange to
-    // save (measured r16: the pin cost moved the local floor 1.86 →
-    // ~2.5 s). Below the threshold the loop-invariant frame is still
-    // materialized ONCE (eager localCheckpoint — the r15 shape: cuts
-    // the signature subtree out of the unrolled plan), just without the
-    // layout jobs; at nP > 1 the pinned layout keeps the at-scale
-    // shape: zero per-iteration Exchange/Sort on the edge side.
-    val linkedBase = edges
+    // The partition COUNT is explicit (guide §2.4): `repartition(col)`
+    // leaves it to AQE, which coalesces below what the join requires,
+    // and the edge side is then re-exchanged every iteration
+    // (plans/r16/q_pagerank_before.txt). It is derived from the edge
+    // count (Eager.joinLayoutPartitions — guide §2's scale-adaptive
+    // rule; a constant session-width pin made the fixture-scale loop
+    // run 5 rounds of 32-task joins AQE used to collapse).
+    val nP = graft.plans.Eager.joinLayoutPartitions(nodes.sparkSession, 2L * nPairs)
+    val linked = edges
       .join(deg, col("src") === col("deg_src"))
       .select(col("src"), col("dst"), col("deg"))
-    val linked =
-      if (nP <= 1) linkedBase.eagerly
-      else linkedBase
-        .repartition(nP, col("src"))
-        .sortWithinPartitions("src")
-        .pinned
+      .repartition(nP, col("src"))
+      .sortWithinPartitions("src")
+      .eagerly
     // The teleport join re-read `nodes` from parquet in every iteration
-    // (5 scans + 5 node-sized Exchange+Sort). At layout scale, freeze it
-    // once, laid out like the join wants it; under the threshold the
-    // repeated scans are single-partition-cheap and the pin job is not.
-    val nodesPart =
-      if (nP <= 1) nodes
-      else nodes
-        .repartition(nP, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .pinned
+    // (5 scans + 5 node-sized Exchange+Sort): freeze it once, laid out
+    // like the join wants it; the freeze also counts the nodes.
+    val (nodesPart, n) = graft.plans.Eager.materialize(nodes
+      .repartition(nP, col("doc_id"))
+      .sortWithinPartitions("doc_id"))
     // empty graph: no nodes means no ranks — return the (empty) node
     // frame shaped like the loop's output instead of dividing by zero in
     // the teleport term (empty-input sweep: an empty corpus slice is a
@@ -1288,6 +1265,10 @@ object TextOps {
         .select(col("dst"), expr("pr div deg").as("q"))
         .groupBy("dst").agg(sum(col("q")).as("c"))
         .withColumnRenamed("dst", "doc_id")
+        // back to the layout width: the regroup shuffles at the session
+        // width, and a wider ranks frame would make the next iteration
+        // re-shuffle the EDGE side to match (elided when widths agree)
+        .repartition(nP, col("doc_id"))
       ranks = nodesPart.join(contrib, Seq("doc_id"), "left")
         .select(col("doc_id"),
           (lit(teleport) + expr("(85 * coalesce(c, 0)) div 100")).as("pr"))
@@ -1311,40 +1292,34 @@ object TextOps {
     // the union from the callers' pair cache AND re-shuffled the whole
     // edge list per round (rounds × fact-exchange at corpus scale, the
     // exact cost the scaladoc below prices). Freeze the edge list ONCE,
-    // hash(dst)-partitioned at the pinned session partition count and
-    // in-partition sorted, so every round's edge side satisfies the
-    // SortMergeJoin requirement as-is: per-round work on the edge side
-    // drops to a cached-block scan, and only node-sized frames move.
-    // width derived from the pair count (Eager.layoutPartitions — the
-    // scale-adaptive rule; the main callers have the pair frame persisted
-    // already, so the count is a cache scan)
-    val nP = graft.plans.Eager.layoutPartitions(nodes.sparkSession, 2L * pairs.count())
-    // r17 size threshold (r16 verdict task #5, the pageRank sibling):
-    // under one derived partition the layout jobs buy nothing — the
-    // union is still frozen ONCE (eager localCheckpoint) so no round
-    // re-derives it, but without the repartition/sort/persist overhead.
-    val edgesBase = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-    val edges =
-      if (nP <= 1) edgesBase.eagerly
-      else edgesBase
-        .repartition(nP, col("dst"))
-        .sortWithinPartitions("dst")
-        .pinned
+    // hash(dst)-partitioned and in-partition sorted, so every round's
+    // edge side satisfies the SortMergeJoin requirement as-is: per-round
+    // work on the edge side drops to a frozen-block scan, and only
+    // node-sized frames move. Width derived from the pair count
+    // (Eager.joinLayoutPartitions — the scale-adaptive rule). The pair
+    // frame is frozen first (the union scans it twice, so no two stages
+    // race to compute it — the r14 lazy-persist sweep), and that job
+    // returns the count.
+    val (pairsF, nPairs) = graft.plans.Eager.materialize(pairs)
+    val nP = graft.plans.Eager.joinLayoutPartitions(nodes.sparkSession, 2L * nPairs)
+    val edges = pairsF.select(col("d1").as("src"), col("d2").as("dst"))
+      .union(pairsF.select(col("d2").as("src"), col("d1").as("dst")))
+      .repartition(nP, col("dst"))
+      .sortWithinPartitions("dst")
+      .eagerly
     // seed with min(self, direct neighbors) — round 1 folded into the
     // initialization, so the common diameter-1 components (pairwise dup
     // clusters) converge after a single fixpoint-check round
     val seed = edges.groupBy(col("src")).agg(min("dst").as("nbr0"))
       .select(col("src").as("seed_id"), col("nbr0"))
-    // localCheckpoint (eager) rather than persist: each round references
-    // the previous labels frame MORE THAN ONCE (neighbor-min + the
-    // shortcut's parent lookup), so without lineage truncation the
+    // Frozen (Eager), never a plain persist: each round references the
+    // previous labels frame MORE THAN ONCE (neighbor-min + the
+    // shortcut's parent lookup), so without plan-level truncation the
     // analyzed plan doubles per round — by round ~10 the plan STRING
     // (built for the execution listener even with the UI off) is
-    // gigabytes. Checkpointing replaces the plan with a LogicalRDD leaf
-    // each round: plan size is constant in rounds, blocks are freed by
-    // the context cleaner once the next round's checkpoint supersedes
-    // them.
+    // gigabytes. Freezing replaces the plan with a LogicalRDD leaf each
+    // round: plan size is constant in rounds, and each superseded
+    // round's blocks are released as soon as the next round is frozen.
     var labels = nodes
       .join(seed, col("doc_id") === col("seed_id"), "left")
       .select(col("doc_id"),
@@ -1383,25 +1358,22 @@ object TextOps {
       val next = prop.join(parent, col("cluster_id") === col("p_id"), "left")
         .select(col("doc_id"),
           least(col("cluster_id"), coalesce(col("p_lab"), col("cluster_id"))).as("cluster_id"))
-        // loop-carried: localCheckpoint DELIBERATELY (not Eager.eagerly)
-        // — truncation is the point here, or each pointer-doubling round
-        // compounds the plan. Cluster caveat (r15 advice): localCheckpoint
-        // blocks are non-replicated, so an executor loss mid-loop fails
-        // the query instead of recomputing; acceptable for a bounded
-        // O(log d) loop, and a reliable checkpointDir is the alternative
-        // for long-lived cluster jobs.
-        .localCheckpoint(true) // materializes + truncates lineage (see init note)
+        // loop-carried: frozen each round so the pointer-doubling rounds
+        // never compound the plan (see the init note); the RDD lineage is
+        // kept, so an executor loss mid-loop recomputes the lost blocks
+        .eagerly
       prev = cur
       cur = labelSum(next)
+      labels.release()
       labels = next
     }
-    // `labels` stays checkpoint-cached: it IS the result, and the
-    // caller's single materialization (Verify write / bench noop sink)
-    // reads the cached blocks; superseded rounds are GC'd by the cleaner.
-    // The pinned edge layout is only read by the loop — labels is a
-    // lineage-free leaf, so the blocks can be dropped here rather than
-    // lingering until the harness clearCache.
-    edges.unpersist()
+    // `labels` stays frozen: it IS the result, and the caller's single
+    // materialization (Verify write / bench noop sink) reads its blocks.
+    // The pair and edge frames are only read by the loop — labels is a
+    // leaf, so their blocks are dropped here rather than waiting for the
+    // cleaner.
+    pairsF.release()
+    edges.release()
     (labels, rounds)
   }
 
@@ -2028,8 +2000,8 @@ object TextOps {
     // (lifecycle: caller's-action-time consumer, reclaimed by the harness
     // clearCache — the bloomSemiJoin note). Lazy persist is SAFE here by
     // single-consumer-first structure (r14 sweep): minhashPairsOver's
-    // eager band-key localCheckpoint is this cache's sole first consumer
-    // and loads it fully, so the two verify joins below read it warm.
+    // eager band-key freeze is this cache's sole first consumer and
+    // loads it fully, so the two verify joins below read it warm.
     val codes = shingleCodeFrame(spark, dir).persist()
     minhashPairsOver(codes)
       .join(codes.select(col("doc_id").as("d1"), col("cs").as("cs1")), "d1")
@@ -2178,7 +2150,7 @@ object TextOps {
       // exchanges, and Spark submits broadcast jobs concurrently — with
       // a lazy cache each of them raced to materialize it and the whole
       // tf⋈vocab fold ran three times (measured 3× the subtree cost at
-      // local[32]). localCheckpoint materializes the doc-sized frame
+      // local[32]). The Eager freeze materializes the doc-sized frame
       // once, before any consumer plans against it.
       .eagerly
     // Downstream frames (stats, hist, ranges) are deliberately NOT
@@ -2653,20 +2625,19 @@ object TextOps {
   private[graft] def substringStripUnsorted(spark: SparkSession, indexPath: String,
                                             docs: DataFrame): DataFrame = {
     // three consumers inside substringHits (seen-probe, batchMin, the
-    // batchMin join's probe side) — persist or the scan→explode→hash
-    // stream runs three times per call; safe to unpersist right after
-    // because substringHits is EAGER (localCheckpoint). The count
-    // materializes the cache BEFORE the three builds fan out (r14
-    // lazy-persist sweep: concurrent stages over a lazy cache race).
-    val pos = gramKeyFrame(docs).persist()
-    pos.count()
+    // batchMin join's probe side) — frozen, or the scan→explode→hash
+    // stream runs three times per call, and materialized BEFORE the
+    // three builds fan out (r14 lazy-persist sweep: concurrent stages
+    // over a lazy cache race); safe to release right after because
+    // substringHits is frozen too.
+    val pos = gramKeyFrame(docs).eagerly
     try stripSpans(docs, islandSpans(substringHits(spark, indexPath, pos)))
-    finally pos.unpersist()
+    finally pos.release()
   }
 
   /** The keep-first hit positions of one batch's gram stream against the
-    * CURRENT index: (doc_id, j) rows to strip. Eager and lineage-
-    * truncated (localCheckpoint) so callers can fold the batch into the
+    * CURRENT index: (doc_id, j) rows to strip. Frozen (Eager: the plan
+    * no longer reads the index) so callers can fold the batch into the
     * index and still evaluate the decision afterwards — the
     * [[dedupRejected]] discipline. */
   private def substringHits(spark: SparkSession, indexPath: String,
@@ -2713,9 +2684,9 @@ object TextOps {
     * replay-safe entry (committed batch dirs are kept verbatim). */
   def substringIncrement(spark: SparkSession, indexPath: String,
                          docs: DataFrame): DataFrame = {
-    val pos = gramKeyFrame(docs)
-      .persist() // hit decision + fold partials; unpersisted before return
-    pos.count() // eager before substringHits' three builds fan out (r14 sweep)
+    // hit decision + fold partials; frozen before substringHits' three
+    // builds fan out (r14 sweep), released before return
+    val pos = gramKeyFrame(docs).eagerly
     val hits = substringHits(spark, indexPath, pos)
     // batchMin aggregates ON the index's bucket layout (aligned BELOW
     // the groupBy — one delta exchange at the bucket count instead of
@@ -2726,7 +2697,7 @@ object TextOps {
     substringFold(spark, indexPath,
       substringIndexState(indexPath).aligned(pos)
         .groupBy("k").agg(min("doc_id").as("min_doc")))
-    pos.unpersist()
+    pos.release()
     stripSpans(docs, islandSpans(hits)).orderBy("doc_id")
   }
 
@@ -2973,19 +2944,16 @@ object TextOps {
     // tokenize→shingle→sign→band pipeline a second time for the same
     // query (its own internal minhashPairs call) — the containment/
     // dedupCurve shared-frame discipline applies across helper
-    // boundaries too. Lifecycle (r11 second-pass review): the EAGER
-    // count() materializes the persist before the CC loop re-reads the
-    // pair frame every round, and the frame is UNPERSISTED right after
-    // the loop — CC's result is a localCheckpointed LogicalRDD leaf with
-    // no lineage back to pairsF, so nothing downstream recomputes it and
-    // the band-join blocks don't outlive the query in sessions that
-    // never call clearCache (a lazy agg here would have counted AFTER
-    // the unpersist and rebuilt the whole pipeline).
-    val pairsF = minhashPairs(spark, dir).persist()
-    val nNearPairs = pairsF.count()
+    // boundaries too. Lifecycle (r11 second-pass review): the pair frame
+    // is frozen (its job also yields the count reported below) and
+    // RELEASED right after the loop — CC's result is a frozen LogicalRDD
+    // leaf whose plan has no lineage back to pairsF, so nothing
+    // downstream recomputes it and the band-join blocks don't outlive
+    // the query in sessions that never call clearCache.
+    val (pairsF, nNearPairs) = graft.plans.Eager.materialize(minhashPairs(spark, dir))
     val labels =
       try connectedComponents(docs.select(col("doc_id")), pairsF)
-      finally pairsF.unpersist()
+      finally pairsF.release()
     val clusters = labels
       .agg(sum(when(col("doc_id") =!= col("cluster_id"), 1L).otherwise(0L))
         .as("n_dropped"))
@@ -3180,8 +3148,8 @@ object TextOps {
     // (lifecycle: caller's-action-time consumer, reclaimed by the harness
     // clearCache — the bloomSemiJoin note). Lazy persist is SAFE here by
     // single-consumer-first structure (r14 sweep): minhashPairsOver's
-    // eager band-key localCheckpoint is this cache's sole first consumer
-    // and loads it fully, so the two verify joins below read it warm.
+    // eager band-key freeze is this cache's sole first consumer and
+    // loads it fully, so the two verify joins below read it warm.
     val codes = shingleCodeFrame(spark, dir).persist()
     val st = minhashPairsOver(codes)
       .join(codes.select(col("doc_id").as("d1"), col("cs").as("cs1")), "d1")
@@ -3214,8 +3182,8 @@ object TextOps {
     * nodes that survive repeated "drop degree-<2 nodes" rounds are the
     * dense template/boilerplate families worth human review, while
     * chains and pendants (one-off near-matches) peel away. The loop runs
-    * to FIXPOINT with the connectedComponents discipline (localCheckpoint
-    * per round, driver sees only convergence scalars) — a fixed round
+    * to FIXPOINT with the connectedComponents discipline (one Eager
+    * freeze per round, driver sees only convergence scalars) — a fixed round
     * count would be a silent cap at 100 TB, where a long chain peels one
     * endpoint pair per round (r10 verdict item). The oracle stays the
     * fixture-proven THREE chained CTEs: R8StatsSpec pins that the fixture
@@ -3230,8 +3198,8 @@ object TextOps {
     * sort. */
   def kcore(spark: SparkSession, dir: String): DataFrame = {
     val pairs = minhashPairs(spark, dir)
-    // localCheckpoint per round (the connectedComponentsWithRounds
-    // discipline): each round references the edge frame THREE times
+    // frozen per round (the connectedComponentsWithRounds discipline):
+    // each round references the edge frame THREE times
     // (degree agg + two semi-joins), so without truncation round 3's
     // plan re-evaluates the whole LSH pipeline ~3³ times — measured 10.3 s
     // unchecked vs 1.9 s checkpointed at sf0.1
@@ -3249,7 +3217,7 @@ object TextOps {
     * can't produce (a chain needing ≥ 4 rounds) are unit-testable.
     * Input: undirected edges as both directed rows, lineage already
     * truncated. Returns (surviving edges, modifying rounds run). Each
-    * round's degree frame is checkpointed once (node-sized, referenced
+    * round's degree frame is frozen once (node-sized, referenced
     * by both the convergence probe and the keep join); convergence =
     * a degree pass finding no sub-k node, checked BEFORE the join work
     * so the fixpoint confirmation costs one aggregate, not a full round.
@@ -3274,12 +3242,16 @@ object TextOps {
       else {
         rounds += 1
         val keep = deg.filter(col("deg") >= k).select("src")
-        edges = edges
+        val peeled = edges
           .join(keep, "src")
           .join(keep.withColumnRenamed("src", "dst"), "dst")
           .select("src", "dst")
           .eagerly
+        // a superseded round this loop froze (never the caller's edges0)
+        if (rounds > 1) edges.release()
+        edges = peeled
       }
+      deg.release()
     }
     if (capped)
       System.err.println(s"[graft] kcorePeel capped at $maxRounds rounds " +

@@ -201,7 +201,7 @@ object VectorOps {
       // stages over a not-yet-materialized cache race to compute it —
       // each re-runs the k·|vecs| distance sweep (on a cluster the same
       // race re-fires whenever an executor loses cache blocks).
-      // localCheckpoint materializes the assignment table exactly once
+      // The Eager freeze materializes the assignment table exactly once
       // before any consumer plans (SemDeDup materializes it for the same
       // reason; the bandKeyFrame/ccnet-rarity discipline). Blocks are
       // reclaimed by the context cleaner once the frame is unreachable.
@@ -518,10 +518,9 @@ object VectorOps {
     // crash before the write).
     if (!new java.io.File(cdir, "_SUCCESS").isFile) {
       if (cdir.exists()) graft.sources.Writers.deleteRecursively(cdir)
-      val seeds = firstBatch.orderBy("vec_id").limit(SemDedupSeedK)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-        .eagerly
-      val n = seeds.count()
+      val (seeds, n) = graft.plans.Eager.materialize(
+        firstBatch.orderBy("vec_id").limit(SemDedupSeedK)
+          .select(col("vec_id").as("c_id"), col("embedding").as("c_emb")))
       if (n == 0)
         return seeds // empty batch before first freeze: decide over nothing
       require(n >= SemDedupSeedK || allowSmallSeed,

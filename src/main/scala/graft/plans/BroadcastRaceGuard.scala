@@ -43,7 +43,8 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   *   - the cache is NOT yet materialized (`isCachedColumnBuffersLoaded`
   *     is false) — builds over an already-loaded cache just read it.
   * The fix at the offending call site is an EAGER materialization
-  * (localCheckpoint, or the up-front count the operator needs anyway)
+  * (`graft.plans.Eager`'s `.eagerly`, or the up-front count the
+  * operator needs anyway)
   * before the consumers plan — never a lazy persist.
   *
   * Registered via `SparkSessionExtensions.injectQueryStagePrepRule`
@@ -139,7 +140,7 @@ object BroadcastRaceGuard {
           "frame — concurrent build stages will race to materialize it " +
           "and each re-runs the frame's whole pipeline " +
           "(correctness-invisible, up to N-fold wasted work). " +
-          "Materialize eagerly (localCheckpoint or an up-front count) " +
+          "Materialize eagerly (Eager's .eagerly or an up-front count) " +
           "before the consumers plan, or set " +
           "spark.graft.broadcastRaceGuard=false.")
     }

@@ -1,82 +1,106 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
+import org.apache.spark.sql.classic.GraftBridge
+import org.apache.spark.sql.connector.read.streaming.SparkDataStream
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SQLExecution, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.storage.StorageLevel
 
-/** Eager one-shot materialization of a frame that is about to fan out
-  * into several consumers (the cache-race rule: materialize ONCE,
-  * before any consumer plans against it — a lazy persist lets N
-  * consumers race to build the cache and duplicates the upstream work
-  * up to N×; BroadcastRaceGuard rejects exactly that shape).
+/** The engine's ONE way to freeze a frame, identical on every master.
   *
-  * TWO mechanisms, picked by master (r15 advice — the availability
-  * trade is real on clusters):
-  *  - `local[*]`: `localCheckpoint(eager = true)` — cheapest, and the
-  *    truncated lineage / non-replicated blocks cost nothing in a
-  *    single-JVM runtime where losing an "executor" is losing the JVM.
-  *  - cluster masters: eager `persist(MEMORY_AND_DISK)` + count —
-  *    same materialize-before-fan-out guarantee, but LINEAGE IS KEPT:
-  *    an executor loss (or a dynamic-allocation decommission, which
-  *    Spark explicitly warns about under localCheckpoint) transparently
-  *    recomputes the lost blocks instead of failing the query or
-  *    micro-batch.
+  * [[materialize]] runs the frame's executed plan once (one Spark job,
+  * plus whatever shuffle stages the plan itself needs), keeps the rows
+  * as an RDD persisted `MEMORY_AND_DISK`, and returns a `LogicalRDD`
+  * leaf over that RDD. The leaf carries the analyzed plan's output
+  * attributes and the `outputPartitioning`/`outputOrdering` of the plan
+  * that actually ran (the AQE FINAL plan, not the AdaptiveSparkPlan
+  * shell, which reports `UnknownPartitioning(0)` — the reason a
+  * `localCheckpoint` loses the layout). Three uses share it:
+  *  - materialize-once before fan-out (the cache-race rule: N consumers
+  *    of a lazy persist race to build it and redo the upstream work up
+  *    to N×; BroadcastRaceGuard rejects that shape);
+  *  - loop-invariant layouts: `repartition(n, k).sortWithinPartitions(k)`
+  *    frozen here reaches every later join with no Exchange or Sort on
+  *    its side (pageRank's and CC's edge lists);
+  *  - loop-carried frames (CC labels, k-core rounds): each round is a
+  *    single leaf, so the plan stays constant-size across rounds.
   *
-  * `spark.graft.eagerMaterialize` overrides the choice:
-  * `localCheckpoint` | `persist` | `auto` (default).
+  * Lineage is truncated at PLAN level (the leaf hides the upstream
+  * plan from analysis and optimization) but KEPT at RDD level: the RDD
+  * still depends on its parents, so a lost executor or a decommissioned
+  * block recomputes the missing partitions instead of failing the query.
+  * The price is an RDD DAG that grows one level per loop round. The
+  * engine's loops are short (CC is O(log diameter), k-core is capped,
+  * pageRank runs 5 lazy iterations); a long-running cluster loop should
+  * set a reliable `SparkContext.setCheckpointDir` and `checkpoint()` its
+  * carried frame every few dozen rounds, which cuts the RDD lineage.
   *
-  * NOT for loop-carried frames (pointer-doubling CC, power iteration):
-  * there lineage TRUNCATION is the point — persist keeps the whole
-  * iterative plan growing per round. Those sites stay on
-  * localCheckpoint explicitly, with the cluster caveat documented. */
+  * Releasing: the blocks are not in the CacheManager, so
+  * `Dataset.unpersist()` and `catalog.clearCache()` do not see them.
+  * `.release()` frees a frozen frame's blocks explicitly (CC drops its
+  * pair and edge frames this way); otherwise the context cleaner frees
+  * them once the frame is unreachable. */
 object Eager {
 
-  def eager(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val mode = spark.conf.getOption("spark.graft.eagerMaterialize")
-      .getOrElse("auto")
-    val useLocal = mode match {
-      case "localCheckpoint" => true
-      case "persist" => false
-      case _ => spark.sparkContext.master.startsWith("local")
+  /** Freeze `df` (see the object doc); also returns the row count the
+    * materialization job observed, so a caller sizing a layout from the
+    * frozen rows pays no extra count job. */
+  def materialize(df: DataFrame): (DataFrame, Long) = {
+    val qe = df.queryExecution
+    val planner = df.sparkSession.experimental
+    planner.synchronized {
+      if (!planner.extraStrategies.contains(FrozenScan)) planner.extraStrategies :+= FrozenScan }
+    val (rdd, rows) = SQLExecution.withNewExecutionId(qe, Some("eagerly")) {
+      val r = qe.executedPlan.execute().map(_.copy()).setName(FrozenScan.tag)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      (r, r.count())
     }
-    if (useLocal) df.localCheckpoint(true)
-    else {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
+    val ran = qe.executedPlan match { case a: AdaptiveSparkPlanExec => a.executedPlan; case p => p }
+    // a join's PartitioningCollection grows with join depth; its first
+    // leaf is as true as the whole (LogicalRDD.fromDataset does the same)
+    def leaf(p: Partitioning): Partitioning = p match {
+      case c: PartitioningCollection => leaf(c.partitionings.head); case _ => p }
+    (GraftBridge.frozenLeaf(df, rdd, leaf(ran.outputPartitioning), ran.outputOrdering), rows)
+  }
+
+  /** Plans the scan of a frozen RDD as [[FrozenScanExec]]. */
+  object FrozenScan extends SparkStrategy {
+    val tag = "graft-frozen"
+    def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      case l: LogicalRDD if l.rdd.name == tag => new FrozenScanExec(l.output, l.rdd,
+        "ExistingRDD", l.outputPartitioning, l.outputOrdering, None) :: Nil
+      case _ => Nil
     }
   }
 
-  /** Eager materialization that PRESERVES the frame's physical layout
-    * (outputPartitioning + outputOrdering) for downstream planning —
-    * for loop-INVARIANT frames laid out once so every iteration's join
-    * can elide its Exchange/Sort (pageRank's edge list, CC's edge list).
-    *
-    * Why not [[eager]]: `localCheckpoint` under AQE records the frozen
-    * RDD as `UnknownPartitioning(0)` (observed r16 — the executed plan
-    * is an AdaptiveSparkPlanExec and the checkpoint does not recover the
-    * final stage's partitioning), so EnsureRequirements re-exchanged and
-    * re-sorted the "pinned" frame in EVERY iteration — silently undoing
-    * the layout the repartition+sort paid for. An eager
-    * `persist(MEMORY_AND_DISK)` + count keeps the layout: the
-    * InMemoryRelation's outputPartitioning/outputOrdering are the cached
-    * plan's, and an explicit-N repartition is never coalesced by AQE.
-    * Lineage is also kept, which is the CORRECT trade for loop-invariant
-    * frames on clusters (executor loss recomputes; the r15 advice
-    * caveat) — unlike loop-CARRIED frames, the plan does not grow with
-    * iterations. */
-  def pinnedLayout(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    p
+  /** `RDDScanExec` keeps the attribute ids of its reported partitioning
+    * and ordering in its canonical form, so the two sides of a self-join
+    * of one frozen frame never compare equal and lose exchange reuse
+    * (each side re-runs the same shuffle). This scan normalizes them
+    * against its own output, as the output itself already is. */
+  class FrozenScanExec(out: Seq[Attribute], rdd: RDD[InternalRow], name: String,
+      p: Partitioning, o: Seq[SortOrder], s: Option[SparkDataStream])
+      extends RDDScanExec(out, rdd, name, p, o, s) {
+    override def doCanonicalize(): SparkPlan = {
+      def norm[T <: Expression](e: T): T = QueryPlan.normalizeExpressions(e, out)
+      super.doCanonicalize().asInstanceOf[RDDScanExec].copy(outputOrdering = o.map(norm),
+        outputPartitioning = p match { case e: Expression => norm(e).asInstanceOf[Partitioning]; case _ => p })
+    }
   }
 
-  /** Partition count for a pinned layout, derived from the frame's row
+  /** Partition count for a frozen layout, derived from the frame's row
     * count (guide §2: scale-adaptive partitioning, "derive from input
     * size rather than a constant tuned for either local mode or the
-    * cluster"). A pinned layout freezes its partition count — AQE can
-    * no longer coalesce it, and every co-partitioned consumer must run
-    * at that width — so pinning at `spark.sql.shuffle.partitions`
+    * cluster"). A frozen layout fixes its partition count — AQE can no
+    * longer coalesce it, and every co-partitioned consumer must run at
+    * that width — so pinning at `spark.sql.shuffle.partitions`
     * over-partitions small inputs (measured r16: the pageRank loop at
     * a fixture-scale 32-way pinned layout ran 5 iterations of 32-task
     * SortMergeJoins that AQE used to collapse to one partition —
@@ -85,18 +109,30 @@ object Eager {
     * of narrow key/metadata rows, the guide §2.2 partition-size band);
     * the count is capped at the session shuffle parallelism so a huge
     * frame still matches the cluster's configured width. */
-  def layoutPartitions(spark: org.apache.spark.sql.SparkSession, rows: Long): Int = {
+  def layoutPartitions(spark: SparkSession, rows: Long): Int = {
     val perPart = spark.conf.getOption("spark.graft.layoutRowsPerPartition")
       .map(_.toLong).getOrElse(4L << 20)
     val cap = spark.sessionState.conf.numShufflePartitions
     math.max(1L, math.min(cap.toLong, (rows + perPart - 1) / perPart)).toInt
   }
 
-  implicit class EagerOps(private val df: DataFrame) extends AnyVal {
-    /** `frame.eagerly` — see [[Eager.eager]]. */
-    def eagerly: DataFrame = eager(df)
+  /** [[layoutPartitions]] for a layout that later joins must read as-is:
+    * never below two partitions (within the session width). A
+    * one-partition layout is `SinglePartition` to the planner, which
+    * cannot impose it on a join's other side, so EnsureRequirements
+    * re-shuffles BOTH sides to the session width. */
+  def joinLayoutPartitions(spark: SparkSession, rows: Long): Int =
+    math.max(layoutPartitions(spark, rows), math.min(2, spark.sessionState.conf.numShufflePartitions))
 
-    /** `frame.pinned` — see [[Eager.pinnedLayout]]. */
-    def pinned: DataFrame = pinnedLayout(df)
+  implicit class EagerOps(private val df: DataFrame) extends AnyVal {
+    /** `frame.eagerly` — the frozen frame of [[Eager.materialize]]. */
+    def eagerly: DataFrame = materialize(df)._1
+
+    /** `frame.release()`: free the blocks of a frame returned by
+      * [[Eager.materialize]] / `.eagerly` (see the object doc). */
+    def release(): Unit = df.queryExecution.analyzed match {
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+      case p => throw new IllegalArgumentException(s"not a frozen frame: ${p.nodeName}")
+    }
   }
 }

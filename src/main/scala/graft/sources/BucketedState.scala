@@ -104,7 +104,7 @@ final case class BucketedState(path: String, prefix: String, schemaDdl: String,
   def append(spark: SparkSession, df: DataFrame): String =
     ensure(spark) match {
       case Some(t) =>
-        graft.plans.Eager.eager(df)
+        graft.plans.Eager.materialize(df)._1
           .write.format("parquet").mode("append")
           .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
           .sortBy(bucketCols.head, bucketCols.tail: _*)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.plans.Eager.EagerOps
 import org.apache.spark.sql.functions._
 
 /** One funnel-relevant event (input row of `StreamOps.funnelStages`). */
@@ -460,11 +461,10 @@ object StreamOps {
     val spark = batch.sparkSession
     val dir = new java.io.File(s"$outPath/batch_id=$batchId")
     val committed = new java.io.File(dir, "_SUCCESS").isFile
-    val keys = TextOps.batchBandKeys(batch).persist()
+    // frozen (r14 lazy-persist sweep): dedupRejected's single action
+    // plans three distinct builds over this frame — materialize first
+    val keys = TextOps.batchBandKeys(batch).eagerly
     try {
-      // eager (r14 lazy-persist sweep): dedupRejected's single action
-      // plans three distinct builds over this frame — materialize first
-      keys.count()
       val batchMin = TextOps.batchMinOf(keys)
       if (!committed) {
         val rejected = TextOps.dedupRejected(spark, indexPath, keys, batchMin)
@@ -473,7 +473,7 @@ object StreamOps {
       }
       // fold AFTER the decision commit — idempotent (novel keys only)
       TextOps.dedupFold(spark, indexPath, batchMin)
-    } finally keys.unpersist()
+    } finally keys.release()
   }
 
   /** Streaming face of the incremental exact-substring dedup loop

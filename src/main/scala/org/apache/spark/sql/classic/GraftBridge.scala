@@ -1,7 +1,10 @@
 package org.apache.spark.sql.classic
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column ⇄ Expression bridge for graft's custom Catalyst expressions.
   *
@@ -19,6 +22,19 @@ object GraftBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
+
+  /** `LogicalRDD` leaf over a frozen frame's rows, carrying the frame's
+    * analyzed output and its stats and constraints (the stats rewrite is
+    * private[sql]) — the `Dataset.localCheckpoint` construction, with
+    * the layout supplied by the caller (`graft.plans.Eager`). */
+  def frozenLeaf(df: org.apache.spark.sql.DataFrame, rdd: org.apache.spark.rdd.RDD[InternalRow],
+      p: Partitioning, o: Seq[SortOrder]): org.apache.spark.sql.DataFrame = {
+    val qe = df.asInstanceOf[Dataset[_]].queryExecution
+    val (stats, constraints) = LogicalRDD.rewriteStatsAndConstraints(qe.analyzed, qe.optimizedPlan)
+    val session = df.sparkSession.asInstanceOf[SparkSession]
+    Dataset.ofRows(session, LogicalRDD(qe.analyzed.output, rdd, p, o, df.isStreaming)(
+      session, stats, constraints).newInstance())
+  }
 
   /** Analyzed logical plan of a DataFrame (`queryExecution` is classic-side). */
   def analyzed(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

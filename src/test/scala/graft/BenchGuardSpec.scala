@@ -66,4 +66,24 @@ class BenchGuardSpec extends AnyFunSuite {
     // territory at fleet scale, not an unambiguous co-tenant window
     assert(!Bench.passContaminated(1100.0, Seq(600.0, 650.0)))
   }
+
+  test("conf knobs: k=v pairs parse, blanks skip, a value may hold '='") {
+    assert(Bench.confPairs(" a.b=1 ; ;c=x=y ".split(";").toSeq) ==
+      Seq("a.b" -> "1", "c" -> "x=y"))
+    assert(Bench.confPairs(Seq.empty).isEmpty)
+  }
+
+  test("conf knobs: a segment without '=' or with an empty key fails loudly") {
+    val e = intercept[IllegalArgumentException](
+      Bench.confPairs("a=1;spark.sql.shuffle.partitions".split(";").toSeq))
+    assert(e.getMessage.contains("spark.sql.shuffle.partitions"), e.getMessage)
+    intercept[IllegalArgumentException](Bench.confPairs(Seq("=1")))
+  }
+
+  test("PlanDump: every trailing k=v is a conf, in any position; the first other arg is the mode") {
+    assert(PlanDump.trailingArgs(Seq("a=1", "benchexec", "b=2")) ==
+      ((Some("benchexec"), Seq("a" -> "1", "b" -> "2"))))
+    assert(PlanDump.trailingArgs(Seq("a=1")) == ((None, Seq("a" -> "1"))))
+    assert(PlanDump.trailingArgs(Seq("bench")) == ((Some("bench"), Seq.empty)))
+  }
 }

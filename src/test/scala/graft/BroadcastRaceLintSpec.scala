@@ -11,8 +11,8 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   * rounds, both found only by profiling). The precondition is
   * mechanical: ≥ 2 BroadcastExchangeExec nodes over one InMemoryRelation
   * in a cold plan. This sweep walks every bench shape and fails on any
-  * such pair — the fix is an EAGER materialization (localCheckpoint, or
-  * an up-front count the operator needs anyway) before the consumers
+  * such pair — the fix is an EAGER materialization (Eager's `.eagerly`,
+  * or an up-front count the operator needs anyway) before the consumers
   * plan, never a lazy persist. The production guard was widened in r15
   * (r14 verdict task #3) to SHUFFLE builds as well — the q_semdedup
   * 18.3× gate breach was the shuffle form of the same race — and the
@@ -71,7 +71,7 @@ class BroadcastRaceLintSpec extends SparkSpec {
       if (n >= 2)
         offenders += s"$name: $n broadcast exchanges scan one cached frame " +
           "— concurrent broadcast jobs will race to materialize it; " +
-          "replace the lazy persist with an eager localCheckpoint " +
+          "replace the lazy persist with an Eager freeze (.eagerly) " +
           "(the q_ccnet_buckets/q_basket fix)"
       // the PRODUCTION guard predicate over the same plan (r13: the lint
       // logic was promoted to a planning-time rule — sweeping the fleet
@@ -193,7 +193,7 @@ class BroadcastRaceLintSpec extends SparkSpec {
       cached.count()
       BroadcastRaceGuard.check(racy.queryExecution.executedPlan)
       // and the engine's own fixed q_semdedup shape plans NO in-memory
-      // scan at all (localCheckpoint → LogicalRDD leaf) — guard-clean
+      // scan at all (Eager freeze → LogicalRDD leaf) — guard-clean
       spark.catalog.clearCache()
       val semdedup = SparkEntry.benchShapes("q_semdedup")(spark, sf)
       BroadcastRaceGuard.check(semdedup.queryExecution.executedPlan)

@@ -143,4 +143,53 @@ class ClusterSpec extends SparkSpec {
       assert(members.keySet.min == label)
     }
   }
+
+  test("at-scale layout width (nP > 1): same labels, no Exchange/Sort on a round's edge side") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    // chains of diameter 9 and 7 (several rounds), a star, singletons
+    val nodes = 0L until 40L
+    val pairs = (0L until 9L).map(i => (i, i + 1)) ++
+      (10L until 17L).map(i => (i + 1, i)) ++ (21L to 26L).map(i => (20L, i))
+    // every round is frozen inside the loop, so its join plans are read
+    // off the freeze executions themselves; broadcast off keeps the round
+    // joins sort-merge joins, whose sides show any Exchange/Sort
+    // EnsureRequirements adds (AQE stays ON)
+    def run(rowsPerPartition: Option[String]) = {
+      val plans = java.util.Collections.synchronizedList(new java.util.ArrayList[SparkPlan]())
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      rowsPerPartition.foreach(spark.conf.set("spark.graft.layoutRowsPerPartition", _))
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.listenerManager.register(listener)
+      try {
+        val (labels, rounds) = TextOps.connectedComponentsWithRounds(
+          nodes.toDF("doc_id"), pairs.toDF("d1", "d2"))
+        val got = labels.as[(Long, Long)].collect().toMap
+        org.apache.spark.GraftTestAccess.drainListenerBus(spark.sparkContext)
+        val shapes = plans.toArray(Array.empty[SparkPlan])
+          .map(p => p -> FrozenLayout.layoutSides(p)(FrozenLayout.scanOf("src", "dst")))
+        val sides = shapes.map(_._2._1).sum
+        assert(sides >= rounds, s"expected one edge-side join per round ($rounds), saw $sides")
+        val moving = shapes.filter(_._2._2 > 0).map(_._1)
+        assert(moving.isEmpty, s"a round re-exchanges or re-sorts the edge layout " +
+          s"(target ${rowsPerPartition.getOrElse("default")}):\n" + moving.mkString("\n"))
+        got
+      } finally {
+        spark.listenerManager.unregister(listener)
+        spark.conf.unset("spark.graft.layoutRowsPerPartition")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+      }
+    }
+    // the default width is the two-partition floor (narrower than the
+    // session's 4 shuffle partitions); target 13 derives the full 4, the
+    // branch a large graph takes
+    assert(graft.plans.Eager.joinLayoutPartitions(spark, 2L * pairs.size) == 2)
+    val atDefault = run(None)
+    assert(atDefault == cc(nodes, pairs))
+    assert(run(Some("13")) == atDefault, "labels must not depend on the layout width")
+  }
 }

@@ -1,11 +1,19 @@
 package graft
 
 import graft.plans.Eager
+import graft.plans.Eager._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
-/** Eager.eagerly — the shared materialize-once helper (r15 advice):
-  * localCheckpoint on local masters, lineage-keeping eager persist on
-  * clusters, same rows either way. */
+/** Eager — the engine's one materialization primitive: a frozen frame
+  * is a single `LogicalRDD` leaf over an RDD persisted with its lineage,
+  * reporting the layout of the plan that produced it, on every master. */
 class EagerSpec extends SparkSpec {
 
   private def frame() = {
@@ -14,37 +22,90 @@ class EagerSpec extends SparkSpec {
     (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
   }
 
-  test("auto mode on local[*] localCheckpoints: lineage truncated, rows intact") {
-    val e = Eager.eager(frame())
+  private def frozenRdd(df: DataFrame) =
+    df.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+
+  test("eagerly freezes to one LogicalRDD leaf: plan lineage truncated, rows intact") {
+    val (e, rows) = Eager.materialize(frame())
+    assert(rows == 100L, "the materialization job's count is returned")
     assert(e.collect().length == 100)
-    // localCheckpoint shows up as a checkpointed plan root, not a persist
-    assert(e.queryExecution.analyzed.collectLeaves().exists(
-      _.getClass.getSimpleName.contains("LogicalRDD")),
-      "local master must take the localCheckpoint arm")
+    assert(e.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+      "a frozen frame is exactly one LogicalRDD leaf")
+    // RDD lineage is KEPT (recomputable on executor loss), unlike
+    // localCheckpoint, which replaces the dependencies with its blocks
+    val rdd = frozenRdd(e)
+    assert(rdd.getStorageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(!rdd.isCheckpointed && rdd.dependencies.nonEmpty,
+      "the frozen RDD must keep its parents")
+    e.release()
   }
 
-  test("persist mode keeps lineage: eagerly materialized, recomputable, rows intact") {
-    spark.conf.set("spark.graft.eagerMaterialize", "persist")
+  test("materialization is ONE Spark job for a shuffle-free frame") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val df = frame().filter(col("id") % 2 === 0)
+    df.queryExecution.executedPlan // plan outside the measured window
+    org.apache.spark.GraftTestAccess.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
     try {
-      val e = Eager.eager(frame())
-      assert(e.storageLevel != StorageLevel.NONE,
-        "persist arm must leave the frame cached")
-      // lineage kept: the plan still roots at the original local relation
-      assert(!e.queryExecution.analyzed.collectLeaves().exists(
-        _.getClass.getSimpleName.contains("LogicalRDD")),
-        "persist arm must not truncate lineage")
-      assert(e.collect().length == 100)
-      e.unpersist()
-    } finally spark.conf.unset("spark.graft.eagerMaterialize")
+      val (e, rows) = Eager.materialize(df)
+      org.apache.spark.GraftTestAccess.drainListenerBus(spark.sparkContext)
+      assert(rows == 50L)
+      assert(jobs.get() == 1, s"expected one job, saw ${jobs.get()}")
+      e.release()
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  test("explicit localCheckpoint mode overrides auto") {
-    spark.conf.set("spark.graft.eagerMaterialize", "localCheckpoint")
+  test("release frees a frozen frame's blocks and rejects a non-frozen frame") {
+    val e = frame().eagerly
+    val id = frozenRdd(e).id
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    e.release()
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id),
+      "release must unpersist the frozen RDD")
+    intercept[IllegalArgumentException](frame().release())
+  }
+
+  test("a loop-carried frame stays a single leaf across 12 rounds") {
+    var x = frame().select(col("id"), col("id").as("lab")).eagerly
+    for (_ <- 1 to 12) {
+      val prev = x
+      x = x.join(x.select(col("id").as("id2"), col("lab").as("lab2")),
+          col("lab") === col("id2"), "left")
+        .select(col("id"), org.apache.spark.sql.functions.least(
+          col("lab"), org.apache.spark.sql.functions.coalesce(col("lab2"), col("lab"))).as("lab"))
+        .eagerly
+      prev.release()
+    }
+    assert(x.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    assert(x.count() == 100L)
+    x.release()
+  }
+
+  test("a self-join of a frozen layout still reuses its exchange") {
+    // the scan of a frozen frame reports a layout keyed on its own
+    // attributes; the two sides of a self-join must still canonicalize
+    // equal, or each side re-runs the same shuffle
+    val frozen = frame().repartition(3, col("id")).sortWithinPartitions("id").eagerly
+    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
-      val e = Eager.eager(frame())
-      assert(e.queryExecution.analyzed.collectLeaves().exists(
-        _.getClass.getSimpleName.contains("LogicalRDD")))
-    } finally spark.conf.unset("spark.graft.eagerMaterialize")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val j = frozen.select(col("v").as("v1"), col("id").as("id1"))
+        .join(frozen.select(col("v").as("v2"), col("id").as("id2")), col("v1") === col("v2"))
+      val p = j.queryExecution.executedPlan
+      assert(p.collect { case r: ReusedExchangeExec => r }.size == 1,
+        s"the second v-keyed exchange over the frozen scan must be reused:\n$p")
+      assert(j.count() == 100L)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      frozen.release()
+    }
   }
 
   test("layoutPartitions derives the width from rows, capped at session parallelism") {
@@ -61,51 +122,99 @@ class EagerSpec extends SparkSpec {
     finally spark.conf.unset("spark.graft.layoutRowsPerPartition")
   }
 
-  test("pinnedLayout keeps the frozen partitioning+ordering visible to the planner") {
-    // the defect pinnedLayout exists to fix: localCheckpoint under AQE
+  test("eagerly keeps the frozen partitioning+ordering visible to the planner") {
+    // the defect a frozen layout must not have: localCheckpoint under AQE
     // records UnknownPartitioning(0), so a downstream join re-exchanges
     // and re-sorts the frame every time it is referenced (the r16
-    // pageRank/CC finding); an eager persist keeps the layout
-    import org.apache.spark.sql.functions.col
+    // pageRank/CC finding)
     val laid = frame()
       .repartition(3, col("id"))
       .sortWithinPartitions("id")
-    val pinned = Eager.pinnedLayout(laid)
+    // both frames are frozen with AQE ON (production conditions — AQE is
+    // where localCheckpoint loses the layout); the JOIN assertion then
+    // plans with AQE/broadcast off so the plain executed tree exposes
+    // exactly which sides EnsureRequirements re-exchanges (the
+    // IncrementalSemDedupSpec plan-pin discipline)
+    val frozen = laid.eagerly
+    val ckpt = laid.localCheckpoint(true)
+    val other = frame().select(col("id").as("id2"), col("v").as("v2"))
+    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
-      val other = frame().select(col("id").as("id2"), col("v").as("v2"))
-      // the frames are pinned with AQE ON (production conditions — AQE
-      // is where localCheckpoint loses the layout); the JOIN assertion
-      // then plans with AQE/broadcast off so the plain executed tree
-      // exposes exactly which sides EnsureRequirements re-exchanges
-      // (the IncrementalSemDedupSpec plan-pin discipline)
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      import org.apache.spark.sql.execution.SortExec
-      val ckpt = laid.localCheckpoint(true)
-      val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        def shape(left: org.apache.spark.sql.DataFrame) = {
-          val j = left.join(other, col("id") === col("id2"))
-          val p = j.queryExecution.executedPlan
-          (p.collect { case e: ShuffleExchangeExec => e }.size,
-            p.collect { case s: SortExec => s }.size)
-        }
-        // pinned side reaches the join bare: only the OTHER side is
-        // exchanged and sorted
-        assert(shape(pinned) == ((1, 1)),
-          s"pinned layout not honored: ${shape(pinned)} (exchanges, sorts)")
-        // contrast pin for the defect pinnedLayout exists to fix: the
-        // SAME layout through localCheckpoint is UnknownPartitioning(0),
-        // so BOTH sides re-exchange and re-sort — if Spark ever starts
-        // preserving it, pinnedLayout can go back to checkpointing
-        assert(shape(ckpt) == ((2, 2)),
-          "localCheckpoint now PRESERVES partitioning — revisit pinnedLayout")
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      def shape(left: DataFrame) = {
+        val p = left.join(other, col("id") === col("id2")).queryExecution.executedPlan
+        (p.collect { case e: ShuffleExchangeLike => e }.size,
+          p.collect { case s: SortExec => s }.size)
       }
-    } finally pinned.unpersist()
+      // frozen side reaches the join bare: only the OTHER side is
+      // exchanged and sorted
+      assert(shape(frozen) == ((1, 1)),
+        s"frozen layout not honored: ${shape(frozen)} (exchanges, sorts)")
+      // contrast pin: the SAME layout through localCheckpoint is
+      // UnknownPartitioning(0), so BOTH sides re-exchange and re-sort —
+      // if Spark ever starts preserving it, Eager could use it again
+      assert(shape(ckpt) == ((2, 2)),
+        "localCheckpoint now PRESERVES partitioning — revisit Eager")
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      frozen.release()
+    }
+  }
+
+  test("one primitive: no localCheckpoint( outside plans/Eager.scala, no eagerMaterialize knob") {
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => java.nio.file.Files.isRegularFile(p))
+    assert(files.exists(_.endsWith("plans/Eager.scala")), s"scan root wrong: $root")
+    val offenders = files.flatMap { p =>
+      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      val ckpt = text.contains("localCheckpoint(") && !p.endsWith("plans/Eager.scala")
+      val knob = text.contains("spark.graft." + "eagerMaterialize")
+      (if (ckpt) Seq(s"$p: localCheckpoint( call") else Nil) ++
+        (if (knob) Seq(s"$p: spark.graft.eagerMaterialize") else Nil)
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+}
+
+/** Plan-shape check shared by the graph-loop specs: do the sort-merge
+  * joins fed by a frozen layout read it bare? */
+object FrozenLayout {
+  /** Every node of a physical plan, through AQE shells and query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case _ => p.children.flatMap(nodes)
+  })
+
+  /** The single-child chain under a join side, down to where it ends;
+    * an aggregate ends it (its input is a different frame, not the
+    * side's rows). */
+  private def chain(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case s: QueryStageExec => chain(s.plan)
+    case _: BaseAggregateExec => Nil
+    case _ if p.children.size == 1 => chain(p.children.head)
+    case _ => Nil
+  })
+
+  /** (sort-merge join sides whose chain ends at a scan matching
+    * `isLayoutScan`, how many of those pass an Exchange or Sort). */
+  def layoutSides(plan: SparkPlan)(isLayoutScan: SparkPlan => Boolean): (Int, Int) = {
+    val sides = nodes(plan).collect { case j: SortMergeJoinExec => j.children }
+      .flatten.map(chain).filter(c => isLayoutScan(c.last))
+    (sides.size, sides.count(_.exists {
+      case _: ShuffleExchangeLike | _: ReusedExchangeExec | _: SortExec => true
+      case _ => false
+    }))
+  }
+
+  /** A scan of a frozen frame with exactly these output columns. */
+  def scanOf(cols: String*)(p: SparkPlan): Boolean = p match {
+    case r: RDDScanExec => r.output.map(_.name) == cols
+    case _ => false
   }
 }

@@ -20,9 +20,9 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   * compiled (the functions/SortedFolds or SqDistance pattern) or be
   * allowlisted with a boundedness note.
   *
-  * Blind spot, by construction: subtrees materialized by an eager
-  * localCheckpoint at build time (q_basket sets, q_ccnet_buckets
-  * rarity) are gone from the plan, so their HOFs are invisible here —
+  * Blind spot, by construction: subtrees frozen by Eager (`.eagerly`)
+  * at build time (q_basket sets, q_ccnet_buckets rarity) are a single
+  * scan leaf in the plan, so their HOFs are invisible here —
   * those operators' plan shapes are pinned by their own specs.
   *
   * The allowlist below records WHY each survivor stays interpreted:
@@ -158,8 +158,8 @@ object HofLintSpec {
     "q_ml_risk" -> Map("aggregate" -> 1, "filter" -> 3, "transform" -> 5),
     "q_pipeline" -> Map("filter" -> 1, "transform" -> 5),
     // SIG — shingle/signature/band lambdas on the dedup family. The r15
-    // lazy-persist sweep made minhashPairsOver's band-key frame an EAGER
-    // localCheckpoint, so the signature-stage lambdas now execute at
+    // lazy-persist sweep made minhashPairsOver's band-key frame EAGER
+    // (an Eager freeze), so the signature-stage lambdas now execute at
     // construction and leave the inspected final plans: the pure
     // LSH-headed queries (q_minhash_lsh/q_leakage/q_edit_sim/q_jw/
     // q_degree_dist) dropped to zero and left this list; containment/

@@ -21,6 +21,33 @@ class JaccardSpec extends SparkSpec {
     } yield (d1, d2, math.rint(jac * 10000) / 10000)).toSet
   }
 
+  /** A sf-shaped dir whose documents table holds exactly `docs`. */
+  private def docsDir(docs: Seq[(Long, String, String)]): String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_jaccard").toString
+    docs.toDF("doc_id", "text", "source")
+      .withColumn("lang", lit("en"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .select("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("a duplicate doc_id fails loudly instead of merging two documents") {
+    // rows 7 and 7' would otherwise be merged into ONE token set (wrong
+    // sizes, wrong pairs); the precondition rides the bitmap build
+    val docs = Seq(
+      (6L, "a b c d e f g h i j", "a"),
+      (7L, "a b c d e f g h i j", "a"),
+      (7L, "k l m", "a"))
+    val e = intercept[Exception](TextOps.jaccardPairs(spark, docsDir(docs)).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("duplicate doc_id 7")),
+      s"expected the doc_id precondition failure, got: $e")
+    // the same corpus without the collision runs clean
+    assert(TextOps.jaccardPairs(spark, docsDir(docs.take(2))).count() == 1L)
+  }
+
   test("sparse bitmap Jaccard is exact on a 150-word vocabulary (> 64-bit block)") {
     import spark.implicits._
     val vocab = (0 until 150).map(i => f"w$i%03d")
@@ -33,14 +60,7 @@ class JaccardSpec extends SparkSpec {
       (3L, vocab.slice(50, 150).mkString(" "), "a"),
       (4L, vocab.take(100).mkString(" "), "b"),
       (5L, vocab.take(99).mkString(" "), "b"))
-    val dir = Files.createTempDirectory("graft_jaccard").toString
-    docs.toDF("doc_id", "text", "source")
-      .withColumn("lang", lit("en"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .select("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-
-    val got = TextOps.jaccardPairs(spark, dir)
+    val got = TextOps.jaccardPairs(spark, docsDir(docs))
       .as[(Long, Long, Double)].collect().toSet
     val want = brute(docs)
     assert(want.map(p => (p._1, p._2)) == Set((1L, 2L), (4L, 5L)))

@@ -75,7 +75,7 @@ class PlansSpec extends SparkSpec {
     val plan = operators.TextOps.jaccardPairs(spark, sf)
       .queryExecution.executedPlan.toString
     // bitmapfrombits left this plan in r15: the per-doc bitmap frame is
-    // now an EAGER localCheckpoint (the lazy-persist sweep — its three
+    // now EAGER, an Eager freeze (the lazy-persist sweep — its three
     // consumers raced the cache), so the dictionary/bitmap build runs
     // once at construction and the inspected plan starts from its RDD
     // leaf. The intersect-count verify stays inline and compiled.
@@ -101,9 +101,9 @@ class PlansSpec extends SparkSpec {
       s"fact-sized shuffle join in the basket plan:\n${plan.take(1500)}")
     assert(plan.contains("TakeOrderedAndProject"),
       "top-100 should be TakeOrderedAndProject, not a global Sort")
-    // the per-order collect_set frame is an EAGER localCheckpoint (the
+    // the per-order collect_set frame is EAGER, an Eager freeze (the
     // r12 broadcast-race fix, Relational.scala basketPairs): consumers
-    // must scan the checkpointed RDD, and the expensive order-grain
+    // must scan the frozen RDD, and the expensive order-grain
     // aggregation must not appear anywhere in the executed plan — with
     // the old lazy persist each racing broadcast build re-ran it.
     assert(plan.contains("Scan ExistingRDD"),

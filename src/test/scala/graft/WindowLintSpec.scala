@@ -40,7 +40,7 @@ class WindowLintSpec extends SparkSpec {
     "q_emd" -> "cumulative distribution over the aggregated value domain",
     "q_interleave" -> "bucket-offset scan + source-quintile ntile (dimension frames)",
     // q_join_outer_replay's calendar-bounded block maxima left this list
-    // in r15: the watermark frame became an EAGER localCheckpoint (the
+    // in r15: the watermark frame became EAGER (an Eager freeze; the
     // lazy-persist sweep), so its windows execute at construction and no
     // unpartitioned Window remains in the inspected plan
     "q_km" -> "Kaplan-Meier fold over the aggregated event-time grid",

@@ -72,10 +72,10 @@ object ScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // graph legs (r16 verdict task #6): force the PINNED layout path
-      // (Eager.layoutPartitions > 1) at probe scale, so the meter
-      // exercises the branch a 100 TB run takes, not the under-one-
-      // partition local shortcut. Only the graph loops read this conf.
+      // graph legs (r16 verdict task #6): a low rows-per-partition
+      // target makes the probe-scale edge layouts wide (tens of
+      // partitions, the shape a 100 TB run takes) instead of the
+      // fixture-scale minimum. Only the graph loops read this conf.
       .config("spark.graft.layoutRowsPerPartition", "2000")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("scaleprobe-wh").toString)
