@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Fail-fast fixture preflight: diff every fixture parquet's FOOTER schema
@@ -13,8 +15,19 @@ import org.apache.spark.sql.types._
   * whole round burned on one silent drift. Declared-schema reads
   * (`spark.read.schema(...)`) do NOT detect this: parquet happily serves a
   * compatible-but-differently-annotated column. The only authority on what
-  * a fixture actually contains is its footer, so that is what is checked —
-  * a driver-side KB-sized read per table, no Spark job.
+  * a fixture actually contains is its footer, so that is what is checked.
+  *
+  * The footer is read on the driver through [[Tables.parquetFooters]]: one
+  * KB-sized read per table and no Spark job, where asking a schema-only
+  * `spark.read.parquet` frame for its schema would start an inference job
+  * per table. "Same schema as inference" means: the footer inference
+  * reads, converted by Spark's own `ParquetFileFormat.readSchemaFromFooter`
+  * with the converter inference builds from the session's conf, here with
+  * `spark.sql.legacy.parquet.nanosAsLong=true`; the result equals
+  * `spark.read.parquet(...)` schema under that conf (PreflightSpec pins it
+  * on every fixture table). The conf is set on a clone, never on the
+  * session, so the check touches no session state and concurrent checks
+  * need no lock.
   *
   * `events.ts` is the one sanctioned variance: MICROS and NANOS are both
   * accepted because [[Tables.events]] sniffs the unit and handles either.
@@ -33,46 +46,29 @@ object Preflight {
     "embeddings" -> Schemas.embeddings)
 
   /** Throws IllegalStateException naming every (table, column, want, got)
-    * mismatch if any fixture's footer disagrees with its declared schema.
-    *
-    * Synchronized (r11 concurrency audit): the nanosAsLong save/set/
-    * restore below is a non-atomic read-modify-write of SESSION-shared
-    * conf — two concurrent checks would restore each other's temporary
-    * value. The lock serializes checks; the remaining contract is
-    * TEMPORAL, not lock-enforceable: run the gate BEFORE submitting
-    * queries on the session, not concurrently with them — a
-    * [[Tables.events]] call interleaved inside the check's window could
-    * set the conf session-wide (nanos fixture) only to have the restore
-    * unset it under the lazy frame's later action. Both harness mains
-    * honor this (gate first, queries after). */
-  def check(spark: SparkSession, dir: String): Unit = synchronized {
-    // nanos columns surface as LongType under this conf instead of
-    // aborting footer inference outright; the events.ts special case
-    // below decides whether that is acceptable. The previous value is
-    // restored afterwards — the gate must not leak session state into
-    // everything that runs behind it ([[Tables.events]] sets the conf
-    // SESSION-WIDE when the fixture really is nanos — deliberately, and
-    // documented there: the lazy frame consults it at action time, so a
-    // restore here-and-now would break its later execution).
-    val confKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "true")
-    val problems =
-      try expected.flatMap { case (name, want) =>
-        val path = s"$dir/$name.parquet"
-        try diff(name, want, spark.read.parquet(path).schema)
-        catch {
-          case e: Exception => Seq(s"$name: footer unreadable: ${e.getMessage}")
-        }
+    * mismatch if any fixture's footer disagrees with its declared schema. */
+  def check(spark: SparkSession, dir: String): Unit = {
+    val problems = expected.flatMap { case (name, want) =>
+      try diff(name, want, footerSchema(spark, dir, name))
+      catch {
+        case e: Exception => Seq(s"$name: footer unreadable: ${e.getMessage}")
       }
-      finally prev match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
-      }
+    }
     if (problems.nonEmpty)
       throw new IllegalStateException(
         s"fixture schema drift under $dir — refusing to run against " +
           s"unexpected data:\n  ${problems.mkString("\n  ")}")
+  }
+
+  /** Table `name`'s schema as inference would report it, read from its
+    * footer. Nanos columns surface as LongType instead of aborting the
+    * conversion; the events.ts case in [[accepts]] decides whether that
+    * is acceptable. */
+  private[graft] def footerSchema(spark: SparkSession, dir: String, name: String): StructType = {
+    val conf = spark.sessionState.conf.clone()
+    conf.setConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, true)
+    ParquetFileFormat.readSchemaFromFooter(
+      Tables.parquetFooters(spark, dir, name).head, new ParquetToSparkSchemaConverter(conf))
   }
 
   private def diff(table: String, want: StructType, got: StructType): Seq[String] = {

@@ -1,6 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
 
@@ -110,13 +117,14 @@ object Tables {
     * Round 8 burned entirely on assuming the wrong unit; never again. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     if (eventsTsIsNanos(spark, dir)) {
-      // deliberately session-scoped, NOT restored: the returned frame is
-      // lazy and consults the conf at ACTION time, so an eager restore
-      // would break its execution. Blast radius of the leak: a later
+      // deliberately session-scoped and left set: the returned frame is
+      // lazy and consults the conf at ACTION time. Blast radius: a later
       // schema-INFERRED read of some other nanos-annotated parquet in
       // the same session yields LongType instead of the loud
       // unsupported-type error — every engine read declares its schema
       // through this object, so only ad-hoc session reads are affected.
+      // Preflight neither reads nor writes this session value: it
+      // converts footers under its own conf clone.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = StructType(Schemas.events.map {
         case StructField("ts", _, n, m) => StructField("ts", LongType, n, m)
@@ -180,27 +188,13 @@ object Tables {
       _ => probeTsIsNanos(spark, dir))
   }
   private def probeTsIsNanos(spark: SparkSession, dir: String): Boolean = {
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val hconf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-      val fs = root.getFileSystem(hconf)
-      val file =
-        if (fs.getFileStatus(root).isDirectory)
-          fs.listStatus(root).toSeq
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath).minBy(_.getName)
-        else root
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, hconf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val schema = reader.getFooter.getFileMetaData.getSchema
-        val ts = schema.getType(schema.getFieldIndex("ts"))
-        ts.getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-          case _ => false
-        }
-      } finally reader.close()
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    val schema = parquetFooters(spark, dir, "events").head.getParquetMetadata.getFileMetaData.getSchema
+    schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+        t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+      case _ => false
+    }
   }
 
   /** events re-written once per sf dir as a date-partitioned table
@@ -286,21 +280,41 @@ object Tables {
     * when the table is 100 TB (footers are KB-sized). Used to size
     * sketches (e.g. the contamination Bloom filter) where an exact
     * `count()` would add a full scan to every invocation. */
-  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long = {
+  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long =
+    parquetFooters(spark, dir, name, allDataFiles = true)
+      .map(_.getParquetMetadata.getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** Parquet footers of table `name` (`$dir/$name.parquet`, one file or a
+    * flat directory of files), read on the driver: KB-sized reads, no
+    * Spark job. The one footer reader behind [[Preflight]], the events
+    * ts-unit sniff and [[parquetRowCount]].
+    *
+    * By default it returns the single footer Spark's schema inference
+    * reads (mergeSchema off): `_common_metadata`, else `_metadata`, else
+    * the first data file sorted by path, after skipping the hidden `_`/`.`
+    * names Spark's file index skips. With `allDataFiles`, it returns every
+    * data file's footer, and an empty directory yields none. */
+  private[graft] def parquetFooters(spark: SparkSession, dir: String, name: String,
+      allDataFiles: Boolean = false): Seq[Footer] = {
     val hconf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val root = new Path(s"$dir/$name.parquet")
     val fs = root.getFileSystem(hconf)
-    val files: Seq[org.apache.hadoop.fs.Path] =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath)
-      else Seq(root)
-    files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try reader.getRecordCount finally reader.close()
-    }.sum
+    val top = fs.getFileStatus(root)
+    val summaries = Seq("_common_metadata", "_metadata")
+    def listed(n: String) = summaries.exists(n.startsWith) ||
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    val leaves =
+      if (!top.isDirectory) Seq(top)
+      else fs.listStatus(root).toSeq
+        .filter(st => st.isFile && listed(st.getPath.getName)).sortBy(_.getPath.toString)
+    val data = leaves.filterNot(st => summaries.contains(st.getPath.getName))
+    val files =
+      if (allDataFiles) data
+      else Seq(summaries.flatMap(s => leaves.find(_.getPath.getName == s)).headOption
+        .orElse(data.headOption)
+        .getOrElse(throw new java.io.FileNotFoundException(s"no parquet data file under $root")))
+    files.map(st => new Footer(st.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(st, hconf), ParquetMetadataConverter.NO_FILTER)))
   }
 
   /** S4: relational-store source — the reference keeps its users in an
