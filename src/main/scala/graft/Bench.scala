@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver bench: per-query wall times at SPARK_GRAFT_SF_DIR, materialized
   * through the noop sink so the measurement covers the full plan
   * (scan → shuffle → sort → project), not a count() that lets the optimizer
@@ -275,16 +273,8 @@ object Bench {
     // is bit-identical to the r16 one unless the operator opts in.
     // Used for the r17 zstd-codec and preferSortMergeJoin A/Bs.
     val extraConf = confPairs(sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";").toSeq)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extraConf.foreach { case (k, v) =>
-      System.err.println(s"[bench] extra conf: $k=$v"); builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    extraConf.foreach { case (k, v) => System.err.println(s"[bench] extra conf: $k=$v") }
+    val spark = GraftExtensions.localSession(cpus, "WARN", extraConf)
     // benchmarking a drifted fixture measures the wrong workload (the
     // round-8 lesson) — same fail-fast gate as Verify
     Preflight.check(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: print the formatted physical plan of one or more
   * `SparkEntry.queries` entries (comma-separated names; `all` dumps
   * everything). The per-round workflow is correctness → plan audit →
@@ -19,13 +17,7 @@ object Explain {
     }
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftExtensions.localSession("4", "ERROR")
     names.foreach { name =>
       println(s"==== $name ====")
       println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(

@@ -1,24 +1,35 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BitmapAndCount, BitmapFromBits, CondEntropySum, CosineSimilarity, DecaySum, Iou, JaroWinkler, MinHashSig, PlogpSum, SimHash16, SortedTermSum, SqDistance, TokenCode, WalshBandKeys}
 import graft.operators.{TextOps, VectorOps}
+import graft.plans.{BroadcastRaceGuard, CartesianGuard, Eager, GreedyNmsStrategy}
 
-/** SQL-surface registration for the engine's custom Catalyst expressions
-  * (SURVEY §7.1 SQL-first testability): `cosine_sim(arr, arr)`,
-  * `iou(box, box)`, `token_code(str)`, and the sketch family —
-  * `minhash_sig(codes)`, `simhash16(codes)`, `walsh_band_keys(embedding)`,
-  * bound to the engine's canonical parameters (TextOps.MinhashParams,
-  * VectorOps.MultibandPlanes) — become callable from `spark.sql`.
+/** The engine's session contract, loaded by every session.
   *
-  * Two registration paths:
-  *   - `spark.sql.extensions=graft.GraftExtensions` at session build
-  *     (cluster-wide, the production path);
-  *   - `GraftExtensions.register(spark)` on a live session (tests, REPL).
+  * This class is a `SparkSessionExtensionsProvider` listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's `ServiceLoader` applies it when any `SparkSession` is built
+  * with the engine on its classpath: a plain
+  * `SparkSession.builder().getOrCreate()` carries every rule below, and no
+  * call site has to register anything. Cloned and new sessions (streaming
+  * micro-batches, `newSession()`) share the extensions of their parent.
+  *
+  * It injects:
+  *   - 14 SQL functions over the custom Catalyst expressions (SURVEY §7.1
+  *     SQL-first testability): `cosine_sim(arr, arr)`, `iou(box, box)`,
+  *     `token_code(str)`, the sketch family bound to the engine's
+  *     canonical parameters (TextOps.MinhashParams,
+  *     VectorOps.MultibandPlanes) and the order-pinned fold kernels;
+  *   - the planner strategies for the engine's own plan nodes:
+  *     `GreedyNmsStrategy` and `Eager.FrozenScan`;
+  *   - two 100 TB guardrails: [[graft.plans.CartesianGuard]] (a pre-CBO
+  *     optimizer rule) and [[graft.plans.BroadcastRaceGuard]] (an AQE
+  *     query-stage prep rule). Both only inspect the plan and throw.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.builders.foreach { case (name, builder) =>
       e.injectFunction((
@@ -26,18 +37,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(builder.getClass.getName, name),
         builder))
     }
-    e.injectPlannerStrategy(_ => graft.plans.GreedyNmsStrategy)
-    // 100 TB guardrail: reject unconditioned fact×fact cartesian joins at
-    // analysis time (plans/CartesianGuard.scala). Extensions path only —
-    // check rules cannot be late-registered on a live session, so
-    // register(spark) below does NOT install it.
-    e.injectCheckRule(spark => graft.plans.CartesianGuard(spark))
-    // 100 TB guardrail #2 (r12 verdict task #7): reject plans that build
-    // ≥ 2 distinct broadcast exchanges over one lazy cached frame — the
-    // correctness-invisible materialization race the r12 profiling pass
-    // found five times (plans/BroadcastRaceGuard.scala). Query-stage-prep
-    // scope: runs on the whole initial physical plan under AQE.
-    e.injectQueryStagePrepRule(spark => graft.plans.BroadcastRaceGuard(spark))
+    e.injectPlannerStrategy(_ => GreedyNmsStrategy)
+    e.injectPlannerStrategy(_ => Eager.FrozenScan)
+    e.injectPreCBORule(CartesianGuard(_))
+    e.injectQueryStagePrepRule(BroadcastRaceGuard(_))
   }
 }
 
@@ -82,25 +85,21 @@ object GraftExtensions {
       CondEntropySum(exprs(0), exprs(1))),
     "decay_sum" -> arity("decay_sum", 2)(exprs => DecaySum(exprs(0), exprs(1))))
 
-  /** Late registration on an existing session: functions + the planner
-    * strategy for graft's custom logical operators.
-    *
-    * The whole method is synchronized on this object (r11 concurrency
-    * audit): `extraStrategies` is a bare session var, and the
-    * check-then-append below is a read-modify-write — two concurrent
-    * registrations (register runs on EVERY greedyExecQuery call) could
-    * both pass the !contains check and install the strategy twice, or
-    * overwrite a strategy another library appended in the same window.
-    * A JVM-wide lock is the right scope for the common one-session case;
-    * cross-library races on the same var remain the caller's to
-    * serialize (Spark offers no atomic append there). */
-  def register(spark: SparkSession): Unit = synchronized {
-    builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    if (!spark.experimental.extraStrategies.contains(graft.plans.GreedyNmsStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.GreedyNmsStrategy
+  /** The engine's one local session builder (Bench, Verify, PlanDump,
+    * Explain): `local[cpus]` with `cpus` shuffle partitions, AQE on, UTC,
+    * no UI, then `confs` in order. The rules come from the provider above,
+    * as in any other session. */
+  def localSession(cpus: String, logLevel: String,
+                   confs: Seq[(String, String)] = Nil): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    confs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
   }
 }

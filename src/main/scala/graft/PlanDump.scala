@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the formatted physical plan of the named queries at the given
   * sf dir — the source for PLANS.md evidence sections.
   * Usage: runMain graft.PlanDump <sfDir> <name>[,<name>...] [bench|benchexec] [k=v ...]
@@ -27,14 +25,7 @@ object PlanDump {
     val (mode, confs) = trailingArgs(args.toSeq.drop(2))
     val shapes = if (mode.exists(_.startsWith("bench"))) SparkEntry.benchShapes
                  else SparkEntry.queries
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    confs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftExtensions.localSession("4", "ERROR", confs)
     names.foreach { name =>
       println(s"## $name")
       println()

@@ -387,9 +387,9 @@ object Tables {
     } finally registered.foreach(spark.catalog.dropTempView(_))
   }
 
-  /** Register every fixture table as a temp view and the engine's custom
-    * expressions as SQL functions: the full surface becomes usable from
-    * pure `spark.sql` (the dashboard/ad-hoc entry the reference exposes
+  /** Register every fixture table as a temp view; with the engine's SQL
+    * functions, which every session carries (GraftExtensions), the full
+    * surface becomes usable from pure `spark.sql` (the dashboard/ad-hoc entry the reference exposes
     * through Django views, SURVEY §3.2 — here it's ANSI SQL over the same
     * operators).
     *
@@ -410,6 +410,5 @@ object Tables {
     events(spark, dir).createOrReplaceTempView("events")
     documents(spark, dir).createOrReplaceTempView("documents")
     embeddings(spark, dir).createOrReplaceTempView("embeddings")
-    GraftExtensions.register(spark)
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,13 +16,7 @@ object Verify {
       require(unknown.isEmpty, s"unknown verify queries: ${unknown.mkString(",")}")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.localSession(cpus, "WARN")
     // SPARK_GRAFT_CODEGEN_STRICT=1: run the WHOLE surface with codegen
     // fallback disabled. A doGenCode that emits unparseable Java fails
     // no check by default — Spark swallows Janino's CompileException and

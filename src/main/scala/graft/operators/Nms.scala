@@ -122,7 +122,6 @@ object Nms {
     * typed flatMapGroups object boundary replaced by one InternalRow pass
     * behind a declared exchange + sort. */
   def greedyExecQuery(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     graft.plans.GreedyNms(detectionsFromEvents(spark, dir), 0.3)
       .select("frame_id", "det_id", "conf")
       .orderBy("frame_id", "det_id")

@@ -47,13 +47,14 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * operator needs anyway)
   * before the consumers plan — never a lazy persist.
   *
-  * Registered via `SparkSessionExtensions.injectQueryStagePrepRule`
-  * (runs on the WHOLE initial physical plan under AQE — the default
-  * everywhere in this engine; non-AQE sessions are covered by the spec
-  * harness calling [[BroadcastRaceGuard.check]] directly, and by the
-  * fleet lint). `spark.graft.broadcastRaceGuard=false` opts a session
-  * out — same explicit-intent escape hatch as the cartesian guard.
-  * The rule only ever inspects and throws; it never rewrites the plan.
+  * Injected by GraftExtensions through `injectQueryStagePrepRule`, so
+  * every session carries it: it runs on the WHOLE initial physical plan
+  * under AQE, the default everywhere in this engine. Non-AQE plans are
+  * covered by the spec harness calling [[BroadcastRaceGuard.check]]
+  * directly, and by the fleet lint. `spark.graft.broadcastRaceGuard=false`
+  * opts a session out — same explicit-intent escape hatch as the
+  * cartesian guard. The rule only ever inspects and throws; it never
+  * rewrites the plan.
   */
 case class BroadcastRaceGuard(spark: SparkSession) extends Rule[SparkPlan] {
   override def apply(plan: SparkPlan): SparkPlan = {

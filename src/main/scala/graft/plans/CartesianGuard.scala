@@ -2,11 +2,11 @@ package graft.plans
 
 import org.apache.spark.SparkException
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
-import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, GlobalLimit, HintInfo, Join, LocalLimit, LogicalPlan, Project, RepartitionOperation, ResolvedHint, SHUFFLE_REPLICATE_NL, Sort, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, LogicalPlan, SHUFFLE_REPLICATE_NL}
+import org.apache.spark.sql.catalyst.rules.Rule
 
-/** 100 TB guardrail (SURVEY §4): an analysis-time check that REJECTS
+/** 100 TB guardrail (SURVEY §4): an optimizer-time check that REJECTS
   * unconditioned cartesian joins where both sides exceed broadcast size.
   *
   * The deadliest query shape at scale is the accidental cross join — a
@@ -17,50 +17,27 @@ import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, GlobalLim
   * carries a broadcast()-hinted scalar or dim frame), so a surviving
   * fact×fact cartesian is always a bug.
   *
-  * Policy, checked on the ANALYZED plan (before optimizer join
-  * reordering):
-  *   - Join with no condition — or a literal-true condition, the
-  *     `.join(df, lit(true))` accident — and type Inner/Cross where BOTH
-  *     sides' size estimate exceeds
-  *     `spark.sql.autoBroadcastJoinThreshold` and NEITHER side carries a
-  *     broadcast hint AT ITS ROOT (looking through projections/aliases
-  *     only — a hinted sub-join buried deeper in a side expresses intent
-  *     about THAT join, not this one) → rejected.
-  *   - `spark.graft.allowCartesian=true` opts a session back in
-  *     (mirroring how spark.sql.crossJoin.enabled once worked — explicit
-  *     intent, not an accident).
+  * Policy: a Join of type Inner/Cross with no condition, where BOTH
+  * sides' size estimate exceeds `spark.sql.autoBroadcastJoinThreshold`
+  * and neither side of its `JoinHint` vouches for it, is rejected.
+  * `spark.graft.allowCartesian=true` opts a session back in (mirroring
+  * how spark.sql.crossJoin.enabled once worked — explicit intent, not an
+  * accident).
   *
-  * Registered via `SparkSessionExtensions.injectCheckRule` (extensions
-  * path only: check rules cannot be late-registered on a live session,
-  * unlike functions/strategies — see GraftExtensions.register's note).
+  * Why pre-CBO and not a check rule on the analyzed plan: the analyzed
+  * plan still holds shapes that are not cartesian. `Dataset.join(right,
+  * usingColumns)` first analyzes a condition-less `Join` to de-duplicate
+  * self-join attributes, so a check rule saw every using-column equi-join
+  * as unconditioned; `crossJoin(..).filter(a = b)` is a conditioned join
+  * once predicates are pushed down. The pre-CBO batch runs after operator
+  * optimization, so the plan it sees carries those conditions, has dropped
+  * a literal-`true` condition (the `.join(df, lit(true))` accident is then
+  * the unconditioned join it plans as), and holds every broadcast hint in
+  * its `JoinHint`. The rule is injected through `injectPreCBORule`
+  * (GraftExtensions) and returns the plan unchanged.
   */
-case class CartesianGuard(spark: SparkSession) extends (LogicalPlan => Unit) {
+case class CartesianGuard(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private def broadcastThreshold: Long =
-    // a check rule must never throw on a conf it merely READS: an exotic
-    // but Spark-legal value ('1tb', '1pb', future suffixes) would
-    // otherwise fail EVERY query in the session from inside analysis —
-    // unparseable values fall back to the Spark default instead
-    try spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      .stripSuffix("b").stripSuffix("B") match {
-      case s if s.endsWith("k") || s.endsWith("K") => s.dropRight(1).toLong << 10
-      case s if s.endsWith("m") || s.endsWith("M") => s.dropRight(1).toLong << 20
-      case s if s.endsWith("g") || s.endsWith("G") => s.dropRight(1).toLong << 30
-      case s if s.endsWith("t") || s.endsWith("T") => s.dropRight(1).toLong << 40
-      case s if s.endsWith("p") || s.endsWith("P") => s.dropRight(1).toLong << 50
-      case s => s.toLong
-    } catch { case _: NumberFormatException => 10485760L }
-
-  /** At analysis time a broadcast() marker is still a ResolvedHint node
-    * in the side's subtree (EliminateResolvedHint folds it into the
-    * Join's JoinHint only during optimization), so intent is checked in
-    * both representations. The look-through set mirrors the unary nodes
-    * EliminateResolvedHint.extractHintsFromPlan recurses through —
-    * Project, Filter, Limit, Sort, Repartition, aliases — so a side like
-    * `broadcast(dim).filter(...)` that Spark WOULD broadcast is accepted
-    * here too. Still root-path-only: a hint on a dim inside an unrelated
-    * sub-join expresses broadcast intent about that sub-join and must not
-    * vouch for an unconditioned join above it. */
   /** Only hints that actually CHANGE the physical outcome of a
     * condition-less join vouch for it: BROADCAST (nested-loop over a
     * broadcast side — the engine's own deliberate-cartesian idiom) and
@@ -69,61 +46,36 @@ case class CartesianGuard(spark: SparkSession) extends (LogicalPlan => Unit) {
     * — the planner ignores them and falls back to CartesianProduct, so
     * letting them vouch would wave through the exact cluster-killer the
     * guard exists for (e.g. a .hint("merge") left over from an unrelated
-    * equi-join on the same frame). */
+    * equi-join on the same frame). A hint on a dim inside a side's own
+    * sub-join sits in THAT join's JoinHint and does not vouch here. */
   private def vouches(h: HintInfo): Boolean =
     h.strategy.contains(BROADCAST) || h.strategy.contains(SHUFFLE_REPLICATE_NL)
 
-  @scala.annotation.tailrec
-  private def hinted(side: LogicalPlan): Boolean = side match {
-    case r: ResolvedHint          => vouches(r.hints)
-    case p: Project               => hinted(p.child)
-    case a: SubqueryAlias         => hinted(a.child)
-    case f: Filter                => hinted(f.child)
-    case l: LocalLimit            => hinted(l.child)
-    case g: GlobalLimit           => hinted(g.child)
-    case s: Sort                  => hinted(s.child)
-    case r: RepartitionOperation  => hinted(r.child)
-    case _                        => false
-  }
-
-  /** `.join(df, lit(true))` plans the identical cartesian as a missing
-    * condition — the guard treats them alike. Only a bare literal is
-    * matched; a condition that merely FOLDS to true is the optimizer's
-    * business and stays out of an analysis-time check. */
-  private def literallyTrue(cond: Expression): Boolean = cond match {
-    case Literal(true, _) => true
-    case _                => false
-  }
-
-  override def apply(plan: LogicalPlan): Unit = {
-    // same never-throw-on-a-read policy as broadcastThreshold: a
-    // non-boolean value ("1", "yes", trailing space) must not brick
-    // every query in the session from inside analysis — anything that is
-    // not a parseable true/false keeps the guard ACTIVE (fail safe)
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    // a rule must never throw on a conf it merely READS: a non-boolean
+    // value ("1", "yes", trailing space) must not brick every query in
+    // the session — anything that is not a parseable true keeps the
+    // guard ACTIVE (fail safe)
     val allow = spark.conf.get("spark.graft.allowCartesian", "false")
       .trim.equalsIgnoreCase("true")
-    if (allow) return
-    val threshold = broadcastThreshold
-    if (threshold <= 0) return // auto-broadcast disabled -> guard undefined
+    // Spark parsed and validated the threshold when it was set
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    // threshold <= 0: auto-broadcast disabled -> guard undefined.
     // subqueriesAll: a cartesian INSIDE an EXISTS/IN/scalar subquery plan
     // is the same cluster-killer — TreeNode.foreach walks children only
     // and would never visit it
-    (plan +: plan.subqueriesAll).foreach(_.foreach {
-      case j @ Join(left, right, Inner | Cross, cond, hint)
-          if cond.forall(literallyTrue)
-            && !hint.leftHint.exists(vouches)
-            && !hint.rightHint.exists(vouches)
-            && !hinted(left) && !hinted(right) =>
+    if (!allow && threshold > 0) (plan +: plan.subqueriesAll).foreach(_.foreach {
+      case j @ Join(left, right, Inner | Cross, None, hint)
+          if !hint.leftHint.exists(vouches) && !hint.rightHint.exists(vouches) =>
         val (ls, rs) = (left.stats.sizeInBytes, right.stats.sizeInBytes)
-        if (ls > threshold && rs > threshold) {
-          val how = if (j.condition.isEmpty) "unconditioned" else "literal-true"
+        if (ls > threshold && rs > threshold)
           throw new SparkException(
-            s"graft cartesian guard: $how ${j.joinType} join of two " +
+            s"graft cartesian guard: unconditioned ${j.joinType} join of two " +
               s"non-broadcastable inputs (left ≈ $ls B, right ≈ $rs B, " +
               s"threshold $threshold B). Add a join condition, broadcast() a " +
               s"dim-sized side, or set spark.graft.allowCartesian=true.")
-        }
       case _ => ()
     })
+    plan
   }
 }

@@ -54,9 +54,6 @@ object Eager {
     * frozen rows pays no extra count job. */
   def materialize(df: DataFrame): (DataFrame, Long) = {
     val qe = df.queryExecution
-    val planner = df.sparkSession.experimental
-    planner.synchronized {
-      if (!planner.extraStrategies.contains(FrozenScan)) planner.extraStrategies :+= FrozenScan }
     val (rdd, rows) = SQLExecution.withNewExecutionId(qe, Some("eagerly")) {
       val r = qe.executedPlan.execute().map(_.copy()).setName(FrozenScan.tag)
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -70,7 +67,8 @@ object Eager {
     (GraftBridge.frozenLeaf(df, rdd, leaf(ran.outputPartitioning), ran.outputOrdering), rows)
   }
 
-  /** Plans the scan of a frozen RDD as [[FrozenScanExec]]. */
+  /** Plans the scan of a frozen RDD as [[FrozenScanExec]] (injected by
+    * GraftExtensions). */
   object FrozenScan extends SparkStrategy {
     val tag = "graft-frozen"
     def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -108,10 +106,14 @@ object Eager {
     * `spark.graft.layoutRowsPerPartition` (default 4M rows ≈ 100-300 MB
     * of narrow key/metadata rows, the guide §2.2 partition-size band);
     * the count is capped at the session shuffle parallelism so a huge
-    * frame still matches the cluster's configured width. */
+    * frame still matches the cluster's configured width. A value that is
+    * not a positive whole number is rejected, naming the conf. */
   def layoutPartitions(spark: SparkSession, rows: Long): Int = {
-    val perPart = spark.conf.getOption("spark.graft.layoutRowsPerPartition")
-      .map(_.toLong).getOrElse(4L << 20)
+    val key = "spark.graft.layoutRowsPerPartition"
+    val perPart = spark.conf.getOption(key).map(v => v.trim.toLongOption.filter(_ > 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive number of rows, got '$v'")))
+      .getOrElse(4L << 20)
     val cap = spark.sessionState.conf.numShufflePartitions
     math.max(1L, math.min(cap.toLong, (rows + perPart - 1) / perPart)).toInt
   }

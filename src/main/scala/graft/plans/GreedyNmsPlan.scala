@@ -117,8 +117,7 @@ case class GreedyNmsExec(child: SparkPlan, iouThreshold: Double) extends UnaryEx
     copy(child = newChild)
 }
 
-/** Plans GreedyNmsNode → GreedyNmsExec; injected via
-  * GraftExtensions (injectPlannerStrategy / experimental.extraStrategies). */
+/** Plans GreedyNmsNode → GreedyNmsExec; injected by GraftExtensions. */
 object GreedyNmsStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case GreedyNmsNode(child, t) => GreedyNmsExec(planLater(child), t) :: Nil

@@ -209,22 +209,18 @@ class BroadcastRaceLintSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val sess = spark
     import sess.implicits._
-    // the production registration path is injectQueryStagePrepRule; a
-    // live session cannot late-register one, so apply the rule exactly
-    // where Spark would — on the pre-stage physical plan, AQE on
-    val guard = graft.plans.BroadcastRaceGuard(spark)
+    // the suite session carries the rule (GraftExtensions, loaded by
+    // Spark's ServiceLoader): planning the racy shape under AQE throws
     val cached = (1 to 100).map(i => (i % 7, i.toLong)).toDF("k", "v").persist()
     try {
-      val racy = cached
+      def racy = cached
         .join(broadcast(cached.groupBy("k").agg(sum("v").as("s1"))), "k")
         .join(broadcast(cached.groupBy("k").agg(max("v").as("m2"))), "k")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val plan = try racy.queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      intercept[org.apache.spark.SparkException] { guard(plan) }
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      val e = intercept[org.apache.spark.SparkException] { racy.queryExecution.executedPlan }
+      assert(e.getMessage.contains("cache-race guard"))
       spark.conf.set("spark.graft.broadcastRaceGuard", "false")
-      try guard(plan) // explicit opt-out: inspect nothing, rewrite nothing
+      try assert(racy.count() == 100) // explicit opt-out: inspect nothing, rewrite nothing
       finally spark.conf.unset("spark.graft.broadcastRaceGuard")
     } finally cached.unpersist()
   }

@@ -1,16 +1,14 @@
 package graft
 
-import graft.plans.CartesianGuard
 import org.apache.spark.SparkException
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** The cartesian guard: unconditioned fact×fact joins are rejected at
-  * analysis time; dim-sized, broadcast-hinted, conditioned, or
-  * explicitly-allowed shapes pass. */
+/** The cartesian guard: unconditioned fact×fact joins are rejected when
+  * the suite session optimizes them (the rule every session carries);
+  * dim-sized, broadcast-hinted, conditioned, or explicitly-allowed shapes
+  * pass. */
 class CartesianGuardSpec extends SparkSpec {
 
-  private def guard = CartesianGuard(spark)
   private val sfDir = "/root/testdata/sf0.01"
 
   // the sf0.01 fixture is smaller than the default 10 MB broadcast
@@ -26,7 +24,7 @@ class CartesianGuardSpec extends SparkSpec {
   test("fact x fact cross join is rejected") {
     val ev = Tables.events(spark, sfDir)
     val e = intercept[SparkException] {
-      withThreshold(1024)(guard(ev.crossJoin(ev).queryExecution.analyzed))
+      withThreshold(1024)(ev.crossJoin(ev).queryExecution.optimizedPlan)
     }
     assert(e.getMessage.contains("cartesian guard"))
   }
@@ -35,28 +33,30 @@ class CartesianGuardSpec extends SparkSpec {
     val ev = Tables.events(spark, sfDir)
     val one = ev.agg(count(lit(1)).as("n"))
     withThreshold(1024) {
-      guard(ev.crossJoin(broadcast(one)).queryExecution.analyzed)
+      ev.crossJoin(broadcast(one)).queryExecution.optimizedPlan
       // un-hinted but dim-sized (1-row aggregate estimate under threshold)
-      guard(ev.crossJoin(one).queryExecution.analyzed)
+      ev.crossJoin(one).queryExecution.optimizedPlan
     }
   }
 
   test("conditioned joins and the opt-out config pass") {
     val ev = Tables.events(spark, sfDir)
-    guard(ev.as("a").join(ev.as("b"),
-      col("a.event_id") === col("b.event_id")).queryExecution.analyzed)
+    ev.as("a").join(ev.as("b"),
+      col("a.event_id") === col("b.event_id")).queryExecution.optimizedPlan
     spark.conf.set("spark.graft.allowCartesian", "true")
-    try withThreshold(1024)(guard(ev.crossJoin(ev).queryExecution.analyzed))
+    try withThreshold(1024)(ev.crossJoin(ev).queryExecution.optimizedPlan)
     finally spark.conf.unset("spark.graft.allowCartesian")
   }
 
   test("literal-true condition is rejected like a missing one") {
     val ev = Tables.events(spark, sfDir)
     val e = intercept[SparkException] {
-      withThreshold(1024)(guard(ev.as("a").join(ev.as("b"), lit(true))
-        .queryExecution.analyzed))
+      withThreshold(1024)(ev.as("a").join(ev.as("b"), lit(true))
+        .queryExecution.optimizedPlan)
     }
-    assert(e.getMessage.contains("literal-true"))
+    // the optimizer drops a literal-true condition, so the guard sees the
+    // unconditioned join it plans as and reports it as one
+    assert(e.getMessage.contains("unconditioned"))
   }
 
   test("a hint buried in a side's sub-join does not vouch for the outer cartesian") {
@@ -67,12 +67,12 @@ class CartesianGuardSpec extends SparkSpec {
     val dim = Tables.events(spark, sfDir).select("event_id").distinct()
     val side = ev.join(broadcast(dim), "event_id")
     val e = intercept[SparkException] {
-      withThreshold(1024)(guard(side.crossJoin(ev).queryExecution.analyzed))
+      withThreshold(1024)(side.crossJoin(ev).queryExecution.optimizedPlan)
     }
     assert(e.getMessage.contains("cartesian guard"))
     // while a root hint (through a projection) still passes
     withThreshold(1024) {
-      guard(ev.crossJoin(broadcast(dim).select("event_id")).queryExecution.analyzed)
+      ev.crossJoin(broadcast(dim).select("event_id")).queryExecution.optimizedPlan
     }
   }
 
@@ -84,7 +84,7 @@ class CartesianGuardSpec extends SparkSpec {
     spark.conf.set("spark.graft.allowCartesian", "1")
     try {
       val e = intercept[SparkException] {
-        withThreshold(1024)(guard(ev.crossJoin(ev).queryExecution.analyzed))
+        withThreshold(1024)(ev.crossJoin(ev).queryExecution.optimizedPlan)
       }
       assert(e.getMessage.contains("cartesian guard"))
     } finally spark.conf.unset("spark.graft.allowCartesian")
@@ -96,7 +96,7 @@ class CartesianGuardSpec extends SparkSpec {
     val ev = Tables.events(spark, sfDir)
     val e = intercept[SparkException] {
       withThreshold(1024)(
-        guard(ev.hint("merge").crossJoin(ev).queryExecution.analyzed))
+        ev.hint("merge").crossJoin(ev).queryExecution.optimizedPlan)
     }
     assert(e.getMessage.contains("cartesian guard"))
   }
@@ -109,32 +109,23 @@ class CartesianGuardSpec extends SparkSpec {
         |  SELECT 1 FROM guard_ev a CROSS JOIN guard_ev b
         |  WHERE a.value = g.value)""".stripMargin)
     val e = intercept[SparkException] {
-      withThreshold(1024)(guard(q.queryExecution.analyzed))
+      withThreshold(1024)(q.queryExecution.optimizedPlan)
     }
     assert(e.getMessage.contains("cartesian guard"))
   }
 
-  test("injectCheckRule wiring: an extensions-built session enforces the guard") {
-    val orig = spark // force shared-session init before we swap defaults
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    val guarded = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.autoBroadcastJoinThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val ev = Tables.events(guarded, sfDir)
-      val e = intercept[SparkException] { ev.crossJoin(ev).queryExecution.analyzed }
-      assert(e.getMessage.contains("cartesian guard"))
-      // the hinted shape the engine itself uses still works end-to-end
-      val n = ev.crossJoin(broadcast(ev.agg(count(lit(1)).as("n")))).count()
-      assert(n > 0)
-    } finally {
-      SparkSession.setDefaultSession(orig)
-      SparkSession.setActiveSession(orig)
+  test("using-column joins and crossJoin(..).filter(eq) over the threshold pass") {
+    // Dataset.join(right, usingColumns) analyzes a condition-less Join
+    // first; the optimized plan the guard reads carries the equi-condition
+    val ev = Tables.events(spark, sfDir)
+    val users = Tables.orders(spark, sfDir).withColumnRenamed("o_custkey", "user_id")
+    val ids = ev.select("event_id", "user_id")
+    withThreshold(1024) {
+      Seq(ev.join(ev, Seq("event_id")), ev.join(ev, "event_id"),
+        ev.join(users, Seq("user_id")), ev.join(users, "user_id"),
+        ev.join(ids, Seq("event_id")), ev.join(ids, "event_id"),
+        ev.crossJoin(users).filter(ev("user_id") === users("user_id")))
+        .foreach(_.queryExecution.optimizedPlan)
     }
   }
 }

@@ -122,6 +122,17 @@ class EagerSpec extends SparkSpec {
     finally spark.conf.unset("spark.graft.layoutRowsPerPartition")
   }
 
+  test("a malformed layoutRowsPerPartition is rejected, naming the conf") {
+    for (bad <- Seq("0", "-5", "abc")) {
+      spark.conf.set("spark.graft.layoutRowsPerPartition", bad)
+      try {
+        val e = intercept[IllegalArgumentException](Eager.layoutPartitions(spark, 25L))
+        assert(e.getMessage.contains("spark.graft.layoutRowsPerPartition") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset("spark.graft.layoutRowsPerPartition")
+    }
+  }
+
   test("eagerly keeps the frozen partitioning+ordering visible to the planner") {
     // the defect a frozen layout must not have: localCheckpoint under AQE
     // records UnknownPartitioning(0), so a downstream join re-exchanges

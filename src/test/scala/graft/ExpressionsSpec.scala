@@ -45,7 +45,6 @@ class ExpressionsSpec extends SparkSpec {
     assert(mism.isNullAt(0))
     // element null → null on the SQL surface (a nullable array's null
     // slot must not be silently read as 0.0f) — both expressions
-    GraftExtensions.register(spark)
     val nulls = spark.sql(
       """SELECT
         |  sq_dist(array(CAST(1.0 AS FLOAT), CAST(NULL AS FLOAT)),
@@ -61,7 +60,6 @@ class ExpressionsSpec extends SparkSpec {
     // custom expression must return NULL instead of a silently wrong
     // sketch/overlap (r11 review sweep); engine columns are
     // containsNull=false so only the public SQL surface can hit this
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT
         |  minhash_sig(array(CAST(7 AS BIGINT), CAST(NULL AS BIGINT))) AS m,
@@ -108,7 +106,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("SQL surface: cosine_sim and iou callable from spark.sql after registration") {
-    GraftExtensions.register(spark)
     emb.createOrReplaceTempView("emb_ext_test")
     val c = spark.sql(
       """SELECT cosine_sim(a.embedding, b.embedding) AS c
@@ -210,7 +207,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("sketch functions: SQL-callable and inside whole-stage codegen") {
     import graft.functions.WalshBandKeys.walshBandKeys
-    GraftExtensions.register(spark)
     Tables.documents(spark, sf).createOrReplaceTempView("docs_ext_test")
     val sketches = spark.sql(
       """SELECT simhash16(transform(split(text, ' '), t -> token_code(t))) AS s,
@@ -253,7 +249,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("type checking rejects wrong argument types") {
-    GraftExtensions.register(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT cosine_sim(array(1, 2), array(3, 4))").collect()
     }
@@ -316,7 +311,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("jaro_winkler: SQL-callable and inside whole-stage codegen") {
-    GraftExtensions.register(spark)
     val v = spark.sql("SELECT jaro_winkler('MARTHA', 'MARHTA') AS j")
       .head().getDouble(0)
     assert(v == 0.9611111111111111)
@@ -345,7 +339,6 @@ class ExpressionsSpec extends SparkSpec {
     // regression). CODEGEN_ONLY turns that swallow into a hard error, so
     // this test pins the compiled path for every custom expression in
     // the exact shapes the queries use (join predicate, projection, SQL).
-    GraftExtensions.register(spark)
     val prevFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
     val prevFallback = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TextOps
+import graft.plans.Eager._
 import org.apache.spark.sql.functions._
 
 /** TextOps.dedupIncrement — the persisted-band-index admission loop:
@@ -209,11 +210,13 @@ class IncrementalDedupSpec extends SparkSpec {
     // simulate "crash after output commit, before fold": the batch dir is
     // committed with decisions, but the index never saw the keys
     val batch = docs()
-    val keys = TextOps.batchBandKeys(batch).persist()
+    // frozen as the sink does (StreamOps.dedupIncrementSinkBatch):
+    // dedupRejected plans several builds over the keys
+    val keys = TextOps.batchBandKeys(batch).eagerly
     val rejected = TextOps.dedupRejected(spark, idx, keys, TextOps.batchMinOf(keys))
     batch.join(rejected, Seq("doc_id"), "left_anti")
       .write.mode("overwrite").parquet(s"$out/batch_id=0")
-    keys.unpersist()
+    keys.release()
     val committed = spark.read.parquet(s"$out/batch_id=0")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     // replay the batch: it must keep the committed output and fold the keys

@@ -68,7 +68,6 @@ class JaccardSpec extends SparkSpec {
   }
 
   test("bitmap_from_bits / bitmap_and_count: packing, unequal lengths, SQL surface") {
-    GraftExtensions.register(spark)
     // bits {0, 63, 64, 150} -> 3 blocks; {63, 64} -> 2 blocks; AND hits 63 and 64
     val row = spark.sql(
       """SELECT size(bitmap_from_bits(array(0, 63, 64, 150))) AS nblk,

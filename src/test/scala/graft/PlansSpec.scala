@@ -18,7 +18,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("planner satisfies the declared distribution + ordering requirements") {
-    GraftExtensions.register(spark)
     val plan = GreedyNms(Nms.detectionsFromEvents(spark, sf), 0.3)
       .queryExecution.executedPlan.toString
     // SparkPlan.nodeName strips the "Exec" suffix in plan strings

@@ -159,7 +159,6 @@ class SortedFoldsSpec extends SparkSpec {
   }
 
   test("fold kernels are SQL-callable via GraftExtensions") {
-    GraftExtensions.register(spark)
     val row = spark.sql(
       """SELECT
         |  sorted_term_sum(array(named_struct('k', 'b', 'term', CAST(0.25 AS DOUBLE)),
