@@ -5,164 +5,86 @@ package graft
   * (scan → shuffle → sort → project), not a count() that lets the optimizer
   * drop sorts and prune columns.
   *
-  * Noise robustness: repeats are INTERLEAVED round-robin — pass 1 runs
-  * every query once in order, then pass 2, … — and the per-query number
-  * is the median across passes. With back-to-back repeats a single
-  * transient stall (GC, page cache eviction, a co-tenant burst) captures
-  * ALL samples of whichever query it lands on and the median defends
-  * nothing; interleaving spreads one stall window across many queries so
-  * at most one sample per query is affected and the median discards it.
+  * Noise rule. Every query gets SPARK_GRAFT_REPEATS (default 3) samples
+  * taken in INTERLEAVED passes — pass 1 runs every query once in order,
+  * then pass 2, … — and its number is the median of its samples. With
+  * back-to-back repeats one transient stall (GC, page-cache eviction, a
+  * co-tenant burst) captures all samples of whichever query it lands on;
+  * interleaving spreads one stall window over many queries, so at most one
+  * sample per query is hit and the median discards it. The one place a
+  * row gets extra samples is guard A's re-measure: a row whose median
+  * reaches 2× its BASELINE.md row gets `RemeasureRepeats` fresh
+  * interleaved samples, each pass taken after a bounded load settle,
+  * and those replace its pass samples (the replaced ones stay in the
+  * artifact under "breach_reruns"). At most two re-measure rounds run.
   *
-  * Round-13 wall-clock contract (r12 verdict task #1 — the driver's
-  * BENCH_r12.json was rc=124/parsed=null: 217 queries × 5 passes plus a
-  * guard re-run outgrew the driver's window, and a timeout left NOTHING
-  * parseable):
-  *  - default passes drop to THREE fleet-wide; the contention-bimodal
-  *    watchlist keeps FIVE (r12's per-query medians showed fleet CoV
-  *    well under 10%, so a median of 3 defends the stable rows and the
-  *    extra passes go only where history says they're needed);
-  *  - a WALL BUDGET (SPARK_GRAFT_BUDGET_SECS, default 1500) bounds the
-  *    whole run: passes stop early when the budget is spent (whatever
-  *    samples exist are the artifact, flagged "partial":true), and the
-  *    guard's automatic re-measure runs only if a full re-attempt fits
-  *    in the remaining budget;
-  *  - a SHUTDOWN HOOK emits the artifact on SIGTERM: if the driver's
-  *    `timeout` fires anyway, the last stdout line and both JSON files
-  *    still carry every sample taken so far — a partial-but-parsed
-  *    artifact instead of rc=124/null. (timeout(1) sends SIGTERM by
-  *    default, which runs JVM shutdown hooks; only SIGKILL loses the
-  *    run, and nothing can defend against that.)
+  * Guards, evaluated after the passes (`guardVerdict`):
+  *  A. 2× GATE BREACH — a breach that survives the re-measure is recorded
+  *     with its reason, never re-run again;
+  *  B. UNIFORM DRIFT against the previous run's medians (same sf) — every
+  *     query slower at once is a host window, not code, so the whole run
+  *     is re-taken once after a co-tenant settle.
+  * Before the session starts, a co-tenant gate waits up to 4 min for the
+  * 1-minute load average to fall to SPARK_GRAFT_SETTLE_LOAD1 (default
+  * 1.0); it delays and records, it never fails the bench.
   *
-  * Round-8 hardening (r7 verdict task #1 — BENCH_r07 recorded four
-  * queries over the 2× gate with bimodal samples because TWO of three
-  * passes hit one contention window, defeating a median of 3):
-  *  - the watchlist keeps five interleaved passes — a median of 5
-  *    survives two stalled passes, the exact failure mode observed;
-  *  - every pass records its /proc/loadavg and wall time into the
-  *    samples file ("passes": [{"load1","secs","settle_wait"}…]), so a
-  *    contended pass is visible in the artifact instead of needing
-  *    forensic reconstruction from per-query bimodality.
+  * Wall budget. SPARK_GRAFT_BUDGET_SECS (default 1500) bounds the run.
+  * Passes and the drift re-run stop at budget − budget/5; the last fifth
+  * is a reserve only breach re-measures may spend, and a re-measure is
+  * granted max(remaining budget, reserve), so a pass that overran the whole
+  * budget still cannot starve it. The budget is checked between passes: the
+  * first pass always runs. A SIGTERM (timeout(1)'s default) runs a shutdown
+  * hook that emits whatever samples exist, flagged "partial":true.
   *
-  * Round-15 settle + re-measure policy (r14 verdict task #2 — BENCH_r14
-  * STARTED at load1 2.47, inside the old half-the-cores gate of 16 on a
-  * 32-core box, and recorded an 18.3× gate breach with the guard's
-  * full-re-run budget already spent on the slow contended passes):
-  *  - a strict CO-TENANT GATE before the session/warmup refuses to
-  *    proceed while load1 > SPARK_GRAFT_SETTLE_LOAD1 (default 1.0 —
-  *    the box is otherwise idle) for up to 4 min, recording every
-  *    sample it saw ("settle_load1");
-  *  - every timed pass re-settles first (bounded ≤ 90 s, budget-aware):
-  *    post-warmup and post-pass load1 is mostly our OWN burst decaying,
-  *    and one decay decade is enough for it to drain on a quiet box;
-  *  - a 2× gate breach triggers a PER-QUERY re-measure — only the
-  *    breached rows re-run (watchRepeats fresh settled samples each,
-  *    replacing their sample sets; the replaced numbers stay in the
-  *    audit under "breach_reruns"), costing seconds instead of the
-  *    full-fleet re-run a depleted budget could forbid. Only a breach
-  *    that SURVIVES quiet re-measurement is recorded.
-  *
-  * Round-16 budget survivability (r15 verdict task #1 — BENCH_r15
-  * started every pass at load1 ≤ 0.98 behind the settle gate, but pass
-  * 3 was slammed MID-FLIGHT to 875 s, the budget drained at 1,930 s of
-  * 1,500, the run went partial, and a 3.05× q_str breach was recorded
-  * with "re-measure did not fit the remaining budget"):
-  *  - a protected RESERVE slice (SPARK_GRAFT_RESERVE_SECS, default 300)
-  *    is spendable only by per-query breach re-measures — ordinary
-  *    passes and the drift full re-run stop at budget − reserve, and
-  *    the re-measure admission grants max(remaining budget, reserve),
-  *    so it survives even a pass that overran the WHOLE budget;
-  *  - a pass whose wall blows out ≥ 2× (and ≥ 60 s) over the median of
-  *    its completed same-kind predecessors is DISCARDED and retried
-  *    (bounded by SPARK_GRAFT_PASS_RETRIES, default 2) — one co-tenant
-  *    window eats one pass, not the artifact.
-  *
-  * Output contract (rounds 5 AND 6 both lost the driver parse to an
-  * overlong line — r5 inlined samples, r6 still inlined 135 per-query
-  * medians; the driver demonstrably parses from a 2000-char stdout
-  * tail: BENCH_r03/r04 parsed a 67-query ≈1.4 kB line, r5/r6's longer
-  * lines came back parsed=null, and every BENCH_r*.json stores exactly
-  * 2000 tail chars): the LAST stdout line is a SHORT summary only —
+  * Output contract. The driver parses the LAST stdout line from a
+  * 2000-char tail, so that line is a short summary only —
   * {"metric","value","unit","n_queries","measured","failed","flaky",
-  * "worst_ratio","worst_query","partial","sf"} — a few hundred bytes
-  * regardless of query count. r17: the FULL contract line (same fields
-  * plus the per-query "queries" medians map) is printed immediately
-  * BEFORE it, for any consumer that scans more than the tail; it can
-  * never be the last line because 223 query names alone outgrow the
-  * tail window. Per-query medians also go to `bench_medians.json`
-  * (override SPARK_GRAFT_MEDIANS_OUT); full per-repeat samples and
-  * error strings to `bench_samples.json` (override
-  * SPARK_GRAFT_SAMPLES_OUT).
-  * worst_ratio = max over queries of median / BASELINE.md recorded time
-  * (-1.0 when BASELINE.md is absent or has no row for any benched
-  * query). All floats are formatted with Locale.ROOT so the JSON stays
-  * valid on comma-decimal locales.
+  * "worst_ratio","worst_query","partial","sf"}. The line before it is the
+  * same object with the per-query "queries" medians map inserted after
+  * "unit"; it can never be last, because 223 query names alone outgrow the
+  * tail. worst_ratio = max over queries of median / BASELINE.md row for
+  * this sf (-1.0 when no row matches). Floats use Locale.ROOT.
   *
-  * Failures are tracked, not folded into the median: a failed repeat
-  * records a -1 sample, every failure (even one that other repeats
-  * survived — a flaky query is a bug, not a fast median) lands in the
-  * samples file's "errors", and the process exits nonzero. A query with
-  * NO samples at all (budget/SIGTERM cut the run before its first pass)
-  * is "unmeasured", not failed — it is absent from the medians map and
-  * counted only by n_queries − measured; a query whose every TAKEN
-  * repeat failed stays in the map as -1.0. */
+  * Artifacts. `bench_medians.json` (SPARK_GRAFT_MEDIANS_OUT):
+  * total, queries, failed, schema_note, partial, sf. `bench_samples.json`
+  * (SPARK_GRAFT_SAMPLES_OUT): samples (every sample per query, -1 for a
+  * failed one), errors, repeats, passes (load1 at start, secs,
+  * settle_wait per pass), settle_load1 (the pre-session gate's readings),
+  * settle_threshold, breach_reruns, n_cores, attempts, guard (the guard
+  * log), budget_secs, pass_budget_secs, elapsed_secs, partial, sf.
+  *
+  * Other knobs: SPARK_GRAFT_CPUS (local[n], default 32), SPARK_GRAFT_CONF
+  * (semicolon-separated k=v session confs), SPARK_GRAFT_QUERIES (a
+  * comma-separated subset), SPARK_GRAFT_BASELINE (default BASELINE.md).
+  * Numeric knobs must be positive numbers; anything else fails the run
+  * before the session starts, naming the knob.
+  *
+  * Failures are tracked, not folded into the median: a failed sample is
+  * recorded as -1, every failure lands in "errors", and the process exits
+  * nonzero. A query with no samples at all (the budget or SIGTERM cut the
+  * run first) is unmeasured — absent from the medians map, counted only by
+  * n_queries − measured; a query whose every taken sample failed stays in
+  * the map as -1.0. */
 object Bench {
-  /** Queries whose driver-run medians have shown contention bimodality —
-    * the r6 set (q_basket 1.93×, q_funnel 1.79×, q_contamination 1.66×,
-    * q_jaccard_pairs 1.42×) plus the short queries r9/r10 adjudicated as
-    * contention scatter (q_wau was BENCH_r10-era worst at 1.9× with a
-    * quiet-run floor of ≈1×; q_benford/q_bigram_lm bimodal with minima at
-    * ≈1×; q_repeated_grams the r9 worst; q_xcorr/q_moments the r11
-    * closers — sample spreads of 0.98-1.82 and 0.82-1.57 within ONE run
-    * with quiet-floor minima at ≈1.0-1.27× of baseline, the same
-    * scatter-not-regression signature; q_pq_topk/q_lm_score the r12
-    * watch adds): medians for these rest on `watchRepeats` samples, not
-    * the default `repeats`. */
-  private val watchlist: Set[String] =
-    Set("q_basket", "q_funnel", "q_contamination", "q_jaccard_pairs",
-      "q_wau", "q_benford", "q_bigram_lm", "q_repeated_grams",
-      "q_xcorr", "q_moments", "q_pq_topk", "q_lm_score",
-      // r14 re-based rows (q_split-precedent): sample spreads 1.3-4.3×
-      // within one run — medians of 5+ keep the new rows honest
-      "q_dedup_curve", "q_ngram",
-      // r15 re-base (same precedent): 1.07-1.50 spread across 12 runs
-      "q_containment",
-      // r17 (r16 verdict task #8): the nine-row r16 one-round watch is
-      // RETIRED — BENCH_r16 confirmed all nine contamination
-      // adjudications (q_str 0.22 s et al., every one ≤ 1× at quiet
-      // floor), so the fleet passes get the time back. The structural
-      // set above stays.
-      // r17 adds — the two rows the r16 driver artifacts carried
-      // closest to the 2× gate, both with quiet floors near 1×
-      // (scatter, not regression): q_ccnet_buckets (32-core worst at
-      // 1.885×, quiet floor ~1.09×) and q_leakage (8-core worst at
-      // 1.654×, a 1.19 s row over a 0.72 baseline). Medians of 5 keep
-      // one warm pass from writing the fleet's worst_ratio.
-      "q_ccnet_buckets", "q_leakage")
+  /** Fresh samples a breached row gets in one re-measure round. */
+  private val RemeasureRepeats = 5
 
   private[graft] def medianOf(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
-  /** The finalize gate (r11 verdict task #1): should this measurement be
-    * recorded, or re-taken? Returns the trip reason, None when clean.
+  /** Should this measurement be recorded, or re-taken? Returns the trip
+    * reason, None when clean.
     *
     *  A. 2× GATE BREACH — some query's median is ≥ 2× its BASELINE.md
-    *     row. r11 committed exactly this (q_cond_entropy 2.065× on code
-    *     untouched since r8, two of five raw samples AT baseline) as the
-    *     final artifact; a breach now forces an automatic PER-QUERY
-    *     quiet re-measure (r14 verdict task #2 — the full-fleet re-run
-    *     cost ~6-9 min, so a budget depleted by slow contended passes
-    *     could force "recording" an unverified breach, exactly what
-    *     BENCH_r14 did at 18.3×; re-measuring only the breached rows
-    *     costs seconds and always fits) and is recorded only if it
-    *     survives that re-measurement.
-    *  B. UNIFORM DRIFT — vs the PREVIOUS run's medians (same sf), the
+    *     row. The caller re-measures the breached rows (see the object
+    *     doc) and records the breach only if it survives.
+    *  B. UNIFORM DRIFT — vs the previous run's medians (same sf), the
     *     cross-query ratio median exceeds 1.15 with its p10 above 1.0:
-    *     every query slower at once is the degrading-host signature (the
-    *     r11 back-to-back runs moved uniformly 1.09× on a scaladoc-only
-    *     diff); a code regression moves specific queries, not the fleet.
-    *     Needs ≥ 20 common queries — a subset re-baseline must not trip.
+    *     every query slower at once is the degrading-host signature; a
+    *     code regression moves specific queries, not the fleet. Needs
+    *     ≥ 20 common queries — a subset re-baseline must not trip.
     */
   private[graft] def guardVerdict(worstRatio: Double, worstQuery: String,
                                   vsPrev: Seq[Double]): Option[String] = {
@@ -193,55 +115,33 @@ object Bench {
       require(kv.indexOf('=') > 0, s"malformed conf '$kv': expected key=value")
       (kv.takeWhile(_ != '=').trim, kv.dropWhile(_ != '=').tail.trim) }
 
-  /** Mid-pass contamination detector (r15 verdict task #1b): the settle
-    * gate certifies a quiet START, but BENCH_r15's pass 3 was slammed
-    * MID-FLIGHT (875 s wall vs 422/331 for its predecessors), drained
-    * the whole budget, and forced a partial artifact. A pass whose wall
-    * blows out against the median of its completed same-kind
-    * predecessors is a co-tenant window, not a measurement — discard
-    * and retry it instead of averaging it in.
-    *
-    * Both a ratio AND an absolute floor must trip: ratio alone would
-    * discard an 18 s watch-pass that scattered to 40 s (sub-minute
-    * scatter that a median of 5 already defends), while the floor alone
-    * would never fire on short passes. r15's pass 3 reads 875 vs median
-    * 376.5 → ratio 2.3×, delta 499 s — exactly the target. */
-  private[graft] def passContaminated(wall: Double, priorWalls: Seq[Double]): Boolean =
-    priorWalls.nonEmpty && {
-      val med = medianOf(priorWalls)
-      wall > med * 2.0 && wall - med > 60.0
+  /** A numeric env knob: `default` when unset, else `parse` of its value,
+    * which must be a positive number. Zero, negatives and non-numbers
+    * throw IllegalArgumentException naming the knob — a zero repeat count
+    * would otherwise measure nothing and exit 0. */
+  private[graft] def positiveKnob[T](env: Map[String, String], name: String, default: T)
+                                    (parse: String => T)(implicit num: Numeric[T]): T =
+    env.get(name).fold(default) { raw =>
+      val v = try Some(parse(raw.trim)) catch { case _: NumberFormatException => None }
+      require(v.exists(num.gt(_, num.zero)), s"$name='$raw': expected a positive number")
+      v.get
     }
 
   def main(args: Array[String]): Unit = {
     val wall0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    // watchlist passes: 5 > the 3 default — a median of 5 survives two
-    // stalled passes on the rows where that failure mode was observed
-    // (a default-width watch equalled the fleet and protected nothing)
-    val watchRepeats = sys.env.getOrElse("SPARK_GRAFT_WATCH_REPEATS", "5").toInt max repeats
-    // wall budget for the WHOLE run (settle + warmup + passes + re-run);
-    // spent budget stops further passes, it never aborts one mid-flight.
-    // Sized against the r11 driver window evidence: a completed 5-pass
-    // r11 run took ~18 min and the r12 run with a guard re-run (~35 min)
-    // timed out, so the window is ~30 min — 25 min of budget fits a
-    // 3-pass run (~12 min) plus one guard re-run with margin.
-    val budgetSecs = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SECS", "1500").toLong
-    // protected breach-re-measure reserve (r15 verdict task #1a): the
-    // r15 run drained its whole budget absorbing one slammed pass and
-    // recorded an UNVERIFIED 2× breach because "per-query re-measure did
-    // not fit the remaining budget". Ordinary passes (and the drift
-    // full re-run) may now spend only budget − reserve; the reserve is
-    // spendable ONLY by per-query breach re-measures, and it survives
-    // even a mid-pass overrun past the whole budget (the re-measure
-    // admission grants max(remaining budget, reserve)) — so a co-tenant
-    // window can no longer starve the verification step
-    val reserveSecs = sys.env.getOrElse("SPARK_GRAFT_RESERVE_SECS", "300").toLong
-    val passBudget = (budgetSecs - reserveSecs) max (budgetSecs / 2)
+    val cpus = positiveKnob(sys.env, "SPARK_GRAFT_CPUS", 32)(_.toInt)
+    val repeats = positiveKnob(sys.env, "SPARK_GRAFT_REPEATS", 3)(_.toInt)
+    val budgetSecs = positiveKnob(sys.env, "SPARK_GRAFT_BUDGET_SECS", 1500L)(_.toLong)
+    val settleLoad1 = positiveKnob(sys.env, "SPARK_GRAFT_SETTLE_LOAD1", 1.0)(_.toDouble)
+    // ordinary passes and the drift re-run stop here; the last fifth of
+    // the budget is the breach re-measure reserve
+    val reserveSecs = budgetSecs / 5
+    val passBudget = budgetSecs - reserveSecs
     val samplesOut = sys.env.getOrElse("SPARK_GRAFT_SAMPLES_OUT", "bench_samples.json")
     val mediansOut = sys.env.getOrElse("SPARK_GRAFT_MEDIANS_OUT", "bench_medians.json")
     val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BASELINE.md")
+    val extraConf = confPairs(sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";").toSeq)
     def elapsedSecs(): Double = (System.nanoTime() - wall0) / 1e9
     // 1-minute load average (Linux /proc/loadavg; -1 when unreadable —
     // never fails the bench)
@@ -249,42 +149,30 @@ object Bench {
       try scala.io.Source.fromFile("/proc/loadavg").getLines()
         .next().split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
-    // settle threshold (r14 verdict task #2): on an otherwise-idle box a
-    // timed pass must not START while the 1-min load average exceeds ~1 —
-    // the r14 driver artifact began at load1 2.47 (under the old
-    // half-the-cores gate of 16) and recorded a contaminated run
-    val settleLoad1 = sys.env.getOrElse("SPARK_GRAFT_SETTLE_LOAD1", "1.0").toDouble
-    val settle = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var settleWaitMs = 0L
-    // Co-tenant gate, taken BEFORE the session/warmup so the reading is
-    // pure foreign load (our own warmup inflates load1 afterwards): wait
-    // out someone else's burst up to 4 min, recording every sample. The
-    // gate delays and records — it never fails or skips the bench.
-    while ({ val l = load1(); settle += l
-             l > settleLoad1 && settleWaitMs < 240000L }) {
-      Thread.sleep(5000L); settleWaitMs += 5000L
+    // Waits in 5 s steps, at most maxWaitMs and never past capSecs of run
+    // wall, for load1 to fall to the threshold; returns the wait in ms.
+    def settle(maxWaitMs: Long, capSecs: Double, seen: Double => Unit = _ => ()): Long = {
+      var waited = 0L
+      while ({ val l = load1(); seen(l)
+               l > settleLoad1 && waited < maxWaitMs && elapsedSecs() < capSecs }) {
+        Thread.sleep(5000L); waited += 5000L
+      }
+      waited
     }
-    // Optional extra session confs (r17, guide §9 parameterization rule:
-    // scale-dependent settings ride a conf/env knob with local defaults
-    // that keep the driver's bench comparable): semicolon-separated
-    // key=value pairs, applied at BUILDER level so core confs
-    // (spark.io.compression.codec) work as well as SQL confs
-    // (spark.sql.join.preferSortMergeJoin). Default EMPTY — the session
-    // is bit-identical to the r16 one unless the operator opts in.
-    // Used for the r17 zstd-codec and preferSortMergeJoin A/Bs.
-    val extraConf = confPairs(sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";").toSeq)
+    // Co-tenant gate, taken BEFORE the session/warmup so the reading is
+    // pure foreign load (our own warmup inflates load1 afterwards).
+    val settleSeen = scala.collection.mutable.ArrayBuffer.empty[Double]
+    settle(240000L, Double.MaxValue, settleSeen += _)
     extraConf.foreach { case (k, v) => System.err.println(s"[bench] extra conf: $k=$v") }
-    val spark = GraftExtensions.localSession(cpus, "WARN", extraConf)
-    // benchmarking a drifted fixture measures the wrong workload (the
-    // round-8 lesson) — same fail-fast gate as Verify
+    val spark = GraftExtensions.localSession(cpus.toString, "WARN", extraConf)
+    // benchmarking a drifted fixture measures the wrong workload — same
+    // fail-fast gate as Verify
     Preflight.check(spark, sfDir)
 
     def run(name: String): Unit = {
-      // finally, not sequentially: a FAILED repeat must still drop its
-      // persisted blocks (LSH signatures, token sets) — otherwise the
-      // next query's timed sample runs with the failure's cached RDDs
-      // occupying executor memory, skewing exactly the samples the
-      // interleaved-median design protects
+      // finally, not sequentially: a FAILED sample must still drop its
+      // persisted blocks, or the next query runs with them occupying
+      // executor memory
       try SparkEntry.benchShapes(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       finally spark.catalog.clearCache()
@@ -310,17 +198,13 @@ object Bench {
     catch { case _: Throwable => () }
     // Model warmup: q_ml_risk's contract is train-offline/serve-per-query,
     // so the multi-second one-time fit belongs to warmup, not to any timed
-    // sample (r9 showed the first sample absorbing a 4.7 s fit and skewing
-    // the median pool). The fit-once cache then serves every pass.
+    // sample. The fit-once cache then serves every pass.
     if (names.contains("q_ml_risk"))
       try graft.pipeline.MlScoring.fitCrowdRisk(spark, sfDir)
       catch { case _: Throwable => () }
-    // Offline-build warmup (q_lm_delta / q_ivf_delta / q_pq_topk /
-    // q_ivf_topk): their contract is index-built-offline/probe-per-query —
-    // the one-time model/index/codebook build is warmup, same reasoning
-    // as the q_ml_risk fit (a quiet 7-repeat r13 subset run showed
-    // q_pq_topk's first sample absorbing a 33.9 s codebook fit that the
-    // median then has to discard).
+    // Offline-build warmup: these queries' contract is
+    // index-built-offline/probe-per-query, so the one-time model, index or
+    // codebook build is warmup, as for the q_ml_risk fit.
     for (q <- Seq("q_lm_delta", "q_ivf_delta", "q_pq_topk", "q_ivf_topk",
                   "q_strip_delta", "q_semdedup_delta")
          if names.contains(q))
@@ -329,41 +213,17 @@ object Bench {
       catch { case _: Throwable => () }
 
     val nCores = Runtime.getRuntime.availableProcessors().toDouble
-    // Per-pass settle (r14 verdict task #2, the "refuse to start a timed
-    // pass while load1 > threshold" gate): before EVERY timed pass, wait
-    // (bounded, budget-aware) for the 1-min load to decay under the
-    // threshold — after warmup or a previous pass that decay is mostly
-    // our OWN burst load draining (load1 halves every ~42 s of idle), so
-    // the bound is sized to one decade of decay, not to co-tenant
-    // patience (the pre-session gate above owns that). Returns the wait.
-    def settlePass(maxWaitMs: Long, capSecs: Double): Long = {
-      var waited = 0L
-      while (load1() > settleLoad1 && waited < maxWaitMs &&
-             elapsedSecs() < capSecs) {
-        Thread.sleep(5000L); waited += 5000L
-      }
-      waited
-    }
-    // per-pass audit: (load1 at pass start, pass wall seconds, settle
-    // wait, discarded) — a discarded pass stays visible in the artifact
-    // (its reason is in the guard log) but its samples are dropped
-    val passLog = scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Double, Boolean)]
-    // count of contaminated-pass discards taken so far (r15 task #1b),
-    // bounded so a persistently-hostile box still converges
-    var passDiscards = 0
-    val maxPassDiscards = sys.env.getOrElse("SPARK_GRAFT_PASS_RETRIES", "2").toInt
+    // per-pass audit: (load1 at pass start, pass wall seconds, settle wait)
+    val passLog = scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Double)]
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     // Locale-independent fixed-point formatting (f"$t%.3f" follows the JVM
     // default locale and emits ',' decimals on e.g. de_DE → invalid JSON).
     def num(t: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(t))
 
-    // samples(name)(pass) = (seconds, error); -1 s stands in for a failed
-    // repeat in the emitted array. Mutated only on the main thread; every
-    // write is synchronized so the shutdown hook's snapshot is coherent.
+    // samples(name) = (seconds, error) per sample; -1 s stands in for a
+    // failed one in the emitted array. Mutated only on the main thread;
+    // every write is synchronized so the shutdown hook's snapshot is
+    // coherent.
     val samples = scala.collection.mutable.Map.empty[String, Vector[(Double, Option[String])]]
       .withDefaultValue(Vector.empty)
     val guardLog = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -372,13 +232,9 @@ object Bench {
     // artifact even though the medians are computed from the fresh ones
     val rerunLog = scala.collection.mutable.ArrayBuffer
       .empty[(String, Vector[Double], Vector[Double])]
-    // runs one interleaved pass over `qs`, appends one sample per query,
-    // logs the pass, and returns its wall seconds so the caller can
-    // apply the contamination discard (settleMs/capSecs let the breach
-    // re-measure use its own tighter settle bound and reserve ceiling)
-    def pass(qs: Seq[String], settleMs: Long = 90000L,
-             capSecs: Double = budgetSecs.toDouble): Double = {
-      val waited = settlePass(settleMs, capSecs)
+    // one interleaved pass over `qs`, one sample per query, logged with the
+    // settle wait the caller took before it
+    def pass(qs: Seq[String], settledMs: Long): Unit = {
       val l0 = load1()
       val p0 = System.nanoTime()
       for (name <- qs) {
@@ -389,30 +245,15 @@ object Bench {
           samples(name) = samples(name) :+ (((System.nanoTime() - t0) / 1e9, err))
         }
       }
-      val wall = (System.nanoTime() - p0) / 1e9
-      passLog.synchronized { passLog += ((l0, wall, waited / 1000.0, false)) }
-      wall
-    }
-    // discard the pass just taken over `qs`: drop each query's LAST
-    // sample (pass() appends exactly one per query) and flag the pass
-    // log entry so the artifact shows the retry instead of hiding it
-    def discardPass(qs: Seq[String]): Unit = {
-      samples.synchronized {
-        qs.foreach(q => samples(q) = samples(q).dropRight(1)) }
       passLog.synchronized {
-        if (passLog.nonEmpty) {
-          val (l, s, w, _) = passLog.last
-          passLog(passLog.size - 1) = ((l, s, w, true))
-        }
-      }
+        passLog += ((l0, (System.nanoTime() - p0) / 1e9, settledMs / 1000.0)) }
     }
     // Baseline per-query rows from BASELINE.md ("| q_x | 0.1 | 1.21 | date |");
     // first matching row wins (first-correct-run record policy). Rows are
-    // filtered to THIS run's scale factor (the sf token in the dir name) —
-    // without the filter, a baseline file carrying rows for several sfs
-    // would silently ratio a sf1 run against a sf0.1 row (an ~10× phantom
-    // regression, or a masked real one). Parsed leniently — a missing or
-    // reshaped file degrades worst_ratio to -1, it never fails the bench.
+    // filtered to THIS run's scale factor (the sf token in the dir name),
+    // so a sf1 run is never ratioed against a sf0.1 row. Parsed leniently —
+    // a missing or reshaped file degrades worst_ratio to -1, it never fails
+    // the bench.
     val sfToken = """sf([\d.]+)""".r.findFirstMatchIn(sfDir).map(_.group(1))
     val baseline: Map[String, Double] = try {
       val row = """\|\s*(q_\w+)\s*\|\s*([\d.]+)\s*\|\s*([\d.]+)\s*\|""".r
@@ -425,18 +266,15 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
 
     // Previous run's medians, read BEFORE this run overwrites the file:
-    // the reference frame for the uniform-drift guard (r11 verdict task
-    // #1 — the r11 fleet artifact was committed out of a degrading host
-    // window, every query uniformly ~1.2× its prior-run self, one over
-    // the 2× gate on untouched code). Same-sf only; absent file → no
-    // drift reference, guard A (gate breach) still applies.
+    // guard B's reference frame. Same-sf only; absent file → no drift
+    // reference, guard A still applies.
     val prevMedians: Map[String, Double] = try {
       val txt = new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(mediansOut)),
         java.nio.charset.StandardCharsets.UTF_8)
       if (txt.contains("\"sf\":\"" + sfDir + "\"")
           // a budget/SIGTERM-cut artifact holds single-sample medians —
-          // too noisy to anchor the uniform-drift test (r13 review)
+          // too noisy to anchor the uniform-drift test
           && !txt.contains("\"partial\":true"))
         """"(q_\w+)":(-?[\d.]+)""".r.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble)
@@ -453,7 +291,7 @@ object Bench {
         snap.get(name).map { attempts =>
           val ok = attempts.collect { case (t, None) => t }
           val firstErr = attempts.collectFirst { case (_, Some(e)) => e }
-          (name, if (ok.nonEmpty) Some(median(ok)) else None, firstErr,
+          (name, if (ok.nonEmpty) Some(medianOf(ok)) else None, firstErr,
             attempts.map { case (t, e) => if (e.isEmpty) t else -1.0 })
         }
       }
@@ -463,19 +301,6 @@ object Bench {
         for (m <- med; b <- baseline.get(name) if b > 0) yield (name, m / b) }
       if (ratios.isEmpty) ("", -1.0) else ratios.maxBy(_._2)
     }
-    // watchlist-entry predicate (r13 verdict task #5 — the absolute-delta
-    // noise floor): a row is a WATCH CANDIDATE only if its median is both
-    // ≥ 1.3× its BASELINE row AND ≥ 0.25 s over it. Sub-second rows
-    // whipsaw 1.3-1.5× on 100 ms of scheduler scatter (q_abtest read
-    // 1.46× on a 0.10 s delta in r13, 1.14× in r12) — ratio alone churns
-    // the watchlist with adjudication work that a delta floor retires.
-    // The driver's 2× gate and guard A are untouched; this only selects
-    // which rows DESERVE a quiet re-measure.
-    def watchCandidatesOf(rs: Seq[Res]): Seq[String] =
-      rs.flatMap { case (name, med, _, _) =>
-        for (m <- med; b <- baseline.get(name)
-             if b > 0 && m / b >= 1.3 && m - b >= 0.25) yield name
-      }.sorted
     // control chars below 0x20 (ANSI ESC in wrapped tool errors, NULs
     // from binary payloads in messages) must not reach the JSON — \s+
     // only covers the whitespace subset, and one raw ESC makes the
@@ -488,8 +313,8 @@ object Bench {
     def emit(partial: Boolean): Unit = if (emitted.compareAndSet(false, true)) {
       val results = resultsNow()
       val (worstQuery, worstRatio) = worstOf(results)
-      // all-repeats-failed queries stay IN the map as -1.0 so "failed"
-      // and "unmeasured (budget cut)" stay distinguishable (r13 review)
+      // all-samples-failed queries stay IN the map as -1.0 so "failed"
+      // and "unmeasured (budget cut)" stay distinguishable
       val qs = results.map { case (k, med, _, _) =>
         "\"" + k + "\":" + num(med.getOrElse(-1.0)) }
         .mkString("{", ",", "}")
@@ -500,46 +325,34 @@ object Bench {
         "\"" + k + "\":" + jsonStr(e) }
         .mkString("{", ",", "}")
       val total = results.flatMap(_._2).sum
-      val nFailed = results.count(_._2.isEmpty)          // every taken repeat failed
-      val nFlaky = results.count(r => r._2.nonEmpty && r._3.nonEmpty) // some repeats failed
-      val passesJson = passLog.synchronized { passLog.map { case (l, s, w, d) =>
-        s"""{"load1":${num(l)},"secs":${num(s)},"settle_wait":${num(w)},"discarded":$d}""" }
+      val nFailed = results.count(_._2.isEmpty)          // every taken sample failed
+      val nFlaky = results.count(r => r._2.nonEmpty && r._3.nonEmpty) // some samples failed
+      val passesJson = passLog.synchronized { passLog.map { case (l, s, w) =>
+        s"""{"load1":${num(l)},"secs":${num(s)},"settle_wait":${num(w)}}""" }
         .mkString("[", ",", "]") }
       val rerunsJson = rerunLog.synchronized { rerunLog.map { case (q, old, nw) =>
         s"""{"query":"$q","old":${old.map(num).mkString("[", ",", "]")},"new":${nw.map(num).mkString("[", ",", "]")}}""" }
         .mkString("[", ",", "]") }
-      val settleJson = settle.map(num).mkString("[", ",", "]")
+      val settleJson = settleSeen.map(num).mkString("[", ",", "]")
       val guardJson = guardLog.synchronized { guardLog.map(jsonStr).mkString("[", ",", "]") }
-      val watchCandJson = watchCandidatesOf(results)
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
       val audit =
-        s"""{"samples":$raw,"errors":$errs,"repeats":$repeats,"watch_repeats":$watchRepeats,"watchlist":${watchlist.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"watch_candidates":$watchCandJson,"passes":$passesJson,"settle_load1":$settleJson,"settle_threshold":${num(settleLoad1)},"breach_reruns":$rerunsJson,"n_cores":${num(nCores)},"attempts":$attempt,"guard":$guardJson,"budget_secs":$budgetSecs,"reserve_secs":$reserveSecs,"pass_budget_secs":$passBudget,"pass_discards":$passDiscards,"elapsed_secs":${num(elapsedSecs())},"partial":$partial,"sf":"$sfDir"}"""
+        s"""{"samples":$raw,"errors":$errs,"repeats":$repeats,"passes":$passesJson,"settle_load1":$settleJson,"settle_threshold":${num(settleLoad1)},"breach_reruns":$rerunsJson,"n_cores":${num(nCores)},"attempts":$attempt,"guard":$guardJson,"budget_secs":$budgetSecs,"pass_budget_secs":$passBudget,"elapsed_secs":${num(elapsedSecs())},"partial":$partial,"sf":"$sfDir"}"""
       try java.nio.file.Files.write(java.nio.file.Paths.get(samplesOut),
         audit.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case t: Throwable => System.err.println(s"samples file write failed: $t") }
-      // Per-query medians → their own file (inlining them on the stdout line
-      // is what overflowed the round-6 capture). The -1.0 failure
-      // sentinels in `queries` are declared IN the artifact (a `failed`
-      // array + schema note) so external consumers that sum or ratio the
-      // map don't silently absorb negatives (r13 advice).
+      // Per-query medians → their own file, never onto the last stdout
+      // line. The -1.0 failure sentinels in `queries` are declared IN the
+      // artifact (a `failed` array + schema note) so external consumers
+      // that sum or ratio the map don't silently absorb negatives.
       val failedArr = results.collect { case (k, None, _, _) => "\"" + k + "\"" }
         .mkString("[", ",", "]")
       val medians = s"""{"total":${num(total)},"queries":$qs,"failed":$failedArr,"schema_note":"queries values <= 0 are all-repeats-failed sentinels (-1.0), not timings; their names are listed in failed","partial":$partial,"sf":"$sfDir"}"""
       try java.nio.file.Files.write(java.nio.file.Paths.get(mediansOut),
         medians.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case t: Throwable => System.err.println(s"medians file write failed: $t") }
-      // FULL contract line (r16 verdict task #2): the driver contract
-      // names a per-query "queries" map on the bench's JSON line, but
-      // the driver's last-line parser reads from a 2000-char stdout
-      // tail (measured: BENCH_r03/r04 parsed a 67-query map ≈ 1.4 kB;
-      // BENCH_r05/r06 got parsed=null on the same format once the line
-      // outgrew the tail; every BENCH_r*.json stores exactly 2000 tail
-      // chars). 223 query NAMES alone serialize past 3 kB, so the map
-      // can never ride the LAST line without destroying the parse that
-      // recovers the total. Emit the full line FIRST — a
-      // backwards-scanning parser still finds the short line below;
-      // a parser that accepts per-query fields finds this one — and
-      // keep the short summary as the final, always-parseable line.
+      // FULL contract line first (it carries the per-query map and so can
+      // never fit the driver's 2000-char tail), then the short summary as
+      // the final, always-parseable line.
       println(s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"n_queries":${names.size},"measured":${results.size},"failed":$nFailed,"flaky":$nFlaky,"worst_ratio":${num(worstRatio)},"worst_query":"$worstQuery","partial":$partial,"sf":"$sfDir"}""")
       // Short machine-readable line LAST on stdout — nothing may print
       // after, and nothing per-query may ride on it.
@@ -551,35 +364,19 @@ object Bench {
     val hook = new Thread(() => emit(partial = true), "bench-emit-on-term")
     Runtime.getRuntime.addShutdownHook(hook)
 
-    // Measure, guard, and automatically re-measure: a run whose artifact
-    // would record a 2× gate breach or the every-query-slower drift
-    // signature is a measurement of the HOST, not the code — re-settle
-    // and re-take it instead of committing it.
-    //  - a GATE BREACH triggers a PER-QUERY quiet re-measure (r14 task
-    //    #2): only the breached rows are re-taken (watchRepeats fresh
-    //    interleaved samples each, replacing their sample sets; the
-    //    replaced numbers stay in the audit's breach_reruns), so the
-    //    verification costs seconds and a depleted full-run budget can
-    //    never force recording an unverified breach;
-    //  - UNIFORM DRIFT still triggers one full-fleet re-run (everything
-    //    moved — no per-query subset is meaningful).
-    // A verdict that persists after re-measurement is recorded with its
-    // reason in the audit (a genuine regression must surface, not loop
-    // forever).
-    // (name, expected QUIET re-measure seconds): the estimate must not
-    // come from the contaminated median itself — an 18x-breached row
-    // would estimate 18x the real cost and talk itself out of exactly
-    // the verification it most needs (r15 review); a quiet re-run of a
-    // breached query costs about its baseline, 2x at the gate boundary
+    // Measure, guard, and re-measure (see the object doc). The
+    // re-measure's cost estimate must not come from the breached median
+    // itself — an 18x-breached row would estimate 18x the real cost and
+    // talk itself out of the verification it most needs; a quiet re-run
+    // costs about its baseline, 2x at the gate boundary.
     def breachedOf(rs: Seq[Res]): Seq[(String, Double)] =
       rs.flatMap { case (name, med, _, _) =>
         for (m <- med; b <- baseline.get(name) if b > 0 && m / b >= 2.0)
           yield (name, math.min(m, b * 2))
       }.sortBy(_._1)
     var breachReruns = 0
-    // queries actually covered by a breach re-measure (r15 advice: the
-    // recorded reason must not claim re-measurement for rows a prior
-    // rerun on DIFFERENT queries happened to precede)
+    // queries actually covered by a breach re-measure, so the recorded
+    // reason never claims re-measurement for a row that did not get one
     val rerunCovered = scala.collection.mutable.Set.empty[String]
     var done = false
     var budgetCut = false
@@ -587,69 +384,27 @@ object Bench {
       samples.synchronized { samples.clear() }
       val attemptStart = elapsedSecs()
       var p = 0
-      // completed (kept) pass walls, split by pass kind — the fleet
-      // passes and the short watch-only passes have different scales,
-      // so a watch pass must not be judged against a fleet pass's wall
-      val fleetWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val watchWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
-      // full-fleet passes, then extra interleaved passes over just the
-      // watchlist (still round-robin within the pass, so one stall can't
-      // take out a query's whole tail); the budget check sits BETWEEN
-      // passes — at least one full pass always runs, so every query gets
-      // a sample even on a tight budget. Ordinary passes stop at
-      // passBudget (budget − reserve), never at the full budget: the
-      // reserve belongs to breach re-measures alone (r15 task #1a).
-      while (p < watchRepeats &&
-             (p == 0 || elapsedSecs() < passBudget)) {
-        val fleet = p < repeats
-        val qs = if (fleet) names else names.filter(watchlist)
-        val walls = if (fleet) fleetWalls else watchWalls
-        val wall = pass(qs, capSecs = passBudget.toDouble)
-        // mid-pass contamination (r15 task #1b): a pass slammed after a
-        // certified-quiet start is discarded and retried — bounded by
-        // maxPassDiscards and by a retry actually fitting the pass
-        // budget, so a persistently-hostile box still converges
-        if (passContaminated(wall, walls.toSeq) &&
-            passDiscards < maxPassDiscards &&
-            elapsedSecs() + medianOf(walls.toSeq) < passBudget) {
-          passDiscards += 1
-          discardPass(qs)
-          guardLog.synchronized {
-            guardLog += s"pass discarded: wall ${num(wall)}s vs prior median ${num(medianOf(walls.toSeq))}s — mid-pass contention, retrying ($passDiscards/$maxPassDiscards)" }
-          System.err.println(s"[bench-guard] contaminated pass discarded (${num(wall)}s), retrying")
-        } else {
-          walls += wall
-          p += 1
-        }
+      while (p < repeats && (p == 0 || elapsedSecs() < passBudget)) {
+        pass(names, 0L); p += 1
       }
-      if (p < watchRepeats) {
+      if (p < repeats) {
         budgetCut = true
         guardLog.synchronized {
-          guardLog += s"budget: stopped after pass $p/$watchRepeats at ${num(elapsedSecs())}s of pass budget ${passBudget}s (run budget ${budgetSecs}s, reserve ${reserveSecs}s)" }
+          guardLog += s"budget: stopped after pass $p/$repeats at ${num(elapsedSecs())}s of pass budget ${passBudget}s (run budget ${budgetSecs}s)" }
       }
       val attemptCost = elapsedSecs() - attemptStart
 
       // per-query breach re-measure, at most twice across the whole run:
-      // each round re-settles (the pass() gate), replaces the breached
-      // rows' samples with fresh quiet ones, and re-evaluates
+      // each round replaces the breached rows' samples with fresh settled
+      // ones and re-evaluates
       var rerunning = true
       while (rerunning) {
         val breached = breachedOf(resultsNow())
-        // cost estimate: expected quiet per-query cost × passes × slack,
-        // PLUS the full per-pass settle bound × passes (r15 advice:
-        // pass() settles before EVERY pass, so an estimate carrying one
-        // settle total could admit a re-measure that then overdraws the
-        // reserve waiting out its own settles). Re-measure passes use a
-        // 30 s settle bound — breached rows cost seconds, and after each
-        // the box barely warms, so one decay decade is generous.
+        // expected quiet cost × passes × slack, plus each pass's settle
+        // bound (30 s: breached rows cost seconds and barely warm the box)
         val rerunSettleMs = 30000L
-        val est = breached.map(_._2).sum * watchRepeats * 1.5 +
-          watchRepeats * (rerunSettleMs / 1000.0) + 5.0
-        // admission grants max(remaining budget, reserve): even when a
-        // slammed pass overran the WHOLE budget (r15: 1930 s of 1500),
-        // the reserve is still spendable — "re-measure did not fit the
-        // remaining budget" is structurally impossible for a breach the
-        // reserve can cover (r15 verdict task #1a)
+        val est = breached.map(_._2).sum * RemeasureRepeats * 1.5 +
+          RemeasureRepeats * (rerunSettleMs / 1000.0) + 5.0
         val grant = math.max(budgetSecs - elapsedSecs(), reserveSecs.toDouble)
         if (breached.nonEmpty && breachReruns < 2 && est < grant) {
           breachReruns += 1
@@ -663,11 +418,11 @@ object Bench {
           val olds = samples.synchronized { qs.map(q => q -> samples(q)).toMap }
           samples.synchronized { qs.foreach(q => samples(q) = Vector.empty) }
           var rp = 0
-          while (rp < watchRepeats && elapsedSecs() < hardCap) {
-            pass(qs, settleMs = rerunSettleMs, capSecs = hardCap); rp += 1
+          while (rp < RemeasureRepeats && elapsedSecs() < hardCap) {
+            pass(qs, settle(rerunSettleMs, hardCap)); rp += 1
           }
           // a re-measure with zero SUCCESSFUL fresh samples (budget-cut
-          // to nothing, or every fresh repeat errored) must not erase
+          // to nothing, or every fresh sample errored) must not erase
           // the original breached evidence — keep the old samples, with
           // any fresh errors appended so flakiness stays visible
           samples.synchronized {
@@ -692,13 +447,9 @@ object Bench {
         for (m <- med; pm <- prevMedians.get(name)) yield m / pm }
       guardVerdict(worstRatio, worstQuery, vsPrev) match {
         case Some(reason) if reason.startsWith("2x gate breach") =>
-          // the per-query re-measure above is the breach's re-run; if the
-          // breach is still standing here it either survived quiet
-          // re-measurement (a real regression — record it loudly) or the
-          // estimate genuinely couldn't fit the remaining budget
-          // attribution is per-QUERY, not per-run (r15 advice): a prior
-          // rerun spent on different rows must not be claimed as having
-          // re-measured this one
+          // the per-query re-measure above is the breach's re-run; a
+          // breach still standing here either survived it (a real
+          // regression — record it loudly) or could not be covered
           val how =
             if (rerunCovered.contains(worstQuery))
               s"persisted after per-query re-measure ($breachReruns rerun(s))"
@@ -717,7 +468,7 @@ object Bench {
             guardLog += s"attempt 1: $reason — re-settling and re-measuring" }
           System.err.println(s"[bench-guard] $reason — automatic re-run")
           attempt += 1
-          settlePass(240000L, passBudget.toDouble)
+          settle(240000L, passBudget.toDouble)
         case Some(reason) if attempt == 1 =>
           guardLog.synchronized {
             guardLog += s"attempt 1: $reason — re-run skipped (would exceed budget), recording" }

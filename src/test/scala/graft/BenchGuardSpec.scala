@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench finalize gate (r11 verdict task #1): the exact artifact
-  * failure that round committed — a 2× gate breach, and an
-  * every-query-slower host-drift window — must force a re-measure
-  * instead of landing in bench_medians.json on the first attempt. */
+/** The bench finalize gate: a 2× gate breach and an every-query-slower
+  * host-drift window must force a re-measure instead of landing in
+  * bench_medians.json on the first attempt. Also the bench's knob parsing
+  * and a lint that keeps its noise handling a rule. */
 class BenchGuardSpec extends AnyFunSuite {
 
   private def flat(n: Int, r: Double): Seq[Double] = Seq.fill(n)(r)
@@ -41,32 +41,6 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.guardVerdict(-1.0, "", Seq.empty).isEmpty)
   }
 
-  // ---- mid-pass contamination discard (r15 verdict task #1b) ----
-
-  test("the BENCH_r15 pass-3 blowout is detected: 875s vs priors 422/331") {
-    assert(Bench.passContaminated(875.412, Seq(422.613, 331.955)))
-  }
-
-  test("the first pass of a kind is never discarded (no predecessors)") {
-    assert(!Bench.passContaminated(875.0, Seq.empty))
-  }
-
-  test("sub-minute scatter on a short watch pass stays below the floor") {
-    // an 18s watch pass scattering to 60s is 3.2x but only +41s — the
-    // median of 5 defends it; a discard here would churn retries
-    assert(!Bench.passContaminated(60.0, Seq(18.7, 18.3)))
-  }
-
-  test("a slow-but-proportional pass (under 2x) is kept") {
-    assert(!Bench.passContaminated(700.0, Seq(422.0, 331.0)))
-  }
-
-  test("a large absolute delta still needs the 2x ratio") {
-    // 500s over a 600s median is +83% — plausible warm/cold variance
-    // territory at fleet scale, not an unambiguous co-tenant window
-    assert(!Bench.passContaminated(1100.0, Seq(600.0, 650.0)))
-  }
-
   test("conf knobs: k=v pairs parse, blanks skip, a value may hold '='") {
     assert(Bench.confPairs(" a.b=1 ; ;c=x=y ".split(";").toSeq) ==
       Seq("a.b" -> "1", "c" -> "x=y"))
@@ -78,6 +52,46 @@ class BenchGuardSpec extends AnyFunSuite {
       Bench.confPairs("a=1;spark.sql.shuffle.partitions".split(";").toSeq))
     assert(e.getMessage.contains("spark.sql.shuffle.partitions"), e.getMessage)
     intercept[IllegalArgumentException](Bench.confPairs(Seq("=1")))
+  }
+
+  test("numeric knobs: unset takes the default, a positive value parses") {
+    val env = Map("SPARK_GRAFT_REPEATS" -> " 5 ", "SPARK_GRAFT_SETTLE_LOAD1" -> "2.5")
+    assert(Bench.positiveKnob(env, "SPARK_GRAFT_REPEATS", 3)(_.toInt) == 5)
+    assert(Bench.positiveKnob(env, "SPARK_GRAFT_SETTLE_LOAD1", 1.0)(_.toDouble) == 2.5)
+    assert(Bench.positiveKnob(env, "SPARK_GRAFT_BUDGET_SECS", 1500L)(_.toLong) == 1500L)
+    assert(Bench.positiveKnob(Map.empty, "SPARK_GRAFT_CPUS", 32)(_.toInt) == 32)
+  }
+
+  test("numeric knobs: zero, negative and non-numeric values fail loudly, naming the knob") {
+    def rejects[T: Numeric](name: String, raw: String, default: T)(parse: String => T): Unit = {
+      val e = intercept[IllegalArgumentException](
+        Bench.positiveKnob(Map(name -> raw), name, default)(parse))
+      assert(e.getMessage.contains(name) && e.getMessage.contains(raw), e.getMessage)
+    }
+    // REPEATS=0 once measured only a hand-kept subset and exited 0
+    rejects("SPARK_GRAFT_REPEATS", "0", 3)(_.toInt)
+    rejects("SPARK_GRAFT_REPEATS", "-2", 3)(_.toInt)
+    rejects("SPARK_GRAFT_REPEATS", "abc", 3)(_.toInt)
+    rejects("SPARK_GRAFT_REPEATS", "2.5", 3)(_.toInt)
+    rejects("SPARK_GRAFT_BUDGET_SECS", "abc", 1500L)(_.toLong)
+    rejects("SPARK_GRAFT_BUDGET_SECS", "0", 1500L)(_.toLong)
+    rejects("SPARK_GRAFT_SETTLE_LOAD1", "abc", 1.0)(_.toDouble)
+    rejects("SPARK_GRAFT_SETTLE_LOAD1", "NaN", 1.0)(_.toDouble)
+    rejects("SPARK_GRAFT_CPUS", "", 32)(_.toInt)
+    rejects("SPARK_GRAFT_CPUS", "four", 32)(_.toInt)
+  }
+
+  test("Bench.scala lint: no hand-kept query-name set, only the ten env knobs") {
+    val path = java.nio.file.Paths.get("src/main/scala/graft/Bench.scala")
+    val text = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+    val knobs = Set("SF_DIR", "CPUS", "REPEATS", "BUDGET_SECS", "SETTLE_LOAD1",
+      "SAMPLES_OUT", "MEDIANS_OUT", "BASELINE", "CONF", "QUERIES").map("SPARK_GRAFT_" + _)
+    val seen = "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(text).toSet
+    assert(seen.contains("SPARK_GRAFT_REPEATS"), s"scan read the wrong file: $path")
+    val offenders =
+      (if (text.contains("Set(\"q_")) Seq("a Set(\"q_…\") literal: noise handling is a rule, not a list")
+       else Nil) ++ (seen -- knobs).toSeq.sorted.map(k => s"$k is not one of the ten bench knobs")
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("PlanDump: every trailing k=v is a conf, in any position; the first other arg is the mode") {
