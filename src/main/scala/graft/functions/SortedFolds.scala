@@ -9,39 +9,6 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.types._
 
-/** Compiled twins of the engine's order-pinned fold discipline.
-  *
-  * Several oracle-exact queries (q_lm_score, q_dsir, q_ccnet_buckets,
-  * q_entropy, q_cond_entropy, q_markov, q_temp_mix, q_decay) pin their
-  * floating-point accumulation ORDER by sorting a collected array and
-  * left-folding it — the only way a shuffled aggregate can stay
-  * bit-identical to a single-threaded oracle recurrence. The original
-  * form, `aggregate(array_sort(collect_list(struct(key, term))), ...)`,
-  * pays twice at the HOF boundary: `array_sort`'s comparator and
-  * `aggregate`'s fold lambda both evaluate INTERPRETED (one Catalyst
-  * tree walk per element / per comparison, `O(n log n)` of them), and
-  * both HOFs are `CodegenFallback`, so the projection they sit in falls
-  * out of whole-stage codegen entirely.
-  *
-  * Each expression here fuses sort + fold into one compiled kernel with
-  * the SAME operation sequence — the comparator replicates Catalyst's
-  * struct natural order (field by field: UTF8String binary order,
-  * integral natural order, `SQLOrderingUtil.compareDoubles`; keys are
-  * per-group-unique in every engine use, so ties never reach the term
-  * field), the fold applies the identical IEEE ops in the identical
-  * order with the same `java.lang.StrictMath` calls Catalyst's
-  * `Log`/`Pow` delegate to (NOT `Math.log`/`Math.pow` — the JIT
-  * intrinsics drift from fdlibm by 1 ulp on real inputs; `Math.pow`
-  * vs Catalyst's `StrictMath.pow` flipped 4 of 51 terms in the first
-  * q_decay twin run), and non-positive `log` arguments return null exactly
-  * like Catalyst's `Log` asymptote rule. Bit-equality with the HOF twin
-  * is pinned (unrounded) in SortedFoldsSpec; codegen ≡ eval in
-  * ExpressionsSpec's discipline.
-  *
-  * Codegen calls back into the compiled kernel through a reference
-  * object — per-ROW boxing only, per-ELEMENT work stays in tight
-  * compiled loops, and whole-stage codegen spans the projection again.
-  */
 /** Shared plumbing for the fold kernels: the codegen call-back template
   * (per-ROW boxed Double, null-propagating) and the null-checked
   * extract+sort prologue for long-array folds. */
@@ -319,6 +286,39 @@ case class DecaySum(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Compiled twins of the engine's order-pinned fold discipline.
+  *
+  * Several oracle-exact queries (q_lm_score, q_dsir, q_ccnet_buckets,
+  * q_entropy, q_cond_entropy, q_markov, q_temp_mix, q_decay) pin their
+  * floating-point accumulation ORDER by sorting a collected array and
+  * left-folding it — the only way a shuffled aggregate can stay
+  * bit-identical to a single-threaded oracle recurrence. The original
+  * form, `aggregate(array_sort(collect_list(struct(key, term))), ...)`,
+  * pays twice at the HOF boundary: `array_sort`'s comparator and
+  * `aggregate`'s fold lambda both evaluate INTERPRETED (one Catalyst
+  * tree walk per element / per comparison, `O(n log n)` of them), and
+  * both HOFs are `CodegenFallback`, so the projection they sit in falls
+  * out of whole-stage codegen entirely.
+  *
+  * Each expression here fuses sort + fold into one compiled kernel with
+  * the SAME operation sequence — the comparator replicates Catalyst's
+  * struct natural order (field by field: UTF8String binary order,
+  * integral natural order, `SQLOrderingUtil.compareDoubles`; keys are
+  * per-group-unique in every engine use, so ties never reach the term
+  * field), the fold applies the identical IEEE ops in the identical
+  * order with the same `java.lang.StrictMath` calls Catalyst's
+  * `Log`/`Pow` delegate to (NOT `Math.log`/`Math.pow` — the JIT
+  * intrinsics drift from fdlibm by 1 ulp on real inputs; `Math.pow`
+  * vs Catalyst's `StrictMath.pow` flipped 4 of 51 terms in the first
+  * q_decay twin run), and non-positive `log` arguments return null exactly
+  * like Catalyst's `Log` asymptote rule. Bit-equality with the HOF twin
+  * is pinned (unrounded) in SortedFoldsSpec; codegen ≡ eval in
+  * ExpressionsSpec's discipline.
+  *
+  * Codegen calls back into the compiled kernel through a reference
+  * object — per-ROW boxing only, per-ELEMENT work stays in tight
+  * compiled loops, and whole-stage codegen spans the projection again.
+  */
 object SortedFolds {
   /** `Σ term` over the natural struct sort of `collect_list(struct(key…, term))`. */
   def sortedTermSum(arr: Column): Column =

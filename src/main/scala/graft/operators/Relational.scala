@@ -65,12 +65,10 @@ object Relational {
     * Reference analog: box-coordinate scaling `main.py:112-118` and the
     * threshold flag `main.py:232-233`.
     *
-    * The production shape is the unsorted projection (narrow, no exchange);
-    * `scanProject` adds a total ORDER BY purely for oracle determinism. The
-    * bench measures `scanProjectCore` — at 100 TB a full range-shuffle of
-    * the unaggregated table exists only in the verify path, never the
-    * production plan. */
-  def scanProjectCore(spark: SparkSession, dir: String): DataFrame =
+    * The production shape is the projection (narrow, no exchange); the
+    * total ORDER BY exists purely for oracle determinism, and the bench
+    * form drops it (`SparkEntry.benchShapes`). */
+  def scanProject(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
       .select(
         col("l_orderkey"), col("l_linenumber"),
@@ -78,9 +76,6 @@ object Relational {
           .cast("double").as("net_price"),
         (col("l_quantity") > 25).cast("int").cast("long").as("bulk"),
         when(col("l_returnflag") === "R", lit("returned")).otherwise(lit("kept")).as("status"))
-
-  def scanProject(spark: SparkSession, dir: String): DataFrame =
-    scanProjectCore(spark, dir)
       .orderBy("l_orderkey", "l_linenumber", "net_price", "bulk", "status")
 
   /** E-FILT: conjunctive predicates — BETWEEN, IN, timestamp compare.
@@ -375,7 +370,7 @@ object Relational {
     * only (the key/value arrays go through array_join): the driver's
     * pandas-based comparator cannot sort ARRAY-typed cells, so array
     * outputs error in the harness even when values agree. */
-  def mapFunctionsCore(spark: SparkSession, dir: String): DataFrame =
+  def mapFunctions(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .select(col("event_id"),
         from_json(col("props"), org.apache.spark.sql.types.MapType(
@@ -391,15 +386,10 @@ object Relational {
         expr("try_element_at(m, 'k')").cast("long").as("k_val"),
         size(map_concat(col("m"), map(lit("extra"), lit(1)))).cast("long").as("n_concat"))
       .filter(col("k_val").isNotNull)
-
-  /** Sorted form for the oracle compare; the bench measures the core. */
-  def mapFunctions(spark: SparkSession, dir: String): DataFrame =
-    mapFunctionsCore(spark, dir).orderBy("event_id")
+      .orderBy("event_id")
 
   /** E-MATH: sqrt/exp/ln/pow/abs/round — the scalar pieces of softmax and
     * L2-normalize (`main.py:78-79`), checked on relational columns.
-    * Core/sorted split mirrors scanProject: the bench measures the
-    * sort-free production projection.
     *
     * Accepted knife-edge (r11 review adjudication): exp/ln are not
     * IEEE-correctly-rounded, so JVM libm and DuckDB's std::exp may
@@ -412,7 +402,7 @@ object Relational {
     * of exp/ln to swap in — if this ever flips, re-adjudicate to a
     * rows-only check rather than chasing libm. sqrt and the integer pow
     * ARE correctly rounded and carry no such risk. */
-  def mathScalarsCore(spark: SparkSession, dir: String): DataFrame =
+  def mathScalars(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
       .select(
         col("l_orderkey"), col("l_linenumber"),
@@ -421,34 +411,12 @@ object Relational {
         round(log(col("l_extendedprice")), 4).as("ln_price"),
         round(pow(col("l_quantity"), 2), 2).as("qty_sq"),
         abs(round(col("l_tax") - col("l_discount"), 4)).as("abs_diff"))
-
-  def mathScalars(spark: SparkSession, dir: String): DataFrame =
-    mathScalarsCore(spark, dir)
       .orderBy("l_orderkey", "l_linenumber", "sqrt_price", "exp_disc", "ln_price",
         "qty_sq", "abs_diff")
-
-  /** E-MAP/JSON bench shape: one `from_json` parse of `props` per row,
-    * then the same bucketed aggregate as [[jsonExtract]]. The oracle shape
-    * below parses TWICE on purpose (schema'd `from_json` vs JSONPath
-    * `get_json_object` must agree — that's the E-MAP/JSON twin claim), but
-    * doubling the parse is an oracle concern, not a cost a production
-    * query pays; the bench measures the single-parse plan (pattern of
-    * scanProjectCore / mathScalarsCore). */
-  /** Bench shape of [[jsonExtract]] — the FULL computation including the
-    * JSONPath twin column; only the 10-row output sort is skipped.
-    * (Pre-r10 this core had drifted to an older, narrower form without
-    * `n_mismatch` — the bench was silently measuring one JSON parse per
-    * row instead of two. QueriesSpec now pins every core ≡ its oracle
-    * form, so the drift class is closed.) */
-  def jsonExtractCore(spark: SparkSession, dir: String): DataFrame =
-    jsonExtractUnsorted(spark, dir).sortWithinPartitions("k_bucket")
 
   /** E-MAP/JSON: extract typed field from the `props` JSON payload
     * (`events.props`, FIXTURES.md) and aggregate on it. */
   def jsonExtract(spark: SparkSession, dir: String): DataFrame =
-    jsonExtractUnsorted(spark, dir).orderBy("k_bucket")
-
-  private def jsonExtractUnsorted(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .select(col("event_id"),
         from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT"))
@@ -460,6 +428,7 @@ object Relational {
       .groupBy((col("k") % 10).as("k_bucket"))
       .agg(count(lit(1)).as("n"), sum("k").as("sum_k"),
         sum(when(col("k2") === col("k"), 0L).otherwise(1L)).as("n_mismatch"))
+      .orderBy("k_bucket")
 
   /** Flagship (SURVEY §7.3) — "when is an area crowded?" on events:
     * tumbling 1-day window count per user above the reference's crowd
@@ -555,32 +524,25 @@ object Relational {
   }
 
   /** q_latch_replay: the ARRIVAL-ORDER batch twin of the streaming alarm
-    * latch (AlarmLatch / AlarmLatchV2, `main.py:171-185`) — q_win_edge
+    * latch (AlarmLatch, `main.py:171-185`) — q_win_edge
     * answers "where does fire rise in EVENT-time order", this answers
     * what the latch actually EMITS when the feed is out of order: signals
     * replay one-per-micro-batch in the q_watermark deterministic arrival
     * permutation, and the latch fires on each F→T edge in that order
-    * (the latch keys no watermark — TimeMode.None — so arrival order is
+    * (the latch keys no watermark and no timeout, so arrival order is
     * the only thing that matters). ReplayTwinsSpec pins this formulation
-    * against a real AlarmLatchV2 run on the same replay.
+    * against a real AlarmLatch run on the same replay.
     *
     * Scale shape: one lag window PARTITIONED by the latch key — state per
     * key like the streaming original, never a global sort. */
   def latchReplay(spark: SparkSession, dir: String): DataFrame =
-    latchReplayUnsorted(spark, dir).orderBy("user_id", "event_id")
-
-  /** Bench shape: edge-cardinality output (every F→T rising edge — the
-    * largest of the replay-twin outputs), global sort oracle-only. */
-  def latchReplayCore(spark: SparkSession, dir: String): DataFrame =
-    latchReplayUnsorted(spark, dir).sortWithinPartitions("user_id", "event_id")
-
-  private def latchReplayUnsorted(spark: SparkSession, dir: String): DataFrame =
     latchReplayOn(Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),
         (col("value") > 150).as("fire"),
         unix_timestamp(col("ts")).as("sec"))
       .withColumn("arr", replayArrival(col("sec"), col("event_id"))))
       .select("user_id", "event_id", "arr")
+      .orderBy("user_id", "event_id")
 
   /** Core of [[latchReplay]] on a prepared (user_id, event_id, arr, fire)
     * frame — separated so ReplayTwinsSpec can drive the SAME formulation
@@ -614,20 +576,13 @@ object Relational {
     * (unpartitioned window only over the arrival-day block frame); both
     * per-user windows are user-partitioned; the final watermark is a
     * one-row broadcast. */
-  def sessionReplay(spark: SparkSession, dir: String): DataFrame =
-    sessionReplayUnsorted(spark, dir).orderBy("user_id", "session_start_sec")
-
-  /** Bench shape: session-cardinality output, global sort oracle-only. */
-  def sessionReplayCore(spark: SparkSession, dir: String): DataFrame =
-    sessionReplayUnsorted(spark, dir)
-      .sortWithinPartitions("user_id", "session_start_sec")
-
-  private def sessionReplayUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def sessionReplay(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),
         unix_timestamp(col("ts")).as("sec"))
       .withColumn("arr", replayArrival(col("sec"), col("event_id")))
     sessionReplayOn(ev, delaySec = 600L, gapSec = 1800L)
+      .orderBy("user_id", "session_start_sec")
   }
 
   /** Core of [[sessionReplay]] on a prepared (event_id, user_id, sec, arr)
@@ -690,19 +645,12 @@ object Relational {
     * and in the oracle; the pack is exact while event_id < 10⁷ — beyond
     * that (real 100 TB feeds) swap the packed max for `max_by(struct)`,
     * which trades oracle parity for unbounded ids. */
-  def attrReplay(spark: SparkSession, dir: String): DataFrame =
-    attrReplayUnsorted(spark, dir).orderBy("purchase_id")
-
-  /** Bench shape: purchase-sized output, global sort oracle-only. */
-  def attrReplayCore(spark: SparkSession, dir: String): DataFrame =
-    attrReplayUnsorted(spark, dir).sortWithinPartitions("purchase_id")
-
-  private def attrReplayUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def attrReplay(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"))
       .withColumn("arr", replayArrival(col("sec"), col("event_id")))
-    attrReplayOn(ev, ttlSec = 28800L)
+    attrReplayOn(ev, ttlSec = 28800L).orderBy("purchase_id")
   }
 
   /** Core of [[attrReplay]] on a prepared (event_id, user_id, event_type,
@@ -756,19 +704,12 @@ object Relational {
     * Scale shape: both windows are user-partitioned with the same
     * (arr, event_id) order — one exchange, state per key like the
     * streaming original; no global sort, no unpartitioned window. */
-  def funnelReplay(spark: SparkSession, dir: String): DataFrame =
-    funnelReplayUnsorted(spark, dir).orderBy("user_id")
-
-  /** Bench shape: user-cardinality output, global sort oracle-only. */
-  def funnelReplayCore(spark: SparkSession, dir: String): DataFrame =
-    funnelReplayUnsorted(spark, dir).sortWithinPartitions("user_id")
-
-  private def funnelReplayUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def funnelReplay(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"))
       .withColumn("arr", replayArrival(col("sec"), col("event_id")))
-    funnelReplayOn(ev)
+    funnelReplayOn(ev).orderBy("user_id")
   }
 
   /** Core of [[funnelReplay]] on a prepared (event_id, user_id,
@@ -840,22 +781,14 @@ object Relational {
     * range and watermark tests as residual predicates; the final
     * watermark is a one-row broadcast. No per-user or global fact-sized
     * window at all. */
-  def joinOuterReplay(spark: SparkSession, dir: String): DataFrame =
-    joinOuterReplayUnsorted(spark, dir)
-      .orderBy(col("purchase_id"), col("click_id").asc_nulls_first)
-
-  /** Bench shape: pair-cardinality output, global sort oracle-only. */
-  def joinOuterReplayCore(spark: SparkSession, dir: String): DataFrame =
-    joinOuterReplayUnsorted(spark, dir)
-      .sortWithinPartitions(col("purchase_id"), col("click_id").asc_nulls_first)
-
-  private def joinOuterReplayUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def joinOuterReplay(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"))
       .withColumn("arr", replayArrival(col("sec"), col("event_id")))
     joinOuterReplayOn(ev, delaySec = 7200L, windowSec = 3600L)
+      .orderBy(col("purchase_id"), col("click_id").asc_nulls_first)
   }
 
   /** Core of [[joinOuterReplay]] on a prepared (event_id, user_id,
@@ -1192,7 +1125,7 @@ object Relational {
     * WholeStageCodegen as the scan — PLANS.md shows a 3-node, zero-
     * exchange plan); the trailing total sort exists only for oracle
     * determinism and is dropped in the bench shape. */
-  def unpivotCore(spark: SparkSession, dir: String): DataFrame =
+  def unpivotQuery(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_discount", "l_tax")
@@ -1200,11 +1133,9 @@ object Relational {
         Array(col("l_orderkey"), col("l_linenumber")),
         Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax")),
         "measure", "value")
-
-  def unpivotQuery(spark: SparkSession, dir: String): DataFrame =
-    // (l_orderkey, l_linenumber) is NOT unique in the fixture: the total
-    // order must include every output column
-    unpivotCore(spark, dir).orderBy("l_orderkey", "l_linenumber", "measure", "value")
+      // (l_orderkey, l_linenumber) is NOT unique in the fixture: the total
+      // order must include every output column
+      .orderBy("l_orderkey", "l_linenumber", "measure", "value")
 
   /** Data-profiling histogram: fixed-width value buckets of order totals —
     * the distribution pass every ingest/training pipeline runs before
@@ -1906,18 +1837,7 @@ object Relational {
     * MULTISET of output rows is invariant (the +1s land on
     * indistinguishable rows), so the sorted oracle compare is
     * deterministic. */
-  /** Bench shape of [[allocation]]: the output is lineitem-sized, so the
-    * trailing global ORDER BY exists only for the oracle compare — the
-    * production form keeps per-partition order (the scd2Core pattern). */
-  def allocationCore(spark: SparkSession, dir: String): DataFrame =
-    allocationUnsorted(spark, dir)
-      .sortWithinPartitions("l_orderkey", "l_linenumber", "qty", "alloc_c")
-
-  def allocation(spark: SparkSession, dir: String): DataFrame =
-    allocationUnsorted(spark, dir)
-      .orderBy("l_orderkey", "l_linenumber", "qty", "alloc_c")
-
-  private def allocationUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def allocation(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_linenumber"),
         floor(col("l_quantity")).cast("long").as("qty"))
@@ -1936,6 +1856,7 @@ object Relational {
       .select(col("l_orderkey"), col("l_linenumber"), col("qty"),
         (col("base") + when(col("rk") <= col("n_extra"), 1L).otherwise(0L))
           .as("alloc_c"))
+      .orderBy("l_orderkey", "l_linenumber", "qty", "alloc_c")
   }
 
   /** Chi-square independence test: is event type independent of
@@ -2288,22 +2209,6 @@ object Relational {
       .orderBy("src", "dst")
   }
 
-  /** q_markov: steady-state distribution of the event-type Markov chain
-    * — five synchronous power-iteration steps π ← πP from the uniform
-    * start, over the transition matrix [[transitions]] estimates. Where
-    * q_transitions reports single-step behavior, the (near-)stationary π
-    * says where the process SPENDS its time — the load-mix forecast
-    * behind capacity planning. Each step's per-state sum folds over the
-    * source-SORTED term list (q_entropy's discipline: a 5-term double
-    * sum in fixed order on both engines); every term is (π·n)/tot with
-    * n, tot exact integers, so iteration k is bit-identical to the
-    * oracle's chained CTE k.
-    *
-    * Scale shape: the fact collapses once into the |types|² transition
-    * counts; all five iterations live on that dimension frame
-    * (broadcast joins, ≤|types| rows of state). The iteration count is
-    * fixed and tiny, so no checkpoint discipline is needed — the whole
-    * loop is one linear plan over 25-row frames. */
   /** Consecutive event-type pair counts per user — the SHARED estimation
     * stage of [[transitions]] (single-step probabilities) and
     * [[markovStationary]] (power iteration): one definition so an edit
@@ -2320,6 +2225,22 @@ object Relational {
       .agg(count(lit(1)).as("n"))
   }
 
+  /** q_markov: steady-state distribution of the event-type Markov chain
+    * — five synchronous power-iteration steps π ← πP from the uniform
+    * start, over the transition matrix [[transitions]] estimates. Where
+    * q_transitions reports single-step behavior, the (near-)stationary π
+    * says where the process SPENDS its time — the load-mix forecast
+    * behind capacity planning. Each step's per-state sum folds over the
+    * source-SORTED term list (q_entropy's discipline: a 5-term double
+    * sum in fixed order on both engines); every term is (π·n)/tot with
+    * n, tot exact integers, so iteration k is bit-identical to the
+    * oracle's chained CTE k.
+    *
+    * Scale shape: the fact collapses once into the |types|² transition
+    * counts; all five iterations live on that dimension frame
+    * (broadcast joins, ≤|types| rows of state). The iteration count is
+    * fixed and tiny, so no checkpoint discipline is needed — the whole
+    * loop is one linear plan over 25-row frames. */
   def markovStationary(spark: SparkSession, dir: String): DataFrame = {
     val pairs = transitionPairs(spark, dir)
       // freeze the |types|²-row transition counts: totals, the
@@ -2432,13 +2353,6 @@ object Relational {
     // the total order needs all four columns
     scd2Unsorted(spark, dir)
       .orderBy("user_id", "valid_from", "event_type", "valid_to")
-
-  /** Bench shape of [[scd2]]: history rows are run-cardinality (fact-
-    * sized), so the trailing global sort is verify-only; the production
-    * shape keeps rows clustered by the user_id partitioning the windows
-    * already established. */
-  def scd2Core(spark: SparkSession, dir: String): DataFrame =
-    scd2Unsorted(spark, dir).sortWithinPartitions("user_id", "valid_from")
 
   private def scd2Unsorted(spark: SparkSession, dir: String): DataFrame = {
     val byEvent = Window.partitionBy("user_id").orderBy("ts", "event_id")

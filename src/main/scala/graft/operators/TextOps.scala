@@ -66,15 +66,7 @@ object TextOps {
     * whole-stage-codegen'd, no shuffle, no UDF; the scan prunes to
     * (doc_id, text). The word-boundary alternation is RE2-safe, so the
     * identical pattern runs on the oracle side. */
-  def scrub(spark: SparkSession, dir: String): DataFrame =
-    scrubUnsorted(spark, dir).orderBy("doc_id")
-
-  /** Bench shape: document-sized output — the global sort exists only
-    * for the oracle compare (the q_alloc precedent). */
-  def scrubCore(spark: SparkSession, dir: String): DataFrame =
-    scrubUnsorted(spark, dir).sortWithinPartitions("doc_id")
-
-  private def scrubUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def scrub(spark: SparkSession, dir: String): DataFrame = {
     val pat = "\\b(customer|key)\\b"
     Tables.documents(spark, dir)
       .select(
@@ -83,6 +75,7 @@ object TextOps {
           .cast("long").as("n_hits"),
         md5(encode(regexp_replace(col("text"), pat, "[REDACTED]"), "UTF-8"))
           .as("redacted_md5"))
+      .orderBy("doc_id")
   }
 
   /** q_chunk_overlap: the RAG/embedding chunker — sliding token windows
@@ -98,14 +91,7 @@ object TextOps {
     * `transform` over the start sequence) and exploded once — no window,
     * no join, no self-join on doc_id; the explode's fan-out is the
     * chunk count (≈ 2·tokens/32 per doc), partial work stays map-side. */
-  def chunkOverlap(spark: SparkSession, dir: String): DataFrame =
-    chunkOverlapUnsorted(spark, dir).orderBy("doc_id", "chunk_idx")
-
-  /** Bench shape: chunk-table-sized output, global sort oracle-only. */
-  def chunkOverlapCore(spark: SparkSession, dir: String): DataFrame =
-    chunkOverlapUnsorted(spark, dir).sortWithinPartitions("doc_id", "chunk_idx")
-
-  private def chunkOverlapUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def chunkOverlap(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .withColumn("n", size(col("t")).cast("long"))
@@ -123,6 +109,7 @@ object TextOps {
         md5(encode(array_join(
           slice(col("t"), col("c.start_tok").cast("int"), col("c.n_tok").cast("int")),
           " "), "UTF-8")).as("chunk_md5"))
+      .orderBy("doc_id", "chunk_idx")
   }
 
   /** q_gopher_rules: Gopher/MassiveText-STYLE per-document repetition
@@ -149,14 +136,7 @@ object TextOps {
     * codes map-side before the one exchange (the q_repetition idiom —
     * 64-bit collisions are the accepted sketch bound). Both frames are
     * doc-cardinality at the join. */
-  def gopherRules(spark: SparkSession, dir: String): DataFrame =
-    gopherRulesUnsorted(spark, dir).orderBy("doc_id")
-
-  /** Bench shape: document-sized output, global sort oracle-only. */
-  def gopherRulesCore(spark: SparkSession, dir: String): DataFrame =
-    gopherRulesUnsorted(spark, dir).sortWithinPartitions("doc_id")
-
-  private def gopherRulesUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def gopherRules(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), length(col("text")).cast("long").as("len"),
         split(col("text"), " ").as("t"))
@@ -192,11 +172,9 @@ object TextOps {
         (col("n_tok") >= 20 &&
           col("top2_cnt") * 10000L < d1 * 800L &&
           col("dup3_cnt") * 10000L < d3 * 200L).as("keep"))
+      .orderBy("doc_id")
   }
 
-  /** Language-ID heuristic: marker-stopword hit counts per language,
-    * argmax with deterministic preference order (mandate: n-gram-style
-    * langid; markers stand in for the n-gram tables). */
   /** (doc_id, lang, pred_lang) — the marker-token heuristic shared by
     * [[langId]] (the per-doc report) and [[evalMetrics]] (the
     * per-class quality scorecard over the same predictions). */
@@ -220,23 +198,15 @@ object TextOps {
       .select(col("doc_id"), col("lang"), col("pred_lang"))
   }
 
+  /** Language-ID heuristic: marker-stopword hit counts per language,
+    * argmax with deterministic preference order (mandate: n-gram-style
+    * langid; markers stand in for the n-gram tables). */
   def langId(spark: SparkSession, dir: String): DataFrame =
     langPredictions(spark, dir)
       .select(col("doc_id"), col("pred_lang"),
         (col("pred_lang") === col("lang")).as("is_match"))
       .orderBy("doc_id")
 
-  /** q_eval_metrics: the per-class classifier scorecard — precision,
-    * recall, F1 of [[langPredictions]] against the labeled lang column,
-    * the evaluation verb between "model runs" (q_langid) and "ship it".
-    * F1 uses the integer identity 2·TP/(actual+predicted) — harmonic
-    * mean without ever forming the two double ratios, so the only
-    * doubles are the three final single divisions.
-    *
-    * Scale shape: one pass collapses predictions to the |classes|²
-    * confusion matrix; everything else lives on ≤|classes| rows. The
-    * class axis comes from the LABELED side, so a class the model never
-    * predicts still reports (recall 0, precision 0-guarded). */
   /** |classes|² confusion matrix of [[langPredictions]] plus its two
     * marginal frames — the SHARED evaluation stage of [[evalMetrics]]
     * and [[cohenKappa]]: one definition so an edit to the matrix
@@ -252,6 +222,17 @@ object TextOps {
     (conf, act, prd)
   }
 
+  /** q_eval_metrics: the per-class classifier scorecard — precision,
+    * recall, F1 of [[langPredictions]] against the labeled lang column,
+    * the evaluation verb between "model runs" (q_langid) and "ship it".
+    * F1 uses the integer identity 2·TP/(actual+predicted) — harmonic
+    * mean without ever forming the two double ratios, so the only
+    * doubles are the three final single divisions.
+    *
+    * Scale shape: one pass collapses predictions to the |classes|²
+    * confusion matrix; everything else lives on ≤|classes| rows. The
+    * class axis comes from the LABELED side, so a class the model never
+    * predicts still reports (recall 0, precision 0-guarded). */
   def evalMetrics(spark: SparkSession, dir: String): DataFrame = {
     val (conf, act, prd) = confusion(spark, dir)
     val tp = conf.filter(col("lang") === col("pred_lang"))
@@ -482,12 +463,6 @@ object TextOps {
     (0 until 16).map(i => (i, 1000003L + 7919L * i, 42L + 1009L * i))
   private[graft] val MinhashPrime = 2147483647L
 
-  /** E-DEDUP scale path: MinHash+LSH candidate pairs — word-bigram
-    * shingles, 16-hash signature, 2 bands × 8 rows, pairs bucketed by
-    * identical band key. Shingles (not unigrams): the fixture vocabulary is
-    * ~30 words, so unigram token sets collide for most long docs; bigram
-    * sets are discriminative. At 100 TB the signature is one narrow agg per
-    * doc and candidates meet via band-key equi-join (no all-pairs shuffle). */
   /** Word-bigram shingle codes of a text column — zip_with of the two
     * shifted slices, NOT element_at(tokArr, i+2) in a transform lambda: a
     * non-foldable outer reference inside a HOF lambda is re-evaluated per
@@ -565,6 +540,12 @@ object TextOps {
       .distinct()
   }
 
+  /** E-DEDUP scale path: MinHash+LSH candidate pairs — word-bigram
+    * shingles, 16-hash signature, 2 bands × 8 rows, pairs bucketed by
+    * identical band key. Shingles (not unigrams): the fixture vocabulary is
+    * ~30 words, so unigram token sets collide for most long docs; bigram
+    * sets are discriminative. At 100 TB the signature is one narrow agg per
+    * doc and candidates meet via band-key equi-join (no all-pairs shuffle). */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
     minhashPairs(spark, dir).orderBy("d1", "d2")
 
@@ -1189,16 +1170,6 @@ object TextOps {
     val pairs = minhashPairs(spark, dir)
     val nodes = Tables.documents(spark, dir).select("doc_id")
     pageRankOnGraph(nodes, pairs).orderBy(desc("pr"), col("doc_id"))
-  }
-
-  /** Bench shape of [[pageRank]]: ranks are doc-cardinality, so the
-    * global rank sort is verify-only — the production shape sorts within
-    * partitions (top-rank extraction at scale is a TakeOrdered, not a
-    * range-shuffle of all ranks). */
-  def pageRankCore(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashPairs(spark, dir)
-    val nodes = Tables.documents(spark, dir).select("doc_id")
-    pageRankOnGraph(nodes, pairs).sortWithinPartitions(desc("pr"), col("doc_id"))
   }
 
   /** The power-iteration loop behind [[pageRank]], separated (same reason
@@ -1916,14 +1887,7 @@ object TextOps {
     * row_number, so the only unpartitioned window is the bucket-offset
     * frame: vt_max/4096 ≈ 60·|docs| / (|sources|·4096) rows, ~0.07% of
     * the corpus (~730k rows at 10⁹ docs), never |docs| itself. */
-  def interleave(spark: SparkSession, dir: String): DataFrame =
-    interleaveUnsorted(spark, dir).orderBy("pos")
-
-  /** Bench shape: doc-cardinality output, global sort oracle-only. */
-  def interleaveCore(spark: SparkSession, dir: String): DataFrame =
-    interleaveUnsorted(spark, dir).sortWithinPartitions("pos")
-
-  private def interleaveUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def interleave(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
@@ -1952,6 +1916,7 @@ object TextOps {
       .withColumn("pos", (col("off") + row_number().over(wIn)).cast("long"))
       .select(col("doc_id"), col("source"), col("w"),
         col("rank_in_source"), col("vt"), col("pos"))
+      .orderBy("pos")
   }
 
   /** Training-sequence packing (the concat-and-chunk recipe): per source,
@@ -2488,20 +2453,10 @@ object TextOps {
     dupSpansOver(Tables.documents(spark, dir))
 
   private[graft] def dupSpansOver(docs: DataFrame): DataFrame =
-    dupSpansUnsorted(docs).orderBy("doc_id", "span_start")
-
-  private def dupSpansUnsorted(docs: DataFrame): DataFrame =
     islandSpans(dupGramHitsOver(docs))
       .select(col("doc_id"), col("span_start"), col("span_end"),
         (col("span_end") - col("span_start") + 1L).as("span_tokens"))
-
-  /** Bench shape of q_dup_spans: the trailing global sort exists only
-    * for the oracle compare (corpus-proportional output) — the
-    * production form keeps partition-local order (the scrubCore
-    * policy). */
-  def dupSpansCore(spark: SparkSession, dir: String): DataFrame =
-    dupSpansUnsorted(Tables.documents(spark, dir))
-      .sortWithinPartitions("doc_id", "span_start")
+      .orderBy("doc_id", "span_start")
 
   /** Gaps-and-islands merge of 6-gram hit positions: (doc_id, j) →
     * (doc_id, span_start, span_end) with span_end = last covered token.
@@ -2542,15 +2497,6 @@ object TextOps {
 
   private[graft] def dupStripOver(docs: DataFrame): DataFrame =
     stripSpans(docs, islandSpans(dupGramHitsOver(docs))).orderBy("doc_id")
-
-  /** Bench shape of q_dup_strip: full-corpus-cardinality output whose
-    * global sort is verify-only — partition-local order suffices for
-    * the production rewrite (the scrubCore policy). */
-  def dupStripCore(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    stripSpans(docs, islandSpans(dupGramHitsOver(docs)))
-      .sortWithinPartitions("doc_id")
-  }
 
   /** Remove the tokens covered by `spans` from `docs` and reassemble the
     * remainder in position order — the shared reconstruction under
@@ -2723,15 +2669,6 @@ object TextOps {
     val indexPath = stripDeltaIndex(spark, dir)
     substringStrip(spark, indexPath,
       Tables.documents(spark, dir).filter(pmod(col("doc_id"), lit(2L)) === 1))
-  }
-
-  /** Bench shape of q_strip_delta: delta-cardinality cleaned output —
-    * the trailing global sort is verify-only (the scrubCore policy). */
-  def stripDeltaCore(spark: SparkSession, dir: String): DataFrame = {
-    val indexPath = stripDeltaIndex(spark, dir)
-    substringStripUnsorted(spark, indexPath,
-      Tables.documents(spark, dir).filter(pmod(col("doc_id"), lit(2L)) === 1))
-      .sortWithinPartitions("doc_id")
   }
 
   /** The even-docs gram index under q_strip_delta, built once per

@@ -112,16 +112,6 @@ object VectorOps {
       .orderBy("anchor_id", "rank")
   }
 
-  /** E-SIM clustering assignment: every embedding labeled with its
-    * nearest of 8 fixed centroids (vec_id < 8 as deterministic seeds) by
-    * squared L2 — the assignment step at the heart of IVF/k-means,
-    * exposed as an ORACLE-CHECKED query (the trained `Ivf` path is
-    * rows-only because KMeans init is engine-internal; this pins the
-    * geometry arithmetic itself). Distances fold left-to-right over the
-    * dimension sequence (`aggregate` ≡ DuckDB `list_sum(list_transform)`,
-    * the q_entropy precedent), so both engines produce bit-identical
-    * doubles and the argmin rank cannot flip. Centroids broadcast; the
-    * scan stays narrow; per-vector argmin is a bounded window. */
   /** Elementwise squared-L2 distance — the native codegen expression
     * [[graft.functions.SqDistance]], bit-identical to the HOF fold it
     * replaced (`aggregate(zip_with(...))` ≡ DuckDB
@@ -164,6 +154,16 @@ object VectorOps {
         col("m.dist2").as("dist2"), col("m.embedding").as("embedding"))
   }
 
+  /** E-SIM clustering assignment: every embedding labeled with its
+    * nearest of 8 fixed centroids (vec_id < 8 as deterministic seeds) by
+    * squared L2 — the assignment step at the heart of IVF/k-means,
+    * exposed as an ORACLE-CHECKED query (the trained `Ivf` path is
+    * rows-only because KMeans init is engine-internal; this pins the
+    * geometry arithmetic itself). Distances fold left-to-right over the
+    * dimension sequence (`aggregate` ≡ DuckDB `list_sum(list_transform)`,
+    * the q_entropy precedent), so both engines produce bit-identical
+    * doubles and the argmin rank cannot flip. Centroids broadcast; the
+    * scan stays narrow; per-vector argmin is a bounded window. */
   def kmeansAssign(spark: SparkSession, dir: String): DataFrame =
     seedAssign(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("cluster"), round(col("dist2"), 4).as("dist2"))
@@ -185,14 +185,7 @@ object VectorOps {
     * quadratic is per-cluster, never corpus-wide — exactly the trade
     * SemDeDup makes to run on web-scale corpora. Cosines fold
     * sequentially (q_entropy precedent) → bit-identical to the oracle. */
-  def semDedup(spark: SparkSession, dir: String): DataFrame =
-    semDedupUnsorted(spark, dir).orderBy("vec_id")
-
-  /** Bench shape: vector-table-sized output, global sort oracle-only. */
-  def semDedupCore(spark: SparkSession, dir: String): DataFrame =
-    semDedupUnsorted(spark, dir).sortWithinPartitions("vec_id")
-
-  private def semDedupUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def semDedup(spark: SparkSession, dir: String): DataFrame = {
     val assigned = seedAssign(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("cluster"), col("embedding"))
       // EAGER, not a lazy persist (r14 verdict task #1 — the 18.3× gate
@@ -218,6 +211,7 @@ object VectorOps {
       .join(dups, Seq("cluster", "vec_id"), "left")
       .select(col("vec_id"), col("cluster"),
         col("dup_of").isNotNull.as("is_dup"), col("dup_of"), col("max_cos"))
+      .orderBy("vec_id")
   }
 
   /** Cross-modal semantic outliers: per label, the 3 vectors furthest
@@ -645,17 +639,10 @@ object VectorOps {
     * hash-checked end to end. Probe-only ([[semDedupAdmissions]]):
     * repeats never mutate the index; the fold path is pinned by
     * IncrementalSemDedupSpec, the q_dedup_admit division of labor. */
-  def semDedupDeltaQuery(spark: SparkSession, dir: String): DataFrame =
-    semDedupDeltaUnsorted(spark, dir).orderBy("vec_id")
-
-  /** Bench shape: delta-cardinality report, global sort verify-only. */
-  def semDedupDeltaCore(spark: SparkSession, dir: String): DataFrame =
-    semDedupDeltaUnsorted(spark, dir).sortWithinPartitions("vec_id")
-
-  private def semDedupDeltaUnsorted(spark: SparkSession, dir: String): DataFrame = {
+  def semDedupDeltaQuery(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val odds = e.filter(pmod(col("vec_id"), lit(2L)) === 1)
-    if (e.filter(pmod(col("vec_id"), lit(2L)) === 0).isEmpty) {
+    val report = if (e.filter(pmod(col("vec_id"), lit(2L)) === 0).isEmpty) {
       // degenerate fixture (no index side — the empty/one-row sweeps):
       // with no evens there is no geometry to freeze, and the query's
       // SQL twin (centroids FROM ... vec_id % 2 = 0) yields ZERO rows —
@@ -669,11 +656,11 @@ object VectorOps {
         TextOps.fixtureStatePath("graft_semdedup_delta", dir, "embeddings"),
         centers, odds)._1
     } else {
-      // the admissions face minus its verify-only global sort (the
-      // callers above add or skip it — the scrubCore policy)
+      // the admissions face minus its global sort (added below)
       val idx = semDedupDeltaIndex(spark, dir)
       semDedupDecide(spark, idx, readSemDedupCenters(spark, idx), odds)._1
     }
+    report.orderBy("vec_id")
   }
 
   /** The even-vectors index under q_semdedup_delta, built once per

@@ -5,14 +5,18 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+/** One stub detection (named fields so the scorer's struct schema matches
+  * `detectionType`). */
+case class Det(x: Int, y: Int, w: Int, h: Int, conf: Double, class_id: Int)
+
 /** The reference's whole dataflow as one composable pipeline (SURVEY §3.1):
   *
-  *   frames (S1) → score UDF (P1/P2) → per-detection confidence filter
+  *   frames (S1) → batched scorer (P1/P2) → per-detection confidence filter
   *   (P6) → person-class gate via the class dim (P7) → row-local NMS (P9)
   *   → person count (P10) → crowd threshold (P11) → label (P19); alerts
   *   feed the AlarmLatch (P13/E-STATE) downstream.
   *
-  * Everything after the score UDF is row-local column algebra: detections
+  * Everything after the scorer is row-local column algebra: detections
   * stay nested per frame row, so the hot path has ZERO shuffles — it
   * scales linearly with frame count and runs unchanged under
   * `readStream` (micro-batch) or batch. This is the engine answer to the
@@ -20,14 +24,10 @@ import org.apache.spark.sql.types._
   * semantics, but planned once and executed data-parallel.
   *
   * The model is pluggable at the `BINARY → ARRAY<STRUCT<...>>` boundary
-  * (SURVEY §7.1): `scoreWith` accepts any scoring function; `scoreStub`
-  * is the deterministic test stand-in (the real YOLO forward pass lives
-  * outside the engine contract).
+  * (SURVEY §7.1): `scoreBatched` accepts any `Array[Byte] => Seq[Det]`
+  * scorer; `scoreHeavy` is the deterministic stand-in (the real YOLO
+  * forward pass lives outside the engine contract).
   */
-/** One stub detection (named fields so the UDF's struct schema matches
-  * `detectionType`). */
-case class Det(x: Int, y: Int, w: Int, h: Int, conf: Double, class_id: Int)
-
 object CrowdPipeline {
 
   /** Frame record schema (SURVEY §1.1 "unbounded frame stream"). */
@@ -42,31 +42,12 @@ object CrowdPipeline {
     StructField("w", IntegerType), StructField("h", IntegerType),
     StructField("conf", DoubleType), StructField("class_id", IntegerType))))
 
-  /** ======= STUB: stands in for the YOLO forward pass (`main.py:94-96`)
-    * Deterministic fake: detection count and geometry derive from byte
-    * sums; class ids cycle 0/1/2 with id 0 ("person") most frequent. */
-  def scoreStub(image: Array[Byte]): Seq[Det] = {
-    if (image == null || image.isEmpty) return Nil
-    val sum = image.foldLeft(0L)((a, b) => a + (b & 0xff))
-    val n = (sum % 9L).toInt
-    (0 until n).map { i =>
-      val seed = sum + i * 131
-      Det((seed % 300).toInt, (seed % 271).toInt,
-        40 + (seed % 5).toInt * 15, 40 + (seed % 7).toInt * 10,
-        0.3 + (seed % 70) / 100.0,           // conf in [0.3, 0.99]
-        if (i % 4 == 0) (i % 3) else 0)      // mostly person (class 0)
-    }
-  }
-  // =======================================================================
-
-  private val scoreStubUdf = udf((image: Array[Byte]) => scoreStub(image))
-
-  /** ======= STUB (the heavier twin of `scoreStub`): stands in for a real
-    * batched forward pass. Non-trivial on purpose — several FNV mixing
+  /** ======= STUB: stands in for a real batched forward pass (the YOLO
+    * call, `main.py:94-96`). Non-trivial on purpose — several FNV mixing
     * rounds over every payload byte — so the benched pipeline measures the
     * scoring boundary at a realistic per-byte cost instead of a near-free
-    * closure; detections then derive from the digest exactly like
-    * `scoreStub` derives them from the byte sum. */
+    * closure. Deterministic: detection count and geometry derive from the
+    * digest; class ids cycle 0/1/2 with id 0 ("person") most frequent. */
   def scoreHeavy(image: Array[Byte]): Seq[Det] = {
     if (image == null || image.isEmpty) return Nil
     var h = -3750763034362895579L // FNV-1a 64 offset basis
@@ -88,20 +69,13 @@ object CrowdPipeline {
   }
   // =======================================================================
 
-  /** Attach detections with the stub model. */
-  def score(frames: DataFrame): DataFrame = scoreWith(frames, scoreStubUdf)
-
-  /** Attach detections with any `BINARY → ARRAY<STRUCT>` scorer. */
-  def scoreWith(frames: DataFrame, scorer: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame =
-    frames.withColumn("dets", scorer(col("image")))
-
   /** P1/P2 batched form: per-partition scoring with explicit batch shape —
     * the inference boundary a real model needs (one forward call per batch,
     * model initialized once per partition = the S3 broadcast-model
-    * pattern, `main.py:26-48` module scope). Output schema is identical to
-    * [[scoreWith]], so everything downstream (`personCounts`) is shared;
-    * CrowdPipelineSpec pins batch-shape invariance (any batchSize ≡ the
-    * row-at-a-time UDF). */
+    * pattern, `main.py:26-48` module scope). Output: the input columns plus
+    * `dets` (`detectionType`), what `personCounts` reads; CrowdPipelineSpec
+    * pins batch-shape invariance (any batchSize ≡ the scorer applied
+    * frame by frame on the driver). */
   def scoreBatched(frames: DataFrame, scorer: Array[Byte] => Seq[Det] = scoreHeavy,
                    batchSize: Int = 64): DataFrame = {
     // passthrough schema: every input column survives (a label or join key
@@ -183,8 +157,7 @@ object CrowdPipeline {
   }
 
   /** Full pipeline: frames → per-frame counts (works batch or streaming). */
-  def apply(frames: DataFrame, personClassId: Int = 0): DataFrame =
-    personCounts(score(frames), personClassId)
+  def apply(frames: DataFrame): DataFrame = personCounts(scoreBatched(frames))
 
   /** The alert stream: crowded frames as (camera_id, ts) fire signals for
     * the AlarmLatch / foreachBatch sink (S7). */

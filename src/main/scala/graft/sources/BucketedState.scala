@@ -73,6 +73,18 @@ final case class BucketedState(path: String, prefix: String, schemaDdl: String,
     } else None
   }
 
+  /** Repartition a delta into THIS state's bucket layout (bucket count
+    * AND columns) before joining it against the table. Without the
+    * alignment, a delta whose upstream aggregation landed at
+    * spark.sql.shuffle.partitions drags the join to that count — the
+    * planner then shuffles the INDEX side to match and disables its
+    * bucketed scan ("Bucketed: false (disabled by query planner)"),
+    * i.e. an index-sized exchange per fold (the r16 ScaleProbe shuffle
+    * meter caught exactly this on the gram-index fold). One extra
+    * delta-sized exchange buys an index-size-flat join. */
+  def aligned(df: DataFrame): DataFrame =
+    df.repartition(nBuckets, bucketCols.map(df.col): _*)
+
   /** Append one delta (creating the external bucketed table on first
     * contact). The caller is responsible for novelty filtering when
     * replay-idempotence is wanted — typically an anti-join whose keys
@@ -89,18 +101,6 @@ final case class BucketedState(path: String, prefix: String, schemaDdl: String,
     * standalone, the same anti-join keeps the bucketed scan (the
     * per-leg no-Exchange plan pins), so one delta-sized eager
     * materialization buys an index-size-flat fold. */
-  /** Repartition a delta into THIS state's bucket layout (bucket count
-    * AND columns) before joining it against the table. Without the
-    * alignment, a delta whose upstream aggregation landed at
-    * spark.sql.shuffle.partitions drags the join to that count — the
-    * planner then shuffles the INDEX side to match and disables its
-    * bucketed scan ("Bucketed: false (disabled by query planner)"),
-    * i.e. an index-sized exchange per fold (the r16 ScaleProbe shuffle
-    * meter caught exactly this on the gram-index fold). One extra
-    * delta-sized exchange buys an index-size-flat join. */
-  def aligned(df: DataFrame): DataFrame =
-    df.repartition(nBuckets, bucketCols.map(df.col): _*)
-
   def append(spark: SparkSession, df: DataFrame): String =
     ensure(spark) match {
       case Some(t) =>

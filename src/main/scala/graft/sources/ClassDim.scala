@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.broadcast
 
 /** S2 — the class-name dimension loader (`coco.names` → positional ids,
   * `main.py:47-48`).
@@ -12,8 +11,8 @@ import org.apache.spark.sql.functions.broadcast
   * (`main.py:211`) silently drops everything. SURVEY §1.3 records the
   * intended semantics as the trimmed match; this loader implements them.
   *
-  * The dim is tiny (80 rows) and always broadcast (SURVEY §1.1: "small dim
-  * DataFrame, always broadcast").
+  * The dim is tiny (80 rows); callers join it as a broadcast side
+  * (SURVEY §1.1: "small dim DataFrame, always broadcast").
   */
 object ClassDim {
 
@@ -27,8 +26,4 @@ object ClassDim {
       .map { case (name, idx) => (idx.toInt, name.trim) }
       .toDF("class_id", "class_name")
   }
-
-  /** The broadcastable join side. */
-  def broadcastDim(spark: SparkSession, path: String): DataFrame =
-    broadcast(load(spark, path))
 }

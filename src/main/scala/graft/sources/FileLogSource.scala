@@ -24,8 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *   - records live at offsets within partitions (`dir/p<N>.log`, one
   *     record per line, offset = line index) — not at file grain, which
-  *     is what separates this from [[StreamSource.fileDrop]]'s
-  *     FileStreamSource semantics;
+  *     is what separates this from Spark's file-grain FileStreamSource;
   *   - [[MicroBatchStream.latestOffset]] reports current per-partition
   *     line counts; the engine persists the consumed range in its
   *     checkpoint offset log; [[MicroBatchStream.planInputPartitions]]

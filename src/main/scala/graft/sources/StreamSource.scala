@@ -10,9 +10,6 @@ import org.apache.spark.sql.types.StructType
   * the SAME downstream pipeline (`DataFrame => DataFrame`, StreamOps), so
   * swapping transport never touches query logic:
   *
-  *   - fileDrop: a drop directory of parquet/json event files — the batch
-  *     backfill twin of the live feed; also how every stream≡batch spec
-  *     drives the pipeline deterministically.
   *   - rateEvents: the built-in `rate` source mapped onto the events
   *     schema — a deterministic synthetic camera for tests and soak
   *     benches, no external broker needed.
@@ -31,18 +28,6 @@ import org.apache.spark.sql.types.StructType
   *     restartable, without the jar.
   */
 object StreamSource {
-
-  /** File-drop directory: each dropped file is one micro-batch of events.
-    * The default `maxFilesPerTrigger=1` keeps replay deterministic in
-    * specs; a backfill over many files should raise it, or a directory of
-    * N files is forced through N micro-batches. */
-  def fileDrop(spark: SparkSession, dir: String, schema: StructType,
-               format: String = "parquet", maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .format(format)
-      .load(dir)
 
   /** Synthetic camera feed: the rate source's (timestamp, value) rows
     * mapped deterministically onto the events shape, tagged with a camera

@@ -17,10 +17,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * EventTimeTimeout) on the processing-time axis, which is what a
   * click-attribution window is in production systems.
   *
-  * Fold logic is IDENTICAL to attributionStream (same (ts, event_id)
-  * in-batch total order, same late-purchase guard); the spec replays the
-  * same sequence through both APIs and the batch twin and asserts equal
-  * outputs, then replays across an expired TTL window and asserts the
+  * Both operators run one fold, [[StreamOps.attributionFold]] (same
+  * (ts, event_id) in-batch total order, same late-purchase guard); the
+  * spec replays the same sequence through both APIs and the batch twin
+  * and asserts equal outputs, then replays across an expired TTL window and asserts the
   * purchase goes uncredited (state evicted, not carried). */
 class AttributionProcessor extends StatefulProcessor[Long, AttrEvent, Attribution] {
 
@@ -39,26 +39,9 @@ class AttributionProcessor extends StatefulProcessor[Long, AttrEvent, Attributio
   override def handleInputRows(uid: Long, rows: Iterator[AttrEvent],
                                timerValues: TimerValues): Iterator[Attribution] = {
     // expired TTL ⇒ get() returns null ⇒ same as never-seen
-    var lc = Option(last.get()).getOrElse(LastClick(-1L, Long.MinValue))
-    val out = Seq.newBuilder[Attribution]
-    for (r <- rows.toSeq.sortBy(r => (r.ts.getTime, r.event_id))) {
-      val t = r.ts.getTime
-      r.event_type match {
-        case "click"
-            if t > lc.click_ms
-              || (t == lc.click_ms && r.event_id > lc.click_id) =>
-          lc = LastClick(r.event_id, t)
-        case "purchase"
-            if lc.click_id >= 0
-              && (lc.click_ms < t
-                || (lc.click_ms == t && lc.click_id < r.event_id)) =>
-          out += Attribution(uid, r.event_id, lc.click_id,
-            t / 1000L - lc.click_ms / 1000L)
-        case _ => ()
-      }
-    }
+    val (lc, out) = StreamOps.attributionFold(uid, rows, Option(last.get()))
     last.update(lc)
-    out.result().iterator
+    out.iterator
   }
 }
 

@@ -369,31 +369,41 @@ object StreamOps {
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
         (uid: Long, rows: Iterator[AttrEvent],
          state: org.apache.spark.sql.streaming.GroupState[LastClick]) =>
-          var last = state.getOption.getOrElse(LastClick(-1L, Long.MinValue))
-          val out = Seq.newBuilder[Attribution]
-          for (r <- rows.toSeq.sortBy(r => (r.ts.getTime, r.event_id))) {
-            val t = r.ts.getTime
-            r.event_type match {
-              case "click"
-                  if t > last.click_ms
-                    || (t == last.click_ms && r.event_id > last.click_id) =>
-                last = LastClick(r.event_id, t)
-              case "purchase"
-                  if last.click_id >= 0
-                    && (last.click_ms < t
-                      || (last.click_ms == t && last.click_id < r.event_id)) =>
-                // floor-second latency, matching the batch twin's
-                // unix_timestamp difference; the (ts, event_id) guard
-                // keeps a late purchase from crediting a click whose
-                // event time is after it (cross-batch arrival order)
-                out += Attribution(uid, r.event_id, last.click_id,
-                  t / 1000L - last.click_ms / 1000L)
-              case _ => ()
-            }
-          }
+          val (last, out) = attributionFold(uid, rows, state.getOption)
           state.update(last)
-          out.result().iterator
+          out.iterator
       }
+  }
+
+  /** One user's last-touch fold, shared by [[attributionStream]] and
+    * [[AttributionV2]]: rows replay in (ts, event_id) order from the
+    * stored click (`None` = never seen, or expired); returns the new
+    * state and the credited purchases. */
+  private[streaming] def attributionFold(uid: Long, rows: Iterator[AttrEvent],
+      stored: Option[LastClick]): (LastClick, Seq[Attribution]) = {
+    var last = stored.getOrElse(LastClick(-1L, Long.MinValue))
+    val out = Seq.newBuilder[Attribution]
+    for (r <- rows.toSeq.sortBy(r => (r.ts.getTime, r.event_id))) {
+      val t = r.ts.getTime
+      r.event_type match {
+        case "click"
+            if t > last.click_ms
+              || (t == last.click_ms && r.event_id > last.click_id) =>
+          last = LastClick(r.event_id, t)
+        case "purchase"
+            if last.click_id >= 0
+              && (last.click_ms < t
+                || (last.click_ms == t && last.click_id < r.event_id)) =>
+          // floor-second latency, matching the batch twin's
+          // unix_timestamp difference; the (ts, event_id) guard
+          // keeps a late purchase from crediting a click whose
+          // event time is after it (cross-batch arrival order)
+          out += Attribution(uid, r.event_id, last.click_id,
+            t / 1000L - last.click_ms / 1000L)
+        case _ => ()
+      }
+    }
+    (last, out.result())
   }
 
   /** S5 streaming face: micro-batched stream → relational store, the
@@ -417,17 +427,6 @@ object StreamOps {
       }
       .start()
 
-  /** Keyed-correction sink into a partitioned lake table: each micro-batch
-    * MERGEs (`Writers.mergeUpsert`) instead of appending, so a late row
-    * re-stating a key SUPERSEDES the stored row — the streaming face of
-    * the upsert verb (q_merge), and the lake-side twin of [[jdbcSink]].
-    * Only partition directories containing a batch's keys are rewritten.
-    * Replay safety: merging the same batch twice is a fixpoint (second
-    * merge replaces rows with identical content), so post-crash
-    * re-delivery cannot duplicate. Contract: at most one row per key per
-    * micro-batch (dedupe upstream — `dropDuplicatesWithinWatermark` —
-    * otherwise which duplicate wins is arbitrary); the partition value is
-    * part of row identity, as in `Writers.mergeUpsert`. */
   /** Streaming face of the incremental dedup loop (r11 verdict task #6):
     * a stream of (doc_id, text) crawl deltas drives
     * [[graft.operators.TextOps.dedupIncrement]]'s probe→fold cycle per
@@ -674,6 +673,17 @@ object StreamOps {
       .write.mode("overwrite").parquet(dir.getPath) // _SUCCESS = commit
   }
 
+  /** Keyed-correction sink into a partitioned lake table: each micro-batch
+    * MERGEs (`Writers.mergeUpsert`) instead of appending, so a late row
+    * re-stating a key SUPERSEDES the stored row — the streaming face of
+    * the upsert verb (q_merge), and the lake-side twin of [[jdbcSink]].
+    * Only partition directories containing a batch's keys are rewritten.
+    * Replay safety: merging the same batch twice is a fixpoint (second
+    * merge replaces rows with identical content), so post-crash
+    * re-delivery cannot duplicate. Contract: at most one row per key per
+    * micro-batch (dedupe upstream — `dropDuplicatesWithinWatermark` —
+    * otherwise which duplicate wins is arbitrary); the partition value is
+    * part of row identity, as in `Writers.mergeUpsert`. */
   def upsertSink(stream: DataFrame, path: String, key: String,
                  partitionCols: Seq[String], checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream

@@ -54,30 +54,6 @@ class AlarmLatchSpec extends SparkSpec {
       Seq(("a", 0L), ("b", 1L)))
   }
 
-  test("transformWithState latch (V2) emits the same alerts as flatMapGroupsWithState") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val signals = Seq(false, true, true, false, true, true, false, false, true).zipWithIndex
-      .map { case (f, i) => FireSignal("c1", ts(i), f) }
-    val input = MemoryStream[FireSignal]
-    // transformWithState needs the RocksDB provider (multiple column
-    // families); the default HDFS-backed store refuses
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val q = graft.streaming.AlarmLatchV2(input.toDS())
-      .writeStream.outputMode("append").format("memory").queryName("alerts_v2").start()
-    try {
-      input.addData(signals.take(4)); q.processAllAvailable()
-      input.addData(signals.drop(4)); q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-    val v2 = spark.table("alerts_v2").as[Alert].collect().map(_.ts.getTime / 1000).sorted.toSeq
-    val v1 = runStream(Seq(signals.take(4), signals.drop(4))).map(_.ts.getTime / 1000)
-    assert(v2 == v1 && v2 == Seq(1L, 4L, 8L))
-  }
-
   test("batch-mode lag formulation (q_win_edge) agrees with the latch on replay") {
     import spark.implicits._
     // same edge semantics, relational form: fire && !lag(fire)

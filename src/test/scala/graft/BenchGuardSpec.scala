@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench finalize gate: a 2× gate breach and an every-query-slower
   * host-drift window must force a re-measure instead of landing in
-  * bench_medians.json on the first attempt. Also the bench's knob parsing
-  * and a lint that keeps its noise handling a rule. */
+  * bench_medians.json on the first attempt. Also the bench's knob parsing,
+  * a lint that keeps its noise handling a rule, and two src/main source
+  * lints (no orphaned scaladoc, no `*Core` bench twins). */
 class BenchGuardSpec extends AnyFunSuite {
 
   private def flat(n: Int, r: Double): Seq[Double] = Seq.fill(n)(r)
@@ -99,5 +100,36 @@ class BenchGuardSpec extends AnyFunSuite {
       ((Some("benchexec"), Seq("a" -> "1", "b" -> "2"))))
     assert(PlanDump.trailingArgs(Seq("a=1")) == ((None, Seq("a" -> "1"))))
     assert(PlanDump.trailingArgs(Seq("bench")) == ((Some("bench"), Seq.empty)))
+  }
+
+  /** Every .scala file under src/main, with its lines. */
+  private def mainSources: Seq[(java.nio.file.Path, Seq[String])] = {
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+    assert(files.exists(_.endsWith("graft/Bench.scala")), s"scan root wrong: $root")
+    files.map(p => p -> java.nio.file.Files.readAllLines(p).toArray.toSeq.map(_.toString))
+  }
+
+  test("src/main lint: no scaladoc block directly follows another") {
+    val offenders = mainSources.flatMap { case (p, lines) =>
+      val code = lines.zipWithIndex.filter(_._1.trim.nonEmpty)
+      code.zip(code.drop(1)).collect {
+        case ((a, i), (b, _)) if a.trim.endsWith("*/") && b.trim.startsWith("/**") =>
+          s"$p:${i + 1}: a scaladoc block ends here and another one starts next"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("src/main lint: no *Core twin defs (bench shapes derive from queries)") {
+    val core = "def \\w+Core\\(".r
+    val offenders = mainSources.flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (l, i) if core.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

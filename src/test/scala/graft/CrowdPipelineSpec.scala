@@ -27,7 +27,7 @@ class CrowdPipelineSpec extends SparkSpec {
     val got = CrowdPipeline(spark.createDataset(frames).toDF())
       .select("frame_id", "person_count").as[(Long, Long)].collect().toMap
     frames.foreach { f =>
-      val dets = CrowdPipeline.scoreStub(f.image).filter(_.class_id == 0)
+      val dets = CrowdPipeline.scoreHeavy(f.image).filter(_.class_id == 0)
       val kept = Nms.keepIndices(dets.map(_.x), dets.map(_.y), dets.map(_.w),
         dets.map(_.h), dets.map(_.conf), 0.5, 0.3)
       assert(got(f.frame_id) == kept.size.toLong, s"frame ${f.frame_id}")
@@ -81,19 +81,19 @@ class CrowdPipelineSpec extends SparkSpec {
     assert(row.getString(0) == s"Persons: ${row.getLong(1)}")
   }
 
-  test("batched scorer is batch-shape invariant and equals the row-at-a-time UDF") {
+  test("batched scorer is batch-shape invariant and equals scoreHeavy on the driver") {
     import spark.implicits._
-    val udfScorer = udf((image: Array[Byte]) => CrowdPipeline.scoreHeavy(image))
     val fdf = spark.createDataset(frames).toDF()
     def collectDets(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Row]] =
       df.select("frame_id", "dets").collect()
         .map(r => r.getLong(0) -> r.getSeq[Row](1)).toMap
-    val viaUdf = collectDets(CrowdPipeline.scoreWith(fdf, udfScorer))
+    val onDriver: Map[Long, Seq[Row]] = frames.map(f => f.frame_id ->
+      CrowdPipeline.scoreHeavy(f.image).map(d => Row(d.x, d.y, d.w, d.h, d.conf, d.class_id))).toMap
     // batch size must be invisible in the result — including a size that
     // straddles partition boundaries and one that exceeds the partition
     for (bs <- Seq(1, 7, 1024)) {
       val viaBatch = collectDets(CrowdPipeline.scoreBatched(fdf, CrowdPipeline.scoreHeavy _, bs))
-      assert(viaBatch == viaUdf, s"batchSize=$bs diverged")
+      assert(viaBatch == onDriver, s"batchSize=$bs diverged")
     }
   }
 

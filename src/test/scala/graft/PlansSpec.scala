@@ -238,24 +238,20 @@ class PlansSpec extends SparkSpec {
     // global Sort exists only in the oracle-compare form
     def hasGlobalSort(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.executedPlan.toString.contains("rangepartitioning")
-    assert(!hasGlobalSort(operators.Relational.allocationCore(spark, sf)),
-      "allocationCore must keep per-partition order only")
+    def bench(q: String) = SparkEntry.benchShapes(q)(spark, sf)
+    assert(!hasGlobalSort(bench("q_alloc")),
+      "q_alloc bench shape must keep per-partition order only")
     assert(hasGlobalSort(operators.Relational.allocation(spark, sf)),
       "verify form must stay globally sorted for the oracle")
     // the r10 table-cardinality outputs follow the same contract
-    for ((name, core, verify) <- Seq[(String,
+    for ((name, shape, verify) <- Seq[(String,
         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-      ("scrub", operators.TextOps.scrubCore(spark, sf),
-        operators.TextOps.scrub(spark, sf)),
-      ("gopher_rules", operators.TextOps.gopherRulesCore(spark, sf),
-        operators.TextOps.gopherRules(spark, sf)),
-      ("chunk_overlap", operators.TextOps.chunkOverlapCore(spark, sf),
-        operators.TextOps.chunkOverlap(spark, sf)),
-      ("semdedup", operators.VectorOps.semDedupCore(spark, sf),
-        operators.VectorOps.semDedup(spark, sf)),
-      ("attr_replay", operators.Relational.attrReplayCore(spark, sf),
-        operators.Relational.attrReplay(spark, sf)))) {
-      assert(!hasGlobalSort(core), s"${name}Core must not globally sort")
+      ("scrub", bench("q_scrub"), operators.TextOps.scrub(spark, sf)),
+      ("gopher_rules", bench("q_gopher_rules"), operators.TextOps.gopherRules(spark, sf)),
+      ("chunk_overlap", bench("q_chunk_overlap"), operators.TextOps.chunkOverlap(spark, sf)),
+      ("semdedup", bench("q_semdedup"), operators.VectorOps.semDedup(spark, sf)),
+      ("attr_replay", bench("q_attr_replay"), operators.Relational.attrReplay(spark, sf)))) {
+      assert(!hasGlobalSort(shape), s"$name bench shape must not globally sort")
       assert(hasGlobalSort(verify), s"$name verify form must stay sorted")
     }
   }

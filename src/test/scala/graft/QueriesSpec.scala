@@ -41,20 +41,39 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
-  // every Core bench override must compute the SAME multiset of rows as
-  // its oracle-checked twin — a divergence (an edit landing on one form
-  // only) would silently bench a different computation than the one the
-  // correctness gate certifies. Sorted-row compare at sf0.001.
-  SparkEntry.benchShapes.foreach { case (name, coreFn) =>
-    if (!SparkEntry.queries.get(name).contains(coreFn))
-      test(s"$name bench core ≡ oracle form (rows, up to order)") {
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-          df.collect().map(_.toString).sorted.toSeq
-        val core = coreFn(spark, sf)
-        val oracleForm = SparkEntry.queries(name)(spark, sf)
-        assert(core.schema == oracleForm.schema,
-          s"schema drift: core=${core.schema} oracle=${oracleForm.schema}")
-        assert(rows(core) == rows(oracleForm))
+  // the bench rule: every declared shape is its registered query with
+  // the root global Sort made partition-local or removed, nothing else
+  test("bench rule: each declared shape is its registered plan minus the global sort") {
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import org.apache.spark.sql.classic.GraftBridge.analyzed
+    val declared = SparkEntry.oracleOnlySorts
+    assert(declared.size == 22 && declared.count(!_._2) == 4, s"declared set changed: $declared")
+    val bench = SparkEntry.benchShapes
+    for ((name, keepOrder) <- declared) {
+      val registered = SparkEntry.queries(name)(spark, sf)
+      val root = analyzed(registered) match {
+        case s: Sort if s.global => s
+        case p => fail(s"$name: registered root is ${p.nodeName}, not a global Sort")
       }
+      val expected = if (keepOrder) root.copy(global = false) else root.child
+      assert(analyzed(SparkEntry.withoutGlobalSort(name, registered, keepOrder)) == expected,
+        s"$name: bench plan is not the registered plan minus the global sort")
+      analyzed(bench(name)(spark, sf)) match {
+        case s: Sort if keepOrder =>
+          assert(!s.global && s.order.map(_.sql) == root.order.map(_.sql),
+            s"$name: benchShapes does not apply the rule")
+        case p => assert(!keepOrder && !p.isInstanceOf[Sort] && p.schema == root.schema,
+          s"$name: benchShapes root is ${p.nodeName}")
+      }
+    }
+    for ((name, fn) <- bench if !declared.contains(name))
+      assert(SparkEntry.queries(name) eq fn, s"$name: bench shape differs from its registered query")
+  }
+
+  test("bench rule fails loudly on a root that is not a global Sort") {
+    val unsorted = SparkEntry.queries("q_filter")(spark, sf).limit(5)
+    val e = intercept[IllegalStateException](
+      SparkEntry.withoutGlobalSort("q_filter", unsorted, keepOrder = true))
+    assert(e.getMessage.contains("q_filter") && e.getMessage.contains("global Sort"))
   }
 }

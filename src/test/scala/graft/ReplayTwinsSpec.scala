@@ -8,9 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** The replay-twin contract behind q_latch_replay / q_session_replay: the
   * batch formulations must emit EXACTLY what the streaming operators emit
-  * when the same rows are replayed one-per-micro-batch in arrival order.
-  * (AlarmLatchSpec separately pins AlarmLatch ≡ AlarmLatchV2 on replay, so
-  * driving the fMGWS latch here binds the twin to both APIs.)
+  * when the same rows are replayed one-per-micro-batch in arrival order
+  * (the latch twin is driven against AlarmLatch, the one streaming latch).
   *
   * These scenarios are chosen to force every branch the fixture queries
   * rely on: out-of-order arrival, a late row below the watermark, a
