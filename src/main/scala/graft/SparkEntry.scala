@@ -243,10 +243,9 @@ object SparkEntry {
     // oracle-checked since r14: the integer-hash Bernoulli draw replaced
     // Spark's sampleBy XORShift stream (engine-neutral, same rates)
     "q_sample" -> (TextOps.stratifiedSample _),
-    // oracle-checked since r16 (r15 verdict task #3): the deterministic
-    // quantizer (seeded Lloyd, exact-integer means) replaced the MLlib
-    // fit on this path, so the whole index + search is SQL-expressible;
-    // the MLlib fit lives on as Ivf.ivfTopKTrained (IvfSpec recall ref)
+    // oracle-checked since r16: the deterministic quantizer (seeded
+    // Lloyd, exact-integer means) makes the whole index + search
+    // SQL-expressible; IvfSpec pins recall and the scan fraction
     "q_ivf_topk" -> (Ivf.ivfTopK _),
     // oracle-checked since r16, sharing q_ivf_topk's generated SQL twin:
     // the same search over a PERSISTED BucketedState index — exercises
@@ -262,8 +261,8 @@ object SparkEntry {
     "q_quantized_topk" -> (VectorOps.quantizedTopK _),
     // oracle-checked since r16: the deterministic per-subspace Lloyd
     // codebooks (Ivf.detLloyd on 8-dim slices, exact-integer means)
-    // made the codes → ADC → re-rank path SQL-expressible; the MLlib
-    // fit lives on as Pq.pqTopKTrained (PqSpec's recall reference)
+    // make the codes → ADC → re-rank path SQL-expressible; PqSpec pins
+    // recall against the exact float path
     "q_pq_topk" -> (Pq.pqTopK _),
     // rows-only: the batched scorer's digest arithmetic + row-local NMS
     // have no SQL twin; CrowdPipelineSpec pins batch-shape invariance

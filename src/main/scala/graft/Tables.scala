@@ -138,11 +138,11 @@ object Tables {
   }
 
   /** mtime+size signature of `$dir/$table.parquet` — the cache key
-    * discipline every fixture-derived cache uses (tsUnitCache,
-    * eventsByDate scratch, MlScoring.modelCache): a fixture regenerated
+    * discipline every fixture-derived state uses ([[FixtureCache]],
+    * [[fixtureStatePath]], eventsByDate scratch): a fixture regenerated
     * IN PLACE must never be answered from state recorded for the
     * previous generation. */
-  private[graft] def parquetContentSig(dir: String, table: String): String = {
+  private def parquetContentSig(dir: String, table: String): String = {
     val src = new java.io.File(s"$dir/$table.parquet")
     // a path the local File API cannot STAT at all — a remote URI
     // (s3://, hdfs://) or a not-yet-materialized local file — must yield
@@ -166,27 +166,64 @@ object Tables {
     else s"${files.map(_.lastModified).max}_${files.map(_.length).sum}"
   }
 
-  private def eventsContentSig(dir: String): String =
-    parquetContentSig(dir, "events")
+  /** A value derived from fixture table `$dir/$table.parquet`, built once
+    * per dir and reused while the table's content signature holds: a
+    * regenerated fixture REPLACES the dir's one entry, so the cache is
+    * bounded by dirs, not by fixture generations. The map holds a lazy
+    * holder, not the value: `compute` runs under the map's bin lock, and
+    * a multi-second build there would stall every dir in the same bin —
+    * the lock covers only the entry swap, and the holder's monitor makes
+    * two racing callers of one dir build once. An `unstat_` signature is
+    * unique per call (a path the File API cannot stat), so it is never
+    * cached under: the value is built fresh each time. A build that
+    * throws leaves no entry. */
+  private[graft] final class FixtureCache[V](table: String) {
+    private[graft] final class Holder(build0: () => V) {
+      // released after the build: the thunk captures frames and their
+      // SparkSession, and an entry lives as long as the JVM
+      private var build = build0
+      lazy val value: V = { val v = build(); build = null; v }
+      private[graft] def released: Boolean = build == null
+    }
+    private val byDir = new java.util.concurrent.ConcurrentHashMap[String, (String, Holder)]()
+    /** Test hook: the dir's (signature, holder), if any. */
+    private[graft] def entry(dir: String): Option[(String, Holder)] = Option(byDir.get(dir))
+    def apply(dir: String)(build: => V): V = {
+      val sig = parquetContentSig(dir, table)
+      if (sig.startsWith("unstat_")) build
+      else {
+        val hit = byDir.get(dir)
+        val e = if (hit != null && hit._1 == sig) hit
+          else byDir.compute(dir, (_, prev) =>
+            if (prev != null && prev._1 == sig) prev else (sig, new Holder(() => build)))
+        // a failed build is dropped, not kept for a retry through its
+        // thunk: that thunk may hold a session that is gone by then
+        try e._2.value catch { case t: Throwable => byDir.remove(dir, e); throw t }
+      }
+    }
+  }
+
+  /** Deterministic per-fixture state path under java.io.tmpdir: the dir
+    * hash keeps two fixtures apart, the content signature of `table`
+    * retires the state when the fixture is regenerated in place. */
+  private[graft] def fixtureStatePath(prefix: String, dir: String, table: String): String = {
+    val dirHash = java.security.MessageDigest.getInstance("MD5")
+      .digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(8)
+    new java.io.File(sys.props("java.io.tmpdir"),
+      s"${prefix}_${dirHash}_${parquetContentSig(dir, table)}")
+      .getAbsolutePath
+  }
 
   /** True iff the fixture's `ts` column is annotated TIMESTAMP(NANOS) in
-    * the parquet footer. Cached per (directory, content signature): the
-    * unit is a property of the fixture GENERATION, not the path — a
-    * fixture regenerated in place during one JVM's lifetime flips the
-    * entry instead of being read with the stale unit (the exact silent-
-    * drift class Preflight guards the process boundary against; this
-    * guards the intra-process boundary). */
-  private val tsUnitCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private def eventsTsIsNanos(spark: SparkSession, dir: String): Boolean = {
-    val sig = eventsContentSig(dir)
-    // an unstat_ sig is unique PER CALL (non-File-statable path): caching
-    // under it would grow the map by one dead entry per events() read —
-    // probe fresh instead (the probe itself goes through the Hadoop
-    // FileSystem, so remote schemes still resolve correctly)
-    if (sig.startsWith("unstat_")) probeTsIsNanos(spark, dir)
-    else tsUnitCache.computeIfAbsent(s"$sig|$dir",
-      _ => probeTsIsNanos(spark, dir))
-  }
+    * the parquet footer, per fixture GENERATION, not path: a fixture
+    * regenerated in place during one JVM's lifetime flips the entry
+    * instead of being read with the stale unit (the silent-drift class
+    * Preflight guards the process boundary against; this guards the
+    * intra-process boundary). A hit is a file stat plus a map read. */
+  private val tsNanosByDir = new FixtureCache[Boolean]("events")
+  private def eventsTsIsNanos(spark: SparkSession, dir: String): Boolean =
+    tsNanosByDir(dir)(probeTsIsNanos(spark, dir))
   private def probeTsIsNanos(spark: SparkSession, dir: String): Boolean = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     val schema = parquetFooters(spark, dir, "events").head.getParquetMetadata.getFileMetaData.getSchema
@@ -209,7 +246,7 @@ object Tables {
     // change — v2 scratch was written by the stale nanos reader) + fixture
     // content signature (mtime+size of events.parquet), so a regenerated
     // fixture at the same path is never answered from stale scratch
-    val sig = eventsContentSig(dir)
+    val sig = parquetContentSig(dir, "events")
     // an unstat_ sig is unique per call — the scratch key would never
     // match, so every call would materialize ANOTHER full copy of the
     // table into local tmp (unbounded disk growth). This fixture helper

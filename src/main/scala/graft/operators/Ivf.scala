@@ -2,8 +2,6 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.CosineSimilarity.cosineSim
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,19 +18,22 @@ import org.apache.spark.sql.functions._
   * the LSH path, candidates meet through an equi-join and the all-pairs
   * product never materializes.
   *
-  * TWO quantizer fits (r15 verdict task #3):
-  *  - [[detCenters]], the DEFAULT: seeded Lloyd with every step
-  *    oracle-expressible — init from the K smallest vec_ids, a fixed
-  *    number of iterations whose cluster means are EXACT-INTEGER sums
-  *    (each dimension scaled to a BIGINT before summing; integer
-  *    addition is associative, so the mean is independent of
-  *    partitioning AND reproducible bit-for-bit by the DuckDB oracle,
-  *    unlike any floating-point SUM). q_ivf_topk / q_ivf_delta ride
-  *    this path and are hash-checked end to end — the q_semdedup_delta
-  *    deterministic-geometry move applied to the ANN family.
-  *  - [[ivfTopKTrained]]: the MLlib k-means fit (seeded 42,
-  *    iteration-capped), kept as the recall reference — IvfSpec pins
-  *    both paths' recall against the brute-force truth.
+  * The quantizer is [[detCenters]]: seeded Lloyd with every step
+  * oracle-expressible — init from the K smallest vec_ids, a fixed number
+  * of iterations whose cluster means are EXACT-INTEGER sums (each
+  * dimension scaled to a BIGINT before summing; integer addition is
+  * associative, so the mean is independent of partitioning AND
+  * reproducible bit-for-bit by the DuckDB oracle, unlike any
+  * floating-point SUM). q_ivf_topk / q_ivf_delta ride it and are
+  * hash-checked end to end; IvfSpec pins recall against the brute-force
+  * truth at a bounded scan fraction.
+  *
+  * The quantizer trains and probes on L2-NORMALIZED vectors: the search
+  * metric is cosine, and euclidean cells over raw magnitudes split
+  * equal-direction vectors across cells — cosine neighbors land outside
+  * the probed lists and are unreachable at any NProbe. On the unit
+  * sphere, squared euclidean is 2(1−cos): the quantizer's own metric IS
+  * the search metric.
   */
 object Ivf {
 
@@ -44,72 +45,6 @@ object Ivf {
     * (cells stay constant-sized), tune NProbe to the recall target. */
   val K = 32
   val NProbe = 4
-
-  /** Fitted quantizer per fixture dir. An IVF index is built ONCE, offline,
-    * and amortized over every query that probes it — retraining the
-    * coarse quantizer per query (the original shape here) charged ~1.7 s
-    * of index-build to each lookup. The cache models the production
-    * lifecycle: fit on first touch, every later query is probe-only.
-    * Keyed by DIR, holding (content signature, model): a changed corpus
-    * (new mtime/size) REPLACES the dir's entry instead of accumulating a
-    * new one per signature — one live model per fixture, superseded
-    * indexes are dropped, so the cache is bounded by the number of
-    * distinct dirs, not the number of rewrites.
-    *
-    * The map holds a LAZY fit holder, not the fitted model: CHM.compute
-    * runs its remapping function under the bin lock, and a multi-second
-    * KMeans fit inside it would stall every unrelated dir hashing to the
-    * same bin (the CHM contract wants remappers short). The lock is held
-    * only for the entry swap; the fit itself runs on first `.model`
-    * access outside it, with `lazy val`'s per-holder monitor making two
-    * racing queries of the SAME dir fit once. */
-  private[graft] final class LazyModel(fit0: () => org.apache.spark.ml.clustering.KMeansModel) {
-    // the thunk is nulled after the fit: it captures a DataFrame (and so
-    // a whole SparkSession reference graph), and cache entries live for
-    // the JVM — without the release every cached dir pins its captured
-    // session, including per-suite test sessions long since stopped
-    private var f = fit0
-    lazy val model: org.apache.spark.ml.clustering.KMeansModel = {
-      val m = f(); f = null; m
-    }
-  }
-  private[graft] val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, LazyModel)]()
-
-  private def contentSig(dir: String): String =
-    graft.Tables.parquetContentSig(dir, "embeddings")
-
-  /** (vec_id, embedding, list) assignment plus the fitted centers.
-    * The quantizer trains and probes on L2-NORMALIZED vectors (r10): the
-    * search metric is cosine, and euclidean cells over raw magnitudes
-    * split equal-direction vectors across cells — cosine neighbors land
-    * outside the probed lists and are unreachable at any NProbe (Pq
-    * normalizes before training for the same reason). On the unit
-    * sphere, squared euclidean is 2(1−cos): the quantizer's own metric
-    * IS the search metric. */
-  private def assign(spark: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) = {
-    val emb = Pq.normalized(Tables.embeddings(spark, dir))
-      .withColumn("features", array_to_vector(col("nemb")))
-    val sig = contentSig(dir)
-    val model = modelCache.compute(dir, (_, prev) =>
-      if (prev != null && prev._1 == sig) prev
-      else (sig, new LazyModel(() => {
-        // fit-time guard (offline path — the count is one pass over the
-        // training frame the fit scans anyway): fewer vectors than cells
-        // makes MLlib return < K centroids and every downstream
-        // centers(i) lookup an opaque AIOOBE; name the caller error
-        val n = emb.count()
-        require(n >= K,
-          s"IVF quantizer needs at least K=$K training vectors, got $n")
-        new KMeans()
-          .setK(K).setSeed(42L).setMaxIter(10)
-          .fit(emb)
-      })))._2.model
-    val assigned = model.transform(emb)
-      .select(col("vec_id"), col("embedding"), col("nemb"),
-        col("prediction").as("list"))
-    (assigned, model.clusterCenters.map(_.toArray))
-  }
 
   // ---- Deterministic quantizer (r15 verdict task #3) ----
 
@@ -194,42 +129,33 @@ object Ivf {
     centers
   }
 
-  /** Cached deterministic centers per fixture dir — the [[modelCache]]
-    * lifecycle (build on first touch, reuse while the content signature
-    * holds, replace when the corpus changes). detCenters is
-    * deterministic, so a racing duplicate build is wasted work, never
-    * divergence — the get/put window needs no lock. */
-  private[graft] val detCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[(Int, Array[Double])])]()
+  /** Deterministic centers, built once per fixture dir and rebuilt when
+    * the corpus changes: an IVF index is built offline and amortized
+    * over every query that probes it. */
+  private[graft] val centersByDir = new Tables.FixtureCache[Seq[(Int, Array[Double])]]("embeddings")
 
-  private def detCentersFor(spark: SparkSession, dir: String): Seq[(Int, Array[Double])] = {
-    val sig = contentSig(dir)
-    val cached = detCache.get(dir)
-    if (cached != null && cached._1 == sig) cached._2
-    else {
-      val c = detCenters(spark, Tables.embeddings(spark, dir))
-      detCache.put(dir, (sig, c))
-      c
-    }
+  /** The probe-ranking step: rank the centers per probe by squared
+    * euclidean distance in the NORMALIZED space (the quantizer's own
+    * metric ≡ cosine on the unit sphere) and keep the NProbe nearest
+    * lists, ties to the lowest list id. `probes` carries (probe_id,
+    * p_nemb, ...); every probe column survives, plus `list`. */
+  private def nearestLists(probes: DataFrame, centers: DataFrame): DataFrame = {
+    val wc = Window.partitionBy("probe_id").orderBy(col("dist"), col("list"))
+    probes.crossJoin(broadcast(centers))
+      .withColumn("dist", graft.functions.SqDistance.sqDist(col("p_nemb"), col("center")))
+      .withColumn("crank", row_number().over(wc))
+      .filter(col("crank") <= NProbe)
   }
 
-  /** The search phase shared by both quantizers: rank the k centroids
-    * per probe by squared euclidean distance in the NORMALIZED space
-    * (the quantizer's own metric ≡ cosine on the unit sphere), keep the
-    * NProbe nearest lists, then score candidates from those lists only
-    * (equi-join on the list id). Exact scoring stays on the raw
-    * vectors — cosine is scale-invariant. */
+  /** The search phase: [[nearestLists]] per probe, then score candidates
+    * from those lists only (equi-join on the list id). Exact scoring
+    * stays on the raw vectors — cosine is scale-invariant. */
   private def searchLists(assigned: DataFrame, centersDf: DataFrame,
                           k: Int = 3): DataFrame = {
-    import graft.functions.SqDistance.sqDist
     val probes = assigned.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         col("nemb").as("p_nemb"))
-    val wc = Window.partitionBy("probe_id").orderBy(col("dist"), col("list"))
-    val probeLists = probes.crossJoin(broadcast(centersDf))
-      .withColumn("dist", sqDist(col("p_nemb"), col("center")))
-      .withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= NProbe)
+    val probeLists = nearestLists(probes, centersDf)
       .select(col("probe_id"), col("p_emb"), col("list"))
     // candidate ranking through the BOUNDED TopKAggregator, not a
     // row_number window (r16, the ScaleProbe finding): the candidate
@@ -267,7 +193,7 @@ object Ivf {
   private def detAssigned(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
     import graft.functions.SqDistance.sqDist
-    val centersDf = detCentersFor(spark, dir)
+    val centersDf = centersByDir(dir)(detCenters(spark, Tables.embeddings(spark, dir)))
       .map { case (i, c) => (i, c.toSeq) }.toDF("list", "center")
     val assigned = Pq.normalized(Tables.embeddings(spark, dir))
       .crossJoin(broadcast(centersDf))
@@ -285,30 +211,14 @@ object Ivf {
     detAssigned(spark, dir)._1.groupBy("list").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
-  /** Test hook: the (probe_id, list) pairs the search scans. */
+  /** Test hook: the (probe_id, list) pairs the search scans, through
+    * the same [[nearestLists]] step [[searchLists]] runs. */
   private[graft] def probedLists(spark: SparkSession, dir: String): Seq[(Long, Int)] = {
-    import graft.functions.SqDistance.sqDist
     val (assigned, centersDf) = detAssigned(spark, dir)
     val probes = assigned.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("nemb").as("p_nemb"))
-    val wc = Window.partitionBy("probe_id").orderBy(col("dist"), col("list"))
-    probes.crossJoin(broadcast(centersDf))
-      .withColumn("dist", sqDist(col("p_nemb"), col("center")))
-      .withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= NProbe)
-      .select("probe_id", "list")
+    nearestLists(probes, centersDf).select("probe_id", "list")
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-  }
-
-  /** The MLlib-quantizer variant of [[ivfTopK]] — the recall reference
-    * (rows-only: no external engine reproduces MLlib k-means; IvfSpec
-    * pins its recall floor and seeded determinism). */
-  def ivfTopKTrained(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val (assigned, centers) = assign(spark, dir)
-    val centersDf = centers.zipWithIndex
-      .map { case (c, i) => (i, c) }.toSeq.toDF("list", "center")
-    searchLists(assigned, centersDf)
   }
 
   // ---- Incremental index maintenance (r12) ----
@@ -412,16 +322,15 @@ object Ivf {
     * table — quantizer fit + postings), keyed by (dir hash, content
     * signature) in tmp; every later call is probe-only. With the whole
     * corpus as the first batch, the result is EXACTLY [[ivfTopK]]'s
-    * (IncrementalIvfSpec pins it), so the driver check is rows-only for
-    * the same reason q_ivf_topk's is — no external engine reproduces
-    * MLlib k-means; IvfSpec's recall floor is the quality pin. */
+    * (IncrementalIvfSpec pins it), so the driver hash-checks it against
+    * q_ivf_topk's SQL twin; IvfSpec's recall floor is the quality pin. */
   def ivfDeltaQuery(spark: SparkSession, dir: String): DataFrame = {
     // the quantizer is part of the persisted index's identity: the
     // prefix carries an algorithm tag (det quantizer, DetSteps Lloyd
     // rounds) so a quantizer change can never probe a stale index
     // built under the previous algorithm (fixtureStatePath keys on
     // CONTENT, which a code change does not move)
-    val indexPath = TextOps.fixtureStatePath(
+    val indexPath = Tables.fixtureStatePath(
       s"graft_ivf_delta_det${DetSteps}", dir, "embeddings")
     if (postingState(indexPath).ensure(spark).isEmpty)
       ivfAppend(spark, indexPath, Tables.embeddings(spark, dir))
@@ -442,11 +351,7 @@ object Ivf {
     val np = Pq.normalized(probes)
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         col("nemb").as("p_nemb"))
-    val wc = Window.partitionBy("probe_id").orderBy(col("dist"), col("list"))
-    val probeLists = np.crossJoin(broadcast(centers))
-      .withColumn("dist", graft.functions.SqDistance.sqDist(col("p_nemb"), col("center")))
-      .withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= NProbe)
+    val probeLists = nearestLists(np, centers)
       .select(col("probe_id"), col("p_emb"), col("list"))
     // bounded top-k aggregation, same rationale (and identical rows)
     // as searchLists: the posting join's output grows with list size,

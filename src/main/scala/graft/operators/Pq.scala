@@ -1,8 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,44 +20,27 @@ import org.apache.spark.sql.functions._
   * shortlist; (2) one exact cosine pass re-ranks the shortlist, touching
   * float vectors for |probes|·50 rows only.
   *
-  * Scale shape: training is M tiny driver-coordinated k-means fits
+  * Scale shape: training is M tiny driver-coordinated Lloyd fits
   * (centroid tables are M·K·subdim doubles — kilobytes, broadcast);
-  * encoding is one projection pass; the ADC scan joins the corpus codes
-  * against the BROADCAST probe tables on (subspace, code) and partial-
-  * aggregates the 8-term sums — |corpus|·M rows through one hash-agg,
-  * never an all-pairs product with float vectors. Vectors are L2-
-  * normalized before training so the ADC dot IS approximate cosine.
+  * encoding is one broadcast argmin pass; the ADC scan joins the corpus
+  * codes against the BROADCAST probe tables on (subspace, code) and
+  * partial-aggregates the 8-term sums — |corpus|·M rows through one
+  * hash-agg, never an all-pairs product with float vectors. Vectors are
+  * L2-normalized before training so the ADC dot IS approximate cosine.
   *
-  * TWO codebook fits (the [[Ivf]] r16 pattern): the DEFAULT is the
-  * deterministic per-subspace Lloyd ([[Ivf.detLloyd]] on 8-dim slices —
-  * seeded init from the K smallest vec_ids, exact-integer means), so
-  * q_pq_topk is ORACLE-CHECKED end to end; the MLlib fit stays as
-  * [[pqTopKTrained]], the recall reference. PqSpec pins recall against
-  * the exact float path for BOTH, determinism, and the code-range /
-  * compression contract. Reference analog: the CLIP embedding similarity
-  * `main.py:79`, at the storage footprint 100 TB of vectors demands.
+  * The codebooks are the deterministic per-subspace Lloyd
+  * ([[Ivf.detLloyd]] on 8-dim slices — seeded init from the K smallest
+  * vec_ids, exact-integer means), so q_pq_topk is ORACLE-CHECKED end to
+  * end. PqSpec pins recall against the exact float path, determinism,
+  * and the code-range / compression contract. Reference analog: the CLIP
+  * embedding similarity `main.py:79`, at the storage footprint 100 TB of
+  * vectors demands.
   */
 object Pq {
 
   val M = 8
   val SubDim = 8
   val K = 16
-
-  /** Same fit-once-per-corpus cache discipline as [[Ivf.modelCache]]
-    * (lazy holder so no KMeans fit ever runs under the CHM bin lock). */
-  private final class LazyModels(fit0: () => Array[KMeansModel]) {
-    // thunk nulled after the fit (the Ivf.LazyModel hygiene): it captures
-    // a DataFrame and its SparkSession for the cache entry's JVM lifetime
-    private var f = fit0
-    lazy val models: Array[KMeansModel] = {
-      val m = f(); f = null; m
-    }
-  }
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, LazyModels)]()
-
-  private def contentSig(dir: String): String =
-    graft.Tables.parquetContentSig(dir, "embeddings")
 
   /** L2-normalized double-array embedding column `nemb`. Zero-norm
     * vectors (a failed encode) are FILTERED, not divided: 0/0 = NaN, and
@@ -75,31 +56,6 @@ object Pq {
         x => x.cast("double") / col("nrm")))
 
   private def subCol(m: Int): Column = slice(col("nemb"), m * SubDim + 1, SubDim)
-
-  /** (vec_id, nemb, c0..c{M-1}) codes plus centers\[m\]\[k\]\[subdim\]. */
-  private def assign(spark: SparkSession, dir: String): (DataFrame, Array[Array[Array[Double]]]) = {
-    val emb = normalized(Tables.embeddings(spark, dir)).select(col("vec_id"), col("nemb"))
-    val withSubs = (0 until M).foldLeft(emb)((df, m) =>
-      df.withColumn(s"f$m", array_to_vector(subCol(m))))
-    val sig = contentSig(dir)
-    val models = modelCache.compute(dir, (_, prev) =>
-      if (prev != null && prev._1 == sig) prev
-      else (sig, new LazyModels(() => {
-        // fit-time guard (offline path, same rationale as Ivf.assign):
-        // fewer vectors than codewords makes MLlib return < K centroids
-        // per subspace and downstream code lookups an opaque AIOOBE
-        val n = withSubs.count()
-        require(n >= K,
-          s"PQ codebooks need at least K=$K training vectors per subspace, got $n")
-        (0 until M).map(m =>
-          new KMeans().setK(K).setSeed(42L + m).setMaxIter(10)
-            .setFeaturesCol(s"f$m").setPredictionCol(s"c$m")
-            .fit(withSubs)).toArray
-      })))._2.models
-    val coded = models.foldLeft(withSubs)((df, mo) => mo.transform(df))
-      .select(col("vec_id") +: col("nemb") +: (0 until M).map(m => col(s"c$m")): _*)
-    (coded, models.map(_.clusterCenters.map(_.toArray)))
-  }
 
   /** Shortlist size for the ADC prune stage — the recall/cost knob: the
     * exact re-rank touches |probes|·Shortlist float vectors, so widening
@@ -126,33 +82,24 @@ object Pq {
     }.toArray
   }
 
-  /** Fit-once cache of the deterministic codebooks (the detCache
-    * lifecycle from [[Ivf]]): deterministic, so a racing duplicate
-    * build is wasted work, never divergence. */
-  private[graft] val detCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Array[Array[Array[Double]]])]()
+  /** Deterministic codebooks, built once per fixture dir and rebuilt
+    * when the corpus changes (the [[Ivf.centersByDir]] lifecycle). */
+  private val codebooksByDir = new Tables.FixtureCache[Array[Array[Array[Double]]]]("embeddings")
 
-  private def detSubCentersFor(spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
-    val sig = contentSig(dir)
-    val cached = detCache.get(dir)
-    if (cached != null && cached._1 == sig) cached._2
-    else {
-      val c = detSubCenters(spark, Tables.embeddings(spark, dir))
-      detCache.put(dir, (sig, c))
-      c
-    }
-  }
-
-  /** q_pq_topk (DEFAULT, oracle-checked since r16): the two-stage
-    * search under the deterministic codebooks. Encoding is a broadcast
-    * argmin per (vector, subspace) — min-struct aggregate, the
-    * detAssigned shape — instead of M model.transform projections;
-    * everything from the ADC tables down is identical to the trained
-    * variant. */
+  /** q_pq_topk (oracle-checked since r16): top-10 neighbors per probe
+    * (vec_id < 10) via the production two-stage recipe — ADC over the
+    * 4-byte codes prunes the corpus to a [[Shortlist]]-sized candidate
+    * set (byte scan, zero per-candidate float math), then ONE exact
+    * cosine pass re-ranks the shortlist (float reads for
+    * |probes|·Shortlist rows only, never the corpus). Encoding is a
+    * broadcast argmin per (vector, subspace) — min-struct aggregate, the
+    * Ivf detAssigned shape. The 8-term ADC sum folds over the
+    * subspace-sorted array (sequential-fold determinism — a shuffled
+    * 8-double sum could flip a shortlist-boundary tie across runs). */
   def pqTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.SqDistance.sqDist
-    val centers = detSubCentersFor(spark, dir)
+    val centers = codebooksByDir(dir)(detSubCenters(spark, Tables.embeddings(spark, dir)))
     val centersDf = centers.zipWithIndex.flatMap { case (ks, m) =>
       ks.zipWithIndex.map { case (c, k) => (m, k, c.toSeq) }
     }.toSeq.toDF("m", "code", "center")
@@ -184,56 +131,6 @@ object Pq {
       aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
     val exactSide = emb.select(col("vec_id"), col("nemb"))
     val probeSide = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("nemb").as("p_emb"))
-    val wExact = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("vec_id"))
-    shortlist
-      .join(exactSide, "vec_id")
-      .join(broadcast(probeSide), "probe_id")
-      .withColumn("cos", dot(col("p_emb"), col("nemb")))
-      .withColumn("rank", row_number().over(wExact).cast("long"))
-      .filter(col("rank") <= 10)
-      .select(col("probe_id"), col("rank"), col("vec_id").as("cand_id"),
-        round(col("cos"), 6).as("cos_sim"))
-      .orderBy("probe_id", "rank")
-  }
-
-  /** q_pq_topk: top-10 neighbors per probe (vec_id < 10) via the
-    * production two-stage recipe — ADC over the 4-byte codes prunes the
-    * corpus to a [[Shortlist]]-sized candidate set (byte scan, zero
-    * per-candidate float math), then ONE exact cosine pass re-ranks the
-    * shortlist (float reads for |probes|·Shortlist rows only, never the
-    * corpus). The 8-term ADC sum folds over the subspace-sorted array
-    * (sequential-fold determinism — a shuffled 8-double sum could flip
-    * a shortlist-boundary tie across runs). */
-  def pqTopKTrained(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val (coded, centers) = assign(spark, dir)
-    val codes = coded.select(col("vec_id"),
-        posexplode(array((0 until M).map(m => col(s"c$m")): _*)).as(Seq("m", "code")))
-    val centersDf = centers.zipWithIndex.flatMap { case (ks, m) =>
-      ks.zipWithIndex.map { case (c, k) => (m, k, c) }
-    }.toSeq.toDF("m", "code", "center")
-    val probeSubs = coded.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"),
-        posexplode(array((0 until M).map(subCol): _*)).as(Seq("m", "sub")))
-    val tables = probeSubs.join(broadcast(centersDf), "m")
-      .select(col("probe_id"), col("m"), col("code"),
-        aggregate(zip_with(col("sub"), col("center"), (x, y) => x * y),
-          lit(0.0), (acc, v) => acc + v).as("part"))
-    val wAdc = Window.partitionBy("probe_id").orderBy(col("approx").desc, col("vec_id"))
-    val shortlist = codes.join(broadcast(tables), Seq("m", "code"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .groupBy("probe_id", "vec_id")
-      .agg(array_sort(collect_list(struct(col("m"), col("part")))).as("ps"))
-      .withColumn("approx", expr("aggregate(ps, 0D, (acc, x) -> acc + x.part)"))
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= Shortlist)
-      .select(col("probe_id"), col("vec_id"), col("approx"))
-    // exact re-rank: normalized-dot cosine, shortlist rows only
-    val dot = (a: Column, b: Column) =>
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-    val exactSide = coded.select(col("vec_id"), col("nemb"))
-    val probeSide = coded.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("nemb").as("p_emb"))
     val wExact = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("vec_id"))
     shortlist

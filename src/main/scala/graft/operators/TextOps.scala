@@ -1060,24 +1060,10 @@ object TextOps {
     * output is bit-identical to [[lmScore]] (IncrementalLmSpec), so the
     * oracle is q_lm_score's SQL verbatim. */
   def lmScoreDeltaQuery(spark: SparkSession, dir: String): DataFrame = {
-    val modelPath = fixtureStatePath("graft_lm_delta", dir, "documents")
+    val modelPath = Tables.fixtureStatePath("graft_lm_delta", dir, "documents")
     if (lmModelState(modelPath).ensure(spark).isEmpty)
       lmModelAppend(spark, modelPath, Tables.documents(spark, dir), 1L)
     lmScoreDelta(spark, modelPath, Tables.documents(spark, dir))
-  }
-
-  /** Deterministic per-fixture state path under java.io.tmpdir: dir hash
-    * keeps two fixtures apart, the content signature retires the state
-    * when the fixture is regenerated in place. Shared with
-    * [[graft.operators.Ivf.ivfDeltaQuery]]. */
-  private[graft] def fixtureStatePath(prefix: String, dir: String,
-                                      table: String): String = {
-    val dirHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(8)
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"${prefix}_${dirHash}_${graft.Tables.parquetContentSig(dir, table)}")
-      .getAbsolutePath
   }
 
   /** The model table, failing LOUDLY when it is absent or empty: an
@@ -2674,7 +2660,7 @@ object TextOps {
   /** The even-docs gram index under q_strip_delta, built once per
     * fixture content signature. */
   private def stripDeltaIndex(spark: SparkSession, dir: String): String = {
-    val indexPath = fixtureStatePath("graft_substr_delta", dir, "documents")
+    val indexPath = Tables.fixtureStatePath("graft_substr_delta", dir, "documents")
     if (substringIndexState(indexPath).ensure(spark).isEmpty)
       substringFold(spark, indexPath,
         gramKeyFrame(Tables.documents(spark, dir)

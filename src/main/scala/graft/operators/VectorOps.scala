@@ -157,9 +157,9 @@ object VectorOps {
   /** E-SIM clustering assignment: every embedding labeled with its
     * nearest of 8 fixed centroids (vec_id < 8 as deterministic seeds) by
     * squared L2 — the assignment step at the heart of IVF/k-means,
-    * exposed as an ORACLE-CHECKED query (the trained `Ivf` path is
-    * rows-only because KMeans init is engine-internal; this pins the
-    * geometry arithmetic itself). Distances fold left-to-right over the
+    * exposed as an ORACLE-CHECKED query (this pins the geometry
+    * arithmetic itself; `Ivf`'s seeded Lloyd quantizer builds on the
+    * same argmin). Distances fold left-to-right over the
     * dimension sequence (`aggregate` ≡ DuckDB `list_sum(list_transform)`,
     * the q_entropy precedent), so both engines produce bit-identical
     * doubles and the argmin rank cannot flip. Centroids broadcast; the
@@ -653,7 +653,7 @@ object VectorOps {
       val centers = odds.limit(0)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
       semDedupDecide(spark,
-        TextOps.fixtureStatePath("graft_semdedup_delta", dir, "embeddings"),
+        Tables.fixtureStatePath("graft_semdedup_delta", dir, "embeddings"),
         centers, odds)._1
     } else {
       // the admissions face minus its global sort (added below)
@@ -667,7 +667,7 @@ object VectorOps {
     * fixture content signature (geometry frozen on the 8 smallest even
     * vec_ids). */
   private def semDedupDeltaIndex(spark: SparkSession, dir: String): String = {
-    val indexPath = TextOps.fixtureStatePath("graft_semdedup_delta", dir, "embeddings")
+    val indexPath = Tables.fixtureStatePath("graft_semdedup_delta", dir, "embeddings")
     if (semDedupIndexState(indexPath).ensure(spark).isEmpty)
       // allowSmallSeed: this batch IS the whole even-side corpus (the
       // one-row sweep fixtures land here), so a sub-seed geometry

@@ -119,40 +119,16 @@ object MlScoring {
     org.apache.spark.ml.GraftMlBridge.stripTrainingSummaries(
       crowdRiskPipeline().fit(frames))
 
-  /** Fit-once-per-corpus cache — the [[graft.operators.Ivf.modelCache]]
-    * discipline verbatim: a model is trained OFFLINE once and amortized
-    * over every scoring query (retraining per query charges the full fit
-    * to each lookup — the r7 IVF lesson). Keyed by dir holding (content
-    * signature, lazy fit holder): a regenerated fixture replaces the
-    * entry; the lazy holder keeps the multi-second fit out of the CHM
-    * bin lock. */
-  private[graft] final class LazyModel(fit0: () => PipelineModel) {
-    // thunk nulled after the fit (the Ivf.LazyModel hygiene): it captures
-    // a DataFrame and its SparkSession for the cache entry's JVM lifetime
-    private var f = fit0
-    lazy val model: PipelineModel = {
-      val m = f(); f = null; m
-    }
-  }
-  private[graft] val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, LazyModel)]()
-
-  // shared helper, not a local copy: the hand-rolled version NPE'd on an
-  // unlistable dir and threw a bare `empty.max` on an empty one — exactly
-  // the mid-materialization states Tables.parquetContentSig handles with
-  // its "absent" sentinel (which never matches a real sig, so a fixture
-  // that materializes mid-JVM is re-fit rather than served stale)
-  private def contentSig(dir: String): String =
-    graft.Tables.parquetContentSig(dir, "documents")
+  /** Fit-once-per-corpus cache: a model is trained OFFLINE once and
+    * amortized over every scoring query (retraining per query charges
+    * the full fit to each lookup — the r7 IVF lesson); a regenerated
+    * fixture replaces the dir's model. */
+  private[graft] val modelByDir = new graft.Tables.FixtureCache[PipelineModel]("documents")
 
   /** Fit the pipeline on the fixture's labeled frames (cached per
     * fixture content — probe-only after first touch). */
-  def fitCrowdRisk(spark: SparkSession, dir: String): PipelineModel = {
-    val sig = contentSig(dir)
-    modelCache.compute(dir, (_, prev) =>
-      if (prev != null && prev._1 == sig) prev
-      else (sig, new LazyModel(() => fitOn(labeledFrames(spark, dir)))))._2.model
-  }
+  def fitCrowdRisk(spark: SparkSession, dir: String): PipelineModel =
+    modelByDir(dir)(fitOn(labeledFrames(spark, dir)))
 
   /** q_ml_risk: score + per-camera rollup of model-predicted crowd risk
     * — the MLlib twin of q_pipeline (rows-only correctness: LR

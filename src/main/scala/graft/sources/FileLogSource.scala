@@ -125,20 +125,6 @@ object FileLog {
         m.map(g => g.group(1).toInt -> f)
       }.toMap
 
-  /** Full-file line count — the one-shot form (spec convenience; the
-    * stream itself counts INCREMENTALLY, see
-    * [[FileLogMicroBatchStream.scanPartition]]). Counts TERMINATED
-    * lines only: a half-flushed final line (torn write) is invisible
-    * until its newline lands. */
-  private[sources] def lineCount(f: File): Long = {
-    val in = new java.io.BufferedInputStream(new java.io.FileInputStream(f))
-    try {
-      var n = 0L; var c = in.read()
-      while (c >= 0) { if (c == '\n') n += 1; c = in.read() }
-      n
-    } finally in.close()
-  }
-
   /** Sidecar path of one partition log ("pN.log.idx" — the partition
     * regex above never matches it). */
   private[sources] def sidecarOf(log: File): File =

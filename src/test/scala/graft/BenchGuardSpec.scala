@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The bench finalize gate: a 2× gate breach and an every-query-slower
   * host-drift window must force a re-measure instead of landing in
   * bench_medians.json on the first attempt. Also the bench's knob parsing,
-  * a lint that keeps its noise handling a rule, and two src/main source
-  * lints (no orphaned scaladoc, no `*Core` bench twins). */
+  * a lint that keeps its noise handling a rule, and three src/main source
+  * lints (no orphaned scaladoc, no `*Core` bench twins, one home for the
+  * fixture content signature). */
 class BenchGuardSpec extends AnyFunSuite {
 
   private def flat(n: Int, r: Double): Seq[Double] = Seq.fill(n)(r)
@@ -118,6 +119,19 @@ class BenchGuardSpec extends AnyFunSuite {
       code.zip(code.drop(1)).collect {
         case ((a, i), (b, _)) if a.trim.endsWith("*/") && b.trim.startsWith("/**") =>
           s"$p:${i + 1}: a scaladoc block ends here and another one starts next"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("src/main lint: the content-signature rule lives only in Tables.scala") {
+    // fixture-derived state goes through Tables.FixtureCache or
+    // Tables.fixtureStatePath; a second signature reader is a second
+    // copy of the invalidation rule
+    val offenders = mainSources.flatMap { case (p, lines) =>
+      if (p.endsWith("graft/Tables.scala")) Nil
+      else lines.zipWithIndex.collect {
+        case (l, i) if l.contains("parquetContentSig") => s"$p:${i + 1}: ${l.trim}"
       }
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))

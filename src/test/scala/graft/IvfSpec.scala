@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.CosineSimilarity.cosineSim
 import graft.operators.Ivf
 
-/** IVF ANN: recall against the brute-force cosine truth and seeded
-  * determinism (the properties the rows-only driver check cannot see). */
+/** IVF ANN: recall against the brute-force cosine truth, the scan bound
+  * and seeded determinism (the quality properties the driver's hash
+  * check cannot see). */
 class IvfSpec extends SparkSpec {
 
   private val ivfSf = "/root/testdata/sf0.01"
@@ -26,9 +27,10 @@ class IvfSpec extends SparkSpec {
   }
 
   test("deterministic-quantizer IVF recall@3 over the nProbe nearest lists") {
-    // the DEFAULT (oracle-checked) path since r16: seeded Lloyd with
-    // exact-integer means — its recall must hold the same floor as the
-    // MLlib reference fit, or the determinism was bought with quality
+    // seeded Lloyd with exact-integer means: determinism must not be
+    // bought with quality, so recall keeps the k-means floor. The
+    // fixture's embeddings are unit-norm to 1e-7, so raw and normalized
+    // cells coincide here; the floor leaves seed/version slack.
     val got = Ivf.ivfTopK(spark, ivfSf)
       .select("probe_id", "cand_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -37,33 +39,12 @@ class IvfSpec extends SparkSpec {
     assert(recall >= 0.55, f"deterministic IVF recall degraded to $recall%.3f")
   }
 
-  test("MLlib-quantizer IVF recall@3 over the nProbe nearest lists") {
-    val got = Ivf.ivfTopKTrained(spark, ivfSf)
-      .select("probe_id", "cand_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = got.intersect(truth).size.toDouble / truth.size
-    info(f"IVF recall@3: $recall%.3f (searching ${Ivf.NProbe}/${Ivf.K} lists)")
-    // RE-MEASURED 0.617 after the r10 metric-alignment fix (quantizer
-    // trains/probes in L2-NORMALIZED space — 32 cells, probe 4, 12.5%
-    // scan). Identical to the r9 raw-space number, and that is EXPECTED,
-    // not a coincidence: the fixture's embeddings are unit-norm to 1e-7
-    // (verified via the parquet), so raw and normalized cells coincide
-    // here — the fixture cannot distinguish the two geometries. The fix
-    // is for real corpora, where unnormalized magnitudes split
-    // equal-direction vectors across cells and cosine neighbors become
-    // unreachable at any nProbe; this assertion pins the normalized
-    // path's recall so a quantizer regression (seed, k, probe count)
-    // still fails loudly. Far above data-oblivious sign-LSH (0.133) on
-    // this weak-similarity fixture; the floor leaves seed/version slack.
-    assert(recall >= 0.55, f"IVF recall degraded to $recall%.3f")
-  }
-
   test("deterministic quantizer: probed lists cover a bounded corpus fraction") {
     // recall alone can be bought with degenerate geometry (one giant
     // cluster ≈ brute force); the IVF scale contract is recall AT a
     // bounded scan fraction. Measure the mean fraction of the corpus
-    // the NProbe probed lists actually contain.
-    import org.apache.spark.sql.SparkSession
+    // the NProbe probed lists actually contain — through the same
+    // probe-ranking step the query's search runs.
     val lists = Ivf.detListSizes(spark, ivfSf)
     val n = lists.values.sum.toDouble
     val probed = Ivf.probedLists(spark, ivfSf)
@@ -74,13 +55,10 @@ class IvfSpec extends SparkSpec {
     assert(mean <= 0.35, f"probed fraction $mean%.3f — quantizer degenerate, scan bound lost")
   }
 
-  test("seeded quantizer: identical results across runs, both paths") {
+  test("seeded quantizer: identical results across runs") {
     val a = Ivf.ivfTopK(spark, ivfSf).collect().map(_.toSeq).toSeq
     val b = Ivf.ivfTopK(spark, ivfSf).collect().map(_.toSeq).toSeq
     assert(a.nonEmpty && a == b)
-    val c = Ivf.ivfTopKTrained(spark, ivfSf).collect().map(_.toSeq).toSeq
-    val d = Ivf.ivfTopKTrained(spark, ivfSf).collect().map(_.toSeq).toSeq
-    assert(c.nonEmpty && c == d)
   }
 
   test("deterministic centers: cache replaced when the corpus changes, reused otherwise") {
@@ -89,36 +67,14 @@ class IvfSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$sf/embeddings.parquet"),
       java.nio.file.Paths.get(s"$dir/embeddings.parquet"))
     Ivf.ivfTopK(spark, dir).collect()
-    val first = Ivf.detCache.get(dir)
-    assert(first != null)
+    val first = Ivf.centersByDir.entry(dir)
+    assert(first.nonEmpty)
     Ivf.ivfTopK(spark, dir).collect()
-    assert(Ivf.detCache.get(dir)._2 eq first._2)
+    assert(Ivf.centersByDir.entry(dir).get._2.value eq first.get._2.value)
     val f = new java.io.File(s"$dir/embeddings.parquet")
     assert(f.setLastModified(f.lastModified() + 60000))
     Ivf.ivfTopK(spark, dir).collect()
-    val second = Ivf.detCache.get(dir)
-    assert(second._1 != first._1 && !(second._2 eq first._2))
-  }
-
-  test("quantizer cache: reused while the corpus is unchanged, REPLACED when it changes") {
-    // private scratch copy of the fixture so its mtime can be bumped
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_cache").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/embeddings.parquet"),
-      java.nio.file.Paths.get(s"$dir/embeddings.parquet"))
-    Ivf.ivfTopKTrained(spark, dir).collect()
-    val first = Ivf.modelCache.get(dir)
-    assert(first != null)
-    // unchanged corpus: the fitted model is reused, not retrained
-    Ivf.ivfTopKTrained(spark, dir).collect()
-    assert(Ivf.modelCache.get(dir)._2 eq first._2)
-    // changed corpus (new mtime => new content signature): the dir's single
-    // entry is replaced — superseded index evicted, cache bounded by dirs
-    val f = new java.io.File(s"$dir/embeddings.parquet")
-    assert(f.setLastModified(f.lastModified() + 60000))
-    Ivf.ivfTopKTrained(spark, dir).collect()
-    val second = Ivf.modelCache.get(dir)
-    assert(second._1 != first._1, "content signature should have changed")
-    assert(!(second._2 eq first._2), "model should have been retrained")
+    val second = Ivf.centersByDir.entry(dir).get
+    assert(second._1 != first.get._1 && !(second._2.value eq first.get._2.value))
   }
 }

@@ -85,22 +85,20 @@ class MlScoringSpec extends SparkSpec {
   }
 
   test("model cache: reused while the corpus is unchanged, REPLACED when it changes") {
-    // the Ivf.modelCache discipline, verified for the ml pipeline too
+    // the Tables.FixtureCache lifecycle on the ml pipeline's model
     val dir = java.nio.file.Files.createTempDirectory("graft_ml_cache").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    MlScoring.fitCrowdRisk(spark, dir)
-    val first = MlScoring.modelCache.get(dir)
-    assert(first != null)
-    MlScoring.fitCrowdRisk(spark, dir)
-    assert(MlScoring.modelCache.get(dir)._2 eq first._2, "unchanged corpus must reuse the model")
+    val first = MlScoring.fitCrowdRisk(spark, dir)
+    val firstSig = MlScoring.modelByDir.entry(dir).map(_._1)
+    assert(firstSig.nonEmpty)
+    assert(MlScoring.fitCrowdRisk(spark, dir) eq first, "unchanged corpus must reuse the model")
     val f = new java.io.File(s"$dir/documents.parquet")
     assert(f.setLastModified(f.lastModified() + 60000))
-    MlScoring.fitCrowdRisk(spark, dir)
-    val second = MlScoring.modelCache.get(dir)
-    assert(second._1 != first._1, "content signature should have changed")
-    assert(!(second._2 eq first._2), "model should have been refitted")
+    val second = MlScoring.fitCrowdRisk(spark, dir)
+    assert(MlScoring.modelByDir.entry(dir).map(_._1) != firstSig, "content signature should have changed")
+    assert(!(second eq first), "model should have been refitted")
   }
 
   test("q_ml_risk: per-camera rollup is stable-shaped and label-consistent") {

@@ -449,8 +449,8 @@ class StreamSourceSpec extends SparkSpec {
   }
 
   test("filelog line framing: '\\n' is the only record boundary — interior CR is data, CRLF tolerated") {
-    // r14 advice: lineCount counted '\n' bytes while the reader used
-    // BufferedReader.readLine (which also splits at a bare '\r') — a
+    // r14 advice: the offset counter counted '\n' bytes while the reader
+    // used BufferedReader.readLine (which also splits at a bare '\r') — a
     // foreign producer emitting a stray CR desynchronized offsets from
     // record indexes. Reader and counter now share one line definition.
     import graft.sources.{FileLog, FileLogMicroBatchStream, FileLogInputPartition, FileLogOffset, FileLogReaderFactory}
