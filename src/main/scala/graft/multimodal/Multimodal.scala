@@ -1,25 +1,15 @@
 package graft.multimodal
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing (BASELINE.json mandate): image/audio/video as
-  * opaque BINARY columns + typed metadata, with decode / feature-extract /
-  * resize / frame-sample as batched per-partition transforms.
-  *
-  * This is the engine form of the reference's inference boundary
-  * (`blobFromImage` + `net.forward`, `main.py:93-96`; CLIP encode
-  * `main.py:71-79`): the engine's contract starts and ends at
-  * schema-typed columns; the model call is a pluggable per-partition
-  * function with batch shape (SURVEY §2.2 P1/P2, S3 broadcast-model
-  * pattern).
-  *
-  * The decode step itself is a clearly-marked DETERMINISTIC STUB — the
-  * container has no image/audio codecs — but everything Spark-side is
-  * real and tested: schema, batching, per-partition model init, output
-  * shape.
+  * opaque BINARY columns + typed metadata, with frame sampling as pure
+  * metadata arithmetic. The model call over frame payloads lives in the
+  * crowd pipeline's pluggable per-partition scorer
+  * (graft.pipeline.CrowdPipeline).
   */
 object Multimodal {
 
@@ -32,8 +22,6 @@ object Multimodal {
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("n_frames", IntegerType))))))
-
-  val featureDim = 8
 
   /** Fixture stand-in: documents texts as payload bytes, metadata derived
     * deterministically from doc_id. */
@@ -48,74 +36,6 @@ object Multimodal {
         (lit(64) + (col("doc_id") % 5) * 32).cast("int").as("height"),
         when(col("doc_id") % 3 === 2, ((col("doc_id") % 30) + 1).cast("int"))
           .otherwise(lit(1)).cast("int").as("n_frames")).as("meta"))
-
-  /** ======= STUB: stands in for a real image/audio decoder + encoder =====
-    * Deterministic fake "model": features are byte-sum folds of the
-    * payload. Replace with a real codec + model forward pass; the
-    * signature (bytes → Array[Float] of featureDim) is the contract. */
-  def decodeStub(payload: Array[Byte]): Array[Float] = {
-    val acc = new Array[Float](featureDim)
-    var i = 0
-    while (i < payload.length) {
-      acc(i % featureDim) += (payload(i) & 0xff) / 255.0f
-      i += 1
-    }
-    acc
-  }
-  // =======================================================================
-
-  /** Batched per-partition feature extraction: the Scala analog of a
-    * Pandas-UDF-over-mapInPandas — rows are grouped into fixed-size
-    * batches, the "model" is initialized once per partition (the broadcast
-    * model pattern, `main.py:26-48` module scope / SURVEY S3), and each
-    * batch goes through one forward call. */
-  def extractFeatures(media: DataFrame, batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("media_type", StringType),
-      StructField("features", ArrayType(FloatType, containsNull = false))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.select("media_id", "media_type", "payload").mapPartitions { rows =>
-      // per-partition init point: a real impl deserializes the broadcast
-      // model here, once, before the batch loop. The model boundary is
-      // BATCH-shaped — one call per grouped batch, like a Pandas UDF's
-      // per-batch invoke (the stub maps internally; a real vectorized
-      // model consumes the whole payload batch in one forward pass) —
-      // a per-row call inside the group would make grouped() a no-op.
-      // null payload → NULL features, not a zero vector (r11 second-pass
-      // review): a missing media blob must not NPE the partition, but a
-      // fabricated all-zero embedding would look like a legitimate point
-      // to every similarity consumer (cosine between two zero vectors is
-      // 0/0 → NaN; sq_dist ranks all missing rows as mutual nearest
-      // neighbors) — absent input stays absent in the output, the
-      // null-image → no-detections contract the CrowdPipeline scorers
-      // implement. The row itself is kept (metadata survives; callers
-      // filter on features IS NULL to audit missing blobs).
-      val modelBatch: Seq[Array[Byte]] => Seq[Array[Float]] =
-        _.map(p => if (p == null) null else decodeStub(p))
-      rows.grouped(batchSize).flatMap { batch =>
-        val feats = modelBatch(batch.map(_.getAs[Array[Byte]](2)))
-        // lazyZip truncates to the shorter side: a real batch model that
-        // returns the wrong number of feature rows would silently DROP
-        // payload rows (or features) — fail loudly instead
-        require(feats.size == batch.size,
-          s"batch model returned ${feats.size} feature rows for a " +
-            s"${batch.size}-payload batch — model must be 1:1 per batch")
-        batch.lazyZip(feats).map { (r, f) =>
-          Row(r.getLong(0), r.getString(1), if (f == null) null else f.toSeq)
-        }
-      }
-    }(enc)
-  }
-
-  /** Metadata-level resize: pure column arithmetic, no payload touch —
-    * resizing bookkeeping belongs in the plan, not the UDF. */
-  def resizeMeta(media: DataFrame, targetW: Int, targetH: Int): DataFrame =
-    media
-      .withColumn("scale_x", lit(targetW).cast("double") / col("meta.width"))
-      .withColumn("scale_y", lit(targetH).cast("double") / col("meta.height"))
-      .withColumn("meta", struct(
-        lit(targetW).as("width"), lit(targetH).as("height"), col("meta.n_frames").as("n_frames")))
 
   /** Frame sampling plan for videos: every k-th frame index as rows —
     * generator-shaped (E-UDTF via sequence+explode), no payload decode. */

@@ -221,15 +221,14 @@ object Ivf {
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
   }
 
-  // ---- Incremental index maintenance (r12) ----
+  // ---- Persisted index (r12) ----
   //
-  // A 100 TB embedding corpus is not indexed once: vectors arrive in
-  // crawl deltas forever, and refitting + reassigning the world per
-  // delta re-shuffles the corpus. The persisted index is therefore a
+  // Refitting + reassigning a 100 TB embedding corpus per search
+  // re-shuffles the corpus. The persisted index is therefore a
   // [[graft.sources.BucketedState]] posting table CLUSTERED BY list —
-  // the same append-only bucketed discipline as the dedup band index —
-  // plus a sidecar parquet of the frozen coarse-quantizer centers. The
-  // quantizer fits ONCE, on the first batch (standard IVF practice:
+  // the layout the LM model, the gram index and the semdedup vectors
+  // share — plus a sidecar parquet of the frozen coarse-quantizer
+  // centers. The quantizer fits ONCE, on the first batch (standard IVF practice:
   // centroids are trained on a sample and frozen; recall drifts only if
   // the data distribution does, and that is a re-index decision, not a
   // per-delta one). Later deltas assign against the stored centers — a
@@ -301,17 +300,6 @@ object Ivf {
     }
     st.append(spark, novel)
   }
-
-  /** Policy-driven maintenance of the posting table — the shared
-    * [[graft.sources.BucketedState.maintain]] knob (compact when the
-    * committed file count exceeds N sets per bucket); call after each
-    * fold in a long-running loop. Posting rows are unique by
-    * construction (novel-only appends), so the merge is identity —
-    * pure file-count compaction. Returns whether a rewrite ran. */
-  def maintainIvfIndex(spark: SparkSession, indexPath: String,
-                       maxFileSetsPerBucket: Int =
-                         graft.sources.BucketedState.DefaultMaxFileSetsPerBucket): Boolean =
-    postingState(indexPath).maintain(spark, maxFileSetsPerBucket)(identity)
 
   /** q_ivf_delta (r12 verdict task #4): [[ivfSearch]] over a PERSISTED
     * BucketedState index as a benched SparkEntry shape — the production

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.SortedFolds
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.plans.Eager.EagerOps
 
 /** Text analysis + deduplication family (SURVEY E-TEXT, E-DEDUP, E-STR;
@@ -497,8 +497,8 @@ object TextOps {
     minhashPairsOver(shingleCodeFrame(spark, dir))
 
   /** (doc_id, band, key) LSH band keys of a (doc_id, cs) shingle-code
-    * frame — the signature stage shared by [[minhashPairsOver]] (batch
-    * self-join) and [[dedupIncrement]] (delta-vs-index join). One
+    * frame — the signature stage shared by [[minhashPairsOver]] (pair
+    * self-join) and [[dedupAdmissions]] (bucket-min anti-join). One
     * vectorized pass per doc: shingle codes once (codegen'd TokenCode),
     * then ALL 16 minhash permutations in a single codegen'd sweep over
     * the code array (MinHashSig — the HOF array_min-per-permutation twin
@@ -571,18 +571,15 @@ object TextOps {
     connectedComponents(Tables.documents(spark, dir).select(col("doc_id")),
       minhashPairs(spark, dir)).orderBy("doc_id")
 
-  /** q_dedup_admit: the batch-grain form of [[dedupIncrement]]'s
-    * admission policy as a PURE, oracle-checkable query — every document
-    * flagged admitted iff it has no smaller-doc_id band-bucket mate
-    * (pure LSH bucket grain; bucket-mates are exactly the minhashLsh
-    * pair listing, so the oracle is `doc_id ∉ d2 column of the shared
-    * pairs CTE`). This pins the stateful verb's policy under the
-    * row/hash gate; IncrementalDedupSpec separately pins that a fresh
-    * one-batch increment admits exactly this set. Differs from the
-    * cluster-min keep rule (q_dedup_decisions): on a chain 1–5, 3–5 the
-    * bucket rule keeps 3 (no smaller MATE) while cluster-min keeps only
-    * the component minimum 1 — the incremental policy is the local one,
-    * because an index lookup cannot see components that form later.
+  /** q_dedup_admit: keep-first near-dup admission at LSH band-bucket
+    * grain as a PURE, oracle-checkable query — every document flagged
+    * admitted iff it has no smaller-doc_id band-bucket mate
+    * (bucket-mates are exactly the minhashLsh pair listing, so the
+    * oracle is `doc_id ∉ d2 column of the shared pairs CTE`). Differs
+    * from the cluster-min keep rule (q_dedup_decisions): on a chain 1–5,
+    * 3–5 the bucket rule keeps 3 (no smaller MATE) while cluster-min
+    * keeps only the component minimum 1 — the bucket rule is the local
+    * one, decidable per document without the component graph.
     *
     * Scale shape: signature projection (narrow) → bucket-min partial
     * agg → self-equi-join on bucket → anti-join; nothing fact-quadratic
@@ -604,164 +601,12 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Incremental near-dup admission — the daily-crawl-delta loop of
-    * [[minhashLsh]]: a NEW batch of documents (doc_id, text) is checked
-    * against a PERSISTED band-key index of every batch seen so far,
-    * survivors are returned, and the batch's keys are folded into the
-    * index. At 100 TB dedup is not one batch job: deltas arrive forever,
-    * and re-running the corpus-wide self-join per delta re-shuffles the
-    * world — the index join touches only the delta's buckets.
-    *
-    * Admission: a doc is REJECTED iff any of its band keys was already
-    * seen — in the index, or on a smaller-doc_id document of the same
-    * batch (pure LSH band grain: bucket collision = duplicate, the
-    * bucket-dedup policy; the exact-Jaccard verify stage of the batch
-    * path needs the stored corpus' shingles, and an index stores
-    * sketches, not corpora). Docs too short to shingle carry no keys and
-    * are admitted. The index remembers keys of EVERY seen doc, admitted
-    * or not ("this content neighborhood has been observed"), which makes
-    * admission EXACTLY composable: increments over doc_id-ascending
-    * slices ≡ one batch under the same rule (IncrementalDedupSpec pins
-    * it); for unordered slices, arrival order is the admission order —
-    * the semantics a crawl actually wants.
-    *
-    * Index layout (r12, r11 verdict task #2): an EXTERNAL BUCKETED table
-    * at indexPath — `bucketBy(band, key)` via saveAsTable, re-registered
-    * from the files by DDL when a fresh session lacks the catalog entry
-    * (the data outlives the in-memory catalog). Bucketing is the whole
-    * point at 100 TB: the daily probe semi-join and the fold's anti-join
-    * both cluster on (band, key), so the corpus-sized index side plans
-    * NO Exchange — only the delta shuffles, into the index's bucket
-    * count (IncrementalDedupSpec pins the plan). The fold is APPEND-ONLY:
-    * each delta appends just its NOVEL keys (anti-join against the
-    * table), so folding is delta-sized, naturally idempotent under
-    * replay (replayed keys are no longer novel), and crash-safe — an
-    * uncommitted append is invisible to scans, and re-running appends
-    * exactly the missing keys. A key therefore keeps its FIRST-arrival
-    * min_doc (admission reads key existence only; min_doc is
-    * provenance). Appends accumulate files per bucket;
-    * [[compactDedupIndex]] is the maintenance verb — a per-bucket
-    * exchange-free rewrite under the maintainAggState staged-swap
-    * discipline. SINGLE-WRITER per indexPath, as before. The
-    * rejected-id set (batch-bounded) is frozen (Eager) BEFORE the
-    * fold — the returned frame must not lazily re-scan the table after
-    * the batch's own keys land in it. */
-  def dedupIncrement(spark: SparkSession, indexPath: String, docs: DataFrame): DataFrame = {
-    // frozen (r14 lazy-persist sweep): dedupRejected's single action
-    // plans three distinct builds over this frame (seen-probe, batchMin
-    // agg, the batchMin join's probe side) — materialize before they fan
-    // out; released before return
-    val keys = batchBandKeys(docs).eagerly
-    val batchMin = batchMinOf(keys)
-    val rejected = dedupRejected(spark, indexPath, keys, batchMin)
-    dedupFold(spark, indexPath, batchMin)
-    keys.release()
-    docs.join(rejected, Seq("doc_id"), "left_anti")
-  }
-
-  /** Band keys of one delta batch: shingle (docs too short carry no
-    * keys) → 16-permutation minhash → 2 band keys per doc. Shared by
-    * [[dedupIncrement]] and the streaming sink's per-batch body. */
-  private[graft] def batchBandKeys(docs: DataFrame): DataFrame =
-    bandKeyFrame(
-      docs.select(col("doc_id"), array_distinct(shingleCodes(col("text"))).as("cs"))
-        .filter(size(col("cs")) > 0))
-
-  /** Per-(band, key) first-document of a batch-keys frame. */
-  private[graft] def batchMinOf(keys: DataFrame): DataFrame =
-    keys.groupBy("band", "key").agg(min("doc_id").as("min_doc"))
-
-  /** The admission decision of one batch against the CURRENT index:
-    * doc_ids rejected because a band key is already in the index, or on
-    * a smaller-doc_id document of the same batch. Frozen (Eager: the
-    * plan no longer reads the index) so callers can fold the batch
-    * into the index and still evaluate the decision afterwards. */
-  private[graft] def dedupRejected(spark: SparkSession, indexPath: String,
-                                   keys: DataFrame, batchMin: DataFrame): DataFrame = {
-    val seen = ensureIndexTable(spark, indexPath)
-      .map(t => spark.table(t).select("band", "key"))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("band", IntegerType), StructField("key", StringType)))))
-    keys
-      .join(seen, Seq("band", "key"), "left_semi")
-      .select("doc_id")
-      .unionByName(keys.join(batchMin, Seq("band", "key"))
-        .filter(col("doc_id") > col("min_doc"))
-        .select("doc_id"))
-      .distinct()
-      .eagerly
-  }
-
-  /** Fold one batch's (band, key, min_doc) partials into the persisted
-    * index: create the external bucketed table on first contact, append
-    * only the NOVEL keys afterwards (anti-join on the bucket keys — the
-    * index side co-locates, the delta shuffles). Idempotent: replaying
-    * a folded batch finds nothing novel and appends nothing. */
-  private[graft] def dedupFold(spark: SparkSession, indexPath: String,
-                               batchMin: DataFrame): Unit = {
-    val st = dedupIndexState(indexPath)
-    st.ensure(spark) match {
-      case Some(t) =>
-        st.append(spark, batchMin
-          .join(spark.table(t).select("band", "key"), Seq("band", "key"), "left_anti"))
-      case None =>
-        st.append(spark, batchMin)
-    }
-  }
-
-  /** Compact the persisted index: appends leave one file set per folded
-    * delta, so a long-running loop periodically rewrites the table to
-    * one file per bucket. The rewrite's groupBy sits ON the bucket keys
-    * — a bucketed scan aggregates exchange-free, so compaction is
-    * per-bucket local however large the index ([[graft.sources
-    * .BucketedState.compact]]'s staged-swap discipline). */
-  def compactDedupIndex(spark: SparkSession, indexPath: String): Unit =
-    dedupIndexState(indexPath).compact(spark)(dedupIndexMerge)
-
-  /** Policy-driven maintenance of the dedup index — the shared
-    * [[graft.sources.BucketedState.maintain]] knob (compact when the
-    * committed file count exceeds N sets per bucket); call after each
-    * fold in a long-running loop. Returns whether a rewrite ran. */
-  def maintainDedupIndex(spark: SparkSession, indexPath: String,
-                         maxFileSetsPerBucket: Int =
-                           graft.sources.BucketedState.DefaultMaxFileSetsPerBucket): Boolean =
-    dedupIndexState(indexPath).maintain(spark, maxFileSetsPerBucket)(dedupIndexMerge)
-
-  private def dedupIndexMerge(df: DataFrame): DataFrame =
-    df.groupBy("band", "key").agg(min("min_doc").as("min_doc"))
-
-  /** Bucket count of the persisted index layout — fixed at table
-    * creation (appends must match it). 16 suits the local fixture; a
-    * production 100 TB index would size this near its cluster's
-    * shuffle-partition count once, at first creation. */
-  private[graft] val DedupIndexBuckets = 16
-
-  /** The band-key index as a [[graft.sources.BucketedState]] — the
-    * shared append-only bucketed-table discipline (also behind the IVF
-    * posting lists), clustered on the (band, key) probe keys. */
-  private[graft] def dedupIndexState(indexPath: String): graft.sources.BucketedState =
-    graft.sources.BucketedState(indexPath, "graft_dedup_idx_",
-      "band INT, `key` STRING, min_doc BIGINT", Seq("band", "key"), DedupIndexBuckets)
-
-  /** Catalog name of the index table for a path (spec hook). */
-  private[graft] def dedupIndexTable(indexPath: String): String =
-    dedupIndexState(indexPath).table
-
-  /** The index table for indexPath, re-registering from on-disk files
-    * when this session's catalog has never seen it; None when no
-    * committed index data exists yet (spec hook). */
-  private[graft] def ensureIndexTable(spark: SparkSession,
-                                      indexPath: String): Option[String] =
-    dedupIndexState(indexPath).ensure(spark)
-
   // ------------------------------------------------------------------
-  // Incremental unigram corpus model (r12) — the third leg of the
-  // incremental-state family (dedup band index, IVF posting lists):
-  // the daily-crawl loop behind [[lmScore]]/CCNet-style scoring keeps
-  // the corpus unigram counts in a persisted model and scores each
-  // delta under it, instead of rescanning the whole corpus per day.
+  // Persisted unigram corpus model (r12) — one of the BucketedState
+  // indexes (with the IVF postings, the gram index and the semdedup
+  // vectors): [[lmScore]]-style scoring keeps the corpus unigram counts
+  // in a persisted model and scores documents under it, instead of
+  // rescanning the whole corpus per scoring run.
   // ------------------------------------------------------------------
 
   /** Bucket count of the persisted model layout — fixed at creation
@@ -791,7 +636,7 @@ object TextOps {
   /** Fold one delta of documents into the persisted model at modelPath.
     *
     * CONTRACT: batch ids are strictly increasing per modelPath (a crawl
-    * loop's day number; a streaming sink's micro-batch id). The replay
+    * loop's day number; a stream's micro-batch id). The replay
     * guard is `batchId > max(batch_id in table)` — appends are atomic
     * (an uncommitted append is invisible, the BucketedState discipline),
     * so after a crash either the batch is fully absent (replay re-folds
@@ -806,8 +651,8 @@ object TextOps {
     * modelPath. Exact count sums make slices compose to the one-shot
     * model under ANY slicing, so ordering only matters for these guards.
     *
-    * SINGLE-WRITER per modelPath, like the dedup index. The guard's
-    * read-then-append is non-atomic, so violation detection (r12
+    * SINGLE-WRITER per modelPath, like every BucketedState path. The
+    * guard's read-then-append is non-atomic, so violation detection (r12
     * advice) is two-layer: same-JVM appends serialize on a per-path
     * lock (making the race impossible where it can actually occur in
     * this runtime), and cross-process appends are detected by an
@@ -1028,25 +873,6 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Compact the persisted model: appends leave one partial row set per
-    * folded batch; the rewrite merges to one (tok, c) row each, keeping
-    * max(batch_id) so the replay guard survives compaction (the global
-    * max lives on some token's row). Per-bucket exchange-free under the
-    * staged-swap discipline. */
-  def compactLmModel(spark: SparkSession, modelPath: String): Unit =
-    lmModelState(modelPath).compact(spark)(lmModelMerge)
-
-  /** Policy-driven maintenance of the model table — the shared
-    * [[graft.sources.BucketedState.maintain]] knob; call after each
-    * fold in a long-running loop. Returns whether a rewrite ran. */
-  def maintainLmModel(spark: SparkSession, modelPath: String,
-                      maxFileSetsPerBucket: Int =
-                        graft.sources.BucketedState.DefaultMaxFileSetsPerBucket): Boolean =
-    lmModelState(modelPath).maintain(spark, maxFileSetsPerBucket)(lmModelMerge)
-
-  private def lmModelMerge(df: DataFrame): DataFrame =
-    df.groupBy("tok").agg(sum("c").as("c"), max("batch_id").as("batch_id"))
-
   /** q_lm_delta (r12 verdict task #4): [[lmScoreDelta]] as a benched,
     * oracle-checked SparkEntry shape — score the documents table under a
     * PERSISTED model of the same corpus, exercising the production
@@ -1075,66 +901,6 @@ object TextOps {
     require(!spark.table(t).isEmpty,
       s"LM model at $modelPath is empty — fold a non-empty batch first")
     t
-  }
-
-  /** Per-language tercile CUTS of a corpus snapshot — (lang, cut1,
-    * cut2) with the EXACT (unrounded) rarity values at [[ccnetBuckets]]'
-    * head/middle upper boundaries. Freeze these beside the [[lmModelState
-    * unigram model]] of the same snapshot and [[ccnetBucketDelta]] buckets
-    * every later crawl delta against them. A language too small to fill
-    * all three terciles carries null for the missing cut(s). */
-  def ccnetCuts(spark: SparkSession, dir: String): DataFrame =
-    ccnetBucketFrames(spark, dir)
-      .groupBy("lang")
-      .agg(max(when(col("b") === 1, col("max_r"))).as("cut1"),
-        max(when(col("b") === 2, col("max_r"))).as("cut2"))
-
-  /** Bucket a delta of documents into FROZEN per-language terciles: the
-    * CCNet daily loop's scoring face — rarity under the frozen unigram
-    * model at modelPath ([[lmScoreDelta]]'s join shape; OOV tokens take
-    * add-1 with c = 0), compared against the frozen `cuts` (from
-    * [[ccnetCuts]] on the model's snapshot).
-    *
-    * Semantics vs the batch query, documented: [[ccnetBuckets]]' ntile
-    * rule splits an equal-rarity TIE GROUP straddling a boundary rank
-    * across buckets by doc_id; a frozen-cut comparison is value-
-    * deterministic, so the whole group lands in the LOWER bucket
-    * (rarity ≤ cut). Every other document buckets identically
-    * (CcnetDeltaSpec pins both arms). Languages absent from `cuts`, or
-    * present with ANY null cut, report "uncalibrated" — per-language
-    * calibration is the paper's point, so an unseen language must not
-    * silently ride another language's cuts, and a language whose
-    * snapshot was too small to fill all three terciles (cut2 null from
-    * [[ccnetCuts]]) has no defensible head/middle/tail boundary either:
-    * the earlier shape silently sent every rarity > cut1 to 'tail' with
-    * 'middle' unreachable (r12 advice), which looked calibrated but
-    * wasn't. */
-  def ccnetBucketDelta(spark: SparkSession, modelPath: String,
-                       cuts: DataFrame, docs: DataFrame): DataFrame = {
-    val t = lmModelTableNonEmpty(spark, modelPath)
-    val cf = spark.table(t).groupBy("tok").agg(sum("c").as("c"))
-    val nv = cf.agg(sum("c").as("n"), count(lit(1)).as("v"))
-    val tf = docs
-      .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy("doc_id", "lang", "tok").agg(count(lit(1)).as("tf"))
-    tf.join(cf, Seq("tok"), "left")
-      .crossJoin(broadcast(nv))
-      .withColumn("term",
-        col("tf") * ((col("n") + col("v")).cast("double")
-          / (coalesce(col("c"), lit(0L)) + 1)))
-      .groupBy("doc_id", "lang")
-      .agg(collect_list(struct(col("tok"), col("term"))).as("l"),
-        sum("tf").as("n_tokens"))
-      .select(col("doc_id"), col("lang"),
-        (SortedFolds.sortedTermSum(col("l")) / col("n_tokens")).as("rarity"))
-      .join(broadcast(cuts), Seq("lang"), "left")
-      .select(col("doc_id"), col("lang"),
-        when(col("cut1").isNull || col("cut2").isNull, "uncalibrated")
-          .when(col("rarity") <= col("cut1"), "head")
-          .when(col("rarity") <= col("cut2"), "middle")
-          .otherwise("tail").as("bucket"),
-        round(col("rarity"), 4).as("rarity"))
-      .orderBy("doc_id")
   }
 
   /** Link-analysis centrality over the near-dup pair graph: PageRank with
@@ -2072,11 +1838,9 @@ object TextOps {
       .orderBy("lang", "bucket")
 
   /** Unrounded per-(lang, tercile) frame behind [[ccnetBuckets]] —
-    * (lang, b ∈ {1,2,3}, n_docs, min_r, max_r) — shared with
-    * [[ccnetCuts]], whose frozen cut values must be the EXACT rarity
-    * doubles (the display query rounds to 4dp; a cut compared at 4dp
-    * would misbucket everything between the true cut and its rounding). */
-  private[graft] def ccnetBucketFrames(spark: SparkSession, dir: String): DataFrame = {
+    * (lang, b ∈ {1,2,3}, n_docs, min_r, max_r); the query rounds the
+    * rarity bounds to 4dp only at display. */
+  private def ccnetBucketFrames(spark: SparkSession, dir: String): DataFrame = {
     val tf = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("tok"))
       .groupBy("doc_id", "lang", "tok").agg(count(lit(1)).as("tf"))
@@ -2409,7 +2173,7 @@ object TextOps {
     * j the 1-based start token and k the codegen'd xxhash64 token-tuple
     * code — the shared wide stream under the batch hit set
     * ([[dupGramHitsOver]]) and the incremental substring leg
-    * ([[substringStrip]]/[[substringIncrement]]). Narrow
+    * ([[substringStrip]]/[[substringFold]]). Narrow
     * (scan → explode → hash), no shuffle. */
   private[graft] def gramKeyFrame(docs: DataFrame): DataFrame =
     docs
@@ -2516,9 +2280,14 @@ object TextOps {
         coalesce(col("text_clean"), lit("")).as("text_clean"))
   }
 
-  /** The duplicated-gram index as a [[graft.sources.BucketedState]] —
-    * the substring leg of the incremental family (dedup band index, IVF
-    * postings, LM model): one row per DISTINCT 6-gram key ever seen,
+  /** Bucket count of the gram index layout — fixed at creation
+    * (appends must match it); production sizes this near the cluster's
+    * shuffle-partition count once. */
+  private[graft] val SubstringIndexBuckets = 16
+
+  /** The duplicated-gram index as a [[graft.sources.BucketedState]]
+    * (beside the IVF postings, the LM model and the semdedup vectors):
+    * one row per DISTINCT 6-gram key ever seen,
     * with the first document that carried it. Clustered on k so the
     * probe semi-join and the fold anti-join plan no Exchange on the
     * index side — only the delta's gram stream moves. State size is
@@ -2527,7 +2296,7 @@ object TextOps {
     * bucketed + append-only instead of monolithic. */
   private[graft] def substringIndexState(indexPath: String): graft.sources.BucketedState =
     graft.sources.BucketedState(indexPath, "graft_substr_idx_",
-      "k BIGINT, min_doc BIGINT", Seq("k"), DedupIndexBuckets)
+      "k BIGINT, min_doc BIGINT", Seq("k"), SubstringIndexBuckets)
 
   /** Keep-first span stripping of a delta against the FROZEN gram index
     * at indexPath — the scoring face of incremental exact-substring
@@ -2544,18 +2313,9 @@ object TextOps {
     * absence fails loudly.
     *
     * Mutates nothing: probe-only, so bench repeats and oracle runs are
-    * idempotent. doc_id-ordered batches compose: two slices through
-    * [[substringIncrement]] produce exactly the one-batch decisions
-    * (IncrementalSubstringSpec). */
+    * idempotent. */
   def substringStrip(spark: SparkSession, indexPath: String,
-                     docs: DataFrame): DataFrame =
-    substringStripUnsorted(spark, indexPath, docs).orderBy("doc_id")
-
-  /** [[substringStrip]] without the trailing doc_id sort — the sink and
-    * bench form (batch dirs and noop sinks don't consume order; the
-    * sort is for callers comparing output row-for-row). */
-  private[graft] def substringStripUnsorted(spark: SparkSession, indexPath: String,
-                                            docs: DataFrame): DataFrame = {
+                     docs: DataFrame): DataFrame = {
     // three consumers inside substringHits (seen-probe, batchMin, the
     // batchMin join's probe side) — frozen, or the scan→explode→hash
     // stream runs three times per call, and materialized BEFORE the
@@ -2564,14 +2324,14 @@ object TextOps {
     // substringHits is frozen too.
     val pos = gramKeyFrame(docs).eagerly
     try stripSpans(docs, islandSpans(substringHits(spark, indexPath, pos)))
+      .orderBy("doc_id")
     finally pos.release()
   }
 
   /** The keep-first hit positions of one batch's gram stream against the
     * CURRENT index: (doc_id, j) rows to strip. Frozen (Eager: the plan
-    * no longer reads the index) so callers can fold the batch into the
-    * index and still evaluate the decision afterwards — the
-    * [[dedupRejected]] discipline. */
+    * no longer reads the index or the gram stream), so [[substringStrip]]
+    * can release its frozen gram stream before the result runs. */
   private def substringHits(spark: SparkSession, indexPath: String,
                             pos: DataFrame): DataFrame = {
     val seen = substringIndexState(indexPath).ensure(spark)
@@ -2605,52 +2365,14 @@ object TextOps {
     }
   }
 
-  /** One increment of the substring-dedup loop: strip the batch
-    * keep-first against the current index ([[substringStrip]]'s
-    * decision, computed and materialized BEFORE the fold), then fold
-    * the batch's novel gram keys in. Returns the stripped batch.
-    * Single-delivery contract like [[dedupIncrement]]: replaying a
-    * folded batch through the RAW api finds every key already indexed
-    * and strips all covered text — the streaming face
-    * ([[graft.streaming.StreamOps.substringIncrementSink]]) is the
-    * replay-safe entry (committed batch dirs are kept verbatim). */
-  def substringIncrement(spark: SparkSession, indexPath: String,
-                         docs: DataFrame): DataFrame = {
-    // hit decision + fold partials; frozen before substringHits' three
-    // builds fan out (r14 sweep), released before return
-    val pos = gramKeyFrame(docs).eagerly
-    val hits = substringHits(spark, indexPath, pos)
-    // batchMin aggregates ON the index's bucket layout (aligned BELOW
-    // the groupBy — one delta exchange at the bucket count instead of
-    // one at spark.sql.shuffle.partitions): joined at any other count,
-    // the planner re-shuffles the INDEX side to match and disables its
-    // bucketed scan — an index-sized exchange per fold (the r16
-    // ScaleProbe shuffle-meter finding)
-    substringFold(spark, indexPath,
-      substringIndexState(indexPath).aligned(pos)
-        .groupBy("k").agg(min("doc_id").as("min_doc")))
-    pos.release()
-    stripSpans(docs, islandSpans(hits)).orderBy("doc_id")
-  }
-
-  /** Policy-driven maintenance of the gram index — the shared
-    * [[graft.sources.BucketedState.maintain]] knob; call after each
-    * fold in a long-running loop. Returns whether a rewrite ran. */
-  def maintainSubstringIndex(spark: SparkSession, indexPath: String,
-                             maxFileSetsPerBucket: Int =
-                               graft.sources.BucketedState.DefaultMaxFileSetsPerBucket): Boolean =
-    substringIndexState(indexPath).maintain(spark, maxFileSetsPerBucket)(
-      _.groupBy("k").agg(min("min_doc").as("min_doc")))
-
   /** q_strip_delta: [[substringStrip]] as a benched, oracle-checked
     * SparkEntry shape — a persisted gram index of the EVEN doc_ids
     * (built once per fixture content signature, the q_lm_delta
     * lifecycle), probed by the ODD doc_ids as one frozen-index delta.
     * Keep-first over a deterministic split is exactly expressible in
     * SQL (a position strips iff its gram appears in any even doc, or in
-    * a smaller odd doc), so unlike the spec-only incremental legs this
-    * one is hash-checked end to end. Probe-only: repeats never mutate
-    * the index. */
+    * a smaller odd doc), so it is hash-checked end to end. Probe-only:
+    * repeats never mutate the index. */
   def stripDeltaQuery(spark: SparkSession, dir: String): DataFrame = {
     val indexPath = stripDeltaIndex(spark, dir)
     substringStrip(spark, indexPath,

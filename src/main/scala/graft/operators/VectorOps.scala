@@ -401,24 +401,21 @@ object VectorOps {
   }
 
   // ------------------------------------------------------------------
-  // Incremental semantic dedup — SemDeDup on crawl deltas (r15)
+  // Persisted semantic dedup — SemDeDup against a built index (r15)
   //
-  // A 100 TB training corpus is not semantically deduplicated once:
-  // embedding deltas arrive with every crawl, and re-running the
-  // within-cluster quadratic over the world per delta re-pays the whole
-  // corpus. The persisted index is a [[graft.sources.BucketedState]]
-  // vector table CLUSTERED BY cluster — the same append-only bucketed
-  // discipline as the MinHash band index and the IVF posting table —
+  // Re-running the within-cluster quadratic over the whole corpus per
+  // delta re-pays the corpus. The persisted index is a
+  // [[graft.sources.BucketedState]] vector table CLUSTERED BY cluster —
+  // the same append-only bucketed discipline as the IVF posting table —
   // plus a sidecar parquet of the FROZEN assignment centroids. The
-  // geometry freezes on the first batch (the [[seedAssign]] rule, made
-  // incremental: the batch's 8 smallest vec_ids — deterministic, so
-  // unlike the IVF quantizer the whole path stays oracle-expressible);
-  // later deltas assign against the stored centers — a broadcast
-  // argmin — and compare ONLY within their cluster against the stored
-  // vectors plus their own smaller-id batch mates, exactly the
-  // keep-first admission [[TextOps.dedupIncrement]] applies at band
-  // grain. ALL batch vectors fold (novel-only), admitted or not — the
-  // dedupIncrement contract that makes increments compose: a later
+  // geometry freezes on the first batch (the [[seedAssign]] rule: the
+  // batch's 8 smallest vec_ids — deterministic, so unlike the IVF
+  // quantizer the whole path stays oracle-expressible); later deltas
+  // assign against the stored centers — a broadcast argmin — and compare
+  // ONLY within their cluster against the stored vectors plus their own
+  // smaller-id batch mates, the keep-first admission
+  // [[TextOps.dedupAdmissions]] applies at band grain. ALL batch vectors
+  // fold (novel-only), admitted or not, so increments compose: a later
   // vector duplicating a REJECTED earlier one is still a duplicate.
   //
   // Write order on first contact: centers FIRST, then the index (the
@@ -437,12 +434,12 @@ object VectorOps {
 
   /** Bucket count of the index layout — fixed at creation; production
     * sizes this near the cluster's shuffle-partition count. */
-  private[graft] val SemDedupIndexBuckets = 16
+  private[graft] val SemDedupBuckets = 16
 
   private[graft] def semDedupIndexState(indexPath: String): graft.sources.BucketedState =
     graft.sources.BucketedState(indexPath, "graft_semdedup_idx_",
       "cluster BIGINT, vec_id BIGINT, embedding ARRAY<FLOAT>",
-      Seq("cluster"), SemDedupIndexBuckets)
+      Seq("cluster"), SemDedupBuckets)
 
   private def semDedupCentroidsPath(indexPath: String): String =
     indexPath + ".centroids"
@@ -461,14 +458,11 @@ object VectorOps {
     * from the batch (its [[SemDedupSeedK]] smallest vec_ids); every
     * later call is a broadcast argmin against the stored centers.
     *
-    * Contracts, mirrored from [[TextOps.dedupIncrement]]: the decision
-    * is computed and MATERIALIZED against the pre-fold index before the
-    * fold appends (decide-then-fold); ALL batch vectors fold, novel
-    * (cluster, vec_id) rows only, so replaying a folded batch through
-    * this RAW api rejects everything (each vector meets itself at
-    * cosine 1) and appends nothing — the streaming face
-    * ([[graft.streaming.StreamOps.semDedupIncrementSink]]) is the
-    * replay-safe entry that keeps committed decisions verbatim.
+    * Contracts: the decision is computed and MATERIALIZED against the
+    * pre-fold index before the fold appends (decide-then-fold); ALL
+    * batch vectors fold, novel (cluster, vec_id) rows only, so replaying
+    * a folded batch rejects everything (each vector meets itself at
+    * cosine 1) and appends nothing.
     *
     * Scale shape: centers broadcast (k is dimension-table-sized at any
     * corpus scale); the probe joins on the index's bucket key, so the
@@ -479,7 +473,16 @@ object VectorOps {
                         allowSmallSeed: Boolean = false): DataFrame = {
     val centers = ensureSemDedupCenters(spark, indexPath, vecs, allowSmallSeed)
     val (report, assigned) = semDedupDecide(spark, indexPath, centers, vecs)
-    semDedupFoldAssigned(spark, indexPath, assigned)
+    // novel rows only, so a replay appends exactly what a crashed fold
+    // missed and nothing else
+    val st = semDedupIndexState(indexPath)
+    val novel = st.ensure(spark) match {
+      case Some(t) => assigned.join(
+        spark.table(t).select("cluster", "vec_id"),
+        Seq("cluster", "vec_id"), "left_anti")
+      case None => assigned
+    }
+    st.append(spark, novel.select("cluster", "vec_id", "embedding"))
     report.orderBy("vec_id")
   }
 
@@ -528,29 +531,6 @@ object VectorOps {
     readSemDedupCenters(spark, indexPath)
   }
 
-  /** Fold one EAGER assignment frame (cluster, vec_id, embedding) into
-    * the index — novel rows only, so replays append exactly what a
-    * crashed fold missed and nothing else. */
-  private[graft] def semDedupFoldAssigned(spark: SparkSession, indexPath: String,
-                                          assigned: DataFrame): Unit = {
-    val st = semDedupIndexState(indexPath)
-    val novel = st.ensure(spark) match {
-      case Some(t) => assigned.join(
-        spark.table(t).select("cluster", "vec_id"),
-        Seq("cluster", "vec_id"), "left_anti")
-      case None => assigned
-    }
-    st.append(spark, novel.select("cluster", "vec_id", "embedding"))
-  }
-
-  /** [[assignTo]] with the incremental family's projection and eager
-    * materialization — shared by the decide path and the streaming
-    * sink's replay-fold branch. */
-  private[graft] def semDedupAssign(centers: DataFrame, vecs: DataFrame): DataFrame =
-    assignTo(centers, vecs)
-      .select(col("vec_id"), col("cluster"), col("embedding"))
-      .eagerly
-
   /** The admission decision of one delta against the CURRENT index,
     * MATERIALIZED (decide-then-fold: [[semDedupIncrement]] consumes the
     * report after its fold, so it must reflect the pre-fold index).
@@ -562,7 +542,9 @@ object VectorOps {
     // EAGER (this round's cache-race rule): the assignment feeds the
     // batch self-join's two sides, the index probe, the report and the
     // caller's fold — materialize the distance sweep exactly once
-    val assigned = semDedupAssign(centers, vecs)
+    val assigned = assignTo(centers, vecs)
+      .select(col("vec_id"), col("cluster"), col("embedding"))
+      .eagerly
     val stored = semDedupIndexState(indexPath).ensure(spark) match {
       case Some(t) => spark.table(t)
       case None => spark.createDataFrame(
@@ -602,30 +584,6 @@ object VectorOps {
     (report, assigned)
   }
 
-  /** Probe-only admission report of a delta against the CURRENT index —
-    * [[semDedupIncrement]]'s decision without the fold, so repeats never
-    * mutate state (the [[TextOps.substringStrip]] discipline). Requires
-    * the frozen geometry to exist: first contact belongs to the folding
-    * verb. */
-  def semDedupAdmissions(spark: SparkSession, indexPath: String,
-                         vecs: DataFrame): DataFrame = {
-    require(new java.io.File(
-        new java.io.File(semDedupCentroidsPath(indexPath)), "_SUCCESS").isFile,
-      s"no frozen semantic-dedup geometry at $indexPath — fold a first " +
-        "batch via semDedupIncrement")
-    semDedupDecide(spark, indexPath,
-      readSemDedupCenters(spark, indexPath), vecs)._1.orderBy("vec_id")
-  }
-
-  /** Policy-driven maintenance of the vector index — the shared
-    * [[graft.sources.BucketedState.maintain]] knob. Rows are unique by
-    * construction (novel-only appends), so the merge is identity —
-    * pure file-count compaction. Returns whether a rewrite ran. */
-  def maintainSemDedupIndex(spark: SparkSession, indexPath: String,
-                            maxFileSetsPerBucket: Int =
-                              graft.sources.BucketedState.DefaultMaxFileSetsPerBucket): Boolean =
-    semDedupIndexState(indexPath).maintain(spark, maxFileSetsPerBucket)(identity)
-
   /** q_semdedup_delta: [[semDedupIncrement]] as a benched,
     * oracle-checked SparkEntry shape — a persisted vector index of the
     * EVEN vec_ids (built once per fixture content signature, the
@@ -636,9 +594,9 @@ object VectorOps {
     * odd vector, in its cluster reaches τ), and the cosine/argmin
     * arithmetic folds sequentially on both engines (the q_semdedup
     * precedent), so unlike the MLlib-seeded IVF leg this one is
-    * hash-checked end to end. Probe-only ([[semDedupAdmissions]]):
-    * repeats never mutate the index; the fold path is pinned by
-    * IncrementalSemDedupSpec, the q_dedup_admit division of labor. */
+    * hash-checked end to end. Probe-only ([[semDedupDecide]] against
+    * the built index): repeats never mutate the index; the fold path is
+    * pinned by IncrementalSemDedupSpec. */
   def semDedupDeltaQuery(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val odds = e.filter(pmod(col("vec_id"), lit(2L)) === 1)
@@ -656,7 +614,7 @@ object VectorOps {
         Tables.fixtureStatePath("graft_semdedup_delta", dir, "embeddings"),
         centers, odds)._1
     } else {
-      // the admissions face minus its global sort (added below)
+      // decide against the built index; the global sort is added below
       val idx = semDedupDeltaIndex(spark, dir)
       semDedupDecide(spark, idx, readSemDedupCenters(spark, idx), odds)._1
     }

@@ -3,19 +3,21 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A path-addressed, append-only BUCKETED state table — the shared
-  * layout discipline behind the incremental-dedup band index
-  * (TextOps.dedupIncrement) and the incremental IVF posting lists
-  * (Ivf.ivfAppend), extracted in r12 once the second consumer appeared.
+  * layout behind the persisted indexes that are built once per fixture
+  * content and then only probed: the IVF posting lists
+  * (Ivf.ivfAppend), the unigram LM model (TextOps.lmModelAppend), the
+  * exact-substring gram index (TextOps.substringFold) and the
+  * semantic-dedup vector index (VectorOps.semDedupIncrement).
   *
-  * Why this shape at 100 TB: a daily-maintenance loop probes and folds a
-  * corpus-sized state every run. As flat parquet, every probe re-shuffles
-  * the state; as an external table CLUSTERED BY the join keys, the scan
-  * comes out hash-partitioned on those keys, so probe joins, fold
-  * anti-joins, and compaction aggregates all plan NO Exchange on the
-  * state side — only the (small) delta moves. The fold is APPEND-ONLY:
-  * appends are delta-sized, replay-idempotent when the caller filters to
-  * novel rows, and crash-safe (an uncommitted append's _temporary files
-  * are invisible to scans; re-running appends exactly what's missing).
+  * Why this shape at 100 TB: a probe joins a delta against a
+  * corpus-sized state. As flat parquet, every probe re-shuffles the
+  * state; as an external table CLUSTERED BY the join keys, the scan
+  * comes out hash-partitioned on those keys, so probe joins and fold
+  * anti-joins plan NO Exchange on the state side — only the (small)
+  * delta moves. Appends are delta-sized, replay-idempotent when the
+  * caller filters to novel rows, and crash-safe (an uncommitted
+  * append's _temporary files are invisible to scans; re-running
+  * appends exactly what's missing).
   *
   * The DATA outlives the in-memory catalog: when a fresh session lacks
   * the table entry but committed files exist at the path, [[ensure]]
@@ -25,16 +27,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * SINGLE-WRITER per path, like a Structured Streaming checkpoint dir:
   * concurrent appends from two processes can interleave safely only at
-  * the file level, and compaction must not race a fold — serialize
-  * maintenance (the maintainAggState discipline).
+  * the file level.
   *
   * @param path       directory holding the bucketed data files
   * @param prefix     catalog-name prefix; the table name is
   *                   prefix + md5(canonical path), so every distinct
   *                   path gets its own deterministic entry
   * @param schemaDdl  column list for DDL re-registration, e.g.
-  *                   "band INT, `key` STRING, min_doc BIGINT" — must
-  *                   match what the writes produce
+  *                   "k BIGINT, min_doc BIGINT" — must match what the
+  *                   writes produce
   * @param bucketCols the CLUSTERED BY / SORTED BY keys
   * @param nBuckets   bucket count — fixed at table creation (appends
   *                   must match); size near the cluster's
@@ -72,18 +73,6 @@ final case class BucketedState(path: String, prefix: String, schemaDdl: String,
       Some(t)
     } else None
   }
-
-  /** Repartition a delta into THIS state's bucket layout (bucket count
-    * AND columns) before joining it against the table. Without the
-    * alignment, a delta whose upstream aggregation landed at
-    * spark.sql.shuffle.partitions drags the join to that count — the
-    * planner then shuffles the INDEX side to match and disables its
-    * bucketed scan ("Bucketed: false (disabled by query planner)"),
-    * i.e. an index-sized exchange per fold (the r16 ScaleProbe shuffle
-    * meter caught exactly this on the gram-index fold). One extra
-    * delta-sized exchange buys an index-size-flat join. */
-  def aligned(df: DataFrame): DataFrame =
-    df.repartition(nBuckets, bucketCols.map(df.col): _*)
 
   /** Append one delta (creating the external bucketed table on first
     * contact). The caller is responsible for novelty filtering when
@@ -123,73 +112,16 @@ final case class BucketedState(path: String, prefix: String, schemaDdl: String,
         table
     }
 
-  /** Rewrite the table through `merge` (dedup, re-aggregate, or plain
-    * identity for file-count compaction). The read side is a bucketed
-    * scan, so a merge keyed on the bucket columns aggregates
-    * exchange-free — compaction stays per-bucket local however large
-    * the state. Staged-swap discipline (maintainAggState): the merged
-    * copy lands beside the live dir, one rename pair swaps it in, a
-    * crash leaves the old state readable. */
-  def compact(spark: SparkSession)(merge: DataFrame => DataFrame): Unit =
-    ensure(spark).foreach { t =>
-      val merged = merge(spark.table(t))
-      val nonce = s"${ProcessHandle.current().pid()}_${System.nanoTime()}"
-      val stage = s"${t}_stage"
-      val tmp = new java.io.File(path + s".maintain_$nonce")
-      spark.sql(s"DROP TABLE IF EXISTS $stage")
-      merged.write.format("parquet")
-        .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
-        .option("path", tmp.getAbsolutePath)
-        .saveAsTable(stage)
-      spark.sql(s"DROP TABLE $stage") // external: the staged files survive
-      Writers.swapIn(new java.io.File(path), tmp,
-        new java.io.File(path + s".old_$nonce"))
-      spark.catalog.refreshTable(t)
-    }
-
-  /** The ONE maintenance policy for every BucketedState consumer (r12
-    * verdict task #8 — dedup index, IVF postings, and LM model each
-    * hand-rolled compaction cadence; a long-running loop needs a single
-    * knob): compact through `merge` iff the committed file count
-    * exceeds `maxFileSetsPerBucket` files per bucket. Each fold appends
-    * roughly one file set per bucket, so the threshold reads as "at
-    * most N folds of debris before a rewrite"; between rewrites, scans
-    * pay at most N× the file-open overhead of the compacted form.
-    * Returns whether a compaction ran. Serialize with folds — same
-    * SINGLE-WRITER rule as [[compact]]. */
-  def maintain(spark: SparkSession,
-               maxFileSetsPerBucket: Int = BucketedState.DefaultMaxFileSetsPerBucket)
-              (merge: DataFrame => DataFrame): Boolean = {
-    val over = committedFileCount > nBuckets.toLong * maxFileSetsPerBucket
-    if (over) compact(spark)(merge)
-    over
-  }
-
-  /** Count of committed data files at the path (the maintain trigger). */
-  private[graft] def committedFileCount: Long = {
-    def rec(f: java.io.File): Long = {
+  /** True iff the path holds COMMITTED parquet data — files under an
+    * in-flight append's _temporary staging don't count (the
+    * upsertSinkBatch bare-directory lesson). */
+  private def hasCommittedData: Boolean = {
+    def rec(f: java.io.File): Boolean = {
       val kids = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      kids.count(k => k.isFile && k.getName.endsWith(".parquet")
-        && !k.getName.startsWith(".") && !k.getName.startsWith("_")).toLong +
-        kids.filter(k => k.isDirectory && k.getName != "_temporary").map(rec).sum
+      kids.exists(k => k.isFile && k.getName.endsWith(".parquet")
+        && !k.getName.startsWith(".") && !k.getName.startsWith("_")) ||
+        kids.exists(k => k.isDirectory && k.getName != "_temporary" && rec(k))
     }
     rec(new java.io.File(path))
   }
-
-  /** True iff the path holds COMMITTED parquet data — files under an
-    * in-flight append's _temporary staging don't count (the
-    * upsertSinkBatch bare-directory lesson). Derived from
-    * [[committedFileCount]] so the two callers (ensure, maintain) share
-    * ONE definition of "committed file" (r13 review: the hand-copied
-    * walk could drift). The full count instead of an early-exit exists
-    * is microseconds at any plausible file count. */
-  private def hasCommittedData: Boolean = committedFileCount > 0
-}
-
-object BucketedState {
-  /** Default file-sets-per-bucket tolerance before [[BucketedState
-    * .maintain]] rewrites: 4 bounds scan overhead at ~4× the compacted
-    * file count while amortizing the rewrite over ~4 folds. */
-  val DefaultMaxFileSetsPerBucket = 4
 }

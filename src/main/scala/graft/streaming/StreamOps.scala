@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import graft.plans.Eager.EagerOps
 import org.apache.spark.sql.functions._
 
 /** One funnel-relevant event (input row of `StreamOps.funnelStages`). */
@@ -27,12 +26,16 @@ case class LastClick(click_id: Long, click_ms: Long)
 case class Attribution(user_id: Long, purchase_id: Long, click_id: Long,
                        latency_s: Long)
 
-/** E-STREAM-WIN / E-WATERMARK / E-DEDUP(stream) — the streaming
+/** E-STREAM-WIN / E-WATERMARK / E-STATE — the streaming
   * transformations, written as `DataFrame => DataFrame` so the SAME logical
   * pipeline runs in batch (oracle-checked: q_crowd_alert, q_session) and
   * under `readStream` (IncrementalExecution). That one-definition-two-modes
   * shape is the engine's answer to the reference's copy-pasted pipeline
   * (`main.py` vs `app/views.py:76-210` — SURVEY §0 duplication map).
+  * Besides the windowed aggregates (crowd alerts, sessions) it holds the
+  * stream-stream click/purchase joins, the custom-state operators
+  * (funnel stages, session finalizer, last-touch attribution) and the
+  * two relational sinks (JDBC and lake upsert).
   *
   * Expected input schema: the events fixture (ts TIMESTAMP, user_id BIGINT,
   * event_type STRING, value DOUBLE, ...).
@@ -55,18 +58,6 @@ object StreamOps {
       .filter(col("n_events") > threshold)
       .select(col("window.start").as("win_start"), col("user_id"), col("n_events"))
 
-  /** Sliding-window value sum per event type (multi-camera dashboard
-    * analog). */
-  def slidingValue(events: DataFrame,
-                   windowDur: String = "10 minutes",
-                   slide: String = "5 minutes",
-                   watermarkDelay: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n"), col("total_value"))
-
   /** Session windows per user (30-minute gap) — streaming twin of
     * Relational.sessionize / q_session. */
   def sessions(events: DataFrame,
@@ -77,52 +68,6 @@ object StreamOps {
       .groupBy(session_window(col("ts"), gap), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("session_window.start").as("sess_start"), col("user_id"), col("n_events"))
-
-  /** Streaming data-quality profile: per-window per-type moments — the
-    * ingest-time face of Relational.groupStats (q_group_stats). Every
-    * statistic here is a partial-aggregable moment, so the state per
-    * (window, type) is ONE small tuple merged incrementally across
-    * micro-batches, and the watermark finalizes + evicts it — profiling
-    * a 100 TB/day stream costs per-group state, not per-row state. */
-  def windowProfile(events: DataFrame,
-                    windowDur: String = "1 day",
-                    watermarkDelay: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(avg("value"), 4).as("mean_value"),
-        round(stddev_samp(col("value")), 4).as("sd_value"),
-        round(min("value"), 4).as("min_value"),
-        round(max("value"), 4).as("max_value"))
-      .select(col("window.start").as("win_start"), col("event_type"),
-        col("n"), col("mean_value"), col("sd_value"), col("min_value"), col("max_value"))
-
-  /** Streaming cardinality monitor: approximate distinct users per
-    * (window, type) — the HLL++ sketch merges across micro-batches the
-    * same way map-side partials merge in batch, so state per group is one
-    * fixed-size sketch, never a user set. The streaming face of
-    * q_approx_distinct: cardinality tracking over an unbounded stream at
-    * bounded memory. */
-  def windowCardinality(events: DataFrame,
-                        windowDur: String = "1 day",
-                        watermarkDelay: String = "1 hour",
-                        rsd: Double = 0.05): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(approx_count_distinct(col("user_id"), rsd).as("approx_users"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("approx_users"))
-
-  /** Streaming exact dedup with bounded state: duplicates of (user_id,
-    * event_type) within the watermark horizon are dropped; watermark lets
-    * Spark evict seen-keys state (E-DEDUP stream form). */
-  def dedupWithinWatermark(events: DataFrame,
-                           watermarkDelay: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
 
   /** Stream-stream range join — the streaming twin of
     * graft.operators.RangeJoin: purchases enriched with the clicks in the
@@ -165,58 +110,6 @@ object StreamOps {
       "c_user = p_user AND c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"),
       joinType)
       .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
-  }
-
-  /** Streaming windowed top-k: highest-value events per (window, type).
-    * The window-function `row_number() <= k` form is NOT streamable
-    * (ranking needs the closed window); the typed TopKAggregator is —
-    * its bounded k-row buffer merges incrementally across micro-batches
-    * exactly like map-side partial aggregation at 100 TB, and the
-    * watermark finalizes+evicts window state. Same operator serves batch
-    * (q_topk_agg's oracle) and stream — this is its streaming face. */
-  def windowTopK(events: DataFrame, windowDur: String = "1 day",
-                 watermarkDelay: String = "1 hour", k: Int = 3): DataFrame = {
-    val topk = udaf(graft.functions.TopKAggregator(k),
-      org.apache.spark.sql.Encoders.product[graft.functions.Scored])
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(topk(col("value"), col("event_id")).as("top"))
-      .select(col("window.start").as("win_start"), col("event_type"),
-        posexplode(col("top")))
-      .select(col("win_start"), col("event_type"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("event_id"), col("col.score").as("value"))
-  }
-
-  /** Streaming CONTENT near-dup screen: a document whose full MinHash
-    * signature (word-bigram shingles, 16 permutations — the same codegen'd
-    * MinHashSig as the batch LSH path) repeats within the watermark
-    * horizon is dropped. Signature equality is the strict AND of the
-    * batch path's band keys, so this suppresses probable near-duplicates
-    * (exact duplicates always), with state bounded by the watermark — the
-    * streaming front-door of the dedup family: screen on ingest, batch
-    * LSH for the full corpus. Expects (ts TIMESTAMP, doc_id, text). */
-  def nearDupScreen(docs: DataFrame,
-                    watermarkDelay: String = "1 hour"): DataFrame = {
-    import graft.operators.TextOps
-    val codes = TextOps.shingleCodes(col("text"))
-    docs
-      // a <2-token doc has no shingles and therefore no signature
-      // (MinHashSig yields null, which concat_ws would collapse to "" —
-      // colliding every shingle-less doc onto one key and dropping distinct
-      // content). Such docs are exempt from the screen: keyed by doc_id,
-      // each is its own equivalence class, mirroring the batch path's
-      // size(codes) > 0 filter.
-      .withColumn("sig",
-        when(size(codes) > 0, concat_ws(",",
-          graft.functions.MinHashSig.minhashSig(
-            codes, TextOps.MinhashParams, TextOps.MinhashPrime)
-            .cast("array<string>")))
-          .otherwise(concat(lit("__nosig__:"), col("doc_id").cast("string"))))
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("sig")
-      .drop("sig")
   }
 
   /** Streaming conversion funnel (the stream face of q_funnel): per-user
@@ -262,7 +155,7 @@ object StreamOps {
   }
 
   /** Idle-timeout session finalizer: the custom-state sibling of the
-    * `session_window` aggregate ([[sessionCounts]]) — one summary row per
+    * `session_window` aggregate ([[sessions]]) — one summary row per
     * CLOSED session, emitted exactly once, when the user has been idle
     * longer than `gap` relative to the event-time watermark. This is the
     * state-EVICTION pattern the other stateful ops here don't exercise
@@ -426,252 +319,6 @@ object StreamOps {
         jdbcSinkBatch(batch.toDF(), batchId, url, table, driver)
       }
       .start()
-
-  /** Streaming face of the incremental dedup loop (r11 verdict task #6):
-    * a stream of (doc_id, text) crawl deltas drives
-    * [[graft.operators.TextOps.dedupIncrement]]'s probe→fold cycle per
-    * micro-batch — ADMITTED docs land under `outPath/batch_id=<id>/`,
-    * every batch's band keys fold into the bucketed index at
-    * `indexPath`. Exactly-once admissions under replay by ORDER, not by
-    * luck: decisions are computed against the PRE-fold index and
-    * committed to the batch directory FIRST, the fold runs second.
-    *  - crash before the output commit: the index is untouched, so the
-    *    replay recomputes the identical decision set;
-    *  - crash after the commit: the replay sees the committed batch dir,
-    *    keeps it verbatim, and re-runs only the fold — which appends
-    *    nothing the first run already folded (append-only novel keys).
-    * Duplicate delivery of a folded batch therefore neither loses nor
-    * re-admits documents (StreamOpsSpec pins both arms). */
-  def dedupIncrementSink(docs: DataFrame, indexPath: String, outPath: String,
-                         checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        dedupIncrementSinkBatch(batch.toDF(), indexPath, outPath, id)
-      }
-      .start()
-
-  /** One micro-batch of [[dedupIncrementSink]] (visible so the replay
-    * contract is directly testable — the jdbcSinkBatch precedent). */
-  private[graft] def dedupIncrementSinkBatch(batch: DataFrame, indexPath: String,
-                                             outPath: String, batchId: Long): Unit = {
-    import graft.operators.TextOps
-    val spark = batch.sparkSession
-    val dir = new java.io.File(s"$outPath/batch_id=$batchId")
-    val committed = new java.io.File(dir, "_SUCCESS").isFile
-    // frozen (r14 lazy-persist sweep): dedupRejected's single action
-    // plans three distinct builds over this frame — materialize first
-    val keys = TextOps.batchBandKeys(batch).eagerly
-    try {
-      val batchMin = TextOps.batchMinOf(keys)
-      if (!committed) {
-        val rejected = TextOps.dedupRejected(spark, indexPath, keys, batchMin)
-        batch.join(rejected, Seq("doc_id"), "left_anti")
-          .write.mode("overwrite").parquet(dir.getPath) // _SUCCESS = commit
-      }
-      // fold AFTER the decision commit — idempotent (novel keys only)
-      TextOps.dedupFold(spark, indexPath, batchMin)
-    } finally keys.release()
-  }
-
-  /** Streaming face of the incremental exact-substring dedup loop
-    * ([[graft.operators.TextOps.substringIncrement]]): a stream of
-    * (doc_id, text) crawl deltas is span-stripped keep-first against
-    * the persisted gram index per micro-batch — cleaned docs land under
-    * `outPath/batch_id=<id>/`, every batch's novel gram keys fold into
-    * the bucketed index at `indexPath`. Same exactly-once-by-order
-    * discipline as [[dedupIncrementSink]]: the decision is computed
-    * against the PRE-fold index and committed to the batch directory
-    * FIRST, the fold runs second — a crash before the output commit
-    * replays to the identical decision set; a crash after it keeps the
-    * committed dir verbatim and re-runs only the (novel-keys-only,
-    * idempotent) fold. */
-  def substringIncrementSink(docs: DataFrame, indexPath: String, outPath: String,
-                             checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        substringIncrementSinkBatch(batch.toDF(), indexPath, outPath, id)
-      }
-      .start()
-
-  /** One micro-batch of [[substringIncrementSink]] (visible so the
-    * replay contract is directly testable — the jdbcSinkBatch
-    * precedent). */
-  private[graft] def substringIncrementSinkBatch(batch: DataFrame, indexPath: String,
-                                                 outPath: String, batchId: Long): Unit = {
-    import graft.operators.TextOps
-    val spark = batch.sparkSession
-    val dir = new java.io.File(s"$outPath/batch_id=$batchId")
-    val committed = new java.io.File(dir, "_SUCCESS").isFile
-    if (!committed)
-      TextOps.substringStripUnsorted(spark, indexPath, batch)
-        .write.mode("overwrite").parquet(dir.getPath) // _SUCCESS = commit
-    // fold AFTER the decision commit — idempotent (novel keys only)
-    TextOps.substringFold(spark, indexPath,
-      TextOps.gramKeyFrame(batch).groupBy("k")
-        .agg(org.apache.spark.sql.functions.min("doc_id").as("min_doc")))
-  }
-
-  /** Streaming face of the incremental IVF index ([[graft.operators.Ivf
-    * .ivfAppend]]): a stream of (vec_id, embedding) deltas folds into
-    * the persisted posting lists per micro-batch. No per-batch output
-    * to protect (the sink is fold-only), so replay safety is inherited
-    * directly from the fold's novel-only appends — a redelivered batch
-    * appends nothing. The FIRST batch fits the quantizer, so it must
-    * carry ≥ Ivf.K vectors; size the initial backfill accordingly. */
-  def ivfAppendSink(vectors: DataFrame, indexPath: String,
-                    checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // an empty micro-batch folds nothing — and before the quantizer
-        // exists it would fail the ≥ K first-fit guard, wedging the
-        // query on a no-data trigger
-        if (!batch.isEmpty)
-          graft.operators.Ivf.ivfAppend(batch.sparkSession, indexPath, batch.toDF())
-      }
-      .start()
-
-  /** Streaming face of the incremental semantic dedup loop
-    * ([[graft.operators.VectorOps.semDedupIncrement]]): a stream of
-    * (vec_id, embedding) crawl deltas is SemDeDup-admitted against the
-    * persisted frozen-geometry vector index per micro-batch — ADMITTED
-    * vectors land under `outPath/batch_id=<id>/`, every batch's
-    * assignments fold into the bucketed index at `indexPath`.
-    * Exactly-once admissions under replay by ORDER, not by luck (the
-    * dedupIncrementSink discipline): decisions are computed against the
-    * PRE-fold index and committed to the batch directory FIRST, the
-    * fold runs second.
-    *  - crash before the output commit: the index is untouched, so the
-    *    replay recomputes the identical decision set;
-    *  - crash after the commit: the replay sees the committed batch
-    *    dir, keeps it verbatim, and re-runs only the fold — novel-only
-    *    appends land exactly what the crashed fold missed.
-    * The raw verb rejects a REPLAYED vector against its own stored copy
-    * (cosine 1); this sink is the replay-safe entry precisely because
-    * committed decisions are never recomputed. */
-  def semDedupIncrementSink(vectors: DataFrame, indexPath: String, outPath: String,
-                            checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        semDedupIncrementSinkBatch(batch.toDF(), indexPath, outPath, id)
-      }
-      .start()
-
-  /** One micro-batch of [[semDedupIncrementSink]] (visible so the replay
-    * contract is directly testable — the jdbcSinkBatch precedent). */
-  private[graft] def semDedupIncrementSinkBatch(batch: DataFrame, indexPath: String,
-                                                outPath: String, batchId: Long): Unit = {
-    import graft.operators.VectorOps
-    import org.apache.spark.sql.functions.col
-    val spark = batch.sparkSession
-    val dir = new java.io.File(s"$outPath/batch_id=$batchId")
-    val committed = new java.io.File(dir, "_SUCCESS").isFile
-    val centers = VectorOps.ensureSemDedupCenters(spark, indexPath, batch)
-    if (!committed) {
-      val (report, assigned) =
-        VectorOps.semDedupDecide(spark, indexPath, centers, batch)
-      batch.join(report.filter(!col("admitted")).select("vec_id"),
-          Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").parquet(dir.getPath) // _SUCCESS = commit
-      // fold AFTER the decision commit — idempotent (novel rows only)
-      VectorOps.semDedupFoldAssigned(spark, indexPath, assigned)
-    } else {
-      // replay of a committed batch: decisions kept verbatim, fold only
-      VectorOps.semDedupFoldAssigned(spark, indexPath,
-        VectorOps.semDedupAssign(centers, batch))
-    }
-  }
-
-  /** Streaming face of the incremental unigram corpus model
-    * ([[graft.operators.TextOps.lmModelAppend]]): a stream of
-    * (doc_id, text) crawl deltas folds its token-count partials into
-    * the bucketed model table per micro-batch. Fold-only (no per-batch
-    * output to protect); replay safety comes from the model's monotone
-    * batch-id guard — micro-batch ids are strictly increasing, appends
-    * are atomic, so a redelivered batch is either fully present
-    * (skipped by the guard) or fully absent (re-folded) and counts can
-    * never double. Empty micro-batches are skipped outright. */
-  def lmModelSink(docs: DataFrame, modelPath: String,
-                  checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.TextOps.lmModelAppend(
-            batch.sparkSession, modelPath, batch.toDF(), id)
-      }
-      .start()
-
-  /** Streaming face of the frozen-model SCORING leg (r12 verdict task
-    * #3 — the daily-crawl loop's other half: [[lmModelSink]] folds
-    * counts, this scores deltas under the frozen result): each
-    * micro-batch of (doc_id, text) runs [[graft.operators.TextOps
-    * .lmScoreDelta]] against the UNCHANGING model at modelPath and
-    * commits the scores to `outPath/batch_id=<id>/`. Replay-idempotent
-    * by the dedupIncrementSink discipline: a batch directory carrying
-    * _SUCCESS is a committed decision — duplicate delivery keeps it
-    * verbatim and writes nothing. Scoring mutates no state, so unlike
-    * the dedup sink there is no fold ordering to protect; and because
-    * the model is frozen, scoring any slicing of the docs equals
-    * scoring them in one batch doc-for-doc (IncrementalLmSpec pins
-    * both properties). */
-  def lmScoreSink(docs: DataFrame, modelPath: String, outPath: String,
-                  checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        lmScoreSinkBatch(batch.toDF(), modelPath, outPath, id)
-      }
-      .start()
-
-  /** One micro-batch of [[lmScoreSink]] (visible so the replay contract
-    * is directly testable — the jdbcSinkBatch precedent). */
-  private[graft] def lmScoreSinkBatch(batch: DataFrame, modelPath: String,
-                                      outPath: String, batchId: Long): Unit = {
-    val dir = new java.io.File(s"$outPath/batch_id=$batchId")
-    if (new java.io.File(dir, "_SUCCESS").isFile) return // committed: replay keeps it
-    graft.operators.TextOps.lmScoreDelta(batch.sparkSession, modelPath, batch)
-      .write.mode("overwrite").parquet(dir.getPath) // _SUCCESS = commit
-  }
-
-  /** Streaming face of frozen-tercile bucketing ([[graft.operators
-    * .TextOps.ccnetBucketDelta]]): each micro-batch of (doc_id, lang,
-    * text) buckets against the frozen unigram model and the frozen
-    * per-language `cuts`, committed to `outPath/batch_id=<id>/` under
-    * the same committed-dir replay discipline as [[lmScoreSink]]. The
-    * cuts frame is captured once at sink construction — that is the
-    * point: the CCNet daily loop scores every delta under ONE snapshot's
-    * calibration until the operator re-freezes it. */
-  def ccnetBucketSink(docs: DataFrame, modelPath: String, cuts: DataFrame,
-                      outPath: String,
-                      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        ccnetBucketSinkBatch(batch.toDF(), modelPath, cuts, outPath, id)
-      }
-      .start()
-
-  /** One micro-batch of [[ccnetBucketSink]]. */
-  private[graft] def ccnetBucketSinkBatch(batch: DataFrame, modelPath: String,
-                                          cuts: DataFrame, outPath: String,
-                                          batchId: Long): Unit = {
-    val dir = new java.io.File(s"$outPath/batch_id=$batchId")
-    if (new java.io.File(dir, "_SUCCESS").isFile) return // committed: replay keeps it
-    graft.operators.TextOps.ccnetBucketDelta(
-      batch.sparkSession, modelPath, cuts, batch)
-      .write.mode("overwrite").parquet(dir.getPath) // _SUCCESS = commit
-  }
 
   /** Keyed-correction sink into a partitioned lake table: each micro-batch
     * MERGEs (`Writers.mergeUpsert`) instead of appending, so a late row

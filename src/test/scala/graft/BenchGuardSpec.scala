@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The bench finalize gate: a 2× gate breach and an every-query-slower
   * host-drift window must force a re-measure instead of landing in
   * bench_medians.json on the first attempt. Also the bench's knob parsing,
-  * a lint that keeps its noise handling a rule, and three src/main source
-  * lints (no orphaned scaladoc, no `*Core` bench twins, one home for the
-  * fixture content signature). */
+  * a lint that keeps its noise handling a rule, and four src/main source
+  * lints (no orphaned scaladoc, no scaladoc link to a missing definition,
+  * no `*Core` bench twins, one home for the fixture content signature). */
 class BenchGuardSpec extends AnyFunSuite {
 
   private def flat(n: Int, r: Double): Seq[Double] = Seq.fill(n)(r)
@@ -142,6 +142,39 @@ class BenchGuardSpec extends AnyFunSuite {
     val offenders = mainSources.flatMap { case (p, lines) =>
       lines.zipWithIndex.collect {
         case (l, i) if core.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("src/main lint: every scaladoc link names a definition in src/main") {
+    // a link to deleted code reads as documentation of a path that no
+    // longer exists; a [[graft.…]], [[Obj.member]] (Obj defined here) or
+    // bare [[name]] link, joined across wrapped comment lines, must
+    // resolve to a def/val/var/class/object/trait/type in src/main, or
+    // for a bare name to one the file imports
+    val sources = mainSources
+    val defined = {
+      val decl = "\\b(?:def|val|var|class|object|trait|type)\\s+([A-Za-z_][A-Za-z0-9_]*)".r
+      val comment = Seq("*", "//", "/*")
+      sources.flatMap(_._2).filterNot(l => comment.exists(l.trim.startsWith))
+        .flatMap(l => decl.findAllMatchIn(l).map(_.group(1))).toSet
+    }
+    val link = "(?s)\\[\\[(.*?)\\]\\]".r
+    val offenders = sources.flatMap { case (p, lines) =>
+      val text = lines.mkString("\n")
+      val imported = lines.filter(_.trim.startsWith("import "))
+        .flatMap("[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(_)).toSet
+      link.findAllMatchIn(text).flatMap { m =>
+        val target = m.group(1).replaceAll("\\s*\\n\\s*\\*?\\s*", " ")
+          .replace(" .", ".").trim.split("\\s+").head
+        val segs = target.split('.').toSeq
+        val checked = segs.head == "graft" || segs.size == 1 || defined(segs.head)
+        val known = defined(segs.last) || (segs.size == 1 && imported(segs.last))
+        if (checked && !known) {
+          val line = text.substring(0, m.start).count(_ == '\n') + 1
+          Some(s"$p:$line: [[$target]] names no definition in src/main")
+        } else None
       }
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))

@@ -1,11 +1,11 @@
 package graft
 
 import graft.sources.BucketedState
-import org.apache.spark.sql.functions._
 
 /** The shared append-only bucketed-state layout, exercised directly on a
-  * toy schema (its two production consumers — the dedup band index and
-  * the IVF posting lists — pin their own end-to-end contracts). */
+  * toy schema (its production consumers — the IVF postings, the LM
+  * model, the gram index and the semdedup vectors — pin their own
+  * end-to-end contracts). */
 class BucketedStateSpec extends SparkSpec {
 
   private def fresh(): BucketedState = BucketedState(
@@ -61,80 +61,6 @@ class BucketedStateSpec extends SparkSpec {
       "in-flight append staging must not register as committed state")
     st.append(spark, Seq((9, "z")).toDF("k", "v"))
     assert(rows(st) == Set((9, "z")))
-  }
-
-  test("compact with a keyed merge dedups and survives; old dir swapped out") {
-    val sess = spark
-    import sess.implicits._
-    val st = fresh()
-    st.append(spark, Seq((1, "a"), (2, "b")).toDF("k", "v"))
-    st.append(spark, Seq((1, "a2"), (3, "c")).toDF("k", "v")) // caller chose not to filter
-    st.compact(spark)(_.groupBy("k").agg(min("v").as("v")).select("k", "v"))
-    assert(rows(st) == Set((1, "a"), (2, "b"), (3, "c")))
-    // a second compact is a no-op on content
-    st.compact(spark)(_.groupBy("k").agg(min("v").as("v")).select("k", "v"))
-    assert(rows(st) == Set((1, "a"), (2, "b"), (3, "c")))
-  }
-
-  test("maintain bounds file counts across 10 folds on all three production tables") {
-    import graft.operators.{Ivf, TextOps}
-    val sess = spark
-    import sess.implicits._
-    // the shared policy (r12 verdict task #8): ONE knob, three consumers —
-    // fold 10 deltas into each production state with maintain() after
-    // every fold, and the committed file count must stay bounded by the
-    // policy ceiling (plus one fold's worth of fresh debris) throughout,
-    // instead of growing linearly with fold count
-    val cap = BucketedState.DefaultMaxFileSetsPerBucket
-
-    val dedupIdx = java.nio.file.Files
-      .createTempDirectory("graft-m-dedup").toString + "/idx.parquet"
-    val lmModel = java.nio.file.Files
-      .createTempDirectory("graft-m-lm").toString + "/model.parquet"
-    val ivfIdx = java.nio.file.Files
-      .createTempDirectory("graft-m-ivf").toString + "/ivf.parquet"
-    // IVF first fold must carry >= K vectors to fit the quantizer
-    val dims = 4
-    def vecs(lo: Int, hi: Int) = (lo until hi)
-      .map(i => (i.toLong, Array.tabulate(dims)(d => (i % 7 + d).toFloat / 7f)))
-      .toDF("vec_id", "embedding")
-    Ivf.ivfAppend(spark, ivfIdx, vecs(0, Ivf.K))
-
-    // a tight knob (0 sets tolerated beyond the first) — toy folds touch
-    // only a couple of buckets each, so the production default of
-    // `cap` sets/bucket would never trip inside 10 folds; the policy
-    // MECHANISM is what's under test, the ceiling is the knob
-    val knob = 0
-    var compactions = 0
-    for (fold <- 0 until 10) {
-      TextOps.dedupIncrement(spark, dedupIdx,
-        Seq((fold.toLong, s"fold $fold words one two three four five six"))
-          .toDF("doc_id", "text"))
-      if (TextOps.maintainDedupIndex(spark, dedupIdx, knob)) compactions += 1
-      TextOps.lmModelAppend(spark, lmModel,
-        Seq((fold.toLong, s"tok$fold alpha beta")).toDF("doc_id", "text"), fold.toLong)
-      if (TextOps.maintainLmModel(spark, lmModel, knob)) compactions += 1
-      Ivf.ivfAppend(spark, ivfIdx, vecs(Ivf.K + fold, Ivf.K + fold + 1))
-      if (Ivf.maintainIvfIndex(spark, ivfIdx, knob)) compactions += 1
-      // the bound holds at EVERY fold, not just at the end: maintain may
-      // leave up to (knob+1) sets per bucket (compaction leaves ≤1, the
-      // next fold adds ≤1 before its own maintain runs)
-      for ((st, name) <- Seq(
-        (TextOps.dedupIndexState(dedupIdx), "dedup"),
-        (TextOps.lmModelState(lmModel), "lm"),
-        (Ivf.postingState(ivfIdx), "ivf"))) {
-        val limit = st.nBuckets.toLong * (knob + 2)
-        assert(st.committedFileCount <= limit,
-          s"$name fold $fold: ${st.committedFileCount} files > bound $limit")
-      }
-    }
-    assert(cap > knob, "production default must tolerate more debris than the test knob")
-    assert(compactions > 0,
-      "10 folds must trip the shared policy at least once — otherwise " +
-        "the bound was never actually defended")
-    // totals survive the policy-driven rewrites
-    assert(spark.table(TextOps.lmModelTable(lmModel))
-      .agg(sum("c")).head().getLong(0) == 30L, "3 tokens × 10 folds")
   }
 
   test("a quoted path is refused rather than mis-quoted into DDL") {

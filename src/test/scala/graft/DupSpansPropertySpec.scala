@@ -108,30 +108,6 @@ class DupSpansPropertySpec extends SparkSpec {
     }
   }
 
-  test("increment composition: random doc_id-ordered slicings ≡ one batch") {
-    // the IncrementalSubstringSpec pins a 2-slice split of the fixture;
-    // this pins the ALGEBRA — any k-way ordered slicing of any corpus
-    // folds to the same cleaned output
-    val genSliced = for {
-      corpus <- genCorpus
-      nCuts <- Gen.choose(1, 3)
-      cuts <- Gen.listOfN(nCuts, Gen.choose(1, corpus.size - 1))
-    } yield (corpus, cuts.distinct.sorted)
-    forAllSamples(genSliced, n = 10) { case (corpus, cuts) =>
-      val df = toDf(corpus)
-      val bounds = (0 +: cuts) :+ corpus.size
-      val idx = java.nio.file.Files.createTempDirectory("graft-prop-inc").toString + "/i.parquet"
-      import org.apache.spark.sql.functions.col
-      val sliced = bounds.sliding(2).flatMap { case Seq(lo, hi) =>
-        rows(TextOps.substringIncrement(spark, idx,
-          df.filter(col("doc_id") > lo && col("doc_id") <= hi)))
-      }.toSeq
-      val one = rows(TextOps.substringIncrement(spark,
-        java.nio.file.Files.createTempDirectory("graft-prop-one").toString + "/i.parquet", df))
-      sliced.sortBy(_._1) == one.sortBy(_._1)
-    }
-  }
-
   test("KEEP-FIRST (absent-index substringStrip) ≡ brute force; keeps ≥ strip-ALL") {
     forAllSamples(genCorpus, n = 15) { corpus =>
       val firstSeen = scala.collection.mutable.Map.empty[List[String], Long]

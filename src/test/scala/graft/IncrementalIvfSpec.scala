@@ -3,10 +3,10 @@ package graft
 import graft.operators.Ivf
 import org.apache.spark.sql.functions._
 
-/** Ivf.ivfAppend / ivfSearch — the persisted-posting-list maintenance
-  * loop: one-shot equivalence to the in-memory q_ivf_topk path, delta
-  * composability, replay idempotence, catalog self-healing, and
-  * compaction, all on the shared BucketedState layout. */
+/** Ivf.ivfAppend / ivfSearch — the persisted posting lists: one-shot
+  * equivalence to the in-memory q_ivf_topk path, delta composability,
+  * replay idempotence and catalog self-healing, all on the shared
+  * BucketedState layout. */
 class IncrementalIvfSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.01"
@@ -72,102 +72,4 @@ class IncrementalIvfSpec extends SparkSpec {
       "re-registered postings + sidecar centers must answer identically")
   }
 
-  test("streaming sink: two micro-batches of deltas build the same index as one batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val sess = spark
-    import sess.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val all = vectors().as[(Long, Array[Float])].collect().sortBy(_._1)
-    val (s1, s2) = all.splitAt(all.length / 2)
-    val idx = freshIndex()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-sink").toString
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.StreamOps.ivfAppendSink(
-      input.toDF().toDF("vec_id", "embedding"), idx, ckpt)
-    try Seq(s1, s2).foreach { s => input.addData(s.toSeq); q.processAllAvailable() }
-    finally q.stop()
-    val streamed = searchRows(idx)
-    // reference: one-shot append to a fresh index, but with the SAME
-    // quantizer lifecycle (fit on the first slice), so rebuild it the
-    // same way: slice 1 fits, slice 2 assigns
-    val ref = freshIndex()
-    graft.operators.Ivf.ivfAppend(spark, ref, vectors().filter(col("vec_id") < s2.head._1))
-    graft.operators.Ivf.ivfAppend(spark, ref, vectors().filter(col("vec_id") >= s2.head._1))
-    assert(streamed == searchRows(ref) && streamed.nonEmpty,
-      "streamed deltas must build the same index as direct appends")
-  }
-
-  /** Mid-kill during the FIRST streamed batch — the hardest IVF arm:
-    * the first fold FITS the quantizer (k-means sidecar) before any
-    * posting lands, so a kill can strand the index in three states
-    * (nothing, sidecar only, sidecar + partial postings). The replay
-    * must converge in all of them: a committed sidecar is reused frozen
-    * (the crash-convergent sidecar contract), an absent one is re-fit
-    * on the same deterministic slice, and posting folds are novel-only.
-    * End state must answer searches exactly like direct appends with
-    * the same first-slice fit. */
-  test("the ivf sink killed during the FIRST batch (quantizer fit in flight) converges") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val sess = spark
-    import sess.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val all = vectors().as[(Long, Array[Float])].collect().sortBy(_._1)
-    val (s1, s2) = all.splitAt(all.length / 2)
-    val idx = freshIndex()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-midkill").toString
-    val input = MemoryStream[(Long, Array[Float])]
-    def start() = graft.streaming.StreamOps.ivfAppendSink(
-      input.toDF().toDF("vec_id", "embedding")
-        .filter(FoldGate.gate.and(col("vec_id").isNotNull)), idx, ckpt)
-    var q = start()
-    try {
-      FoldGate.arm()
-      input.addData(s1.toSeq) // FIRST batch: quantizer fit + fold
-      assert(FoldGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the first fold must be in flight before the kill")
-      q.stop()
-    } finally {
-      FoldGate.disarm()
-      if (q.isActive) q.stop()
-    }
-    q = start()
-    try {
-      q.processAllAvailable() // replay batch 0
-      input.addData(s2.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    // reference: direct appends with the same first-slice quantizer fit
-    val ref = freshIndex()
-    Ivf.ivfAppend(spark, ref, vectors().filter(col("vec_id") < s2.head._1))
-    Ivf.ivfAppend(spark, ref, vectors().filter(col("vec_id") >= s2.head._1))
-    assert(searchRows(idx) == searchRows(ref) && searchRows(idx).nonEmpty,
-      "a kill during the first fit must not corrupt the index or the quantizer")
-  }
-
-  test("compaction: at most one file set per bucket, search unchanged") {
-    def committedFiles(p: String): Int = {
-      def rec(f: java.io.File): Seq[java.io.File] = {
-        val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-        kids.filter(k => k.isFile && k.getName.endsWith(".parquet")
-          && !k.getName.startsWith("_") && !k.getName.startsWith(".")) ++
-          kids.filter(k => k.isDirectory && k.getName != "_temporary").flatMap(rec)
-      }
-      rec(new java.io.File(p)).size
-    }
-    val idx = freshIndex()
-    val ids = vectors().select("vec_id").collect().map(_.getLong(0)).sorted
-    val (t1, t2) = (ids(ids.length / 3), ids(2 * ids.length / 3))
-    Ivf.ivfAppend(spark, idx, vectors().filter(col("vec_id") < t1))
-    Ivf.ivfAppend(spark, idx,
-      vectors().filter(col("vec_id") >= t1 && col("vec_id") < t2))
-    Ivf.ivfAppend(spark, idx, vectors().filter(col("vec_id") >= t2))
-    val before = searchRows(idx)
-    // merge keyed on the bucket column: the bucketed scan satisfies the
-    // grouping's distribution, so the rewrite is one task per bucket
-    Ivf.postingState(idx).compact(spark)(
-      _.groupBy("list", "vec_id").agg(first("embedding").as("embedding"))
-        .select("list", "vec_id", "embedding"))
-    assert(committedFiles(idx) <= Ivf.PostingBuckets,
-      s"compaction must leave at most one file per bucket (got ${committedFiles(idx)})")
-    assert(searchRows(idx) == before, "compaction must not change search results")
-  }
 }

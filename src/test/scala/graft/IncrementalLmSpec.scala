@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * model behind the daily scoring loop: slice-exact model folds,
   * bit-equality with the oracle-checked q_lm_score when the model holds
   * the scored corpus, frozen-model OOV semantics, monotone-batch replay
-  * rejection, exchange-free plan shapes, compaction, catalog-loss
-  * self-heal, and the streaming face. */
+  * rejection, the single-writer guards, loud failure on an absent or
+  * empty model, and the exchange-free scoring plan. */
 class IncrementalLmSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.01"
@@ -86,52 +86,6 @@ class IncrementalLmSpec extends SparkSpec {
     assert(totals(m) == before)
   }
 
-  test("streaming scoring sink: two micro-batch slices ≡ one batch, doc for doc") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val sess = spark
-    import sess.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val m = freshModel()
-    TextOps.lmModelAppend(spark, m, docs(), 0L) // freeze the model
-    val all = docs().as[(Long, String)].collect().sortBy(_._1)
-    val (s1, s2) = all.splitAt(all.length / 2)
-    val base = java.nio.file.Files.createTempDirectory("graft-lm-sink").toString
-    val out = base + "/scores"
-    val input = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.lmScoreSink(
-      input.toDF().toDF("doc_id", "text"), m, out, base + "/ckpt")
-    try Seq(s1, s2).foreach { s => input.addData(s.toSeq); q.processAllAvailable() }
-    finally q.stop()
-    val streamed = spark.read.parquet(out)
-      .select("doc_id", "n_tokens", "lm_score").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val oneShot = TextOps.lmScoreDelta(spark, m, docs()).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(streamed == oneShot,
-      "scoring under a frozen model must compose over any slicing")
-  }
-
-  test("streaming scoring sink replay: a committed batch is kept verbatim") {
-    import graft.streaming.StreamOps
-    val m = freshModel()
-    TextOps.lmModelAppend(spark, m, docs(), 0L)
-    val base = java.nio.file.Files.createTempDirectory("graft-lm-replay").toString
-    val out = base + "/scores"
-    val batch = docs().limit(20)
-    StreamOps.lmScoreSinkBatch(batch, m, out, 0L)
-    val dir = new java.io.File(s"$out/batch_id=0")
-    def fileSet() = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.lastModified, f.length)).toSet
-    val first = fileSet()
-    assert(first.nonEmpty)
-    // duplicate delivery of the SAME batch id: the committed directory
-    // must be kept byte-for-byte — not recomputed and rewritten
-    StreamOps.lmScoreSinkBatch(batch, m, out, 0L)
-    assert(fileSet() == first,
-      "replay of a committed scoring batch must write nothing")
-  }
-
   test("a LIVE concurrent writer on the same modelPath is detected loudly") {
     val m = freshModel()
     TextOps.lmModelAppend(spark, m, docs(), 1L)
@@ -185,24 +139,20 @@ class IncrementalLmSpec extends SparkSpec {
     assert(ex2.getMessage.contains("displaced"), ex2.getMessage)
   }
 
-  test("compaction preserves totals AND the replay guard; catalog loss self-heals") {
-    val m = freshModel()
-    TextOps.lmModelAppend(spark, m, docs(), 0L)
-    TextOps.lmModelAppend(spark, m, docs().limit(10), 1L)
-    val before = totals(m)
-    TextOps.compactLmModel(spark, m)
-    assert(totals(m) == before, "compaction must not change per-token totals")
-    // one partial row set per token now
-    val t = TextOps.lmModelTable(m)
-    val dup = spark.table(t).groupBy("tok").agg(count(lit(1)).as("k"))
-      .filter(col("k") > 1).count()
-    assert(dup == 0, "compaction must merge to one row per token")
-    // replay of a pre-compaction batch still skips (max batch_id kept)
-    TextOps.lmModelAppend(spark, m, docs(), 1L)
-    assert(totals(m) == before)
-    // catalog loss: drop the table entry, state re-registers from files
-    spark.sql(s"DROP TABLE $t")
-    assert(TextOps.lmScoreDelta(spark, m, docs().limit(5)).count() == 5)
+  test("scoring under an empty or absent model fails loudly") {
+    import spark.implicits._
+    val delta = Seq((1L, "a")).toDF("doc_id", "text")
+    intercept[IllegalStateException] {
+      TextOps.lmScoreDelta(spark, freshModel(), delta).count()
+    }
+    // a model folded from an empty batch holds no rows: n = null would
+    // poison every term into an all-null score column
+    val empty = freshModel()
+    TextOps.lmModelAppend(spark, empty, docs().limit(0), 1L)
+    val e = intercept[IllegalArgumentException] {
+      TextOps.lmScoreDelta(spark, empty, delta).count()
+    }
+    assert(e.getMessage.contains("empty"), e.getMessage)
   }
 
   test("scoring plan: no Exchange above the bucketed model side") {
@@ -243,95 +193,4 @@ class IncrementalLmSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
-
-  test("streaming face: micro-batch slices ≡ one batch; duplicate delivery folds once") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val m = freshModel()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-lm-ckpt").toString
-    val input = MemoryStream[(Long, String)]
-    val query = graft.streaming.StreamOps.lmModelSink(
-      input.toDF().toDF("doc_id", "text"), m, ckpt)
-    try {
-      val rows = docs().limit(40).collect()
-        .map(r => (r.getLong(0), r.getString(1)))
-      input.addData(rows.take(20).toSeq); query.processAllAvailable()
-      input.addData(rows.drop(20).toSeq); query.processAllAvailable()
-    } finally query.stop()
-    val oneShot = freshModel()
-    TextOps.lmModelAppend(spark, oneShot,
-      docs().limit(40), 0L)
-    assert(totals(m) == totals(oneShot),
-      "two micro-batches must fold to the one-batch model")
-    // duplicate delivery: re-running lmModelAppend with an already-seen
-    // micro-batch id (the crash-redelivery shape) folds nothing
-    val before = totals(m)
-    TextOps.lmModelAppend(spark, m, docs().limit(40), 1L)
-    assert(totals(m) == before)
-  }
-
-  /** The harshest composition failure mode (r13 verdict): the query is
-    * killed while a fold is IN FLIGHT, not at a batch boundary. A gate
-    * UDF blocks the fold job's tasks once a task has entered; the test
-    * thread then stops the query mid-job. Whichever way the race lands
-    * — the cancelled job leaves only uncommitted files (job-level
-    * atomic append), or the fold squeaked through before the stop —
-    * the restart replays the batch from the checkpoint and the model's
-    * monotone batch-id guard makes the replay fold-once: end totals
-    * must equal the one-shot fold in BOTH arms. */
-  test("a stream killed MID-FOLD converges after restart: the interrupted fold replays whole") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val m = freshModel()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-lm-midfold").toString
-    val all = docs().collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    val (s1, s2) = all.splitAt(all.length / 2)
-    val input = MemoryStream[(Long, String)]
-    def start() = graft.streaming.StreamOps.lmModelSink(
-      input.toDF().toDF("doc_id", "text").filter(FoldGate.gate), m, ckpt)
-    var q = start()
-    try {
-      input.addData(s1.toSeq); q.processAllAvailable() // batch 0: clean fold
-      FoldGate.arm()
-      input.addData(s2.toSeq) // batch 1 starts on the stream thread
-      assert(FoldGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the fold job must be in flight before the kill")
-      q.stop() // kill while the fold job holds blocked tasks
-    } finally {
-      FoldGate.disarm()
-      if (q.isActive) q.stop()
-    }
-    q = start()
-    try q.processAllAvailable() finally q.stop()
-    val oneShot = freshModel()
-    TextOps.lmModelAppend(spark, oneShot, docs(), 0L)
-    assert(totals(m) == totals(oneShot),
-      "a mid-fold kill must leave no partial counts after the replay")
-  }
-}
-
-/** Blocking gate for the mid-fold kill test: once armed, the first row
-  * to pass signals `entered` and every row then parks on `release`
-  * (interruptible — a cancelled task's interrupt unblocks it; the 30 s
-  * cap keeps a scheduling anomaly from deadlocking the suite). */
-object FoldGate {
-  @volatile private var armed = false
-  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
-  @volatile private var release = new java.util.concurrent.CountDownLatch(1)
-  def arm(): Unit = {
-    entered = new java.util.concurrent.CountDownLatch(1)
-    release = new java.util.concurrent.CountDownLatch(1)
-    armed = true
-  }
-  def disarm(): Unit = { armed = false; release.countDown() }
-  def gate: org.apache.spark.sql.Column =
-    udf((_: Long) => {
-      if (armed) {
-        entered.countDown()
-        release.await(30, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      true
-    }).asNondeterministic()(lit(0L))
 }

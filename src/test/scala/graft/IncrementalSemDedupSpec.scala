@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** VectorOps.semDedupIncrement — the persisted frozen-geometry vector
   * index (SemDeDup on crawl deltas): batch-grain equivalence to the
   * oracle-checked q_semdedup, slice composability, replay rejection,
-  * the probe-only admissions face, the streaming sink's decide-commit-
-  * then-fold contract, compaction, and the co-located probe plan. */
+  * the probe-only q_semdedup_delta, the seed-size guards, and the
+  * co-located probe plan. */
 class IncrementalSemDedupSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.01"
@@ -63,66 +63,16 @@ class IncrementalSemDedupSpec extends SparkSpec {
     assert(spark.table(t).count() == sizeBefore, "novel-only appends")
   }
 
-  test("probe-only admissions: repeats identical, index untouched; matches q_semdedup_delta") {
-    val idx = freshIndex()
-    VectorOps.semDedupIncrement(spark, idx,
-      vecs().filter(pmod(col("vec_id"), lit(2L)) === 0))
+  test("q_semdedup_delta is probe-only: repeats identical, fixture index untouched") {
+    val first = reportOf(VectorOps.semDedupDeltaQuery(spark, sfDir))
+    val idx = Tables.fixtureStatePath("graft_semdedup_delta", sfDir, "embeddings")
     val t = VectorOps.semDedupIndexState(idx).ensure(spark).get
     val sizeBefore = spark.table(t).count()
-    val odds = vecs().filter(pmod(col("vec_id"), lit(2L)) === 1)
-    val p1 = reportOf(VectorOps.semDedupAdmissions(spark, idx, odds))
-    val p2 = reportOf(VectorOps.semDedupAdmissions(spark, idx, odds))
-    assert(p1 == p2, "probe-only repeats must be identical")
-    assert(spark.table(t).count() == sizeBefore, "probe must not fold")
-    // and the SparkEntry query is exactly this shape over the shared
-    // fixture-keyed index
-    assert(p1 == reportOf(VectorOps.semDedupDeltaQuery(spark, sfDir)))
-    // a probe against a never-folded path fails loudly, not silently empty
-    intercept[IllegalArgumentException] {
-      VectorOps.semDedupAdmissions(spark, freshIndex(), odds)
-    }
-  }
-
-  test("streaming sink: two micro-batches ≡ one batch; committed decisions survive replay") {
-    import graft.streaming.StreamOps
-    val ids = vecs().select("vec_id").collect().map(_.getLong(0)).sorted
-    val mid = ids(ids.length / 2)
-    val base = java.nio.file.Files.createTempDirectory("graft-semdedup-sink").toString
-    val idx = base + "/index.parquet"
-    val out = base + "/admitted"
-    StreamOps.semDedupIncrementSinkBatch(
-      vecs().filter(col("vec_id") < mid), idx, out, 0L)
-    StreamOps.semDedupIncrementSinkBatch(
-      vecs().filter(col("vec_id") >= mid), idx, out, 1L)
-    val streamed = spark.read.parquet(out + "/batch_id=*")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val oneShot = VectorOps.semDedupIncrement(spark, freshIndex(), vecs())
-      .filter(col("admitted")).select("vec_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(streamed == oneShot && streamed.nonEmpty)
-    // replay batch 1 (committed): the RAW verb would reject everything
-    // against the stored copies — the sink must keep the committed
-    // decisions verbatim and only re-run the (idempotent) fold
-    val t = VectorOps.semDedupIndexState(idx).ensure(spark).get
-    val sizeBefore = spark.table(t).count()
-    StreamOps.semDedupIncrementSinkBatch(
-      vecs().filter(col("vec_id") >= mid), idx, out, 1L)
-    val replayed = spark.read.parquet(out + "/batch_id=*")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(replayed == oneShot, "replay must not flip committed admissions")
-    assert(spark.table(t).count() == sizeBefore)
-    // crash-window twin: batch 2's output commit happened but its fold
-    // did not (simulate by deleting the fold's novel rows? not possible
-    // on an append-only table — instead deliver a NEW batch whose dir is
-    // pre-committed, the dedup-sink crash-window recipe): the sink must
-    // keep the dir verbatim and fold the batch's vectors in
-    val tail = vecs().filter(col("vec_id") >= mid)
-    val preDir = new java.io.File(s"$out/batch_id=7")
-    tail.limit(0).write.mode("overwrite").parquet(preDir.getPath) // committed, empty
-    StreamOps.semDedupIncrementSinkBatch(tail, idx, out, 7L)
-    assert(spark.read.parquet(preDir.getPath).isEmpty,
-      "a committed (here: empty) decision set is kept verbatim")
-    assert(spark.table(t).count() == sizeBefore, "fold stays novel-only")
+    assert(reportOf(VectorOps.semDedupDeltaQuery(spark, sfDir)) == first,
+      "probe-only repeats must be identical")
+    assert(spark.table(t).count() == sizeBefore, "the query must not fold")
+    assert(first.exists(!_._3) && first.exists(_._3),
+      "fixture must exercise both admission outcomes")
   }
 
   test("empty first batch freezes no geometry; the next non-empty batch does") {
@@ -159,48 +109,23 @@ class IncrementalSemDedupSpec extends SparkSpec {
     assert(VectorOps.semDedupIncrement(spark, idx2, later).count() > 0)
   }
 
-  test("compaction preserves admissions and index content") {
-    val ids = vecs().select("vec_id").collect().map(_.getLong(0)).sorted
-    val mid = ids(ids.length / 2)
-    val idx = freshIndex()
-    VectorOps.semDedupIncrement(spark, idx, vecs().filter(col("vec_id") < mid))
-    VectorOps.maintainSemDedupIndex(spark, idx, maxFileSetsPerBucket = 1)
-    val a2 = reportOf(VectorOps.semDedupIncrement(spark, idx,
-      vecs().filter(col("vec_id") >= mid)))
-    VectorOps.maintainSemDedupIndex(spark, idx, maxFileSetsPerBucket = 1)
-    val one = reportOf(VectorOps.semDedupIncrement(spark, freshIndex(), vecs()))
-    assert(a2 == one.filter(_._1 >= mid))
-    val t = VectorOps.semDedupIndexState(idx).ensure(spark).get
-    assert(spark.table(t).count() == ids.length, "compaction loses no vectors")
-  }
-
-  test("probe and fold co-locate: no Exchange above the bucketed index side") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+  test("the decide probe co-locates: no Exchange above the bucketed index side") {
     val idx = freshIndex()
     VectorOps.semDedupIncrement(spark, idx,
       vecs().filter(pmod(col("vec_id"), lit(2L)) === 0))
     val t = VectorOps.semDedupIndexState(idx).ensure(spark).get
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      // at fixture scale Catalyst would happily broadcast the index; the
-      // production index is corpus-sized, so pin the shuffle-join path
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val probe = VectorOps.semDedupAdmissions(spark, idx,
-        vecs().filter(pmod(col("vec_id"), lit(2L)) === 1))
-      val indexSideShuffles = probe.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec if e.exists {
-          case s: FileSourceScanExec => s.tableIdentifier.exists(_.table == t)
-          case _ => false
-        } => e
-      }
-      assert(indexSideShuffles.isEmpty,
-        s"the corpus-sized index side must never re-shuffle:\n${probe.queryExecution.executedPlan}")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val odds = vecs().filter(pmod(col("vec_id"), lit(2L)) === 1)
+    val centers = VectorOps.ensureSemDedupCenters(spark, idx, odds)
+    // the decision is frozen, so its index join shows only in the plan
+    // of the job that materialized it — q_semdedup_delta's probe
+    val plans = withShuffleJoins {
+      executedPlans(VectorOps.semDedupDecide(spark, idx, centers, odds))
+    }
+    val onIndex = plans.filter(tableJoinSides(_, t).nonEmpty)
+    assert(onIndex.nonEmpty, "the decision must join the index table")
+    onIndex.foreach { p =>
+      assert(tableSideShuffles(p, t).isEmpty,
+        s"the corpus-sized index side must never re-shuffle:\n$p")
     }
   }
 }

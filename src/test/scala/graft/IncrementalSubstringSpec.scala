@@ -3,17 +3,22 @@ package graft
 import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 
-/** TextOps.substringStrip / substringIncrement — the incremental
-  * exact-substring leg: keep-first decisions against the persisted gram
-  * index, batch-grain equivalence to a local recompute, slice
-  * composability, probe idempotence, cross-batch catches, the sink's
-  * write-once replay, and the no-Exchange index-side plan pin. */
+/** TextOps.substringStrip / substringFold — exact-substring dedup
+  * against a persisted gram index: keep-first decisions, batch-grain
+  * equivalence to a local recompute, probe idempotence, cross-batch
+  * catches, and the no-Exchange index-side plan pin. */
 class IncrementalSubstringSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.01"
   private def freshIndex(): String =
     java.nio.file.Files.createTempDirectory("graft-substr-idx").toString + "/index.parquet"
   private def docs() = Tables.documents(spark, sfDir)
+
+  /** Fold `d`'s distinct gram keys into the index at `idx` — the
+    * q_strip_delta build. */
+  private def fold(idx: String, d: org.apache.spark.sql.DataFrame): Unit =
+    TextOps.substringFold(spark, idx,
+      TextOps.gramKeyFrame(d).groupBy("k").agg(min("doc_id").as("min_doc")))
 
   /** Local keep-first recompute: (doc_id, n_tokens, n_dup_tokens,
     * text_clean) with a position stripped iff its 6-gram was first seen
@@ -42,8 +47,10 @@ class IncrementalSubstringSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, String)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
 
-  test("one full-corpus increment matches the local keep-first recompute") {
-    val got = rows(TextOps.substringIncrement(spark, freshIndex(), docs()))
+  test("one-batch keep-first strip matches the local recompute") {
+    // an absent index is "nothing seen yet": the whole corpus as one
+    // batch strips exactly the keep-first positions
+    val got = rows(TextOps.substringStrip(spark, freshIndex(), docs()))
     val expect = localKeepFirst()
     assert(got == expect)
     assert(got.exists(_._3 > 0), "fixture must exercise keep-first stripping")
@@ -54,24 +61,13 @@ class IncrementalSubstringSpec extends SparkSpec {
     }
   }
 
-  test("doc_id-ordered slices compose: two increments ≡ one batch") {
-    val ids = docs().select("doc_id").collect().map(_.getLong(0)).sorted
-    val mid = ids(ids.length / 2)
-    val idx = freshIndex()
-    val a1 = rows(TextOps.substringIncrement(spark, idx, docs().filter(col("doc_id") < mid)))
-    val a2 = rows(TextOps.substringIncrement(spark, idx, docs().filter(col("doc_id") >= mid)))
-    val batch = rows(TextOps.substringIncrement(spark, freshIndex(), docs()))
-    assert((a1 ++ a2).sortBy(_._1) == batch.sortBy(_._1))
-  }
-
   test("substringStrip is probe-only: repeats identical, index untouched, absent index legal") {
     // absent index: intra-batch keep-first still applies
     val ghost = freshIndex()
     val alone = rows(TextOps.substringStrip(spark, ghost, docs()))
     assert(alone == localKeepFirst(), "absent index must mean 'nothing seen yet'")
     val idx = freshIndex()
-    TextOps.substringIncrement(spark, idx,
-      docs().filter(col("doc_id") % 2 === 0)).count()
+    fold(idx, docs().filter(col("doc_id") % 2 === 0))
     val t = TextOps.substringIndexState(idx).ensure(spark).get
     val before = spark.table(t).count()
     val s1 = rows(TextOps.substringStrip(spark, idx, docs().filter(col("doc_id") % 2 === 1)))
@@ -88,142 +84,36 @@ class IncrementalSubstringSpec extends SparkSpec {
     val idx = freshIndex()
     val d1 = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta")).toDF("doc_id", "text")
     val d2 = Seq((2L, "NEW prose here alpha beta gamma delta epsilon zeta eta theta Tail words linger on")).toDF("doc_id", "text")
-    assert(rows(TextOps.substringIncrement(spark, idx, d1)).head._3 == 0,
+    assert(rows(TextOps.substringStrip(spark, idx, d1)).head._3 == 0,
       "first copy must be kept whole")
-    val out = rows(TextOps.substringIncrement(spark, idx, d2)).head
+    fold(idx, d1)
+    val out = rows(TextOps.substringStrip(spark, idx, d2)).head
     // d2 tokens 4..11 carry d1's grams: starts 4,5,6 hit -> covered 4..11
     assert(out._3 == 8, s"expected the 8 shared tokens stripped, got $out")
     assert(out._4 == "NEW prose here Tail words linger on")
   }
 
-  test("sink replay writes once: a committed batch dir is kept verbatim, the re-fold appends nothing") {
-    val idx = freshIndex()
-    val outPath = java.nio.file.Files.createTempDirectory("graft-substr-out").toString
-    val batch = docs().filter(col("doc_id") % 3 === 0) // deterministic subset
-    graft.streaming.StreamOps.substringIncrementSinkBatch(batch, idx, outPath, 0L)
-    val dir = new java.io.File(s"$outPath/batch_id=0")
-    assert(new java.io.File(dir, "_SUCCESS").isFile)
-    val first = spark.read.parquet(dir.getPath).collect().map(_.toString).sorted.toSeq
-    val t = TextOps.substringIndexState(idx).ensure(spark).get
-    val indexed = spark.table(t).count()
-    // duplicate delivery: output unchanged, no new index rows
-    graft.streaming.StreamOps.substringIncrementSinkBatch(batch, idx, outPath, 0L)
-    val second = spark.read.parquet(dir.getPath).collect().map(_.toString).sorted.toSeq
-    assert(second == first, "committed batch dir must be kept verbatim")
-    assert(spark.table(t).count() == indexed, "re-fold must append nothing")
-    // and had the RAW api re-run instead, it would have stripped the
-    // batch's own first copies — the documented reason the sink is the
-    // replay-safe face
-    val rawReplay = TextOps.substringStrip(spark, idx, batch)
-    assert(rawReplay.agg(sum("n_dup_tokens")).head().getLong(0) >
-      spark.read.parquet(dir.getPath).agg(sum("n_dup_tokens")).head().getLong(0))
-  }
-
-  test("streaming sink: two micro-batches of slices ≡ one batch increment, doc-for-doc") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val sess = spark
-    import sess.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val all = docs().select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1)
-    val (s1, s2) = all.splitAt(all.length / 2)
-    val idx = freshIndex()
-    val base = java.nio.file.Files.createTempDirectory("graft-substr-sink").toString
-    val out = base + "/cleaned"
-    val input = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamOps.substringIncrementSink(
-      input.toDF().toDF("doc_id", "text"), idx, out, base + "/ckpt")
-    try Seq(s1, s2).foreach { s => input.addData(s.toSeq); q.processAllAvailable() }
-    finally q.stop()
-    val streamed = spark.read.parquet(out)
-      .select("doc_id", "n_tokens", "n_dup_tokens", "text_clean").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(_._1).toSeq
-    val batch = rows(TextOps.substringIncrement(spark, freshIndex(),
-      docs().select("doc_id", "text"))).sortBy(_._1)
-    assert(streamed == batch,
-      "doc_id-ascending micro-batches must strip exactly the one-batch spans")
-  }
-
-  /** Mid-batch kill on the substring leg — the third fold sink's arm of
-    * the convergence pair pinned for lm (IncrementalLmSpec) and dedup
-    * (IncrementalDedupSpec): the kill can land before the batch dir's
-    * _SUCCESS (replay recomputes identical strips against the untouched
-    * index) or between the commit and the fold (replay keeps the dir,
-    * re-runs the novel-keys-only fold). Both arms must end at the
-    * one-shot strip. */
-  test("the substring sink killed MID-BATCH converges after restart") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val sess = spark
-    import sess.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val all = docs().select("doc_id", "text").as[(Long, String)]
-      .collect().sortBy(_._1)
-    val (s1, s2) = all.splitAt(all.length / 2)
-    val idx = freshIndex()
-    val base = java.nio.file.Files.createTempDirectory("graft-substr-midkill").toString
-    val out = base + "/stripped"
-    val input = MemoryStream[(Long, String)]
-    def start() = graft.streaming.StreamOps.substringIncrementSink(
-      input.toDF().toDF("doc_id", "text").filter(FoldGate.gate),
-      idx, out, base + "/ckpt")
-    var q = start()
-    try {
-      input.addData(s1.toSeq); q.processAllAvailable() // batch 0 clean
-      FoldGate.arm()
-      input.addData(s2.toSeq)
-      assert(FoldGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the batch must be in flight before the kill")
-      q.stop()
-    } finally {
-      FoldGate.disarm()
-      if (q.isActive) q.stop()
-    }
-    q = start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.read.parquet(out + "/batch_id=*")
-      .select("doc_id", "n_tokens", "n_dup_tokens", "text_clean").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(_._1).toSeq
-    val oneShot = rows(TextOps.substringIncrement(spark, freshIndex(),
-      docs().select("doc_id", "text"))).sortBy(_._1)
-    assert(streamed == oneShot,
-      "a mid-batch kill must not change the stripped corpus")
-  }
-
   test("probe and fold co-locate: no Exchange above the bucketed index side") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val idx = freshIndex()
-    TextOps.substringIncrement(spark, idx, docs()).count()
+    fold(idx, docs().filter(col("doc_id") % 2 === 0))
     val t = TextOps.substringIndexState(idx).ensure(spark).get
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      // at fixture scale Catalyst would happily broadcast the index; the
-      // production index is corpus-sized, so pin the shuffle-join path
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      def indexSideShuffles(df: org.apache.spark.sql.DataFrame): Seq[ShuffleExchangeExec] =
-        df.queryExecution.executedPlan.collect {
-          case e: ShuffleExchangeExec if e.exists {
-            case s: FileSourceScanExec => s.tableIdentifier.exists(_.table == t)
-            case _ => false
-          } => e
-        }
-      val pos = TextOps.gramKeyFrame(docs())
-      val probe = pos.join(spark.table(t).select("k"), Seq("k"), "left_semi")
-      assert(indexSideShuffles(probe).isEmpty,
-        s"probe semi-join shuffles the corpus-sized index side:\n${probe.queryExecution.executedPlan}")
-      val fold = pos.groupBy("k").agg(min("doc_id").as("min_doc"))
-        .join(spark.table(t).select("k"), Seq("k"), "left_anti")
-      assert(indexSideShuffles(fold).isEmpty,
-        s"fold anti-join shuffles the corpus-sized index side:\n${fold.queryExecution.executedPlan}")
-      assert(probe.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec => e }.nonEmpty,
-        "expected the delta side to shuffle into the bucket layout")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val odds = docs().filter(col("doc_id") % 2 === 1)
+    // substringStrip freezes its hit set and substringFold its novel
+    // keys, so the joins show only in the plans those jobs executed
+    val (probe, folded) = withShuffleJoins {
+      (executedPlans(TextOps.substringStrip(spark, idx, odds).count()),
+        executedPlans(fold(idx, odds)))
+    }
+    for ((plans, face) <- Seq((probe, "probe semi-join"), (folded, "fold anti-join"))) {
+      val onIndex = plans.filter(tableJoinSides(_, t).nonEmpty)
+      assert(onIndex.nonEmpty, s"the $face must join the index table")
+      onIndex.foreach { p =>
+        assert(tableSideShuffles(p, t).isEmpty,
+          s"the $face shuffles the corpus-sized index side:\n$p")
+      }
+      assert(onIndex.exists(_.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])),
+        s"expected the delta side of the $face to shuffle into the bucket layout")
     }
   }
 }

@@ -1,10 +1,9 @@
 package graft
 
 import graft.multimodal.Multimodal
-import org.apache.spark.sql.types._
 
-/** Multimodal plumbing: schema shape, per-partition batching, metadata
-  * ops — the Spark-side contract around the stubbed decode. */
+/** Multimodal plumbing: the synthetic media schema and the frame
+  * sampling plan. */
 class MultimodalSpec extends SparkSpec {
 
   lazy val media = Multimodal.syntheticMedia(spark, sf).cache()
@@ -15,42 +14,6 @@ class MultimodalSpec extends SparkSpec {
       t.fields.map(f => (f.name, f.dataType.catalogString)).toSeq
     assert(shape(media.schema) == shape(Multimodal.mediaSchema))
     assert(media.count() > 0)
-  }
-
-  test("extractFeatures: fixed dim, deterministic, partition-invariant") {
-    val f1 = Multimodal.extractFeatures(media.repartition(2), batchSize = 16)
-    val f2 = Multimodal.extractFeatures(media.repartition(7), batchSize = 64)
-    val rows1 = f1.collect().map(r => (r.getLong(0), r.getSeq[Float](2))).toMap
-    val rows2 = f2.collect().map(r => (r.getLong(0), r.getSeq[Float](2))).toMap
-    assert(rows1.keySet == rows2.keySet)
-    assert(rows1.values.forall(_.length == Multimodal.featureDim))
-    assert(rows1 == rows2) // batch size / partitioning must not change results
-    assert(f1.schema("features").dataType == ArrayType(FloatType, containsNull = false))
-  }
-
-  test("extractFeatures: null payload keeps the row with NULL features (no fake embedding)") {
-    import org.apache.spark.sql.Row
-    // a missing blob must neither NPE the partition nor fabricate an
-    // all-zero vector that similarity consumers would treat as a real
-    // point (r11 review); metadata survives, features is null
-    val schema = media.select("media_id", "media_type", "payload").schema
-    val rows = java.util.Arrays.asList(
-      Row(1L, "image", Array[Byte](1, 2, 3)),
-      Row(2L, "image", null))
-    val df = spark.createDataFrame(rows, schema)
-    val out = Multimodal.extractFeatures(df, batchSize = 8)
-      .collect().map(r => (r.getLong(0), if (r.isNullAt(2)) null else r.getSeq[Float](2)))
-      .toMap
-    assert(out.keySet == Set(1L, 2L))
-    assert(out(1L) != null && out(1L).length == Multimodal.featureDim)
-    assert(out(2L) == null)
-  }
-
-  test("resizeMeta rewrites metadata and records scale factors without touching payload") {
-    val r = Multimodal.resizeMeta(media, 224, 224)
-    val row = r.selectExpr("meta.width", "meta.height", "scale_x").head()
-    assert(row.getInt(0) == 224 && row.getInt(1) == 224)
-    assert(r.columns.contains("payload"))
   }
 
   test("sampleFrames explodes only videos at stride k") {

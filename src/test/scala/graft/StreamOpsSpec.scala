@@ -65,13 +65,6 @@ class StreamOpsSpec extends SparkSpec {
     assert(out(1200L) == 1L)  // window [20,30) holds only the on-time ev(3)
   }
 
-  test("dropDuplicatesWithinWatermark removes in-horizon duplicates") {
-    import spark.implicits._
-    val b1 = Seq(ev(0, 1, 1, "click"), ev(1, 2, 1, "click"), ev(2, 3, 2, "click"))
-    val out = runStream(StreamOps.dedupWithinWatermark(_, "1 hour"), "dedup_out", Seq(b1))
-    assert(out.count() == 2) // (1,click) duplicate dropped
-  }
-
   test("stream-stream range join matches the batch range join on the same rows") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -99,49 +92,6 @@ class StreamOpsSpec extends SparkSpec {
       if !c.ts.after(p.ts) && c.ts.getTime >= p.ts.getTime - 3600000L
     } yield (p.event_id, c.event_id)).toSet
     assert(streamed == expected && streamed.nonEmpty)
-  }
-
-  test("nearDupScreen drops repeated-signature documents, keeps distinct content") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    case class Doc(doc_id: Long, ts: Timestamp, text: String)
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val docs = input.toDF().toDF("doc_id", "ts", "text")
-    val q = StreamOps.nearDupScreen(docs, "1 hour")
-      .writeStream.outputMode("append").format("memory").queryName("neardup_out").start()
-    try {
-      input.addData(Seq(
-        (1L, ts(1), "the quick brown fox jumps over the dog"),
-        (2L, ts(2), "the quick brown fox jumps over the dog"), // exact dup -> dropped
-        (3L, ts(3), "an entirely different sentence about spark streams"),
-        // <2-token docs have no shingles/signature: each must pass the
-        // screen on its own, not collide on a shared empty signature
-        (4L, ts(4), "hello"),
-        (5L, ts(5), "goodbye")))
-      q.processAllAvailable()
-    } finally q.stop()
-    val kept = spark.table("neardup_out").select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(1L, 3L, 4L, 5L))
-  }
-
-  test("streaming windowed top-k equals the batch aggregator on finalized windows") {
-    import spark.implicits._
-    // one day-window with 6 events for type "view"; horizon-advancer closes it
-    val evs = (0 until 6).map(i => Ev(i, ts(i * 60), 1, "view", 10.0 + i, "{}")) :+
-      ev(100, 24 * 60 * 3, 1)
-    val streamed = runStream(StreamOps.windowTopK(_, "1 day", "1 hour", 3), "wtopk_out",
-        Seq(evs.take(3), evs.drop(3)))
-      .select(unix_timestamp(col("win_start")).as("w"), col("event_type"),
-        col("rank"), col("event_id"), col("value"))
-      .as[(Long, String, Long, Long, Double)].collect().toSet
-    val batch = StreamOps.windowTopK(spark.createDataset(evs).toDF(), "1 day", "1 hour", 3)
-      .select(unix_timestamp(col("win_start")).as("w"), col("event_type"),
-        col("rank"), col("event_id"), col("value"))
-      .as[(Long, String, Long, Long, Double)].collect().toSet
-    assert(streamed.nonEmpty && streamed.subsetOf(batch))
-    // day-0 "view" window is finalized: top-3 by value desc = events 5,4,3
-    assert(streamed.filter(t => t._1 == 0L && t._2 == "view")
-      .map(t => (t._3, t._4)) == Set((1L, 5L), (2L, 4L), (3L, 3L)))
   }
 
   test("session windows: events within the gap merge, a gap break starts a new session") {
@@ -172,97 +122,6 @@ class StreamOpsSpec extends SparkSpec {
     val n = spark.table("union_out")
       .select(col("n_events")).as[Long].collect()
     assert(n.contains(6L)) // only the union of both streams crosses the >3 threshold
-  }
-
-  test("streaming window profile equals the batch moments on finalized windows") {
-    import spark.implicits._
-    // day-0 "view" values 10..15 across two micro-batches; advancer closes it
-    val evs = (0 until 6).map(i => Ev(i, ts(i * 60), 1, "view", 10.0 + i, "{}")) :+
-      ev(100, 24 * 60 * 3, 1)
-    def shape(df: org.apache.spark.sql.DataFrame) = df
-      .select(unix_timestamp(col("win_start")).as("w"), col("event_type"),
-        col("n"), col("mean_value"),
-        // stddev_samp of a single-row group is null (the advancer's window)
-        coalesce(col("sd_value"), lit(-1.0)).as("sd_value"),
-        col("min_value"), col("max_value"))
-      .as[(Long, String, Long, Double, Double, Double, Double)].collect().toSet
-    val streamed = shape(runStream(StreamOps.windowProfile(_, "1 day", "1 hour"),
-      "profile_out", Seq(evs.take(3), evs.drop(3))))
-    val batch = shape(StreamOps.windowProfile(spark.createDataset(evs).toDF(), "1 day", "1 hour"))
-    assert(streamed.nonEmpty && streamed.subsetOf(batch))
-    // the finalized day-0 window: moments over 10..15 computed across
-    // micro-batch boundaries (mean 12.5, min 10, max 15)
-    val day0 = streamed.filter(t => t._1 == 0L && t._2 == "view")
-    assert(day0.map(t => (t._3, t._4, t._6, t._7)) == Set((6L, 12.5, 10.0, 15.0)))
-  }
-
-  test("streaming window cardinality: HLL merges across micro-batches, matches batch, tracks exact") {
-    import spark.implicits._
-    // day-0: 40 distinct users for "view", split across two micro-batches
-    // (20 each) so the per-window sketch MUST merge across batches
-    val evs = (0 until 40).map(i => ev(i, min = i * 30, user = i % 40)) :+
-      ev(100, 24 * 60 * 3, 1)
-    def shape(df: org.apache.spark.sql.DataFrame) = df
-      .select(unix_timestamp(col("win_start")).as("w"), col("event_type"), col("approx_users"))
-      .as[(Long, String, Long)].collect().toSet
-    val streamed = shape(runStream(StreamOps.windowCardinality(_, "1 day", "1 hour"),
-      "card_out", Seq(evs.take(20), evs.drop(20))))
-    val batch = shape(StreamOps.windowCardinality(spark.createDataset(evs).toDF(), "1 day", "1 hour"))
-    assert(streamed.nonEmpty && streamed.subsetOf(batch))
-    val day0 = streamed.collect { case (0L, "view", n) => n }
-    assert(day0.size == 1)
-    // HLL at rsd 0.05 on 40 exact distinct users
-    assert(math.abs(day0.head - 40.0) / 40.0 < 0.05, s"approx ${day0.head} vs exact 40")
-  }
-
-  test("windowed top-k aggregation buffer survives a checkpoint restart") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("wtopk_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("wtopk_out").toString
-    val input = MemoryStream[Ev]
-    // memory sink can't recover from a checkpoint; the parquet sink can
-    def start() = StreamOps.windowTopK(input.toDF(), "1 day", "1 hour", 3)
-      .writeStream.outputMode("append").format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt).start()
-
-    // pre-restart: three day-0 events (values 10, 20, 30)
-    val q1 = start()
-    try {
-      input.addData(Seq(Ev(1, ts(0), 1, "view", 10.0, "{}"),
-        Ev(2, ts(10), 1, "view", 20.0, "{}"),
-        Ev(3, ts(20), 1, "view", 30.0, "{}")))
-      q1.processAllAvailable()
-    } finally q1.stop()
-
-    // post-restart: a higher value lands in the SAME window, then the
-    // horizon advances past it so the window finalizes
-    val q2 = start()
-    try {
-      input.addData(Seq(Ev(4, ts(30), 1, "view", 40.0, "{}"),
-        ev(100, 24 * 60 * 3, 1)))
-      q2.processAllAvailable()
-    } finally q2.stop()
-
-    val got = spark.read.parquet(out)
-      .filter(unix_timestamp(col("win_start")) === 0L && col("event_type") === "view")
-      .select(col("rank"), col("event_id"), col("value"))
-      .as[(Long, Long, Double)].collect().toSet
-    // the top-3 spans the restart boundary — 40 arrived after, 30/20 before
-    // — which is only possible if the TopKAggregator buffer was restored
-    // from the checkpointed state store
-    assert(got == Set((1L, 4L, 40.0), (2L, 3L, 30.0), (3L, 2L, 20.0)))
-  }
-
-  test("sliding windows emit overlapping windows per event type") {
-    import spark.implicits._
-    val evs = Seq(ev(0, 12, 1, "view"), ev(1, 13, 2, "view"), ev(2, 200, 1, "view"))
-    val out = runStream(StreamOps.slidingValue(_, "10 minutes", "5 minutes", "5 minutes"),
-      "slide_out", Seq(evs))
-      .select(unix_timestamp(col("win_start")).as("w"), col("n"))
-      .as[(Long, Long)].collect().toMap
-    // events at min 12-13 belong to windows starting at min 5 and min 10
-    assert(out(300L) == 2L && out(600L) == 2L)
   }
 
   test("streaming funnel: ordered view->click->purchase stages across micro-batches, bounded state") {

@@ -485,15 +485,13 @@ class StreamSourceSpec extends SparkSpec {
       s"record framing drifted: $got")
   }
 
-  test("filelog transport drives the dedup-admission sink: swap-in source, same admissions") {
-    // the scaladoc claim made concrete: sources are interchangeable
-    // DataFrames, so the crawl head from DailyCrawlSpec runs unchanged
-    // over the file-log transport — records arrive as JSON payloads on
-    // two log partitions, kafkaProject parses them, the dedup sink
-    // admits; a mid-crawl restart resumes from the checkpoint
+  test("filelog transport feeds a file sink: swap-in source, same docs across a restart") {
+    // sources are interchangeable DataFrames: a crawl of the documents
+    // fixture arrives as JSON payloads on two log partitions,
+    // kafkaProject parses them, and a checkpointed parquet sink keeps
+    // them; the head goes down between the two days and resumes from
+    // its checkpoint
     import graft.sources.{FileLog, StreamSource}
-    import graft.operators.TextOps
-    val sess = spark
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
     val docSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -506,33 +504,29 @@ class StreamSourceSpec extends SparkSpec {
       .select(col("doc_id"), to_json(struct(col("doc_id"), col("text"))).as("j"))
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     val (day1, day2) = payloads.splitAt(payloads.length / 2)
-    val base = java.nio.file.Files.createTempDirectory("graft-filelog-dedup").toString
+    val base = java.nio.file.Files.createTempDirectory("graft-filelog-docs").toString
     val dir = base + "/crawl"
-    val idx = base + "/index.parquet"
-    val out = base + "/admitted"
-    // each day split across BOTH log partitions by doc_id parity — the
-    // batch-grain admission decision is partition-layout-agnostic
+    val out = base + "/docs"
+    // each day split across BOTH log partitions by doc_id parity
     def appendDay(day: Array[(Long, String)]): Unit = {
       FileLog.appendValues(dir, 0, day.filter(_._1 % 2 == 0).map(_._2).toSeq)
       FileLog.appendValues(dir, 1, day.filter(_._1 % 2 == 1).map(_._2).toSeq)
     }
-    def start() = graft.streaming.StreamOps.dedupIncrementSink(
-      StreamSource.kafkaProject(FileLog.stream(spark, dir), docSchema),
-      idx, out, base + "/ckpt")
+    def start() = StreamSource.kafkaProject(FileLog.stream(spark, dir), docSchema)
+      .writeStream.outputMode("append").format("parquet")
+      .option("checkpointLocation", base + "/ckpt")
+      .start(out)
     appendDay(day1)
     val q1 = start()
     try q1.processAllAvailable() finally q1.stop()
     appendDay(day2) // arrives while the head is down
     val q2 = start()
     try q2.processAllAvailable() finally q2.stop()
-    val admitted = spark.read.parquet(out + "/batch_id=*")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val oneShot = TextOps.dedupIncrement(spark,
-        java.nio.file.Files.createTempDirectory("graft-filelog-dedup-ref")
-          .toString + "/index.parquet", docs)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(admitted == oneShot && admitted.nonEmpty,
-      "the file-log transport must admit exactly the one-shot set")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.select("doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
+    val streamed = rowsOf(spark.read.parquet(out))
+    assert(streamed.nonEmpty && streamed == rowsOf(docs),
+      "the file-log transport must deliver every document exactly once")
   }
 
   test("kafka wiring: parses to the events schema with the connector jar, fails loudly without it") {

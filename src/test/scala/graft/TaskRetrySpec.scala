@@ -39,16 +39,17 @@ object FaultInjection {
 }
 
 /** r13 verdict task #2 — task-retry fault injection on the BucketedState
-  * fold path. The replay specs cover BATCH-level redelivery; this spec
-  * pins TASK-level retry, where a failed-then-retried write task could in
-  * principle double-emit files into an append-only bucket. It cannot,
+  * fold path: TASK-level retry, where a failed-then-retried write task
+  * could in principle double-emit files into an append-only bucket. It
+  * cannot,
   * and the boundary is mechanical: every append goes through
   * InsertIntoHadoopFsRelationCommand's HadoopMapReduceCommitProtocol —
   * task attempts write under the job's staging dir and only the attempt
   * that wins commitTask is moved by the job commit, so a failed first
   * attempt's partial file is dropped with its attempt context. The specs
-  * below verify that boundary empirically on all four state tables
-  * (totals AND committed-file-set counts unchanged vs a clean fold) with
+  * below verify that boundary empirically on a raw append and three
+  * state tables (substring gram index, LM model, IVF postings) — totals
+  * AND committed-file-set counts unchanged vs a clean fold — with
   * a once-failing task injected under local[4, 2], in both stage shapes:
   * a WRITE-stage failure (filter above the final aggregate, so the
   * throwing task is the one holding an open parquet writer) and a
@@ -112,45 +113,45 @@ class TaskRetrySpec extends SparkSpec {
     noStaging(faulty.path)
   }
 
-  test("dedup fold: once-failing task leaves admissions and index identical to a clean fold") {
-    val cleanIdx = tmp("retry-dedup-c") + "/index.parquet"
-    val cleanAdm = TextOps.dedupIncrement(spark, cleanIdx, docs())
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-
-    val faultyIdx = tmp("retry-dedup-f") + "/index.parquet"
-    FaultInjection.arm(afterRows = 50)
-    val faultyAdm =
-      try TextOps.dedupIncrement(spark, faultyIdx,
-        docs().filter(FaultInjection.bomb))
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      finally FaultInjection.disarm()
-    assert(FaultInjection.tripped.get, "the injected failure must actually fire")
-
-    assert(faultyAdm == cleanAdm && cleanAdm.nonEmpty)
-    def totals(idx: String) = spark.table(TextOps.dedupIndexTable(idx))
-      .agg(count(lit(1)), min("min_doc"), max("min_doc")).head()
-    assert(totals(faultyIdx) == totals(cleanIdx))
-    assert(committedFiles(faultyIdx).size == committedFiles(cleanIdx).size)
-    noStaging(faultyIdx)
-  }
-
   test("substring fold: once-failing task strips and folds identically to a clean fold") {
-    def rows(df: DataFrame) = df
-      .select("doc_id", "n_tokens", "n_dup_tokens", "text_clean").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(_._1).toSeq
+    // the q_strip_delta lifecycle: fold the even docs' gram keys once,
+    // then strip the odd docs keep-first against that index
+    def even(d: DataFrame) = d.filter(col("doc_id") % 2 === 0)
+    def build(idx: String, d: DataFrame): Unit =
+      TextOps.substringFold(spark, idx,
+        TextOps.gramKeyFrame(even(d)).groupBy("k").agg(min("doc_id").as("min_doc")))
+    def stripped(idx: String) =
+      TextOps.substringStrip(spark, idx, docs().filter(col("doc_id") % 2 === 1))
+        .select("doc_id", "n_tokens", "n_dup_tokens", "text_clean").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
     val cleanIdx = tmp("retry-sub-c") + "/index.parquet"
-    val clean = rows(TextOps.substringIncrement(spark, cleanIdx, docs()))
-
+    build(cleanIdx, docs())
     val faultyIdx = tmp("retry-sub-f") + "/index.parquet"
     FaultInjection.arm(afterRows = 50)
-    val faulty =
-      try rows(TextOps.substringIncrement(spark, faultyIdx,
-        docs().filter(FaultInjection.bomb)))
-      finally FaultInjection.disarm()
+    try build(faultyIdx, docs().filter(FaultInjection.bomb))
+    finally FaultInjection.disarm()
     assert(FaultInjection.tripped.get, "the injected failure must actually fire")
 
-    assert(faulty == clean && clean.nonEmpty)
+    // local keep-first reference: an odd doc's position strips iff its
+    // 6-gram occurs in any even doc or in a smaller odd doc
+    val all = docs().collect()
+      .map(r => r.getLong(0) -> r.getString(1).split(" ", -1).toSeq).sortBy(_._1)
+    def grams(toks: Seq[String]) = toks.sliding(6).filter(_.size == 6).toSeq
+    val evenGrams = all.filter(_._1 % 2 == 0).flatMap(d => grams(d._2)).toSet
+    val oddFirst = scala.collection.mutable.Map.empty[Seq[String], Long]
+    val expect = all.filter(_._1 % 2 == 1).map { case (id, toks) =>
+      val hits = grams(toks).zipWithIndex.collect {
+        case (g, i) if evenGrams(g) || oddFirst.get(g).exists(_ < id) => i + 1
+      }
+      grams(toks).foreach(g => if (!oddFirst.contains(g)) oddFirst(g) = id)
+      val covered = hits.flatMap(j => j to j + 5).toSet
+      val kept = toks.zipWithIndex.collect { case (w, i) if !covered(i + 1) => w }
+      (id, toks.size.toLong, (toks.size - kept.size).toLong, kept.mkString(" "))
+    }.toSeq
+    val clean = stripped(cleanIdx)
+    assert(clean == expect && clean.exists(_._3 > 0),
+      "the clean build must strip exactly the keep-first positions")
+    assert(stripped(faultyIdx) == clean)
     def totals(idx: String) = {
       val t = TextOps.substringIndexState(idx).ensure(spark).get
       spark.table(t).agg(count(lit(1)), min("min_doc"), max("min_doc")).head()

@@ -4,19 +4,22 @@ import graft.operators.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One-off empirical probe for the incremental legs' 100 TB claim (r13
-  * verdict task #6): the PLAN-shape argument (no Exchange on the index
-  * side, delta-only shuffles) predicts probe cost grows with DELTA size
-  * and stays flat in INDEX size. This measures it: build the band /
-  * gram / unigram-model state at 1× and 10× corpus scale from a
-  * seed-stamped synthetic documents table, then time the same fixed
-  * deltas against both. Results land in PLANS.md as a table.
+/** One-off empirical probe for the persisted indexes' 100 TB claim
+  * (r13 verdict task #6): the PLAN-shape argument (no Exchange on the
+  * index side, delta-only shuffles) predicts probe cost grows with DELTA
+  * size and stays flat in INDEX size. This measures it: build the
+  * unigram model, the semdedup vector index and the IVF postings at 1×
+  * and 10× corpus scale from seed-stamped synthetic tables, then time
+  * the same fixed deltas against both — the probe legs (lmScoreDelta,
+  * ivfSearch) and the fold legs (lmModelAppend, semDedupIncrement,
+  * ivfAppend), plus the graph loops' per-iteration shuffle. Results
+  * land in PLANS.md as a table.
   *
   * Run: sbt "Test/runMain graft.tools.ScaleProbe [nBase] [reps]"
   * (defaults 5000 docs ≈ the sf0.1 documents row count, 3 reps).
-  * Timings are medians of `reps` runs; dedup/substring increments FOLD
-  * as well as probe, so each rep uses fresh delta doc_ids (state grows
-  * by a few deltas over the run — still ≪ the 10× index gap probed).
+  * Timings are medians of `reps` runs; each rep uses fresh delta ids
+  * (the fold legs grow their state by a few deltas over the run — still
+  * ≪ the 10× index gap probed).
   */
 object ScaleProbe {
 
@@ -128,22 +131,12 @@ object ScaleProbe {
 
     for ((tag, n, vocab) <- corpora) {
       val corpus = synthDocs(spark, n, 0L, seed, vocab)
-      val dedupIdx = base(s"dedup-$tag") + "/index.parquet"
-      val substrIdx = base(s"substr-$tag") + "/index.parquet"
       val modelPath = base(s"lm-$tag") + "/model.parquet"
       println(s"[probe] building $tag state ($n docs, vocab $vocab)…")
-      val tBuild = time {
-        TextOps.dedupIncrement(spark, dedupIdx, corpus).count()
-        TextOps.substringIncrement(spark, substrIdx, corpus).count()
-        TextOps.lmModelAppend(spark, modelPath, corpus, 1L)
-      }
+      val tBuild = time(TextOps.lmModelAppend(spark, modelPath, corpus, 1L))
       println(f"[probe] $tag state built in $tBuild%.1f s")
       var lmBatch = 1L
       for (deltaRows <- Seq(500L, 2500L)) {
-        cells += medianCell("dedupIncrement", tag, deltaRows, freshDelta) {
-          d => TextOps.dedupIncrement(spark, dedupIdx, d).count() }
-        cells += medianCell("substringIncrement", tag, deltaRows, freshDelta) {
-          d => TextOps.substringIncrement(spark, substrIdx, d).count() }
         cells += medianCell("lmScoreDelta", tag, deltaRows, freshDelta) {
           d => TextOps.lmScoreDelta(spark, modelPath, d).count() }
         // keep the model's fold leg honest too: one timed fold per size
@@ -180,8 +173,6 @@ object ScaleProbe {
       }
       println(f"[probe] $tag vector state built in $tBuild%.1f s")
       for (deltaRows <- Seq(500L, 2500L)) {
-        cells += medianCell("semDedupAdmissions", tag, deltaRows, freshVecDelta) {
-          d => VectorOps.semDedupAdmissions(spark, semIdx, d).count() }
         cells += medianCell("ivfSearch", tag, deltaRows, freshVecDelta) {
           d => Ivf.ivfSearch(spark, ivfIdx, d, k = 3).count() }
         // fold legs, one timed fold per size (state grows by the folded
